@@ -22,84 +22,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return fn(spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate checks the FIRST 50 catalog entries.
-# Round-14 window: CORRECTNESS_r13 had ZERO misses (50/50 green), and
-# two entries were registered after scripts/window_r14.py was staged —
-# flagship_reconcile_mutated (the mutated-state fallback twin, VERDICT
-# r13 ask #4) and flagship_reconcile_streamed (the streaming adds-only
-# delta twin, gated consumer of r13 ask #3) — so per the documented
-# round-start policy the live window is
-# `amend_window(PRIORITY_R14, ['flagship_reconcile_mutated',
-# 'flagship_reconcile_streamed'])` (never-checked entries front in
-# registration order; the displaced refresh fills sink_snapshot_diff
-# and a_order_to_ship_latency, both green r8, drop to a later round).
-# tests/test_entry_contract.py's
-# test_current_window_is_the_prestaged_r14_list verifies the live
-# window equals amend_window(PRIORITY_R14, misses + never-checked)
-# exactly. Entries outside the window stay green on the local
-# driver-replica gate (tests/test_oracle_diff.py) at sf0.01 before
-# each commit.
-_PRIORITY = [
-    "flagship_reconcile_mutated",  # never-checked: registered mid-r14 (mutated-state fallback twin)
-    "flagship_reconcile_streamed",  # never-checked: registered mid-r14 (streaming adds-only delta twin)
-    "stream_static_enrich_join",  # refresh: green r7
-    "a_heavy_hitters_cms",  # refresh: green r7
-    "j_fuzzy_blocked",  # refresh: green r7
-    "events_hypertable_rollup",  # refresh: green r7
-    "a_ab_test_ztest",  # refresh: green r7
-    "a_mad_outliers",  # refresh: green r7
-    "a_abc_pareto",  # refresh: green r7
-    "events_resample_interpolate",  # refresh: green r7
-    "ts_sax_symbols",  # refresh: green r7
-    "ts_similarity_topk",  # refresh: green r7
-    "a_forecast_seasonal_naive",  # refresh: green r7
-    "dq_table_checksums",  # refresh: green r7
-    "source_xml_records",  # refresh: green r7
-    "a_dow_seasonality",  # refresh: green r7
-    "a_growth_accounting",  # refresh: green r7
-    "a_decile_lift",  # refresh: green r7
-    "events_slo_error_budget",  # refresh: green r7
-    "a_contingency_chisq",  # refresh: green r7
-    "dq_pseudonymize",  # refresh: green r7
-    "a_weighted_median",  # refresh: green r7
-    "events_cusum_changepoint",  # refresh: green r7
-    "events_sma_crossover",  # refresh: green r7
-    "j_left_anti_unmatched",  # refresh: green r8
-    "mm_audio_zero_crossings",  # refresh: green r8
-    "mm_image_edge_density",  # refresh: green r8
-    "text_bpe_merges",  # refresh: green r8
-    "text_bpe_tokenize",  # refresh: green r8
-    "graph_pagerank_dangling",  # refresh: green r8
-    "graph_kcore",  # refresh: green r8
-    "graph_harmonic_centrality",  # refresh: green r8
-    "stream_late_data_drop",  # refresh: green r8
-    "stream_stream_interval_join",  # refresh: green r8
-    "stream_threshold_crossings",  # refresh: green r8
-    "x_decimal_money_exact",  # refresh: green r8
-    "a_adoption_curve",  # refresh: green r8
-    "a_repeat_purchase_rate",  # refresh: green r8
-    "a_kmv_distinct_sketch",  # refresh: green r8
-    "a_hll_registers",  # refresh: green r8
-    "a_mannwhitney_u",  # refresh: green r8
-    "a_gini_concentration",  # refresh: green r8
-    "dq_functional_deps",  # refresh: green r8
-    "a_poisson_bootstrap_ci",  # refresh: green r8
-    "dq_psi_drift",  # refresh: green r8
-    "a_ks_two_sample",  # refresh: green r8
-    "events_theilsen_trend",  # refresh: green r8
-    "events_attribution_credit",  # refresh: green r8
-    "a_ab_cuped_adjust",  # refresh: green r8
-    "a_ab_power_analysis",  # refresh: green r8
-]
-def _ordered() -> list[str]:
-    front = [n for n in _PRIORITY if n in QUERIES]
-    rest = [n for n in QUERIES if n not in set(front)]
-    return front + rest
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: QUERIES[name][0] for name in _ordered()}
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return {name: fn for name, (fn, _) in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -109,8 +35,7 @@ def oracle_sql() -> dict[str, str]:
     cost only ITS entry (omitted → that one records no_oracle), never
     the whole gate."""
     out: dict[str, str] = {}
-    for name in _ordered():
-        oracle = QUERIES[name][1]
+    for name, (_, oracle) in QUERIES.items():
         if oracle is None:
             continue
         if callable(oracle):

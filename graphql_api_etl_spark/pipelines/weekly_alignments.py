@@ -63,7 +63,7 @@ from graphql_api_etl_spark.operators.transform import (
     zip5,
 )
 from graphql_api_etl_spark.sinks.gates import ValidationError, warn_if_nonempty
-from graphql_api_etl_spark.sinks.mutations import MutationSink
+from graphql_api_etl_spark.sinks.mutations import MutationSink, write_level_phased
 from graphql_api_etl_spark.sinks.reports import write_csv_report
 
 
@@ -203,11 +203,10 @@ def keyed_multiset_summary(
 
 
 def choose_location_key(api_locations: DataFrame) -> str:
-    """F8 plan switch (ETL:390, 481): if every API remoteId is empty,
-    join on location name; else on Unit↔remoteId. One tiny boolean
-    aggregate drives which plan gets BUILT — deliberately driver-side."""
-    if api_locations.isEmpty():
-        return "name"
+    """F8 plan switch (ETL:390, 481): if every API remoteId is empty
+    (or the API holds no locations), join on location name; else on
+    Unit↔remoteId. One tiny boolean aggregate drives which plan gets
+    BUILT — deliberately driver-side."""
     empty_remote = all_equal(
         api_locations, F.coalesce(F.col("node_remoteId"), F.lit("")) == ""
     )
@@ -437,10 +436,10 @@ def map_locations_to_hierarchies(ctx: PipelineContext, report: SyncReport) -> Da
     report.note("locations_missing_pass1", n_missing)
     if n_missing:
         path = f"{ctx.report_dir}/new_locations_not_in_api"
-        report.reports["missing_locations"] = write_csv_report(
-            missing_location_payload(missing), path
-        )
-        ctx.location_sink.write(missing_location_payload(missing)).count()
+        payload = missing_location_payload(missing)
+        report.reports["missing_locations"] = write_csv_report(payload, path)
+        status = ctx.location_sink.write(payload)
+        report.note("location_add_failures", status.filter(~F.col("success")).count())
         api_locations = ctx.fetch_locations()
         # The reference re-evaluates the remoteId-emptiness switch after
         # the self-healing load (second ``(node_remoteId == '').all()``,
@@ -640,24 +639,20 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     is recorded (A8, ETL:706–731)."""
     report = SyncReport()
 
-    # Phase 1: hierarchy levels + groups, parent level before child
-    # (write_level_phased semantics — here one sink call per level).
-    # Levels are DERIVED from the built hierarchy, not hardcoded, so an
-    # edge-list hierarchy of any depth phases correctly (r3 VERDICT ask
-    # #8 — the reference's fixed (1, 2) only covers region→district).
+    # Phase 1: hierarchy levels + groups, written one level at a time,
+    # parent level before child (write_level_phased). Levels are DERIVED
+    # from the built hierarchy, not hardcoded, so an edge-list hierarchy
+    # of any depth phases correctly (r3 VERDICT ask #8 — the reference's
+    # fixed (1, 2) only covers region→district).
     if ctx.hierarchy_edges is not None:
         hierarchy = build_hierarchy_tree(ctx.hierarchy_edges)
     else:
         hierarchy = build_hierarchy(ctx.alignments)
     hierarchy = hierarchy.persist()
-    levels = sorted(
-        r["level"] for r in hierarchy.select("level").distinct().collect()
-    )  # bounded collect: one value per tree level
-    for level in levels:
-        rows = hierarchy.filter(F.col("level") == level)
-        status = ctx.assignment_sink.write(
-            rows.select("group_name", "parent_name", "level", "is_top")
-        )
+    statuses = write_level_phased(
+        ctx.assignment_sink, hierarchy.select("group_name", "parent_name", "level", "is_top")
+    )
+    for level, status in statuses.items():
         report.note(f"hierarchy_level{level}_failed", status.filter(~F.col("success")).count())
     report.note("hierarchy_rows", hierarchy.count())
     hierarchy.unpersist()

@@ -6,10 +6,10 @@ registration contract).
 Split from the single-module catalog in r12 (VERDICT r11 ask #4: both
 historical shadowed-def incidents lived in the 11k-line monolith).
 Each family module registers its entries into the shared ``QUERIES``
-dict on import; THE IMPORT ORDER BELOW IS LOAD-BEARING — it reproduces
-the original monolith's registration order, which the driver-window
-rotation history (scripts/rotate_window.py tie-breaks) depends on.
-The re-export loop at the bottom keeps every helper importable as
+dict on import. The import order below reproduces the original
+monolith's registration order, which is the default order of
+``__spark_entry__.queries()``; nothing else depends on it. The
+re-export loop at the bottom keeps every helper importable as
 ``graphql_api_etl_spark.queries.<name>`` exactly as before the split.
 """
 

@@ -205,9 +205,14 @@ class MutationSink:
         return spark.read.schema(STATUS_SCHEMA).parquet(out_dir)
 
 
-def write_level_phased(sink: MutationSink, hierarchy_df: DataFrame, level_col: str = "level") -> list[DataFrame]:
+def write_level_phased(
+    sink: MutationSink, hierarchy_df: DataFrame, level_col: str = "level"
+) -> dict[int, DataFrame]:
     """Parent-before-child ordering as phased writes (SURVEY §7 hard
     part 2): one sink pass per level, ascending — within a level rows
-    are unordered and fully parallel."""
-    levels = [r[0] for r in hierarchy_df.select(level_col).distinct().orderBy(level_col).collect()]
-    return [sink.write(hierarchy_df.filter(hierarchy_df[level_col] == lv)) for lv in levels]
+    are unordered and fully parallel. Returns each level's status
+    frame, keyed by level in write order."""
+    levels = sorted(
+        r[0] for r in hierarchy_df.select(level_col).distinct().collect()
+    )  # bounded collect: one value per tree level, sorted driver-side
+    return {lv: sink.write(hierarchy_df.filter(hierarchy_df[level_col] == lv)) for lv in levels}

@@ -69,17 +69,25 @@ class LocalPagesClient:
 
 def walk_pages(client: ConnectionClient, max_pages: int = 100_000) -> list[dict[str, Any]]:
     """The serial cursor loop (ETL:194–210), isolated: returns raw
-    node dicts. Driver-side by necessity; bounded by max_pages."""
+    node dicts. Driver-side by necessity; bounded by max_pages. Never
+    truncates silently: a partial connection would make the reconcile
+    report real locations as missing, so hitting ``max_pages`` with
+    ``hasNextPage`` still true, or an ``endCursor`` the server already
+    returned (a cursor loop), raises instead."""
     nodes: list[dict[str, Any]] = []
     cursor: str | None = None
+    seen: set[str | None] = {None}
     for _ in range(max_pages):
         page = client.fetch_page(cursor)
         nodes.extend(edge["node"] for edge in page.get("edges", []))
         info = page.get("pageInfo", {})
         if not info.get("hasNextPage"):
-            break
+            return nodes
         cursor = info.get("endCursor")
-    return nodes
+        if cursor in seen:
+            raise RuntimeError(f"connection cursor loop: endCursor {cursor!r} returned twice")
+        seen.add(cursor)
+    raise RuntimeError(f"connection truncated: hasNextPage still true after max_pages={max_pages}")
 
 
 def fetch_connection(

@@ -1,27 +1,18 @@
 """Driver-contract invariants for __spark_entry__.py — cheap static
-checks that protect the correctness gate's shape: the 50-slot window
-is exactly filled, names resolve, every entry is oracle-backed, and a
+checks that protect the correctness gate's shape: every registered
+entry is exposed exactly once, every entry is oracle-backed, and a
 failing callable oracle can only cost its own entry."""
 
 from __future__ import annotations
-
-import pytest
 
 import __spark_entry__ as entry
 from graphql_api_etl_spark.queries import QUERIES
 
 
-def test_priority_names_resolve_and_fill_the_window():
-    assert len(entry._PRIORITY) == 50  # the driver checks the first 50
-    assert len(set(entry._PRIORITY)) == 50  # no duplicate slots
-    missing = [n for n in entry._PRIORITY if n not in QUERIES]
-    assert missing == []
-
-
 def test_ordered_covers_catalog_exactly_once():
-    ordered = entry._ordered()
-    assert len(ordered) == len(QUERIES)
-    assert set(ordered) == set(QUERIES)
+    exposed = entry.queries()
+    assert list(exposed) == list(QUERIES)  # registration order, no extras
+    assert all(exposed[n] is fn for n, (fn, _) in QUERIES.items())
 
 
 def test_every_entry_has_an_oracle_string():
@@ -43,356 +34,6 @@ def test_failing_callable_oracle_costs_only_its_entry(monkeypatch):
     assert len(oracles) == len(QUERIES) - 1
 
 
-def test_priority_window_spends_slots_where_evidence_is_weakest():
-    """Freshness invariant (VERDICT r4 ask #7, restructured r7 per
-    VERDICT r6 ask #1): fails when the first-50 window burns slots on
-    STALE already-green entries (first proven green before the newest
-    round) while never-checked entries wait, leaves a fresh miss
-    un-rechecked, or starves a stale entry.  A window whose slots all
-    went green for the FIRST time in the newest round is a completed
-    round and passes — the driver lands CORRECTNESS_r{N}.json before
-    the suite is re-run, so that is the expected post-round state."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import check_window, load_history
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    latest_green, first_green, newest_misses, newest_round = load_history(repo, reg_order)
-    problems = check_window(
-        names[:50], names, latest_green, first_green, newest_misses, newest_round
-    )
-    assert problems == [], "\n".join(problems)
-
-
-def test_window_invariant_green_with_and_without_untracked_newest_results(tmp_path):
-    """VERDICT r6 ask #1 'done' criterion, restructured per VERDICT r7
-    ask #1a (the original state-B premise — "all slots green for the
-    first time" — broke whenever an untracked newest-results file
-    already covered the window): the invariant must hold BOTH
-    mid-round (state A: history as committed, the current window must
-    be green as-is) AND the moment the driver's next CORRECTNESS file
-    lands (state B: the real post-results flow is ROTATE-then-check,
-    so the assertion is that the rotation policy's suggested window is
-    green — not that the now-spent current window still is)."""
-    import json
-    import os
-    import shutil
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import check_window, load_history, suggest_window
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-
-    import glob as _glob
-
-    for f in _glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        shutil.copy(f, tmp_path / os.path.basename(f))
-
-    # State A: history as committed — the current window must be green.
-    latest_green, first_green, misses, newest = load_history(str(tmp_path), reg_order)
-    problems_a = check_window(names[:50], names, latest_green, first_green, misses, newest)
-    assert problems_a == [], "pre-results state red:\n" + "\n".join(problems_a)
-
-    # State B: the driver's next-round file lands (all current window
-    # slots green). The post-results flow rotates BEFORE the suite is
-    # judged green, so assert the ROTATED window satisfies the
-    # invariant against the new history.
-    green_row = {"rows_match": True, "schema_match": True, "hash_match": True,
-                 "spark_rows": 1, "oracle_rows": 1, "err": None}
-    nxt = {n: dict(green_row) for n in names[:50]}
-    (tmp_path / f"CORRECTNESS_r{newest + 1:02d}.json").write_text(json.dumps(nxt))
-    latest_green, first_green, misses, newest_b = load_history(str(tmp_path), reg_order)
-    assert newest_b == newest + 1
-    rotated, _tags = suggest_window(reg_order, latest_green, misses, 50)
-    problems_b = check_window(rotated, names, latest_green, first_green, misses, newest_b)
-    assert problems_b == [], "post-results rotated window red:\n" + "\n".join(problems_b)
-
-
-def test_window_invariant_catches_unrotated_window_one_round_late(tmp_path):
-    """The first-green grace must NOT let a never-rotated window stay
-    green forever: if the same 50 slots are re-checked a SECOND round
-    while never-checked entries wait, their first green predates the
-    newest round and the invariant trips."""
-    import json
-    import os
-
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import check_window, load_history
-
-    names = [f"q{i:03d}" for i in range(80)]
-    reg_order = {n: i for i, n in enumerate(names)}
-    green_row = {"rows_match": True, "hash_match": True}
-    window = names[:50]
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({n: green_row for n in window}))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({n: green_row for n in window}))
-    latest_green, first_green, misses, newest = load_history(str(tmp_path), reg_order)
-    problems = check_window(window, names, latest_green, first_green, misses, newest)
-    assert problems, "un-rotated window re-checked a second round must trip the invariant"
-    assert any("stale already-green" in p for p in problems)
-
-
-def test_current_window_is_the_amended_prestaged_r8_list():
-    """The live round-8 window must equal the pre-staged list amended
-    with the real r7 misses per the documented round-start policy
-    (scripts/window_r8.py:20 + rotate_window.amend_window) — proving
-    the rotation really was the mechanical one-commit act."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, load_history
-    from window_r8 import PRIORITY_R8
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    _lg, _fg, misses, newest = load_history(repo, reg_order)
-    if newest != 7:
-        pytest.skip("only meaningful while r7 is the newest history")
-    assert names[:50] == amend_window(PRIORITY_R8, misses)
-
-
-def test_prestaged_r9_window_is_valid_under_both_simulated_histories():
-    """VERDICT r7 ask #8: the pre-staged r9 window (scripts/window_r9.py)
-    must satisfy the freshness invariant against a simulated all-green
-    round 8 AND — so a real miss can't invalidate the list again the
-    way x_decimal_money_exact invalidated window_r8.py — against a
-    simulated round 8 with misses present, after the documented
-    amend_window round-start step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history
-    from window_r9 import PRIORITY_R9
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R9) == 50 and len(set(PRIORITY_R9)) == 50
-    assert all(n in reg_order for n in PRIORITY_R9)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-
-    # The documented round-start act (scripts/window_r9.py): amend the
-    # pre-staged list with the real r8 misses FIRST, then any entries
-    # registered after the list was staged (never-checked at r9 start),
-    # displacing refresh fills from the tail.
-    def round_start_window(sim_misses: list[str], lg: dict[str, int]) -> list[str]:
-        never = [n for n in names if n not in lg and n not in sim_misses]
-        return amend_window(PRIORITY_R9, sim_misses + never)
-
-    # History 1: round 8 goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    w1 = round_start_window([], lg)
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green r8 history:\n" + "\n".join(problems)
-    # After the all-green r8, the amended window covers every entry
-    # that is still never-checked.
-    assert [n for n in names if n not in lg and n not in set(w1)] == []
-
-    # History 2: round 8 produces misses — the round-start act amends
-    # the pre-staged list, and the AMENDED window must be green.
-    sim_misses = [names[0], names[7]]  # two live-window slots fail
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = round_start_window(sim_misses, lg2)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present r8 history:\n" + "\n".join(problems2)
-
-
-def test_prestaged_r11_window_is_valid_under_both_simulated_histories():
-    """The window_r9/r10 pattern carried forward: the pre-staged r11
-    window (scripts/window_r11.py) must satisfy the freshness
-    invariant against a simulated all-green round 10 AND against a
-    round 10 with misses present, after the documented amend_window
-    round-start step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history
-    from window_r11 import PRIORITY_R11
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R11) == 50 and len(set(PRIORITY_R11)) == 50
-    assert all(n in reg_order for n in PRIORITY_R11)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-
-    def round_start_window(sim_misses: list[str], lg: dict[str, int]) -> list[str]:
-        never = [n for n in names if n not in lg and n not in sim_misses]
-        return amend_window(PRIORITY_R11, sim_misses + never)
-
-    # History 1: the next round goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    w1 = round_start_window([], lg)
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green history:\n" + "\n".join(problems)
-    assert [n for n in names if n not in lg and n not in set(w1)] == []
-
-    # History 2: the next round produces misses — the amended window
-    # must re-check them first and stay green.
-    sim_misses = [names[0], names[7]]
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = round_start_window(sim_misses, lg2)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present history:\n" + "\n".join(problems2)
-
-
-def test_prestaged_r12_window_is_valid_under_both_simulated_histories():
-    """The window_r9..r11 pattern carried forward: the pre-staged r12
-    window (scripts/window_r12.py) must satisfy the freshness
-    invariant against a simulated all-green round 11 AND against a
-    round 11 with misses present, after the documented amend_window
-    round-start step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history
-    from window_r12 import PRIORITY_R12
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R12) == 50 and len(set(PRIORITY_R12)) == 50
-    assert all(n in reg_order for n in PRIORITY_R12)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-
-    def round_start_window(sim_misses: list[str], lg: dict[str, int]) -> list[str]:
-        never = [n for n in names if n not in lg and n not in sim_misses]
-        return amend_window(PRIORITY_R12, sim_misses + never)
-
-    # History 1: the next round goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    w1 = round_start_window([], lg)
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green history:\n" + "\n".join(problems)
-    assert [n for n in names if n not in lg and n not in set(w1)] == []
-
-    # History 2: the next round produces misses — the amended window
-    # must re-check them first and stay green.
-    sim_misses = [names[0], names[7]]
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = round_start_window(sim_misses, lg2)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present history:\n" + "\n".join(problems2)
-
-
-def test_prestaged_r13_window_is_valid_under_both_simulated_histories():
-    """The window_r9..r12 pattern carried forward: the pre-staged r13
-    window (scripts/window_r13.py) must satisfy the freshness
-    invariant against a simulated all-green round 12 AND against a
-    round 12 with misses present, after the documented amend_window
-    round-start step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history
-    from window_r13 import PRIORITY_R13
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R13) == 50 and len(set(PRIORITY_R13)) == 50
-    assert all(n in reg_order for n in PRIORITY_R13)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-
-    def round_start_window(sim_misses: list[str], lg: dict[str, int]) -> list[str]:
-        never = [n for n in names if n not in lg and n not in sim_misses]
-        return amend_window(PRIORITY_R13, sim_misses + never)
-
-    # History 1: the next round goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    w1 = round_start_window([], lg)
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green history:\n" + "\n".join(problems)
-    assert [n for n in names if n not in lg and n not in set(w1)] == []
-
-    # History 2: the next round produces misses — the amended window
-    # must re-check them first and stay green.
-    sim_misses = [names[0], names[7]]
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = round_start_window(sim_misses, lg2)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present history:\n" + "\n".join(problems2)
-
-
 def test_duplicate_registration_raises():
     """Catalog names are unique by construction (VERDICT r5 ask #4):
     re-registering a name raises instead of silently shadowing the
@@ -405,308 +46,6 @@ def test_duplicate_registration_raises():
     existing = next(iter(QUERIES))
     with pytest.raises(ValueError, match="registered twice"):
         _q(existing, "SELECT 1")(lambda spark, sf_dir: None)
-
-
-def test_current_window_is_the_amended_prestaged_r10_list():
-    """The live round-10 window must equal the pre-staged list amended
-    per the FULL documented round-start policy (scripts/window_r10.py
-    + rotate_window.amend_window): real r9 misses first (there were
-    none), then entries registered mid-r10 (never-checked — they must
-    not wait outside the window), displacing refresh fills from the
-    tail — proving the rotation really was the mechanical act."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, load_history
-    from window_r10 import PRIORITY_R10
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    lg, _fg, misses, newest = load_history(repo, reg_order)
-    if newest != 9:
-        pytest.skip("only meaningful while r9 is the newest history")
-    # never-checked in REGISTRATION order (QUERIES dict order), not
-    # window order — the policy tier-2 sort key
-    never = [n for n in QUERIES if n not in lg and n not in misses]
-    assert names[:50] == amend_window(PRIORITY_R10, misses + never)
-
-
-def test_current_window_is_the_prestaged_r11_list():
-    """The live round-11 window must equal the pre-staged list amended
-    per the documented round-start policy (scripts/window_r11.py +
-    rotate_window.amend_window): real r10 misses first (there were
-    none), then entries registered after window_r11.py was staged
-    (none — the last registrations, j_shuffle_hash_join and
-    x_try_arithmetic, were already driver-checked in r10), so the
-    window is PRIORITY_R11 verbatim."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, load_history
-    from window_r11 import PRIORITY_R11
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    lg, _fg, misses, newest = load_history(repo, reg_order)
-    if newest != 10:
-        pytest.skip("only meaningful while r10 is the newest history")
-    never = [n for n in QUERIES if n not in lg and n not in misses]
-    assert names[:50] == amend_window(PRIORITY_R11, misses + never)
-
-
-def test_current_window_is_the_prestaged_r12_list():
-    """The live round-12 window must equal the pre-staged list amended
-    per the documented round-start policy (scripts/window_r12.py +
-    rotate_window.amend_window): real r11 misses first (there were
-    none — CORRECTNESS_r11 is 50/50 green), then entries registered
-    after window_r12.py was staged (none — the catalog gained zero
-    entries in r11), so the window is PRIORITY_R12 verbatim."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, load_history
-    from window_r12 import PRIORITY_R12
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    lg, _fg, misses, newest = load_history(repo, reg_order)
-    if newest != 11:
-        pytest.skip("only meaningful while r11 is the newest history")
-    never = [n for n in QUERIES if n not in lg and n not in misses]
-    assert names[:50] == amend_window(PRIORITY_R12, misses + never)
-
-
-def test_prestaged_r14_window_is_valid_under_both_simulated_histories():
-    """The window_r9..r13 pattern carried forward: the pre-staged r14
-    window (scripts/window_r14.py) must satisfy the freshness
-    invariant against a simulated all-green round 13 AND against a
-    round 13 with misses present, after the documented amend_window
-    round-start step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history
-    from window_r14 import PRIORITY_R14
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R14) == 50 and len(set(PRIORITY_R14)) == 50
-    assert all(n in reg_order for n in PRIORITY_R14)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-
-    def round_start_window(sim_misses: list[str], lg: dict[str, int]) -> list[str]:
-        never = [n for n in names if n not in lg and n not in sim_misses]
-        return amend_window(PRIORITY_R14, sim_misses + never)
-
-    # History 1: the next round goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    w1 = round_start_window([], lg)
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green history:\n" + "\n".join(problems)
-    assert [n for n in names if n not in lg and n not in set(w1)] == []
-
-    # History 2: the next round produces misses — the amended window
-    # must re-check them first and stay green.
-    sim_misses = [names[0], names[7]]
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = round_start_window(sim_misses, lg2)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present history:\n" + "\n".join(problems2)
-
-
-def test_prestaged_r15_window_is_valid_under_both_simulated_histories():
-    """The window_r9..r14 pattern carried one round further: the
-    pre-staged r15 window (scripts/window_r15.py) must (a) be EXACTLY
-    what rotate_window.suggest_window produces from the committed
-    history plus a simulated all-green round 14 over the LIVE window
-    (the docstring's reproduction claim), and (b) satisfy the
-    freshness invariant under that history AND under a round 14 with
-    misses present, after the documented amend_window round-start
-    step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history, suggest_window
-    from window_r15 import PRIORITY_R15
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R15) == 50 and len(set(PRIORITY_R15)) == 50
-    assert all(n in reg_order for n in PRIORITY_R15)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-    if newest != 13:
-        pytest.skip("only meaningful while r13 is the newest history")
-
-    # History 1: round 14 goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    sugg, _tags = suggest_window(reg_order, lg, [], 50)
-    assert PRIORITY_R15 == sugg  # staged list reproduces suggest_window
-    w1 = amend_window(PRIORITY_R15, [])
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green history:\n" + "\n".join(problems)
-
-    # History 2: round 14 produces misses — the amended window must
-    # re-check them first and stay fresh.
-    sim_misses = [names[0], names[7]]
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = amend_window(PRIORITY_R15, sim_misses)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present history:\n" + "\n".join(problems2)
-
-
-def test_current_window_is_the_prestaged_r13_list():
-    """The live round-13 window must equal the pre-staged list amended
-    per the documented round-start policy (scripts/window_r13.py +
-    rotate_window.amend_window): real r12 misses first (there were
-    none — CORRECTNESS_r12 is 50/50 green), then entries registered
-    after window_r13.py was staged (none — the one mid-r12
-    registration, flagship_reconcile_bucketed, was already folded into
-    the staging baseline), so the window is PRIORITY_R13 verbatim."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, load_history
-    from window_r13 import PRIORITY_R13
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    lg, _fg, misses, newest = load_history(repo, reg_order)
-    if newest != 12:
-        pytest.skip("only meaningful while r12 is the newest history")
-    never = [n for n in QUERIES if n not in lg and n not in misses]
-    assert names[:50] == amend_window(PRIORITY_R13, misses + never)
-
-
-def test_current_window_is_the_prestaged_r14_list():
-    """The live round-14 window must equal the pre-staged list amended
-    per the documented round-start policy (scripts/window_r14.py +
-    rotate_window.amend_window): real r13 misses first (there were
-    none — CORRECTNESS_r13 is 50/50 green), then entries registered
-    after window_r14.py was staged (flagship_reconcile_mutated, the
-    mutated-state fallback twin, then flagship_reconcile_streamed, the
-    streaming adds-only delta twin), so the window is
-    amend_window(PRIORITY_R14, ['flagship_reconcile_mutated',
-    'flagship_reconcile_streamed']) — the displaced refresh fills
-    sink_snapshot_diff and a_order_to_ship_latency drop to a later
-    round."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, load_history
-    from window_r14 import PRIORITY_R14
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    lg, _fg, misses, newest = load_history(repo, reg_order)
-    if newest != 13:
-        pytest.skip("only meaningful while r13 is the newest history")
-    never = [n for n in QUERIES if n not in lg and n not in misses]
-    assert names[:50] == amend_window(PRIORITY_R14, misses + never)
-
-
-def test_prestaged_r10_window_is_valid_under_both_simulated_histories():
-    """The window_r9 pattern carried forward: the pre-staged r10 window
-    (scripts/window_r10.py) must satisfy the freshness invariant
-    against a simulated all-green round 9 AND against a round 9 with
-    misses present, after the documented amend_window round-start
-    step."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from rotate_window import amend_window, check_window, load_history
-    from window_r10 import PRIORITY_R10
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    reg_order = {n: i for i, n in enumerate(names)}
-    assert len(PRIORITY_R10) == 50 and len(set(PRIORITY_R10)) == 50
-    assert all(n in reg_order for n in PRIORITY_R10)
-
-    base_lg, base_fg, _misses, newest = load_history(repo, reg_order)
-
-    def round_start_window(sim_misses: list[str], lg: dict[str, int]) -> list[str]:
-        never = [n for n in names if n not in lg and n not in sim_misses]
-        return amend_window(PRIORITY_R10, sim_misses + never)
-
-    # History 1: the next round goes all-green over the live window.
-    lg = dict(base_lg)
-    fg = dict(base_fg)
-    for n in names[:50]:
-        lg[n] = newest + 1
-        fg.setdefault(n, newest + 1)
-    w1 = round_start_window([], lg)
-    problems = check_window(w1, names, lg, fg, [], newest + 1)
-    assert problems == [], "all-green history:\n" + "\n".join(problems)
-    assert [n for n in names if n not in lg and n not in set(w1)] == []
-
-    # History 2: the next round produces misses — the amended window
-    # must re-check them first and stay green.
-    sim_misses = [names[0], names[7]]
-    lg2 = dict(base_lg)
-    fg2 = dict(base_fg)
-    for n in names[:50]:
-        if n in sim_misses:
-            lg2.pop(n, None)
-            continue
-        lg2[n] = newest + 1
-        fg2.setdefault(n, newest + 1)
-    amended = round_start_window(sim_misses, lg2)
-    assert len(amended) == 50 and amended[:2] == sim_misses
-    problems2 = check_window(amended, names, lg2, fg2, sim_misses, newest + 1)
-    assert problems2 == [], "misses-present history:\n" + "\n".join(problems2)
 
 
 def test_no_decimal_rounded_interpolated_percentiles_in_catalog_source():

@@ -77,6 +77,24 @@ def test_walk_pages_cursor_chain():
     assert [n["id"] for n in nodes] == ["g0", "g1", "g2"]
 
 
+def test_walk_pages_raises_on_repeated_cursor():
+    """A server that hands back an endCursor it already returned would
+    loop until max_pages and return duplicated nodes; it must raise."""
+    pages = _pages()[:2]
+    pages[1]["pageInfo"]["endCursor"] = "c1"  # page 2 points back at itself
+    with pytest.raises(RuntimeError, match="cursor loop"):
+        walk_pages(LocalPagesClient(pages=pages))
+
+
+def test_walk_pages_raises_when_max_pages_runs_out():
+    """Stopping at max_pages while hasNextPage is still true is a
+    truncated connection, not a short one."""
+    with pytest.raises(RuntimeError, match="truncated"):
+        walk_pages(LocalPagesClient(pages=_pages()), max_pages=2)
+    # exactly enough pages is not a truncation
+    assert len(walk_pages(LocalPagesClient(pages=_pages()), max_pages=3)) == 3
+
+
 def test_fetch_connection_flattens(spark):
     df = fetch_connection(spark, LocalPagesClient(pages=_pages()), NODE_SCHEMA)
     assert set(df.columns) == {"node_id", "node_name", "node_isTop", "node_label_id", "node_label_name"}

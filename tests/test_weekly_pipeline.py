@@ -211,6 +211,49 @@ def test_f8_key_switch(spark):
     """ETL:390: all-empty remoteIds → name join; else remoteId join."""
     assert choose_location_key(api_locations_df(spark, remote_ids=False)) == "name"
     assert choose_location_key(api_locations_df(spark, remote_ids=True)) == "remote_id"
+    # an API with no locations yet (onboarding) has no remoteIds either
+    assert choose_location_key(api_locations_df(spark).limit(0)) == "name"
+
+
+def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
+    """A locationAdd the API rejects is recorded as a failure, not
+    thrown away: the sink's failure count lands in the report, and the
+    rejected location stays in the still-unloaded CSV after the
+    self-healing pass (the API state after the load holds only the
+    accepted Foxtrot)."""
+    from graphql_api_etl_spark.pipelines.weekly_alignments import (
+        SyncReport,
+        map_locations_to_hierarchies,
+    )
+
+    calls = {"n": 0}
+
+    def fetch_locations():
+        calls["n"] += 1
+        extra = [] if calls["n"] == 1 else [("locNew0", "Store Foxtrot", "106")]
+        return api_locations_df(spark, remote_ids=True, extra=extra)
+
+    ctx = PipelineContext(
+        alignments=alignments_df(spark),
+        corporate_managers=corporate_managers_df(spark),
+        fetch_hierarchy_groups=lambda: api_hierarchy_groups_df(spark),
+        fetch_locations=fetch_locations,
+        fetch_users=lambda: api_users_df(spark),
+        location_sink=MutationSink(
+            lambda: MockMutationClient(fail_when=lambda r: r["name"] == "Store Echo"),
+            "locationAdd",
+        ),
+        assignment_sink=MutationSink(lambda: MockMutationClient(), "hierarchyAssign"),
+        user_sink=MutationSink(lambda: MockMutationClient(), "userAdd"),
+        permission_sink=MutationSink(lambda: MockMutationClient(), "permissionAdd"),
+        report_dir=str(tmp_path / "outs"),
+    )
+    report = SyncReport()
+    map_locations_to_hierarchies(ctx, report)
+    assert report.counts["locations_missing_pass1"] == 2
+    assert report.counts["location_add_failures"] == 1
+    unloaded = spark.read.option("header", True).csv(report.reports["still_unloaded"])
+    assert [r["location"] for r in unloaded.collect()] == ["Store Echo"]
 
 
 def test_name_variant_reconciliation(spark, tmp_path):
@@ -346,8 +389,8 @@ def test_deep_hierarchy_tree_phased_writes(spark, tmp_path):
     spool = str(tmp_path / "spool")
     sink = MutationSink(lambda: SpoolClient(spool), "hierarchyAddGroups")
     statuses = write_level_phased(sink, tree)
-    assert len(statuses) == 4
-    assert sum(s.filter("success").count() for s in statuses) == 10
+    assert list(statuses) == [1, 2, 3, 4]
+    assert sum(s.filter("success").count() for s in statuses.values()) == 10
 
     # parent-before-child across PROCESS boundaries: each spool file's
     # mtime orders the batches; every record's parent must appear in a
