@@ -34,8 +34,23 @@ the reference's domain) — at data-warehouse scale the same DAG holds
 because the engine's outer_merge degrades gracefully to sort-merge with
 AQE skew splitting, the dim sides broadcast, and the mutation sink
 batches per partition. Nothing in this module collects a fact table to
-the driver; the only driver-side values are gate booleans and the F8
-plan switch (one boolean aggregate, ETL:390).
+the driver; the only driver-side values are
+
+- the F8 plan switch (one boolean aggregate, ETL:390);
+- the three provenance-slice counts of each outer merge (one
+  ``groupBy("_merge").count()`` per merge), which drive the reports
+  and gates;
+- the equity user and group counts (one aggregate);
+- the distinct hierarchy levels (one value per tree level);
+- each mutation write's record and failure counts, tallied by the
+  posting tasks.
+
+Spark's cost per job, not data volume, dominates a sync. So each frame
+that more than one action reads, and whose plan shuffles, is
+materialized once (:class:`Materializer`); every count comes from an
+aggregate that runs anyway or from the write that posts the frame.
+Re-reading a plan with no exchange (the bucketed reconcile join, the
+driver-built API snapshots) costs no more jobs than materializing it.
 """
 
 from __future__ import annotations
@@ -51,6 +66,9 @@ from graphql_api_etl_spark.operators.aggregate import (
     hierarchy_levels,
 )
 from graphql_api_etl_spark.operators.join import (
+    MERGE_BOTH,
+    MERGE_LEFT,
+    MERGE_RIGHT,
     anti,
     cross,
     outer_merge,
@@ -72,10 +90,14 @@ class PipelineContext:
     """Everything the sync needs: current-state sources, the file drop,
     mutation sinks, and a report directory.
 
-    ``fetch_*`` are callables so the pipeline can re-fetch after loads
-    (the reference's self-healing second merge pass, ETL:474–506); in
-    production they wrap sources.graphql.fetch_connection, in tests
-    they read mock state.
+    ``fetch_*`` are callables so the pipeline controls when each
+    connection is read; in production they wrap
+    sources.graphql.fetch_connection, in tests they read mock state.
+    A sync calls ``fetch_users`` and ``fetch_hierarchy_groups`` once,
+    after phase 1's hierarchy writes (nothing in the sync adds users,
+    and only phase 1 writes groups). Only ``fetch_locations`` is called
+    again, after the self-healing load (the reference's second merge
+    pass, ETL:474–506).
     """
 
     alignments: DataFrame  # normalized Excel sheet (S1; columns per FIXTURES.md A1)
@@ -103,6 +125,46 @@ class PipelineContext:
     # (one-off runs where the two landing shuffles wouldn't amortize).
     bucket_reconcile: bool = True
     reconcile_buckets: int = 32
+
+
+class Materializer:
+    """Materializes each frame a sync reads with more than one action,
+    once, and releases them all when the ``with`` block ends, whether
+    the sync returns or a gate raises.
+
+    ``localCheckpoint`` rather than ``persist``: the checkpoint runs
+    the plan once, with AQE, and keeps the partitioning AQE coalesced
+    it to, so a frame that feeds a MutationSink is posted in the same
+    full batches as the lazy frame would be. A persisted frame can keep
+    its shuffle partitions instead: phase 1 posted each hierarchy level
+    in two part-filled batches from one, and in one batch from the
+    checkpoint. ``DataFrame.unpersist`` does not release a checkpoint,
+    so the exit unpersists the checkpointed RDD itself; a released
+    frame can no longer be read."""
+
+    def __init__(self) -> None:
+        self._rdds: list = []
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        out = df.localCheckpoint(eager=True)
+        self._rdds.append(out._jdf.logicalPlan().rdd())
+        return out
+
+    def __enter__(self) -> Materializer:
+        return self
+
+    def __exit__(self, *exc_info) -> None:
+        for rdd in self._rdds:
+            rdd.unpersist(False)
+        self._rdds.clear()
+
+
+def provenance_counts(merged: DataFrame) -> tuple[int, int, int]:
+    """(both, left_only, right_only) row counts of an outer_merge
+    result from one aggregate — the counts of split_by_provenance's
+    slices without one job per slice."""
+    n = dict(merged.groupBy("_merge").count().collect())
+    return n.get(MERGE_BOTH, 0), n.get(MERGE_LEFT, 0), n.get(MERGE_RIGHT, 0)
 
 
 @dataclass
@@ -245,8 +307,10 @@ class ReconcileStaging:
     REUSE the staged tables instead of accumulating ``api_<key>_N``
     serials (retention: serials appear only on the mutated-state
     fallback). Snapshot caveat: an append/overwrite invalidates frames
-    read from the table BEFORE the landing — the pipeline materializes
-    every pass-1 count before triggering the self-healing load."""
+    read from the table BEFORE the landing — the pipeline takes all
+    pass-1 counts from one aggregate and posts the pass-1 payload
+    before the self-healing landing, and reads no pass-1 frame
+    after it."""
 
     database: str
     location: str
@@ -408,10 +472,13 @@ def missing_location_payload(missing: DataFrame) -> DataFrame:
     ).na.fill("")
 
 
-def map_locations_to_hierarchies(ctx: PipelineContext, report: SyncReport) -> DataFrame:
+def map_locations_to_hierarchies(
+    ctx: PipelineContext, report: SyncReport, groups: DataFrame, materialize: Materializer
+) -> DataFrame:
     """The relational core (§3.3): reconcile, load the anti-join
     remainder, re-fetch, reconcile again, then map matched locations to
-    their districts and collect location sets per district (A1)."""
+    the districts among ``groups`` (the sync's hierarchy-group
+    snapshot) and collect location sets per district (A1)."""
     api_locations = ctx.fetch_locations()
     key = choose_location_key(api_locations)
 
@@ -426,20 +493,17 @@ def map_locations_to_hierarchies(ctx: PipelineContext, report: SyncReport) -> Da
         db = "graft_stage_" + hashlib.md5(loc.encode()).hexdigest()[:10]
         staging = ReconcileStaging(db, loc, num_buckets=ctx.reconcile_buckets)
 
-    _, both, missing, deprecated = reconcile_locations(
-        ctx.alignments, api_locations, key, staging
-    )
-    report.note("locations_matched_pass1", both.count())
+    merged, _, missing, _ = reconcile_locations(ctx.alignments, api_locations, key, staging)
+    n_both, n_missing, _ = provenance_counts(merged)
+    report.note("locations_matched_pass1", n_both)
 
     # Load missing locations (ETL:430–470), then self-heal: re-fetch and re-merge.
-    n_missing = missing.count()
     report.note("locations_missing_pass1", n_missing)
     if n_missing:
         path = f"{ctx.report_dir}/new_locations_not_in_api"
         payload = missing_location_payload(missing)
         report.reports["missing_locations"] = write_csv_report(payload, path)
-        status = ctx.location_sink.write(payload)
-        report.note("location_add_failures", status.filter(~F.col("success")).count())
+        report.note("location_add_failures", ctx.location_sink.write(payload).failed)
         api_locations = ctx.fetch_locations()
         # The reference re-evaluates the remoteId-emptiness switch after
         # the self-healing load (second ``(node_remoteId == '').all()``,
@@ -450,49 +514,52 @@ def map_locations_to_hierarchies(ctx: PipelineContext, report: SyncReport) -> Da
     merged, both, still_missing, deprecated = reconcile_locations(
         ctx.alignments, api_locations, key, staging
     )
+    n_both, n_still_missing, n_deprecated = provenance_counts(merged)
     # V3 residual warning + V5 deprecated-locations CSV (ETL:508–524)
     if warn_if_nonempty(
         still_missing.select("location", "unit"),
         "locations_still_unloaded",
         f"{ctx.report_dir}/locations_still_unloaded",
+        n_still_missing,
     ):
         report.reports["still_unloaded"] = f"{ctx.report_dir}/locations_still_unloaded"
     if warn_if_nonempty(
         deprecated.select("node_id", "node_name"),
         "api_locations_not_in_file",
         f"{ctx.report_dir}/api_locations_not_in_file",
+        n_deprecated,
     ):
         report.reports["deprecated_locations"] = f"{ctx.report_dir}/api_locations_not_in_file"
-    report.note("locations_matched_pass2", both.count())
+    report.note("locations_matched_pass2", n_both)
 
     # Districts = non-top hierarchy groups (F3+P1/P2, ETL:526–530);
     # J3 outer merge + split (ETL:531–550); A1 collect (ETL:563–573).
-    groups = ctx.fetch_hierarchy_groups()
     districts = groups.filter(~F.col("node_isTop")).select(
         F.col("node_id").alias("district_group_id"),
         F.col("node_name").alias("district_name"),
     )
-    with_district = outer_merge(
-        both.select(
-            F.col("district").alias("current_district"), F.col("node_id").alias("location_id")
-        ),
-        districts,
-        left_on="current_district",
-        right_on="district_name",
+    with_district = materialize(
+        outer_merge(
+            both.select(
+                F.col("district").alias("current_district"),
+                F.col("node_id").alias("location_id"),
+            ),
+            districts,
+            left_on="current_district",
+            right_on="district_name",
+        )
     )
     matched, _, outdated = split_by_provenance(with_district)
+    _, _, n_outdated = provenance_counts(with_district)
     if warn_if_nonempty(
         outdated.select("district_group_id", "district_name"),
         "outdated_districts",
         f"{ctx.report_dir}/outdated_districts",
+        n_outdated,
     ):
         report.reports["outdated_districts"] = f"{ctx.report_dir}/outdated_districts"
 
-    assignments = collect_group_sets(
-        matched, "district_group_id", "location_id", out_col="location_ids"
-    )
-    report.note("districts_with_locations", assignments.count())
-    return assignments
+    return collect_group_sets(matched, "district_group_id", "location_id", out_col="location_ids")
 
 
 # ---------------------------------------------------------------------------
@@ -500,10 +567,17 @@ def map_locations_to_hierarchies(ctx: PipelineContext, report: SyncReport) -> Da
 # ---------------------------------------------------------------------------
 
 
-def build_user_permission_frame(ctx: PipelineContext, report: SyncReport) -> DataFrame:
-    """(hierarchy_name, email, role) long table → API ids → equity
-    cross-join expansion (J6) minus equity rows from the normal path
-    (J9) → (user_id, group_id) pairs."""
+def build_user_permission_frame(
+    ctx: PipelineContext,
+    report: SyncReport,
+    users: DataFrame,
+    groups: DataFrame,
+    materialize: Materializer,
+) -> DataFrame:
+    """(hierarchy_name, email, role) long table → API ids (``users``,
+    e-mails normalized) and group ids (``groups``) → equity cross-join
+    expansion (J6) minus equity rows from the normal path (J9) →
+    materialized (user_id, group_id) pairs."""
     al = ctx.alignments
 
     # X1/X2 normalization (ETL:754–756) + P5 backfill for allowlisted
@@ -537,12 +611,11 @@ def build_user_permission_frame(ctx: PipelineContext, report: SyncReport) -> Dat
     users_long = region_rows.unionByName(district_rows).na.drop(subset=["email"]).distinct()
 
     # J4: file users × API users on normalized email (ETL:805–811).
-    api_users = ctx.fetch_users().withColumn("node_email", normalize_email("node_email"))
-    m = outer_merge(users_long, api_users, left_on="email", right_on="node_email")
+    m = materialize(outer_merge(users_long, users, left_on="email", right_on="node_email"))
     matched, unmatched_file, unmatched_api = split_by_provenance(m)
+    _, n_unmatched, n_unmatched_api = provenance_counts(m)
 
     # V4 hard gate: every file user must exist in the API (ETL:817–827).
-    n_unmatched = unmatched_file.count()
     if n_unmatched:
         path = f"{ctx.report_dir}/unmatched_file_users"
         write_csv_report(unmatched_file.select("hierarchy_name", "email"), path)
@@ -552,35 +625,41 @@ def build_user_permission_frame(ctx: PipelineContext, report: SyncReport) -> Dat
         unmatched_api.select("node_id", "node_email"),
         "unmatched_api_users",
         f"{ctx.report_dir}/unmatched_api_users",
+        n_unmatched_api,
     ):
         report.reports["unmatched_api_users"] = f"{ctx.report_dir}/unmatched_api_users"
 
     # J5: attach hierarchy-group ids by name (ETL:845–855).
-    groups = ctx.fetch_hierarchy_groups().select(
-        F.col("node_id").alias("group_id"),
-        F.col("node_name").alias("group_name"),
-        F.col("node_isTop").alias("group_is_top"),
-    )
-    hm = outer_merge(
-        matched.select("hierarchy_name", "type_hierarchy", "franchise_or_equity", "node_id"),
-        groups,
-        left_on="hierarchy_name",
-        right_on="group_name",
+    hm = materialize(
+        outer_merge(
+            matched.select("hierarchy_name", "type_hierarchy", "franchise_or_equity", "node_id"),
+            groups.select(
+                F.col("node_id").alias("group_id"),
+                F.col("node_name").alias("group_name"),
+                F.col("node_isTop").alias("group_is_top"),
+            ),
+            left_on="hierarchy_name",
+            right_on="group_name",
+        )
     )
     assigned, _, userless = split_by_provenance(hm)
+    _, _, n_userless = provenance_counts(hm)
     if warn_if_nonempty(
         userless.select("group_id", "group_name"),
         "hierarchies_without_users",
         f"{ctx.report_dir}/hierarchies_without_users",
+        n_userless,
     ):
         report.reports["hierarchies_without_users"] = f"{ctx.report_dir}/hierarchies_without_users"
 
-    pairs = assigned.select(
-        F.col("node_id").alias("user_id"),
-        F.col("group_id"),
-        "type_hierarchy",
-        "franchise_or_equity",
-    ).distinct()
+    pairs = materialize(
+        assigned.select(
+            F.col("node_id").alias("user_id"),
+            F.col("group_id"),
+            "type_hierarchy",
+            "franchise_or_equity",
+        ).distinct()
+    )
 
     # Equity expansion (ETL:877–903): equity users get EVERY equity
     # region group (J6 cross join); the normal path excludes rows the
@@ -593,38 +672,31 @@ def build_user_permission_frame(ctx: PipelineContext, report: SyncReport) -> Dat
     equity_groups = equity_rows.select("group_id").distinct()
     equity_pairs = cross(equity_users, equity_groups)
     normal_pairs = pairs.filter(~is_equity_region).select("user_id", "group_id")
-
-    out = equity_pairs.unionByName(normal_pairs).distinct()
-    report.note("permission_pairs", out.count())
-    report.note("equity_pairs", equity_pairs.count())
-    return out
+    # |equity_users × equity_groups|, from one aggregate over pairs
+    n_users, n_groups = equity_rows.agg(
+        F.countDistinct("user_id"), F.countDistinct("group_id")
+    ).first()
+    report.note("equity_pairs", n_users * n_groups)
+    return materialize(equity_pairs.unionByName(normal_pairs).distinct())
 
 
 def corporate_permission_pairs(
-    ctx: PipelineContext, assigned_pairs: DataFrame, report: SyncReport
+    ctx: PipelineContext, assigned_pairs: DataFrame, users: DataFrame, groups: DataFrame
 ) -> DataFrame:
     """Corporate managers × top-level groups (J7, ETL:948–955) minus
     already-assigned (J8, ETL:957–960); unknown corporate emails are
-    simply absent from the semi join (F4, ETL:943–945)."""
+    simply absent from the semi join (F4, ETL:943–945). ``users`` and
+    ``groups`` are the sync's snapshot, e-mails normalized."""
     corp = ctx.corporate_managers.select(
         normalize_email(F.col(ctx.corporate_managers.columns[0])).alias("email")
     ).distinct()
-    api_users = ctx.fetch_users().withColumn("node_email", normalize_email("node_email"))
     corp_users = (
-        api_users.join(corp, api_users.node_email == corp.email, "left_semi")
+        users.join(corp, users.node_email == corp.email, "left_semi")
         .select(F.col("node_id").alias("user_id"))
         .distinct()
     )
-    top_groups = (
-        ctx.fetch_hierarchy_groups()
-        .filter(F.col("node_isTop"))
-        .select(F.col("node_id").alias("group_id"))
-        .distinct()
-    )
-    pairs = cross(corp_users, top_groups)
-    fresh = anti(pairs, assigned_pairs, on=["user_id", "group_id"])
-    report.note("corporate_pairs_new", fresh.count())
-    return fresh
+    top_groups = groups.filter(F.col("node_isTop")).select(F.col("node_id").alias("group_id")).distinct()
+    return anti(cross(corp_users, top_groups), assigned_pairs, on=["user_id", "group_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -635,47 +707,53 @@ def corporate_permission_pairs(
 def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     """Full pipeline: hierarchy DDL → location mapping → assignments →
     user permissions → corporate permissions. Mutations flow through
-    batched sinks; each sink returns a status frame whose failure count
-    is recorded (A8, ETL:706–731)."""
+    batched sinks; each write returns the record and failure counts the
+    report records (A8, ETL:706–731)."""
     report = SyncReport()
-
-    # Phase 1: hierarchy levels + groups, written one level at a time,
-    # parent level before child (write_level_phased). Levels are DERIVED
-    # from the built hierarchy, not hardcoded, so an edge-list hierarchy
-    # of any depth phases correctly (r3 VERDICT ask #8 — the reference's
-    # fixed (1, 2) only covers region→district).
-    if ctx.hierarchy_edges is not None:
-        hierarchy = build_hierarchy_tree(ctx.hierarchy_edges)
-    else:
-        hierarchy = build_hierarchy(ctx.alignments)
-    hierarchy = hierarchy.persist()
-    statuses = write_level_phased(
-        ctx.assignment_sink, hierarchy.select("group_name", "parent_name", "level", "is_top")
-    )
-    for level, status in statuses.items():
-        report.note(f"hierarchy_level{level}_failed", status.filter(~F.col("success")).count())
-    report.note("hierarchy_rows", hierarchy.count())
-    hierarchy.unpersist()
-
-    # Phase 2: locations → district assignments.
-    assignments = map_locations_to_hierarchies(ctx, report)
-    status = ctx.assignment_sink.write(
-        assignments.select("district_group_id", F.col("location_ids").cast("array<string>"))
-    )
-    report.note("assignment_failures", status.filter(~F.col("success")).count())
-
-    # Phase 3: user + corporate permissions.
-    pairs = build_user_permission_frame(ctx, report)
-    status = ctx.permission_sink.write(pairs)
-    n_failed = status.filter(~F.col("success")).count()
-    report.note("permission_failures", n_failed)
-    if n_failed:
-        write_csv_report(
-            status.filter(~F.col("success")), f"{ctx.report_dir}/failed_permissions"
+    with Materializer() as materialize:
+        # Phase 1: hierarchy levels + groups, written one level at a
+        # time, parent level before child (write_level_phased). Levels
+        # are DERIVED from the built hierarchy, not hardcoded, so an
+        # edge-list hierarchy of any depth phases correctly (r3 VERDICT
+        # ask #8 — the reference's fixed (1, 2) only covers
+        # region→district).
+        if ctx.hierarchy_edges is not None:
+            hierarchy = build_hierarchy_tree(ctx.hierarchy_edges)
+        else:
+            hierarchy = build_hierarchy(ctx.alignments)
+        levels = write_level_phased(
+            ctx.assignment_sink,
+            materialize(hierarchy.select("group_name", "parent_name", "level", "is_top")),
         )
-        report.reports["failed_permissions"] = f"{ctx.report_dir}/failed_permissions"
+        for level, posted in levels.items():
+            report.note(f"hierarchy_level{level}_failed", posted.failed)
+        report.note("hierarchy_rows", sum(p.records for p in levels.values()))
 
-    corp_pairs = corporate_permission_pairs(ctx, pairs, report)
-    status = ctx.permission_sink.write(corp_pairs)
-    report.note("corporate_permission_failures", status.filter(~F.col("success")).count())
+        # One snapshot of users and hierarchy groups per sync, taken
+        # after phase 1 wrote the groups.
+        groups = ctx.fetch_hierarchy_groups()
+        users = ctx.fetch_users().withColumn("node_email", normalize_email("node_email"))
+
+        # Phase 2: locations → district assignments.
+        assignments = map_locations_to_hierarchies(ctx, report, groups, materialize)
+        posted = ctx.assignment_sink.write(
+            assignments.select("district_group_id", F.col("location_ids").cast("array<string>"))
+        )
+        report.note("districts_with_locations", posted.records)
+        report.note("assignment_failures", posted.failed)
+
+        # Phase 3: user + corporate permissions.
+        pairs = build_user_permission_frame(ctx, report, users, groups, materialize)
+        posted = ctx.permission_sink.write(pairs)
+        report.note("permission_pairs", posted.records)
+        report.note("permission_failures", posted.failed)
+        if posted.failed:
+            write_csv_report(
+                posted.status.filter(~F.col("success")), f"{ctx.report_dir}/failed_permissions"
+            )
+            report.reports["failed_permissions"] = f"{ctx.report_dir}/failed_permissions"
+
+        posted = ctx.permission_sink.write(corporate_permission_pairs(ctx, pairs, users, groups))
+        report.note("corporate_pairs_new", posted.records)
+        report.note("corporate_permission_failures", posted.failed)
     return report

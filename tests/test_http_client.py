@@ -77,7 +77,7 @@ def test_mutation_sink_posts_batches_from_executors(spark):
             operation="locationAdd",
             batch_size=5,
         )
-        status = sink.write(df)
+        status = sink.write(df).status
         ok = status.filter("success").count()
         assert ok == 17
         posted = [
@@ -102,8 +102,9 @@ def test_mutation_retry_recovers_from_transient_failure(spark):
             batch_size=10,
             max_retries=2,
         )
-        status = sink.write(df)
-        assert status.filter("success").count() == 2
+        posted = sink.write(df)
+        assert posted.status.filter("success").count() == 2
+        assert (posted.records, posted.failed) == (2, 0)
 
 
 def test_per_record_server_rejection_lands_in_status(spark):
@@ -116,9 +117,11 @@ def test_per_record_server_rejection_lands_in_status(spark):
             HttpClientFactory(server.url, query="mutation hierarchyGroupPermissionAdd { }"),
             operation="hierarchyGroupPermissionAdd",
         )
-        status = sink.write(df)
-        assert status.filter("success").count() == 2
-        assert status.filter("NOT success").count() == 1
+        posted = sink.write(df)
+        assert posted.status.filter("success").count() == 2
+        assert posted.status.filter("NOT success").count() == 1
+        # the write returns the counts its tasks tallied while posting
+        assert (posted.records, posted.failed) == (3, 1)
 
 
 def test_delete_timeout_tolerated_marks_complete():
@@ -173,7 +176,7 @@ def test_mutation_sink_one_connection_per_partition(spark):
             operation="locationAdd",
             batch_size=2,  # forces ~5 POSTs per partition
         )
-        status = sink.write(df)
+        status = sink.write(df).status
         assert status.filter("success").count() == 40
         assert len(server.mutations) >= 10  # many batches...
         assert server.connections <= 4  # ...but ≤1 connection per partition

@@ -169,7 +169,7 @@ def test_mutation_sink_batches_and_status(spark):
     df = spark.createDataFrame([(i, f"loc-{i}") for i in range(25)], "id int, name string")
     client = MockMutationClient()
     sink = MutationSink(lambda: client, "locationAdd", batch_size=10)
-    status = sink.write(df.coalesce(1))
+    status = sink.write(df.coalesce(1)).status
     acc = status.agg(F.sum(F.when(F.col("success"), 1).otherwise(0)).alias("ok")).first()
     assert acc["ok"] == 25
 
@@ -177,9 +177,11 @@ def test_mutation_sink_batches_and_status(spark):
 def test_mutation_sink_failure_accounting(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], "id int")
     sink = MutationSink(lambda: MockMutationClient(fail_when=lambda r: r["id"] % 3 == 0), "op")
-    status = sink.write(df.coalesce(1)).cache()
+    posted = sink.write(df.coalesce(1))
+    assert (posted.records, posted.failed) == (10, 4)  # 0,3,6,9 fail
+    status = posted.status.cache()
     try:
-        assert status.filter(~F.col("success")).count() == 4  # 0,3,6,9
+        assert status.filter(~F.col("success")).count() == 4
         assert status.count() == 10
     finally:
         status.unpersist()
@@ -194,7 +196,7 @@ def test_mutation_sink_posts_exactly_once_across_actions(spark, tmp_path):
     spool = str(tmp_path / "spool")
     df = spark.createDataFrame([(i,) for i in range(20)], "id int")
     sink = MutationSink(lambda: SpoolMutationClient(spool), "op", batch_size=7)
-    status = sink.write(df.coalesce(1))
+    status = sink.write(df.coalesce(1)).status
     try:
         status.count()
         status.filter(~F.col("success")).count()
@@ -217,6 +219,12 @@ def test_gates(spark, tmp_path):
     with pytest.warns(UserWarning):
         assert warn_if_nonempty(full, "soft") is True
     assert warn_if_nonempty(empty, "soft") is False
+    # a caller-supplied count decides instead of the probe
+    with pytest.warns(UserWarning):
+        assert warn_if_nonempty(full, "soft", str(tmp_path / "counted"), count=1) is True
+    assert glob.glob(str(tmp_path / "counted" / "part-*.csv"))
+    assert warn_if_nonempty(full, "soft", str(tmp_path / "skipped"), count=0) is False
+    assert not glob.glob(str(tmp_path / "skipped"))
 
 
 # ---------------------------------------------------------------------------

@@ -6,6 +6,8 @@ assertions."""
 from __future__ import annotations
 
 import json
+from collections import Counter
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,6 +69,7 @@ def test_location_key_reevaluated_after_selfheal_refetch(spark, tmp_path):
     remoteId key. A location renamed in the API (name mismatch, unit↔
     remoteId match) only reconciles in pass 2 if the key was re-chosen."""
     from graphql_api_etl_spark.pipelines.weekly_alignments import (
+        Materializer,
         SyncReport,
         map_locations_to_hierarchies,
     )
@@ -106,7 +109,8 @@ def test_location_key_reevaluated_after_selfheal_refetch(spark, tmp_path):
         report_dir=str(tmp_path / "outs"),
     )
     report = SyncReport()
-    map_locations_to_hierarchies(ctx, report)
+    with Materializer() as materialize:
+        map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), materialize)
     # pass 1 on name: Alpha..Delta match; Echo+Foxtrot loaded
     assert report.counts["locations_matched_pass1"] == 4
     assert report.counts["locations_missing_pass1"] == 2
@@ -200,11 +204,94 @@ def test_hard_gate_on_unmatched_file_user(spark, tmp_path):
         report_dir=str(tmp_path / "outs"),
         backfill_supervisors=("Acme / Ada Lovelace",),
     )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    held_before = persistent().size()
     with pytest.raises(ValidationError, match="unmatched_file_users"):
         run_weekly_sync(ctx)
     import glob
 
     assert glob.glob(str(tmp_path / "outs" / "unmatched_file_users" / "part-*.csv"))
+    # the frames materialized before the gate fired are released too
+    assert persistent().size() == held_before
+
+
+def _counted(calls: list, name: str, fetch):
+    def counted():
+        calls.append(name)
+        return fetch()
+
+    return counted
+
+
+def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path):
+    """One snapshot per connection: users and hierarchy groups are
+    fetched once per sync, groups only after phase 1's level writes
+    reached the assignment sink (and before phase 2 posts its
+    assignments there); locations are fetched again only when the
+    self-healing load ran."""
+    ctx, spools = ctx_and_spools
+    calls: list[str] = []
+    assign_sink_at_group_fetch = []
+
+    def fetch_groups():
+        recs = read_spool(spools["assign"])
+        assign_sink_at_group_fetch.append((sum("group_name" in r for r in recs), len(recs)))
+        return ctx.fetch_hierarchy_groups()
+
+    report = run_weekly_sync(
+        replace(
+            ctx,
+            fetch_users=_counted(calls, "users", ctx.fetch_users),
+            fetch_hierarchy_groups=_counted(calls, "groups", fetch_groups),
+            fetch_locations=_counted(calls, "locations", ctx.fetch_locations),
+        )
+    )
+    assert report.counts["locations_missing_pass1"] == 2
+    assert Counter(calls) == {"users": 1, "groups": 1, "locations": 2}
+    # all 7 hierarchy rows (3 regions + 4 districts), nothing else
+    assert assign_sink_at_group_fetch == [(7, 7)]
+
+    # an API that already holds every file location: no load, no re-fetch
+    calls.clear()
+    present = [("locE", "Store Echo", "105"), ("locF", "Store Foxtrot", "106")]
+    report = run_weekly_sync(
+        replace(
+            ctx,
+            fetch_users=_counted(calls, "users", ctx.fetch_users),
+            fetch_hierarchy_groups=_counted(calls, "groups", ctx.fetch_hierarchy_groups),
+            fetch_locations=_counted(
+                calls, "locations", lambda: api_locations_df(spark, remote_ids=True, extra=present)
+            ),
+            report_dir=str(tmp_path / "outs_present"),
+        )
+    )
+    assert report.counts["locations_missing_pass1"] == 0
+    assert Counter(calls) == {"users": 1, "groups": 1, "locations": 1}
+
+
+# The fixture sync's Spark jobs (73) plus 10 %. Jobs are mostly fixed
+# cost, so a frame re-read lazily or a count per slice shows up here
+# before it shows in a timing.
+SYNC_JOB_BUDGET = 80
+
+
+def test_sync_job_budget_and_release(spark, ctx_and_spools):
+    """The fixture sync stays within its Spark job budget and releases
+    every frame it materialized."""
+    ctx, _ = ctx_and_spools
+    sc = spark.sparkContext
+    persistent = sc._jsc.getPersistentRDDs
+    held_before = persistent().size()
+    group = "test-weekly-sync-job-budget"
+    sc.setJobGroup(group, "weekly sync job budget")
+    try:
+        run_weekly_sync(ctx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= SYNC_JOB_BUDGET, n_jobs
+    assert persistent().size() == held_before
 
 
 def test_f8_key_switch(spark):
@@ -222,6 +309,7 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
     self-healing pass (the API state after the load holds only the
     accepted Foxtrot)."""
     from graphql_api_etl_spark.pipelines.weekly_alignments import (
+        Materializer,
         SyncReport,
         map_locations_to_hierarchies,
     )
@@ -249,7 +337,8 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
         report_dir=str(tmp_path / "outs"),
     )
     report = SyncReport()
-    map_locations_to_hierarchies(ctx, report)
+    with Materializer() as materialize:
+        map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), materialize)
     assert report.counts["locations_missing_pass1"] == 2
     assert report.counts["location_add_failures"] == 1
     unloaded = spark.read.option("header", True).csv(report.reports["still_unloaded"])
@@ -388,9 +477,10 @@ def test_deep_hierarchy_tree_phased_writes(spark, tmp_path):
 
     spool = str(tmp_path / "spool")
     sink = MutationSink(lambda: SpoolClient(spool), "hierarchyAddGroups")
-    statuses = write_level_phased(sink, tree)
-    assert list(statuses) == [1, 2, 3, 4]
-    assert sum(s.filter("success").count() for s in statuses.values()) == 10
+    levels = write_level_phased(sink, tree)
+    assert list(levels) == [1, 2, 3, 4]
+    assert sum(p.status.filter("success").count() for p in levels.values()) == 10
+    assert sum(p.records for p in levels.values()) == 10
 
     # parent-before-child across PROCESS boundaries: each spool file's
     # mtime orders the batches; every record's parent must appear in a
