@@ -12,8 +12,8 @@ standard library (``urllib.request`` — no third-party HTTP dependency)
 and adapts it to the engine's two pluggable seams:
 
 - :class:`HttpConnectionClient` → ``sources.graphql.ConnectionClient``
-  (``fetch_page``), so ``fetch_connection`` / the Python DataSource /
-  the streaming variant can walk a real paginated endpoint.
+  (``fetch_page``), so ``fetch_connection`` walks a real paginated
+  endpoint on the driver (the stream reads pages landed on disk).
 - :class:`HttpMutationClient` → ``sinks.mutations`` ``post_batch``
   contract, so :class:`~graphql_api_etl_spark.sinks.mutations.MutationSink`
   posts over the wire from executors (one client per partition via

@@ -55,6 +55,7 @@ driver-built API snapshots) costs no more jobs than materializing it.
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -115,15 +116,12 @@ class PipelineContext:
     # phase 1 builds the hierarchy via build_hierarchy_tree (arbitrary
     # depth) instead of the reference's fixed region→district columns.
     hierarchy_edges: DataFrame | None = None
-    # Recurring-job layout for the reconcile join (the deployment
-    # default): land both sides of the full-outer diff bucketed on the
-    # F8-chosen key (sinks.tables.stage_bucketed — one file per
-    # bucket, bucket-sorted), so the join itself runs with ZERO
-    # exchange.  Measured on the flagship floors probe: the plain
-    # shuffled SMJ marginal is 3.7–4.7× the single-process baseline,
-    # this layout 1.80–2.16×.  Set False to diff unstaged frames
-    # (one-off runs where the two landing shuffles wouldn't amortize).
-    bucket_reconcile: bool = True
+    # Buckets of the reconcile join's layout: the sync lands both sides
+    # of the full-outer diff bucketed on the F8-chosen key
+    # (sinks.tables.stage_bucketed — one file per bucket, bucket-sorted),
+    # so the join itself runs with ZERO exchange.  Measured on the
+    # flagship floors probe: the plain shuffled SMJ marginal is 3.7–4.7×
+    # the single-process baseline, this layout 1.80–2.16×.
     reconcile_buckets: int = 32
 
 
@@ -444,11 +442,11 @@ def reconcile_locations(
     """One full-outer pass (J1/J2 + splits, ETL:391–425): returns
     (merged, matched, missing_in_api, deprecated_in_api).
 
-    With ``staging`` (the pipeline default — ctx.bucket_reconcile),
-    both sides are landed bucketed on the F8-chosen key first, so the
-    full-outer SMJ runs with zero exchange: the recurring-job layout
-    (tests/test_plans.py asserts the exchange-free plan; floors range
-    1.80–2.16× vs the plain shape's 3.7–4.7×, BASELINE.md)."""
+    With ``staging`` (what the sync passes), both sides are landed
+    bucketed on the F8-chosen key first, so the full-outer SMJ runs
+    with zero exchange: the recurring-job layout (tests/test_plans.py
+    asserts the exchange-free plan; floors range 1.80–2.16× vs the
+    plain shape's 3.7–4.7×, BASELINE.md)."""
     lhs = alignments.withColumn("unit_str", F.col("unit").cast("bigint").cast("string"))
     lkey, rkey = ("location", "node_name") if key == "name" else ("unit_str", "node_remoteId")
     if staging is not None:
@@ -482,16 +480,12 @@ def map_locations_to_hierarchies(
     api_locations = ctx.fetch_locations()
     key = choose_location_key(api_locations)
 
-    # Deployment default: land both diff sides bucketed on the chosen
-    # key so the recurring full-outer join is exchange-free (and the
-    # file side is landed ONCE for both passes).
-    staging = None
-    if ctx.bucket_reconcile:
-        import hashlib
-
-        loc = f"{ctx.report_dir}/_staged_buckets"
-        db = "graft_stage_" + hashlib.md5(loc.encode()).hexdigest()[:10]
-        staging = ReconcileStaging(db, loc, num_buckets=ctx.reconcile_buckets)
+    # Land both diff sides bucketed on the chosen key so the recurring
+    # full-outer join is exchange-free (and the file side is landed
+    # ONCE for both passes).
+    loc = f"{ctx.report_dir}/_staged_buckets"
+    db = "graft_stage_" + hashlib.md5(loc.encode()).hexdigest()[:10]
+    staging = ReconcileStaging(db, loc, num_buckets=ctx.reconcile_buckets)
 
     merged, _, missing, _ = reconcile_locations(ctx.alignments, api_locations, key, staging)
     n_both, n_missing, _ = provenance_counts(merged)

@@ -1,26 +1,24 @@
-"""Paginated Relay-style connection source (reference S3).
+"""Paginated Relay-style connection source (reference S3 + S4).
 
 The reference's extract path (``fetch_data_from_graphql_api``,
 ETL:178–221) is a serial cursor loop: POST, read
 ``pageInfo.endCursor``/``hasNextPage``, accumulate ``edges[].node``,
 then ``json_normalize``. The cursor chain is inherently serial
 (SURVEY.md §7 hard part 4) — each page's address is only known after
-the previous page. The engine therefore isolates it:
+the previous page.
 
-- :func:`fetch_connection` — batch ingestion: page loop on the driver
-  (the unavoidable serial part), rows parallelized into a DataFrame
-  per page batch, nested structs flattened with sources.flatten (the
-  S4 equivalent). Pages already landed are processed with full
-  executor parallelism; only the HTTP walk is serial.
-- :class:`GraphQLDataSource` — the same protocol as a registerable
-  Spark Python DataSource (``spark.dataSource.register``), so
-  ``spark.read.format("graphql_connection")`` works declaratively and
-  the streaming variant can expose the cursor as a checkpointed offset.
-- :class:`LocalPagesClient` — fixture client serving in-memory/JSON
-  pages with the exact Relay envelope (pageInfo/edges/cursor,
-  ETL:1005–1011); the real HTTP client is a thin adapter with the same
-  ``fetch_page`` contract (observable contract of ``GQLAPI.post``,
-  ETL:169–175).
+This is the one module that knows the page-file format
+(:func:`page_files`) and the node frame (:func:`node_table`: ``(node,)``
+rows under ``node struct<declared schema>``, which ``sources.flatten``
+turns into ``node_*`` columns). Two readers share them:
+:func:`fetch_connection` walks the pages on the driver and builds one
+Arrow-backed frame, and ``streaming.graphql_stream.stream_connection``
+reads landed pages as a stream with the same columns. The walk stays
+on the driver because a Python DataSource re-runs its read for every
+action, and the sync reads each snapshot with several actions.
+:class:`LocalPagesClient` serves fixture pages with the exact Relay
+envelope (ETL:1005–1011); ``net.HttpConnectionClient`` is the HTTP
+adapter with the same ``fetch_page`` contract (ETL:169–175).
 """
 
 from __future__ import annotations
@@ -29,10 +27,33 @@ import json
 import os
 from typing import Any, Protocol
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from graphql_api_etl_spark.sources.flatten import flatten
+
+
+def _page_index(fname: str) -> int:
+    stem = fname[len("page-") : -len(".json")]
+    if not stem.isdigit():
+        raise ValueError(f"non-numeric page file name {fname!r}: rename to page-<int>.json")
+    return int(stem)
+
+
+def page_files(directory: str) -> list[str]:
+    """Paths of the ``page-<int>.json`` files in ``directory``, in
+    NUMERIC page order: ``page-10`` sorts before ``page-2`` as a
+    string, which would reorder a connection's pages and shift a
+    stream's committed offsets when new pages land."""
+    names = [f for f in os.listdir(directory) if f.startswith("page-") and f.endswith(".json")]
+    return [os.path.join(directory, f) for f in sorted(names, key=_page_index)]
+
+
+def read_page(path: str) -> dict[str, Any]:
+    with open(path) as f:
+        return json.load(f)
 
 
 class ConnectionClient(Protocol):
@@ -43,18 +64,14 @@ class ConnectionClient(Protocol):
 
 
 class LocalPagesClient:
-    """Serves a pre-built list of Relay pages (or a directory of
-    page-*.json fixture files)."""
+    """Serves a pre-built list of Relay pages, or the pages landed in a
+    directory (:func:`page_files`)."""
 
     def __init__(self, pages: list[dict[str, Any]] | None = None, directory: str | None = None):
         if pages is None:
             if directory is None:
                 raise ValueError("pages or directory required")
-            pages = []
-            for fname in sorted(os.listdir(directory)):
-                if fname.endswith(".json"):
-                    with open(os.path.join(directory, fname)) as f:
-                        pages.append(json.load(f))
+            pages = [read_page(path) for path in page_files(directory)]
         self.pages = pages
         self._by_cursor: dict[str | None, int] = {None: 0}
         for i, page in enumerate(pages[:-1]):
@@ -90,6 +107,33 @@ def walk_pages(client: ConnectionClient, max_pages: int = 100_000) -> list[dict[
     raise RuntimeError(f"connection truncated: hasNextPage still true after max_pages={max_pages}")
 
 
+def node_schema(schema: T.StructType) -> T.StructType:
+    """The node frame's schema: one ``node`` column of the declared
+    node struct, the shape ``flatten`` turns into ``node_*`` columns."""
+    return T.StructType([T.StructField("node", schema)])
+
+
+def node_table(nodes: list[dict[str, Any]], schema: T.StructType) -> pa.Table:
+    """The node frame's rows as Arrow, in the declared ``schema``.
+
+    Arrow applies the declared types as JSON would read them: an
+    integer widens to a double, a missing key is null and an undeclared
+    key is ignored. A value that does not fit its type raises, naming
+    the field; it never turns into a null that a later filter drops."""
+    columns = []
+    for field in schema.fields:
+        values = [node.get(field.name) for node in nodes]
+        try:
+            columns.append(pa.array(values, type=to_arrow_type(field.dataType)))
+        except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
+            raise ValueError(
+                f"node field {field.name!r} does not fit its declared type "
+                f"{field.dataType.simpleString()}: {e}"
+            ) from e
+    node = pa.StructArray.from_arrays(columns, fields=list(to_arrow_schema(schema)))
+    return pa.table({"node": node})
+
+
 def fetch_connection(
     spark: SparkSession,
     client: ConnectionClient,
@@ -99,56 +143,8 @@ def fetch_connection(
     """Batch-extract a whole connection into a flattened DataFrame
     (S3 + S4). ``schema`` describes the node struct (declared, not
     inferred — SURVEY §1.3); nested structs come back flattened as
-    ``parent_child`` columns like ``json_normalize(sep="_")``."""
+    ``parent_child`` columns like ``json_normalize(sep="_")``. An empty
+    connection gives the declared columns and no rows."""
     nodes = walk_pages(client)
-    # Parse on executors: JSON strings → typed struct → flatten.
-    from pyspark.sql import functions as F
-
-    parsed = (
-        spark.createDataFrame([(json.dumps(n),) for n in nodes] or [(None,)], "value string")
-        .filter(F.col("value").isNotNull())
-        .select(F.from_json(F.col("value"), schema).alias("node"))
-    )
-    return flatten(parsed, sep=flatten_sep)
-
-
-# ---------------------------------------------------------------------------
-# Python DataSource API wrapper (Spark 4): declarative registration.
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - exercised in tests where the API exists
-    from pyspark.sql.datasource import DataSource, DataSourceReader
-
-    class _ConnReader(DataSourceReader):
-        def __init__(self, options):
-            self.directory = options.get("path")
-
-        def read(self, partition):
-            client = LocalPagesClient(directory=self.directory)
-            for node in walk_pages(client):
-                yield (json.dumps(node),)
-
-    class GraphQLDataSource(DataSource):
-        """``spark.read.format("graphql_connection").option("path", dir)``
-        → one string column ``value`` of node JSON (parse with
-        ``from_json`` + sources.flatten). The page walk happens on an
-        executor; a keyset-splittable API would shard into partitions
-        here."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "graphql_connection"
-
-        def schema(self) -> str:
-            return "value string"
-
-        def reader(self, schema) -> DataSourceReader:
-            return _ConnReader(self.options)
-
-    def register_graphql_source(spark: SparkSession) -> None:
-        spark.dataSource.register(GraphQLDataSource)
-
-except ImportError:  # pragma: no cover
-
-    def register_graphql_source(spark: SparkSession) -> None:  # type: ignore[misc]
-        raise NotImplementedError("Python DataSource API unavailable in this PySpark build")
+    frame = spark.createDataFrame(node_table(nodes, schema), schema=node_schema(schema))
+    return flatten(frame, sep=flatten_sep)

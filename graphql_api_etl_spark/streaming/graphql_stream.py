@@ -11,21 +11,25 @@ the reference's full-truncate-reload into an append stream with
 exactly-once page consumption (offsets commit atomically with the
 batch via the checkpoint log).
 
-Wire format matches sources/graphql.py: each row is one node's JSON in
-a single ``value`` string column — parse with ``from_json`` + the
-sources.flatten helper. Pages are landed as ``page-*.json`` files in a
-directory (the thin HTTP adapter's job is exactly that: walk the live
-cursor chain and land pages; the engine consumes landed pages with
-full parallelism — SURVEY §7 hard part 4 isolates the serial walk).
+One source definition, batch and stream: pages are the ``page-<int>.json``
+files ``sources.graphql.page_files`` lists, each micro-batch row is
+``(node,)`` in the declared node struct (``sources.graphql.node_table``),
+and :func:`stream_connection` flattens it, so a stream has exactly the
+columns ``sources.graphql.fetch_connection`` gives a batch read. The
+thin HTTP adapter's job is to walk the live cursor chain and land pages;
+the engine consumes landed pages with full parallelism (SURVEY §7 hard
+part 4 isolates the serial walk).
 """
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from graphql_api_etl_spark.sources.flatten import flatten
+from graphql_api_etl_spark.sources.graphql import node_schema, node_table, page_files, read_page
 
 try:  # Python DataSource streaming API (Spark 4)
     from pyspark.sql.datasource import (
@@ -40,39 +44,21 @@ try:  # Python DataSource streaming API (Spark 4)
         start: int
         end: int
 
-    def _page_index(fname: str) -> int:
-        stem = fname[len("page-") : -len(".json")]
-        if not stem.isdigit():
-            raise ValueError(
-                f"non-numeric page file name {fname!r}: the checkpointed offset "
-                "indexes pages by their numeric suffix; rename to page-<int>.json"
-            )
-        return int(stem)
-
-    def _page_files(directory: str) -> list[str]:
-        # Sort by the NUMERIC page index, not lexicographically:
-        # page-10 sorts before page-2 as a string, which would shift
-        # already-committed offsets when new pages land (duplicated /
-        # dropped pages, breaking exactly-once).
-        return sorted(
-            (f for f in os.listdir(directory) if f.startswith("page-") and f.endswith(".json")),
-            key=_page_index,
-        )
-
     class _ConnStreamReader(DataSourceStreamReader):
         """Offset = number of fully-consumed pages (the cursor chain's
         position, serialized into the streaming checkpoint)."""
 
-        def __init__(self, options):
+        def __init__(self, options, schema: T.StructType):
             self.directory = options.get("path")
             if not self.directory:
                 raise ValueError("option 'path' (page directory) is required")
+            self.node_struct = schema["node"].dataType
 
         def initialOffset(self) -> dict:
             return {"pages": 0}
 
         def latestOffset(self) -> dict:
-            return {"pages": len(_page_files(self.directory))}
+            return {"pages": len(page_files(self.directory))}
 
         def partitions(self, start: dict, end: dict):
             # One partition per page: landed pages parse in parallel
@@ -83,30 +69,26 @@ try:  # Python DataSource streaming API (Spark 4)
             ] or [_PageRange(self.directory, 0, 0)]
 
         def read(self, partition: _PageRange):
-            files = _page_files(partition.directory)
-            for fname in files[partition.start : partition.end]:
-                with open(os.path.join(partition.directory, fname)) as f:
-                    page = json.load(f)
-                for edge in page.get("edges", []):
-                    yield (json.dumps(edge["node"]),)
+            for path in page_files(partition.directory)[partition.start : partition.end]:
+                nodes = [edge["node"] for edge in read_page(path).get("edges", [])]
+                yield from node_table(nodes, self.node_struct).to_batches()
 
         def commit(self, end: dict) -> None:
             pass  # page files are immutable; nothing to release
 
     class GraphQLStreamDataSource(DataSource):
         """``spark.readStream.format("graphql_connection_stream")
-        .option("path", dir)`` → unbounded ``value string`` of node
-        JSON, one micro-batch per batch of newly-landed pages."""
+        .schema(node_schema(schema)).option("path", dir)`` → unbounded
+        ``(node,)`` rows, one micro-batch per batch of newly-landed
+        pages. The schema is required: node types are declared, not
+        inferred."""
 
         @classmethod
         def name(cls) -> str:
             return "graphql_connection_stream"
 
-        def schema(self) -> str:
-            return "value string"
-
         def streamReader(self, schema) -> DataSourceStreamReader:
-            return _ConnStreamReader(self.options)
+            return _ConnStreamReader(self.options, schema)
 
     def register_graphql_stream_source(spark: SparkSession) -> None:
         spark.dataSource.register(GraphQLStreamDataSource)
@@ -115,3 +97,17 @@ except ImportError:  # pragma: no cover
 
     def register_graphql_stream_source(spark: SparkSession) -> None:  # type: ignore[misc]
         raise NotImplementedError("Python DataSource streaming API unavailable")
+
+
+def stream_connection(spark: SparkSession, directory: str, schema: T.StructType) -> DataFrame:
+    """Stream twin of ``sources.graphql.fetch_connection``: the pages
+    landed in ``directory`` as a streaming DataFrame with the batch
+    frame's flattened ``node_*`` columns."""
+    register_graphql_stream_source(spark)
+    stream = (
+        spark.readStream.format("graphql_connection_stream")
+        .schema(node_schema(schema))
+        .option("path", directory)
+        .load()
+    )
+    return flatten(stream)

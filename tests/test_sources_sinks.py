@@ -95,6 +95,26 @@ def test_walk_pages_raises_when_max_pages_runs_out():
     assert len(walk_pages(LocalPagesClient(pages=_pages()), max_pages=3)) == 3
 
 
+def test_local_pages_directory_reads_pages_in_numeric_order(tmp_path):
+    """Landed pages are read in numeric page order: with unpadded names
+    ``page-10`` sorts before ``page-2`` as a string, which would break
+    the cursor chain after three pages and return 3 of 11 nodes without
+    an error. Only ``page-<int>.json`` files are pages."""
+    for i in range(11):
+        page = {
+            "pageInfo": {"hasNextPage": i < 10, "endCursor": f"c{i}"},
+            "edges": [{"cursor": f"e{i}", "node": {"id": f"n{i}"}}],
+        }
+        (tmp_path / f"page-{i}.json").write_text(json.dumps(page))
+    (tmp_path / "schema.json").write_text("not a page")
+    nodes = walk_pages(LocalPagesClient(directory=str(tmp_path)))
+    assert [n["id"] for n in nodes] == [f"n{i}" for i in range(11)]
+
+    (tmp_path / "page-x.json").write_text("{}")
+    with pytest.raises(ValueError, match="non-numeric page file name 'page-x.json'"):
+        LocalPagesClient(directory=str(tmp_path))
+
+
 def test_fetch_connection_flattens(spark):
     df = fetch_connection(spark, LocalPagesClient(pages=_pages()), NODE_SCHEMA)
     assert set(df.columns) == {"node_id", "node_name", "node_isTop", "node_label_id", "node_label_name"}
@@ -113,23 +133,6 @@ def test_flatten_depth_and_arrays(spark):
     exploded = flatten(df, explode_arrays=True)
     assert "s_arr_v" in exploded.columns
     assert exploded.count() == 2
-
-
-def test_graphql_datasource_registration(spark, tmp_path):
-    from graphql_api_etl_spark.sources.graphql import register_graphql_source
-
-    for i, page in enumerate(_pages()):
-        (tmp_path / f"page-{i}.json").write_text(json.dumps(page))
-    register_graphql_source(spark)
-    df = (
-        spark.read.format("graphql_connection")
-        .option("path", str(tmp_path))
-        .load()
-        .select(F.from_json("value", NODE_SCHEMA).alias("node"))
-    )
-    flat = flatten(df)
-    assert flat.count() == 3
-    assert {r["node_id"] for r in flat.collect()} == {"g0", "g1", "g2"}
 
 
 def test_normalize_column_name():

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from graphql_api_etl_spark.sources.registry import load_table
 from graphql_api_etl_spark.streaming.windows import sessionized, windowed_counts
@@ -81,10 +82,9 @@ def test_incremental_reconcile_equals_batch(spark, tmp_path):
     last-occurrence-per-key semantics."""
     import json
 
-    from graphql_api_etl_spark.streaming.graphql_stream import register_graphql_stream_source
+    from graphql_api_etl_spark.streaming.graphql_stream import stream_connection
     from graphql_api_etl_spark.streaming.reconcile import IncrementalReconciler
 
-    register_graphql_stream_source(spark)
     pages = tmp_path / "pages"
     pages.mkdir()
     state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
@@ -100,18 +100,15 @@ def test_incremental_reconcile_equals_batch(spark, tmp_path):
         )
 
     def transform(batch):
-        return batch.select(
-            F.get_json_object("value", "$.id").alias("id"),
-            F.get_json_object("value", "$.name").alias("name"),
-        )
+        return batch.select(F.col("node_id").alias("id"), F.col("node_name").alias("name"))
 
     rec = IncrementalReconciler(state, key="id", transform=transform)
+    schema = T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("name", T.StringType())]
+    )
 
     def drain():
-        stream = (
-            spark.readStream.format("graphql_connection_stream").option("path", str(pages)).load()
-        )
-        q = rec.attach(stream, ckpt)
+        q = rec.attach(stream_connection(spark, str(pages), schema), ckpt)
         q.awaitTermination(120)
         q.stop()
 

@@ -11,10 +11,11 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from graphql_api_etl_spark.net import HttpClientFactory
 from graphql_api_etl_spark.sinks.mutations import MutationSink
-from graphql_api_etl_spark.streaming.graphql_stream import register_graphql_stream_source
+from graphql_api_etl_spark.streaming.graphql_stream import stream_connection
 
 from fixture_gql_server import FixtureGQLServer
 
@@ -38,8 +39,12 @@ def _posted_ids(server) -> list[str]:
     ]
 
 
+NODE_SCHEMA = T.StructType(
+    [T.StructField("id", T.StringType()), T.StructField("name", T.StringType())]
+)
+
+
 def test_stream_to_http_mutation_sink_e2e(spark, tmp_path):
-    register_graphql_stream_source(spark)
     pages = tmp_path / "pages"
     pages.mkdir()
     ckpt = tmp_path / "ckpt"
@@ -54,14 +59,8 @@ def test_stream_to_http_mutation_sink_e2e(spark, tmp_path):
         )
 
         def drain():
-            stream = (
-                spark.readStream.format("graphql_connection_stream")
-                .option("path", str(pages))
-                .load()
-                .select(
-                    F.get_json_object("value", "$.id").alias("node_id"),
-                    F.get_json_object("value", "$.name").alias("name"),
-                )
+            stream = stream_connection(spark, str(pages), NODE_SCHEMA).select(
+                "node_id", F.col("node_name").alias("name")
             )
             q = (
                 stream.writeStream.foreachBatch(lambda df, bid: sink.write(df))
