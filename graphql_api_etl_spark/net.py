@@ -188,7 +188,10 @@ class HttpMutationClient:
     Per-record outcomes come from the response's
     ``data.<operation>.results`` array when the server provides one
     (``{"success": bool, "error": str|null}`` per record, positional);
-    otherwise a 2xx envelope means the whole batch succeeded.
+    otherwise a 2xx envelope means the whole batch succeeded. A
+    ``results`` array of another length than the batch fails every
+    record of the batch, naming both lengths; it is not raised into the
+    sink's retry, since the server may have applied part of the batch.
 
     ``tolerate_timeout=True`` is the K4 semantics (ETL:224–246): a read
     timeout after the request was sent marks the records as completed
@@ -230,12 +233,15 @@ class HttpMutationClient:
             raise
         results = (payload.get("data") or {}).get(operation, {})
         per_record = results.get("results") if isinstance(results, dict) else None
-        if isinstance(per_record, list) and len(per_record) == len(records):
-            return [
-                (r, bool(s.get("success", False)), s.get("error"))
-                for r, s in zip(records, per_record)
-            ]
-        return [(r, True, None) for r in records]
+        if not isinstance(per_record, list):
+            return [(r, True, None) for r in records]
+        if len(per_record) != len(records):
+            error = f"server returned {len(per_record)} results for a batch of {len(records)} records"
+            return [(r, False, error) for r in records]
+        return [
+            (r, bool(s.get("success", False)), s.get("error"))
+            for r, s in zip(records, per_record)
+        ]
 
 
 class HttpClientFactory:

@@ -12,8 +12,9 @@ reference step          engine operator
 =====================  =====================================================
 hierarchy level DDL     aggregate.hierarchy_levels + level-phased sink
                         (ETL:137–175, 283–308)
-location reconcile      join.outer_merge + split_by_provenance, with the
-                        F8 runtime key switch and the self-healing second
+location reconcile      join.outer_merge + split_by_provenance, in memory
+                        (one materialized merge per pass), with the F8
+                        runtime key switch and the self-healing second
                         pass (ETL:371–574)
 district mapping        outer_merge locations×districts + collect_group_sets
                         (ETL:526–573)
@@ -49,13 +50,12 @@ Spark's cost per job, not data volume, dominates a sync. So each frame
 that more than one action reads, and whose plan shuffles, is
 materialized once (:class:`Materializer`); every count comes from an
 aggregate that runs anyway or from the write that posts the frame.
-Re-reading a plan with no exchange (the bucketed reconcile join, the
-driver-built API snapshots) costs no more jobs than materializing it.
+Re-reading a plan with no exchange (the driver-built API snapshots)
+costs no more jobs than materializing it.
 """
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -116,12 +116,9 @@ class PipelineContext:
     # phase 1 builds the hierarchy via build_hierarchy_tree (arbitrary
     # depth) instead of the reference's fixed region→district columns.
     hierarchy_edges: DataFrame | None = None
-    # Buckets of the reconcile join's layout: the sync lands both sides
-    # of the full-outer diff bucketed on the F8-chosen key
-    # (sinks.tables.stage_bucketed — one file per bucket, bucket-sorted),
-    # so the join itself runs with ZERO exchange.  Measured on the
-    # flagship floors probe: the plain shuffled SMJ marginal is 3.7–4.7×
-    # the single-process baseline, this layout 1.80–2.16×.
+    # Unused: the sync reconciles locations in memory and lands no
+    # bucketed table. Kept because perfbench/run.py still passes it; it
+    # goes with the next change to the benchmark.
     reconcile_buckets: int = 32
 
 
@@ -231,8 +228,8 @@ def null_distinguishing_row_hash(cols: list[str]) -> F.Column:
     )
 
 
-# Broadcast ceiling for delta-classifier key sets — shared by the batch
-# self-healing merge below and the streaming adds-only fast path
+# Broadcast ceiling for delta-classifier key sets — shared by
+# ReconcileStaging's delta merge below and the streaming adds-only path
 # (streaming/reconcile.BucketedIncrementalReconciler), so the two delta
 # paths cannot drift apart on when a key set is "small enough" to pull
 # through the driver.
@@ -250,7 +247,7 @@ def keyed_multiset_summary(
     null-distinguishing 64-bit row hashes as DECIMAL(38,0) —
     order-independent and overflow-free). The ONE classifier summary
     both delta paths compare — ReconcileStaging._merge_api_delta (the
-    batch self-healing pass) and
+    catalog twins' second landing) and
     BucketedIncrementalReconciler._try_adds_only_append (the streaming
     adds-only fast path) — so a hardening fix to either (e.g. the r13
     null-swap ADVICE) lands in both by construction instead of
@@ -275,23 +272,26 @@ def choose_location_key(api_locations: DataFrame) -> str:
 
 @dataclass
 class ReconcileStaging:
-    """Bucketed landing area for the recurring reconcile join.
+    """Bucketed landing area for a recurring reconcile join.
+
+    The weekly sync does not use it (it reconciles in memory); it
+    serves the catalog twins ``flagship_reconcile_healed``/``_mutated``
+    and the streaming reconciler.
 
     ``land`` writes a frame in the certified layout
     (sinks.tables.stage_bucketed: bucketed on the join key,
     bucket-sorted, one file per bucket) and returns the catalog-backed
     read.  The file side is cached per join key — its content is the
     same across the self-healing passes, so pass 2 re-joins the
-    ALREADY-landed table for free when the F8 key didn't switch.
+    ALREADY-landed table when the F8 key didn't switch.
 
     The API side is landed ONCE per join key (``api_<key>``); a second
     landing on the same key MERGES the delta instead of re-bucketing
-    the whole state (VERDICT r12 ask #2 — the reference's pass 2
-    re-fetches everything, ETL:474–506, but the self-healing load
-    touched few rows, so re-landing a 100 TB API side twice is pure
-    waste): one full-outer key join against the pass-1 table (whose
-    side is exchange-free off the bucketed scan) classifies rows as
-    new / updated / deleted, then
+    the whole state (the reference's pass 2 re-fetches everything,
+    ETL:474–506, but the self-healing load touches few rows): one
+    full-outer key join against the pass-1 table (whose side is
+    exchange-free off the bucketed scan) classifies rows as new /
+    updated / deleted, then
 
     - nothing changed → return the pass-1 table, ZERO rows written;
     - adds only (the self-healing shape) → append just the new rows
@@ -301,14 +301,12 @@ class ReconcileStaging:
       duplicate keys made the comparison ambiguous) → correctness
       fallback: full re-land under a serial name ``api_<key>_vN``.
 
-    Fixed names mean repeated ``run_weekly_sync`` calls in one session
-    REUSE the staged tables instead of accumulating ``api_<key>_N``
-    serials (retention: serials appear only on the mutated-state
-    fallback). Snapshot caveat: an append/overwrite invalidates frames
-    read from the table BEFORE the landing — the pipeline takes all
-    pass-1 counts from one aggregate and posts the pass-1 payload
-    before the self-healing landing, and reads no pass-1 frame
-    after it."""
+    Fixed names mean repeated landings in one session REUSE the staged
+    tables instead of accumulating ``api_<key>_N`` serials (retention:
+    serials appear only on the mutated-state fallback). Snapshot
+    caveat: an append/overwrite invalidates frames read from the table
+    BEFORE the landing, so a caller reads no frame of an earlier
+    landing after the next one."""
 
     database: str
     location: str
@@ -433,28 +431,16 @@ class ReconcileStaging:
             j.unpersist()
 
 
-def reconcile_locations(
-    alignments: DataFrame,
-    api_locations: DataFrame,
-    key: str,
-    staging: ReconcileStaging | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """One full-outer pass (J1/J2 + splits, ETL:391–425): returns
-    (merged, matched, missing_in_api, deprecated_in_api).
-
-    With ``staging`` (what the sync passes), both sides are landed
-    bucketed on the F8-chosen key first, so the full-outer SMJ runs
-    with zero exchange: the recurring-job layout (tests/test_plans.py
-    asserts the exchange-free plan; floors range 1.80–2.16× vs the
-    plain shape's 3.7–4.7×, BASELINE.md)."""
+def reconcile_locations(alignments: DataFrame, api_locations: DataFrame, key: str) -> DataFrame:
+    """One full-outer pass (J1/J2, ETL:391–425): the file drop merged
+    with the API's locations on the F8-chosen ``key``, in memory.
+    ``split_by_provenance`` of the result gives (matched,
+    missing_in_api, deprecated_in_api). Both sides are dimension-sized,
+    so the sync materializes the merge once per pass and reads its
+    counts, CSVs and ``locationAdd`` payload from that checkpoint."""
     lhs = alignments.withColumn("unit_str", F.col("unit").cast("bigint").cast("string"))
     lkey, rkey = ("location", "node_name") if key == "name" else ("unit_str", "node_remoteId")
-    if staging is not None:
-        lhs = staging.land(lhs, "file", lkey)
-        api_locations = staging.land(api_locations, "api", rkey)
-    merged = outer_merge(lhs, api_locations, left_on=lkey, right_on=rkey)
-    both, left_only, right_only = split_by_provenance(merged)
-    return merged, both, left_only, right_only
+    return outer_merge(lhs, api_locations, left_on=lkey, right_on=rkey)
 
 
 def missing_location_payload(missing: DataFrame) -> DataFrame:
@@ -476,24 +462,19 @@ def map_locations_to_hierarchies(
     """The relational core (§3.3): reconcile, load the anti-join
     remainder, re-fetch, reconcile again, then map matched locations to
     the districts among ``groups`` (the sync's hierarchy-group
-    snapshot) and collect location sets per district (A1)."""
+    snapshot) and collect location sets per district (A1). When pass 1
+    finds nothing missing, nothing is loaded, so pass 1's merge and
+    counts serve as pass 2's."""
     api_locations = ctx.fetch_locations()
     key = choose_location_key(api_locations)
-
-    # Land both diff sides bucketed on the chosen key so the recurring
-    # full-outer join is exchange-free (and the file side is landed
-    # ONCE for both passes).
-    loc = f"{ctx.report_dir}/_staged_buckets"
-    db = "graft_stage_" + hashlib.md5(loc.encode()).hexdigest()[:10]
-    staging = ReconcileStaging(db, loc, num_buckets=ctx.reconcile_buckets)
-
-    merged, _, missing, _ = reconcile_locations(ctx.alignments, api_locations, key, staging)
-    n_both, n_missing, _ = provenance_counts(merged)
+    merged = materialize(reconcile_locations(ctx.alignments, api_locations, key))
+    n_both, n_missing, n_deprecated = provenance_counts(merged)
     report.note("locations_matched_pass1", n_both)
+    report.note("locations_missing_pass1", n_missing)
 
     # Load missing locations (ETL:430–470), then self-heal: re-fetch and re-merge.
-    report.note("locations_missing_pass1", n_missing)
     if n_missing:
+        _, missing, _ = split_by_provenance(merged)
         path = f"{ctx.report_dir}/new_locations_not_in_api"
         payload = missing_location_payload(missing)
         report.reports["missing_locations"] = write_csv_report(payload, path)
@@ -504,17 +485,16 @@ def map_locations_to_hierarchies(
         # ETL:~481): if the load populated remoteIds, pass 2 joins on
         # remoteId even though pass 1 joined on name.
         key = choose_location_key(api_locations)
+        merged = materialize(reconcile_locations(ctx.alignments, api_locations, key))
+        n_both, n_missing, n_deprecated = provenance_counts(merged)
 
-    merged, both, still_missing, deprecated = reconcile_locations(
-        ctx.alignments, api_locations, key, staging
-    )
-    n_both, n_still_missing, n_deprecated = provenance_counts(merged)
+    both, still_missing, deprecated = split_by_provenance(merged)
     # V3 residual warning + V5 deprecated-locations CSV (ETL:508–524)
     if warn_if_nonempty(
         still_missing.select("location", "unit"),
         "locations_still_unloaded",
         f"{ctx.report_dir}/locations_still_unloaded",
-        n_still_missing,
+        n_missing,
     ):
         report.reports["still_unloaded"] = f"{ctx.report_dir}/locations_still_unloaded"
     if warn_if_nonempty(

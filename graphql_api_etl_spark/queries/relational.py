@@ -217,11 +217,12 @@ def _broadcast_dims_report(customer: DataFrame, nation: DataFrame, region: DataF
 def flagship_reconcile_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deployment twin of flagship_reconcile (r12, VERDICT r11 ask #7's
     preferred addition): the same full-outer reconcile report computed
-    over tables landed through sinks.tables.stage_bucketed — the exact
-    layout the pipeline's ReconcileStaging default writes (bucketed on
-    the join key, bucket-sorted, one file per bucket), so the driver's
-    differential gate covers the zero-exchange recurring-join path the
-    same way tpch_q3_bucketed covers the co-bucketed fact-fact layout.
+    over tables landed through sinks.tables.stage_bucketed — the
+    layout ReconcileStaging writes (bucketed on the join key,
+    bucket-sorted, one file per bucket), so the differential gate
+    covers the zero-exchange recurring-join path the same way
+    tpch_q3_bucketed covers the co-bucketed fact-fact layout (the
+    weekly sync joins in memory and stages nothing).
     Identical rows to the plain entry (same oracle SQL); floors range
     for this layout: 1.80–2.16× vs the plain shape's 3.2–4.7×
     (BASELINE.md CURRENT STATE).  First call per session lands the
@@ -253,7 +254,7 @@ def flagship_reconcile_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flagship_reconcile_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-healing twin of flagship_reconcile (r13, VERDICT r12 ask
     #2's gated consumer): the same reconcile report, but the API side
-    arrives the way the weekly pipeline's pass 2 sees it — a pass-1
+    arrives in the shape of a self-healing pass 2 — a pass-1
     bucketed landing MISSING a deterministic slice (every 97th order
     key, the not-yet-loaded rows), then a second landing of the full
     state that ReconcileStaging classifies against pass 1 and merges
@@ -264,7 +265,8 @@ def flagship_reconcile_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays exchange-free (tests/test_plans.py::
     test_staged_reconcile_join_after_delta_append pins the plan). At
     100 TB this is the write saved: pass 2 lands O(|loaded delta|)
-    instead of re-bucketing the whole API side (docs/PLANS.md).
+    instead of re-bucketing the whole API side (docs/PLANS.md; the
+    weekly sync re-merges its pass 2 in memory).
     Cites ETL:474–506 (the reference's re-fetch-everything pass 2)."""
     from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
     from graphql_api_etl_spark.sinks.tables import bucket_warehouse_path
@@ -368,7 +370,8 @@ def flagship_reconcile_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     report's join on o_custkey therefore shuffles the state once, the
     trade documented in streaming/reconcile.py (a deployment whose
     recurring join key differs from the upsert key lands the DOWNSTREAM
-    side through ReconcileStaging, the batch twins' layout). At 100 TB
+    side through ReconcileStaging, the batch twins' layout; the weekly
+    sync's own reconcile joins in memory and stages nothing). At 100 TB
     the per-batch cost is O(|batch|) classify + append against an
     exchange-free bucketed state scan; the state never re-shuffles and
     never rewrites (docs/PLANS.md).

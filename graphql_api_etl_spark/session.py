@@ -78,10 +78,12 @@ def get_spark(
         # bucket has EXACTLY one file — and the engine's bucketed
         # landing path (sinks.tables.stage_bucketed,
         # one_file_per_bucket) writes precisely that layout, so with
-        # this on the recurring reconcile join plans SMJ straight over
-        # the scans: zero exchange AND zero sort (plan-asserted in
-        # tests/test_plans.py).  Multi-file buckets keep their Sort
-        # node exactly as before.
+        # this on a join over that layout plans SMJ straight over the
+        # scans: zero exchange AND zero sort (plan-asserted in
+        # tests/test_plans.py).  The weekly sync joins in memory; the
+        # layout serves the bucketed catalog twins and the streaming
+        # reconciler.  Multi-file buckets keep their Sort node exactly
+        # as before.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         # Managed (bucketed) tables land outside the repo; in-memory
         # catalog (no Hive) carries bucket specs within the session.

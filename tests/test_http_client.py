@@ -124,6 +124,37 @@ def test_per_record_server_rejection_lands_in_status(spark):
         assert (posted.records, posted.failed) == (3, 1)
 
 
+class _FixedReplyApi:
+    """Stands in for HttpGQLApi: every POST gets the same reply."""
+
+    def __init__(self, payload: dict):
+        self.payload = payload
+
+    def post(self, **_kw) -> dict:
+        return self.payload
+
+
+def test_results_array_of_wrong_length_fails_the_whole_batch():
+    """A ``results`` array that does not line up with the batch cannot be
+    matched to its records, so every record of the batch is failed with
+    an error naming both lengths (returned, not raised into a retry)."""
+    records = [{"id": "a"}, {"id": "b"}, {"id": "c"}]
+    api = _FixedReplyApi({"data": {"locationAdd": {"results": [{"success": False}]}}})
+    out = HttpMutationClient(api, query="mutation locationAdd { }").post_batch(
+        "locationAdd", records
+    )
+    assert [r for r, _, _ in out] == records
+    assert [ok for _, ok, _ in out] == [False, False, False]
+    assert all("1 results" in err and "3 records" in err for _, _, err in out)
+
+    # a 2xx reply with no results array still means the batch succeeded
+    api = _FixedReplyApi({"data": {"locationAdd": {"ok": True}}})
+    out = HttpMutationClient(api, query="mutation locationAdd { }").post_batch(
+        "locationAdd", records
+    )
+    assert [(ok, err) for _, ok, err in out] == [(True, None)] * 3
+
+
 def test_delete_timeout_tolerated_marks_complete():
     # K4 (ETL:224-246): the reference swallows httpx.ReadTimeout on
     # delete because the server may have finished the operation.

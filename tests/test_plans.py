@@ -238,12 +238,12 @@ def test_runtime_bloom_filter_injects_on_selective_smj(spark, sf_dir):
 
 
 def test_staged_reconcile_join_has_zero_exchange(spark, sf_dir, tmp_path):
-    """The pipeline's deployment-default reconcile layout (VERDICT r11
-    ask #1): both diff sides landed via ReconcileStaging (bucketed on
-    the F8 key, bucket-sorted, one file per bucket) must give the
-    full-outer SMJ with ZERO Exchange on either side — the layout the
-    flagship floors row certifies at 1.80–2.16× vs the plain shuffled
-    shape's 3.7–4.7×."""
+    """The ReconcileStaging layout that the bucketed catalog twins and
+    the streaming reconciler use (the weekly sync joins in memory):
+    both diff sides landed bucketed on the key, bucket-sorted, one
+    file per bucket, must give the full-outer SMJ with ZERO Exchange
+    on either side — the layout the flagship floors row certifies at
+    1.80–2.16× vs the plain shuffled shape's 3.7–4.7×."""
     from graphql_api_etl_spark.operators.join import outer_merge
     from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
 
@@ -276,7 +276,9 @@ def test_staged_reconcile_join_has_zero_exchange(spark, sf_dir, tmp_path):
 
 
 def test_staged_reconcile_join_after_delta_append(spark, sf_dir, tmp_path):
-    """The self-healing pass 2 (VERDICT r12 ask #2): after the API
+    """ReconcileStaging's self-healing pass 2, as
+    flagship_reconcile_healed runs it (the weekly sync re-merges in
+    memory instead): after the API
     delta is APPENDED into the pass-1 bucketed table (instead of
     re-landing the whole side), the full-outer reconcile join must
     still run with ZERO Exchange — appended buckets carry >1 file so

@@ -215,20 +215,22 @@ def test_hard_gate_on_unmatched_file_user(spark, tmp_path):
     assert persistent().size() == held_before
 
 
-def _counted(calls: list, name: str, fetch):
-    def counted():
+def _counted(calls: list, name: str, fn):
+    def counted(*args, **kwargs):
         calls.append(name)
-        return fetch()
+        return fn(*args, **kwargs)
 
     return counted
 
 
-def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path):
+def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path, monkeypatch):
     """One snapshot per connection: users and hierarchy groups are
     fetched once per sync, groups only after phase 1's level writes
     reached the assignment sink (and before phase 2 posts its
-    assignments there); locations are fetched again only when the
-    self-healing load ran."""
+    assignments there); locations are fetched and reconciled again
+    only when the self-healing load ran."""
+    from graphql_api_etl_spark.pipelines import weekly_alignments as wa
+
     ctx, spools = ctx_and_spools
     calls: list[str] = []
     assign_sink_at_group_fetch = []
@@ -251,8 +253,10 @@ def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path):
     # all 7 hierarchy rows (3 regions + 4 districts), nothing else
     assert assign_sink_at_group_fetch == [(7, 7)]
 
-    # an API that already holds every file location: no load, no re-fetch
+    # an API that already holds every file location: no load, no
+    # re-fetch, and pass 1's merge serves as pass 2's
     calls.clear()
+    monkeypatch.setattr(wa, "reconcile_locations", _counted(calls, "reconcile", wa.reconcile_locations))
     present = [("locE", "Store Echo", "105"), ("locF", "Store Foxtrot", "106")]
     report = run_weekly_sync(
         replace(
@@ -266,22 +270,35 @@ def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path):
         )
     )
     assert report.counts["locations_missing_pass1"] == 0
-    assert Counter(calls) == {"users": 1, "groups": 1, "locations": 1}
+    assert Counter(calls) == {"users": 1, "groups": 1, "locations": 1, "reconcile": 1}
+    assert report.counts["locations_matched_pass2"] == report.counts["locations_matched_pass1"] == 6
 
 
-# The fixture sync's Spark jobs (73) plus 10 %. Jobs are mostly fixed
+# The fixture sync's Spark jobs (65) plus 10 %. Jobs are mostly fixed
 # cost, so a frame re-read lazily or a count per slice shows up here
 # before it shows in a timing.
-SYNC_JOB_BUDGET = 80
+SYNC_JOB_BUDGET = 72
 
 
 def test_sync_job_budget_and_release(spark, ctx_and_spools):
-    """The fixture sync stays within its Spark job budget and releases
-    every frame it materialized."""
+    """The fixture sync stays within its Spark job budget, releases
+    every frame it materialized, and leaves nothing behind: it
+    reconciles in memory, so it creates no catalog database or table
+    and lands no staging files under its report directory."""
+    import os
+
     ctx, _ = ctx_and_spools
     sc = spark.sparkContext
     persistent = sc._jsc.getPersistentRDDs
     held_before = persistent().size()
+
+    def catalog():
+        return {
+            db.name: sorted(t.name for t in spark.catalog.listTables(db.name))
+            for db in spark.catalog.listDatabases()
+        }
+
+    catalog_before = catalog()
     group = "test-weekly-sync-job-budget"
     sc.setJobGroup(group, "weekly sync job budget")
     try:
@@ -292,6 +309,8 @@ def test_sync_job_budget_and_release(spark, ctx_and_spools):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= SYNC_JOB_BUDGET, n_jobs
     assert persistent().size() == held_before
+    assert catalog() == catalog_before
+    assert not os.path.exists(os.path.join(ctx.report_dir, "_staged_buckets"))
 
 
 def test_f8_key_switch(spark):
@@ -348,11 +367,12 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
 def test_name_variant_reconciliation(spark, tmp_path):
     """The name-keyed J1 variant reaches the same match set when the
     API carries no remote ids."""
+    from graphql_api_etl_spark.operators.join import split_by_provenance
     from graphql_api_etl_spark.pipelines.weekly_alignments import reconcile_locations
 
     al = alignments_df(spark)
     api = api_locations_df(spark, remote_ids=False)
-    _, both, missing, deprecated = reconcile_locations(al, api, "name")
+    both, missing, deprecated = split_by_provenance(reconcile_locations(al, api, "name"))
     assert both.count() == 4
     assert {r["location"] for r in missing.collect()} == {"Store Echo", "Store Foxtrot"}
     assert {r["node_name"] for r in deprecated.collect()} == {"Store Zombie"}
