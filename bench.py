@@ -1105,8 +1105,7 @@ def _probe_delta_floors(spark, sf_dir: str) -> dict:
     try:
         from pyspark.sql import functions as F
 
-        from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
-        from graphql_api_etl_spark.sinks.tables import stage_bucketed
+        from graphql_api_etl_spark.sinks.tables import ReconcileStaging, stage_bucketed
         from graphql_api_etl_spark.sources.registry import load_table
 
         rep = 16

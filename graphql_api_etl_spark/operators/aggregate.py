@@ -62,11 +62,6 @@ def count_gate(df: DataFrame, expected: int | None = None, name: str = "gate") -
     return n
 
 
-def counts_equal(a: DataFrame, b: DataFrame) -> bool:
-    """V1 reconciliation (loaded vs fetched, ETL:38–42)."""
-    return a.count() == b.count()
-
-
 def success_accounting(status_df: DataFrame, success_col: str = "success") -> dict[str, int]:
     """A8 (ETL:706–731): success/failure tally of a mutation-status
     frame, one aggregate pass."""

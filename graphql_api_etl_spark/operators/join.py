@@ -8,8 +8,9 @@ The reference's signature relational pattern is pandas
 report is produced this way). :func:`outer_merge` reproduces it as ONE
 full-outer join that emits a ``_merge`` provenance column — the join
 shuffles once, and the three downstream slices are cheap filters over
-the same exchange (mark the result ``.cache()`` if consumed 3+ ways,
-as the pipeline assembly does).
+the same exchange — but only if the merge is evaluated once: the
+weekly sync checkpoints each merge it reads more than once through
+``pipelines.weekly_alignments.Materializer`` before slicing it.
 
 Provenance is computed from presence-flag literals tagged onto each
 side BEFORE the join (``_left_present = lit(True)``), not from key

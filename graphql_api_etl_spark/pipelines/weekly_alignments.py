@@ -85,6 +85,11 @@ from graphql_api_etl_spark.sinks.gates import ValidationError, warn_if_nonempty
 from graphql_api_etl_spark.sinks.mutations import MutationSink, write_level_phased
 from graphql_api_etl_spark.sinks.reports import write_csv_report
 
+# The sync stages nothing; this name stays only because
+# `perfbench/run.py --trace 1` wraps `wa.ReconcileStaging.land`. It goes
+# away with the next benchmark change.
+from graphql_api_etl_spark.sinks.tables import ReconcileStaging  # noqa: E402,F401
+
 
 @dataclass
 class PipelineContext:
@@ -211,54 +216,6 @@ def build_hierarchy_tree(edges: DataFrame, child_col: str = "child", parent_col:
 # ---------------------------------------------------------------------------
 
 
-def null_distinguishing_row_hash(cols: list[str]) -> F.Column:
-    """64-bit row hash that DISTINGUISHES which columns hold null.
-
-    ``xxhash64`` skips null inputs entirely (the seed passes through
-    unchanged), so ``('x', NULL)`` and ``(NULL, 'x')`` hash identically
-    — a value moving between columns, or a value↔null swap, would read
-    as "row unchanged" and the delta classifier would silently return
-    stale state (r13 ADVICE, reproduced end-to-end).  Interleaving each
-    column with its never-null ``isNull()`` flag pins every value to
-    its position: the flags always contribute to the hash, so two rows
-    agree only when the same columns are null AND the non-null values
-    match column-for-column."""
-    return F.xxhash64(
-        *[e for c in cols for e in (F.col(c).isNull(), F.col(c))]
-    )
-
-
-# Broadcast ceiling for delta-classifier key sets — shared by
-# ReconcileStaging's delta merge below and the streaming adds-only path
-# (streaming/reconcile.BucketedIncrementalReconciler), so the two delta
-# paths cannot drift apart on when a key set is "small enough" to pull
-# through the driver.
-DELTA_BROADCAST_KEY_CAP = 1_000_000
-
-
-def keyed_multiset_summary(
-    frame: DataFrame,
-    key: str | list[str],
-    cols: list[str],
-    cnt: str = "__cnt",
-    hsum: str = "__h",
-) -> DataFrame:
-    """Per-key multiset fingerprint: (row count, exact sum of
-    null-distinguishing 64-bit row hashes as DECIMAL(38,0) —
-    order-independent and overflow-free). The ONE classifier summary
-    both delta paths compare — ReconcileStaging._merge_api_delta (the
-    catalog twins' second landing) and
-    BucketedIncrementalReconciler._try_adds_only_append (the streaming
-    adds-only fast path) — so a hardening fix to either (e.g. the r13
-    null-swap ADVICE) lands in both by construction instead of
-    drifting between two hand-copied aggregations."""
-    keys = [key] if isinstance(key, str) else list(key)
-    row_hash = null_distinguishing_row_hash(cols).cast("decimal(38,0)")
-    return frame.select(*cols).groupBy(*keys).agg(
-        F.count(F.lit(1)).alias(cnt), F.sum(row_hash).alias(hsum)
-    )
-
-
 def choose_location_key(api_locations: DataFrame) -> str:
     """F8 plan switch (ETL:390, 481): if every API remoteId is empty
     (or the API holds no locations), join on location name; else on
@@ -268,167 +225,6 @@ def choose_location_key(api_locations: DataFrame) -> str:
         api_locations, F.coalesce(F.col("node_remoteId"), F.lit("")) == ""
     )
     return "name" if empty_remote else "remote_id"
-
-
-@dataclass
-class ReconcileStaging:
-    """Bucketed landing area for a recurring reconcile join.
-
-    The weekly sync does not use it (it reconciles in memory); it
-    serves the catalog twins ``flagship_reconcile_healed``/``_mutated``
-    and the streaming reconciler.
-
-    ``land`` writes a frame in the certified layout
-    (sinks.tables.stage_bucketed: bucketed on the join key,
-    bucket-sorted, one file per bucket) and returns the catalog-backed
-    read.  The file side is cached per join key — its content is the
-    same across the self-healing passes, so pass 2 re-joins the
-    ALREADY-landed table when the F8 key didn't switch.
-
-    The API side is landed ONCE per join key (``api_<key>``); a second
-    landing on the same key MERGES the delta instead of re-bucketing
-    the whole state (the reference's pass 2 re-fetches everything,
-    ETL:474–506, but the self-healing load touches few rows): one
-    full-outer key join against the pass-1 table (whose side is
-    exchange-free off the bucketed scan) classifies rows as new /
-    updated / deleted, then
-
-    - nothing changed → return the pass-1 table, ZERO rows written;
-    - adds only (the self-healing shape) → append just the new rows
-      into the pass-1 table (sinks.tables.append_bucketed_delta) —
-      write cost |delta|, not |API|;
-    - updates or deletes present (state mutated beyond the load, or
-      duplicate keys made the comparison ambiguous) → correctness
-      fallback: full re-land under a serial name ``api_<key>_vN``.
-
-    Fixed names mean repeated landings in one session REUSE the staged
-    tables instead of accumulating ``api_<key>_N`` serials (retention:
-    serials appear only on the mutated-state fallback). Snapshot
-    caveat: an append/overwrite invalidates frames read from the table
-    BEFORE the landing, so a caller reads no frame of an earlier
-    landing after the next one."""
-
-    database: str
-    location: str
-    num_buckets: int = 32
-    _file_cache: dict[str, DataFrame] = field(default_factory=dict)
-    _api_names: dict[str, str] = field(default_factory=dict)
-    _serial: int = 0
-
-    def land(self, df: DataFrame, side: str, key_col: str) -> DataFrame:
-        from graphql_api_etl_spark.sinks.tables import (
-            ensure_bucket_database,
-            stage_bucketed,
-        )
-
-        if side == "file" and key_col in self._file_cache:
-            return self._file_cache[key_col]
-        spark = df.sparkSession
-        ensure_bucket_database(spark, self.database, self.location)
-        if side == "file":
-            name = f"{self.database}.file_{key_col}"
-        else:
-            if key_col in self._api_names:
-                return self._merge_api_delta(df, key_col)
-            name = f"{self.database}.api_{key_col}"
-            self._api_names[key_col] = name
-        staged = stage_bucketed(spark, df, name, [key_col], num_buckets=self.num_buckets)
-        if side == "file":
-            self._file_cache[key_col] = staged
-        return staged
-
-    def _merge_api_delta(self, df: DataFrame, key_col: str) -> DataFrame:
-        """Second-or-later API landing on an unswitched key: classify
-        the re-fetched state against the pass-1 table and write only
-        what changed (docstring above for the three outcomes).
-
-        Classification is MULTISET-correct for non-unique keys: each
-        side collapses to a per-key summary (row count + exact sum of
-        64-bit row hashes as DECIMAL(38,0) — order-independent and
-        overflow-free), so a key with several identical-content rows
-        compares equal instead of producing crossed row-pair
-        mismatches.  The pass-1 side's groupBy runs exchange-free off
-        its bucketed scan; the re-fetched side pays one key-summary
-        shuffle — compute, not a landed write.  A hash-sum collision
-        (engineered multiset pairs summing equal) would mis-read a
-        mutation as 'same'; 64-bit hashes make that a non-issue for
-        real states."""
-        from graphql_api_etl_spark.sinks.tables import (
-            append_bucketed_delta,
-            stage_bucketed,
-        )
-
-        spark = df.sparkSession
-        name = self._api_names[key_col]
-        prev = spark.table(name)
-        cols = prev.columns
-
-        j = (
-            keyed_multiset_summary(df, key_col, cols, "__cnt_n", "__h_n")
-            .alias("n")
-            .join(
-                keyed_multiset_summary(prev, key_col, cols, "__cnt_o", "__h_o").alias("o"),
-                F.col(f"n.{key_col}") == F.col(f"o.{key_col}"),
-                "full_outer",
-            )
-            # O(|keys|), reused by the flags agg AND the delta-key
-            # extraction — one classification pass, not two (measured
-            # r13: the old anti-join-vs-all-old-keys variant rescanned
-            # and reshuffled both key sets a second time).
-            .persist()
-        )
-        try:
-            changed = (F.col("__cnt_n") != F.col("__cnt_o")) | (
-                F.col("__h_n") != F.col("__h_o")
-            )
-            flags = j.agg(
-                F.sum(F.when(F.col("__cnt_o").isNull(), 1).otherwise(0)).alias("n_new"),
-                F.sum(F.when(F.col("__cnt_n").isNull(), 1).otherwise(0)).alias("n_del"),
-                F.sum(
-                    F.when(
-                        F.col("__cnt_n").isNotNull()
-                        & F.col("__cnt_o").isNotNull()
-                        & changed,
-                        1,
-                    ).otherwise(0)
-                ).alias("n_upd"),
-                # null-keyed NEW rows can't ride the key-equality
-                # semi-join below (it would silently drop them from
-                # the delta) — route them to the full re-land.
-                F.sum(
-                    F.when(
-                        F.col("__cnt_o").isNull() & F.col(f"n.{key_col}").isNull(),
-                        1,
-                    ).otherwise(0)
-                ).alias("n_nullkey"),
-            ).collect()[0]
-            if not flags["n_new"] and not flags["n_upd"] and not flags["n_del"]:
-                return prev  # identical state: zero rows written
-            if not flags["n_upd"] and not flags["n_del"] and not flags["n_nullkey"]:
-                new_keys = j.filter(F.col("__cnt_o").isNull()).select(
-                    F.col(f"n.{key_col}").alias(key_col)
-                )
-                # adds-only: the delta keys came out of the cached
-                # classification; broadcast them when small (the
-                # self-healing norm) so extracting the delta rows is a
-                # map-side semi-join over ONE scan of the new side.
-                if flags["n_new"] <= DELTA_BROADCAST_KEY_CAP:
-                    new_keys = F.broadcast(new_keys)
-                delta = df.select(*cols).join(new_keys, key_col, "left_semi")
-                return append_bucketed_delta(
-                    spark, name, delta, [key_col], num_buckets=self.num_buckets
-                )
-            # mutated beyond adds (or null join keys, counted as
-            # del+new): full re-land under a serial name so earlier
-            # readers stay valid.
-            self._serial += 1
-            vname = f"{name}_v{self._serial}"
-            self._api_names[key_col] = vname
-            return stage_bucketed(
-                spark, df, vname, [key_col], num_buckets=self.num_buckets
-            )
-        finally:
-            j.unpersist()
 
 
 def reconcile_locations(alignments: DataFrame, api_locations: DataFrame, key: str) -> DataFrame:

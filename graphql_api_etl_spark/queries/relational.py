@@ -257,9 +257,10 @@ def flagship_reconcile_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives in the shape of a self-healing pass 2 — a pass-1
     bucketed landing MISSING a deterministic slice (every 97th order
     key, the not-yet-loaded rows), then a second landing of the full
-    state that ReconcileStaging classifies against pass 1 and merges
-    as a DELTA APPEND into the same bucketed table (zero rewrite of
-    the pass-1 files; sinks.tables.append_bucketed_delta). The oracle
+    state that sinks.tables.ReconcileStaging classifies against pass 1
+    (sinks.tables.adds_only_delta) and merges as a DELTA APPEND into
+    the same bucketed table (zero rewrite of the pass-1 files;
+    sinks.tables.append_bucketed_delta). The oracle
     is the plain flagship SQL over the full state, proving the healed
     table is row-identical to a from-scratch landing; the pass-2 join
     stays exchange-free (tests/test_plans.py::
@@ -268,8 +269,7 @@ def flagship_reconcile_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-bucketing the whole API side (docs/PLANS.md; the
     weekly sync re-merges its pass 2 in memory).
     Cites ETL:474–506 (the reference's re-fetch-everything pass 2)."""
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
-    from graphql_api_etl_spark.sinks.tables import bucket_warehouse_path
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging, bucket_warehouse_path
 
     tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.strip("/").split("/")[-1])
     # Per-TAG location (r13 ADVICE, medium): the graft_heal_<tag>
@@ -309,9 +309,9 @@ def flagship_reconcile_mutated(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums disagree on existing keys (updates, not adds), so the
     adds-only append is ILLEGAL and the staging must take the
     correctness fallback: a full re-land under the serial name
-    ``api_o_custkey_v1`` (weekly_alignments.ReconcileStaging, the
-    updates/deletes branch). The oracle is the plain flagship SQL over
-    the true state, proving the fallback's result is row-identical to
+    ``api_o_custkey_v1`` (sinks.tables.ReconcileStaging, taken whenever
+    sinks.tables.adds_only_delta declines). The oracle is the plain
+    flagship SQL over the true state, proving the fallback's result is row-identical to
     a from-scratch landing — and tests/test_weekly_pipeline.py::
     test_flagship_mutated_twin_takes_the_serial_fallback pins that the
     _v1 serial actually appeared (the branch fired, not the append).
@@ -322,8 +322,7 @@ def flagship_reconcile_mutated(spark: SparkSession, sf_dir: str) -> DataFrame:
     there a stale pass-1 state is silently absorbed by the full
     re-fetch; here the classifier has to DETECT it to stay correct
     while writing deltas)."""
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
-    from graphql_api_etl_spark.sinks.tables import bucket_warehouse_path
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging, bucket_warehouse_path
 
     tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.strip("/").split("/")[-1])
     wh = bucket_warehouse_path(".bucket_warehouse_mut", tag)

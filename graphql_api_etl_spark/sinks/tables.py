@@ -13,14 +13,22 @@ The 100 TB layout story:
   catalog (in-memory here; a metastore in production).
 - **Sort within buckets** by the join/scan key to enable merge-join
   without a sort node and better row-group statistics.
+
+A recurring re-fetch that only adds keys appends its delta into the
+landed table (:func:`adds_only_delta` decides, :func:`append_bucketed_delta`
+writes); :class:`ReconcileStaging` is the batch landing area built on
+them.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def bucket_warehouse_path(*parts: str) -> str:
@@ -76,8 +84,6 @@ def write_bucketed_table(
     shuffle at WRITE time; skip it only for single-partition inputs,
     which already produce one file per bucket."""
     if one_file_per_bucket:
-        from pyspark.sql import functions as F
-
         df = df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
     writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
@@ -120,8 +126,6 @@ def append_bucketed_delta(
         )
     if not spark.catalog.tableExists(name):
         raise ValueError(f"append_bucketed_delta target {name!r} does not exist")
-    from pyspark.sql import functions as F
-
     delta = delta.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
     writer = delta.write.mode("append").bucketBy(num_buckets, *bucket_cols)
     writer = writer.sortBy(
@@ -129,6 +133,104 @@ def append_bucketed_delta(
     )
     writer.format("parquet").saveAsTable(name)
     return spark.table(name)
+
+
+# -- the delta classifier feeding append_bucketed_delta ----------------
+#
+# Both incremental re-fetch paths decide here whether a new state is
+# the old one plus whole new keys: ReconcileStaging's second API
+# landing (below) and the streaming reconciler's adds-only fast path
+# (streaming/reconcile.BucketedIncrementalReconciler).
+
+# Key sets at or below this size are broadcast into their semi-join (a
+# map-side filter over one scan); larger ones join un-hinted instead
+# of passing through the driver.
+DELTA_BROADCAST_KEY_CAP = 1_000_000
+
+
+def semi_join_keys(
+    frame: DataFrame, key_set: DataFrame, keys: Sequence[str], n_keys: int
+) -> DataFrame:
+    """Rows of ``frame`` whose ``keys`` appear in ``key_set`` (``n_keys``
+    rows), broadcasting the key set up to DELTA_BROADCAST_KEY_CAP."""
+    if n_keys <= DELTA_BROADCAST_KEY_CAP:
+        key_set = F.broadcast(key_set)
+    return frame.join(key_set, list(keys), "left_semi")
+
+
+def _row_hash(cols: Sequence[str]) -> F.Column:
+    """64-bit row hash that distinguishes which columns hold null.
+
+    ``xxhash64`` skips null inputs (the seed passes through), so
+    ``('x', NULL)`` and ``(NULL, 'x')`` hash alike and a value moving
+    between columns would read as "row unchanged". Interleaving each
+    column with its never-null ``isNull()`` flag pins every value to
+    its position."""
+    return F.xxhash64(*[e for c in cols for e in (F.col(c).isNull(), F.col(c))])
+
+
+def _multiset_summary(
+    frame: DataFrame, keys: Sequence[str], cols: Sequence[str], tag: str
+) -> DataFrame:
+    """Per-key multiset fingerprint ``__cnt_<tag>``, ``__h_<tag>``: the
+    row count and the exact DECIMAL(38,0) sum of the row hashes —
+    order-independent and overflow-free, so a key with several
+    identical rows compares equal instead of producing crossed row-pair
+    mismatches."""
+    row_hash = _row_hash(cols).cast("decimal(38,0)")
+    return frame.select(*cols).groupBy(*keys).agg(
+        F.count(F.lit(1)).alias(f"__cnt_{tag}"), F.sum(row_hash).alias(f"__h_{tag}")
+    )
+
+
+@contextmanager
+def adds_only_delta(
+    new: DataFrame, old: DataFrame, keys: Sequence[str]
+) -> Iterator[tuple[int, DataFrame] | None]:
+    """Classify ``new`` against ``old`` on ``keys``: yield ``None`` unless
+    ``new`` is ``old`` plus whole new keys, else ``(n_new, rows)`` —
+    the number of new keys and ``new``'s rows under them, in ``old``'s
+    column order.
+
+    ``None`` covers a changed per-key multiset (an update), a key only
+    in ``old`` (a delete), a null key on either side (key equality
+    cannot match it) and a different column set. Each side collapses to
+    a per-key multiset summary; one full-outer join of the two summaries
+    and one flags aggregate decide. The join is persisted until the
+    ``with`` block ends, so an append of ``rows`` inside it reads the
+    new keys from it instead of classifying again. A hash-sum collision
+    (engineered multisets summing equal) would read an update as
+    unchanged; 64-bit hashes make that a non-issue for real states."""
+    if set(new.columns) != set(old.columns):
+        yield None
+        return
+    keys, cols = list(keys), old.columns
+    j = (
+        _multiset_summary(new, keys, cols, "n")
+        .join(_multiset_summary(old, keys, cols, "o"), keys, "full_outer")
+        .persist()
+    )
+    try:
+        nullkey = F.lit(False)
+        for k in keys:
+            nullkey = nullkey | F.col(k).isNull()
+        changed = (F.col("__cnt_n") != F.col("__cnt_o")) | (F.col("__h_n") != F.col("__h_o"))
+        flags = j.agg(
+            F.sum(F.when(F.col("__cnt_o").isNull(), 1).otherwise(0)).alias("n_new"),
+            F.sum(
+                F.when(F.col("__cnt_n").isNull() | nullkey, 1)
+                .when(changed, 1)
+                .otherwise(0)
+            ).alias("n_other"),
+        ).collect()[0]
+        delta = None
+        if not flags["n_other"]:
+            n_new = int(flags["n_new"] or 0)
+            new_keys = j.filter(F.col("__cnt_o").isNull()).select(*keys)
+            delta = (n_new, semi_join_keys(new.select(*cols), new_keys, keys, n_new))
+        yield delta
+    finally:
+        j.unpersist()
 
 
 def ensure_bucket_database(spark: SparkSession, database: str, location: str) -> str:
@@ -248,3 +350,84 @@ def stage_bucketed(
         one_file_per_bucket=True,
     )
     return spark.table(name)
+
+
+@dataclass
+class ReconcileStaging:
+    """Bucketed landing area for a recurring reconcile join.
+
+    The weekly sync does not use it (it reconciles in memory); it
+    serves the catalog twins ``flagship_reconcile_healed``/``_mutated``.
+
+    ``land`` writes a frame in the certified layout (:func:`stage_bucketed`:
+    bucketed on the join key, bucket-sorted, one file per bucket) and
+    returns the catalog-backed read.  The file side is cached per join
+    key — its content is the same across the self-healing passes, so
+    pass 2 re-joins the ALREADY-landed table when the F8 key didn't
+    switch.
+
+    The API side is landed ONCE per join key (``api_<key>``); a second
+    landing on the same key classifies the re-fetched state against the
+    pass-1 table (:func:`adds_only_delta`) instead of re-bucketing the
+    whole state (the reference's pass 2 re-fetches everything,
+    ETL:474–506, but the self-healing load touches few rows):
+
+    - nothing changed → return the pass-1 table, ZERO rows written;
+    - adds only (the self-healing shape) → append just the new rows
+      into the pass-1 table (:func:`append_bucketed_delta`) — write
+      cost |delta|, not |API|;
+    - anything else (updates, deletes, null keys, a different column
+      set) → correctness fallback: full re-land under a serial name
+      ``api_<key>_vN``.
+
+    Fixed names mean repeated landings in one session REUSE the staged
+    tables instead of accumulating ``api_<key>_N`` serials (retention:
+    serials appear only on the fallback). Snapshot caveat: an
+    append/overwrite invalidates frames read from the table BEFORE the
+    landing, so a caller reads no frame of an earlier landing after the
+    next one."""
+
+    database: str
+    location: str
+    num_buckets: int = 32
+    _file_cache: dict[str, DataFrame] = field(default_factory=dict)
+    _api_names: dict[str, str] = field(default_factory=dict)
+    _serial: int = 0
+
+    def land(self, df: DataFrame, side: str, key_col: str) -> DataFrame:
+        if side == "file" and key_col in self._file_cache:
+            return self._file_cache[key_col]
+        spark = df.sparkSession
+        ensure_bucket_database(spark, self.database, self.location)
+        if side == "file":
+            name = f"{self.database}.file_{key_col}"
+        else:
+            if key_col in self._api_names:
+                return self._merge_api_delta(df, key_col)
+            name = f"{self.database}.api_{key_col}"
+            self._api_names[key_col] = name
+        staged = stage_bucketed(spark, df, name, [key_col], num_buckets=self.num_buckets)
+        if side == "file":
+            self._file_cache[key_col] = staged
+        return staged
+
+    def _merge_api_delta(self, df: DataFrame, key_col: str) -> DataFrame:
+        """Second-or-later API landing on an unswitched key: write only
+        what changed (the three outcomes above)."""
+        spark = df.sparkSession
+        name = self._api_names[key_col]
+        prev = spark.table(name)
+        with adds_only_delta(df, prev, [key_col]) as delta:
+            if delta is not None:
+                n_new, rows = delta
+                if not n_new:
+                    return prev
+                return append_bucketed_delta(
+                    spark, name, rows, [key_col], num_buckets=self.num_buckets
+                )
+        # not adds-only: full re-land under a serial name so earlier
+        # readers stay valid.
+        self._serial += 1
+        vname = f"{name}_v{self._serial}"
+        self._api_names[key_col] = vname
+        return stage_bucketed(spark, df, vname, [key_col], num_buckets=self.num_buckets)

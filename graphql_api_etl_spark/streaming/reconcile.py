@@ -50,14 +50,16 @@ from graphql_api_etl_spark.operators.join import (
 # ``fs_glob`` calls so a remote store pays O(1) metadata round trips per
 # scan, not one per version directory.
 
-from graphql_api_etl_spark.pipelines.weekly_alignments import (  # noqa: E402
-    DELTA_BROADCAST_KEY_CAP as _DELTA_BROADCAST_KEY_CAP,
-)
 from graphql_api_etl_spark.sinks.tables import (  # noqa: E402
+    adds_only_delta,
+    append_bucketed_delta,
+    ensure_bucket_database,
     fs_delete,
     fs_exists,
     fs_glob,
     fs_touch,
+    semi_join_keys,
+    stage_bucketed,
 )
 
 
@@ -208,9 +210,10 @@ class IncrementalReconciler:
 
 
 class BucketedIncrementalReconciler(IncrementalReconciler):
-    """IncrementalReconciler whose state lives in the ReconcileStaging
-    bucketed layout (VERDICT r12 ask #7: unify the batch and streaming
-    deployment stories) — each committed state version is a catalog
+    """IncrementalReconciler whose state lives in the bucketed layout of
+    ``sinks.tables.ReconcileStaging`` (VERDICT r12 ask #7: unify the
+    batch and streaming deployment stories) — each committed state
+    version is a catalog
     table landed via ``sinks.tables.stage_bucketed`` (bucketed on the
     merge key, bucket-sorted, one file per bucket), so:
 
@@ -226,9 +229,9 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
     Batches that classify ADDS-ONLY against the committed state take
     the delta fast path (``_try_adds_only_append``, VERDICT r13 ask
     #3): append O(|batch|) rows into the current version's bucketed
-    table instead of re-landing the full merged state — the same
-    classify→append story ReconcileStaging's batch delta merge runs,
-    including the null-distinguishing row hash. A
+    table instead of re-landing the full merged state — the batch
+    staging's second landing makes the same decision through the same
+    classifier, ``sinks.tables.adds_only_delta``. A
     ``applied_b{B}_to_v{P}`` commit marker (written only after the
     append's job commit) short-circuits retries; correctness never
     depends on it — a marker-less retry re-classifies and reads its
@@ -270,15 +273,6 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
         # O(|hot rows| + |batch|), not O(|state|).
         self.compact_after_appends = compact_after_appends
 
-    # broadcast ceiling for the classifier's key sets — ONE constant
-    # shared with ReconcileStaging._merge_api_delta (imported below),
-    # so tuning the batch pipeline's gate moves this one too; above it
-    # the semi-joins run un-hinted (the state side is bucketed on the
-    # key, so its scan stays exchange-free either way — only the
-    # batch-sized side shuffles to the bucket layout). Class attribute
-    # so tests can force the fallback branch per instance.
-    BROADCAST_KEY_CAP = _DELTA_BROADCAST_KEY_CAP
-
     def _marker(self, batch_id: int, base: int) -> str:
         return f"{self.state_dir}/applied_b{batch_id}_to_v{base}"
 
@@ -293,9 +287,10 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
     def _try_adds_only_append(
         self, spark: SparkSession, state: DataFrame, batch: DataFrame, batch_id: int
     ) -> bool:
-        """Adds-only fast path (VERDICT r13 ask #3: align the streaming
-        state with the batch pipeline's delta merge): when every batch
-        key is ABSENT from the committed state, append just the batch's
+        """Adds-only fast path (VERDICT r13 ask #3): when
+        ``sinks.tables.adds_only_delta`` classifies the batch against
+        the state rows under its keys as new keys only (or keys
+        already present and identical), append just the batch's
         rows into the CURRENT bucketed version via
         sinks.tables.append_bucketed_delta — write cost O(|batch|), no
         new version, the state table keeps its bucket spec — instead of
@@ -309,8 +304,7 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
           no-op.
         - crash AFTER the append committed but BEFORE the marker: the
           retry re-classifies the batch against the state — its keys
-          are now present with IDENTICAL per-key multisets (the same
-          null-distinguishing hash the batch delta merge uses), which
+          are now present with IDENTICAL per-key multisets, which
           reads as "already applied" → no-op, marker rewritten.
         - crash DURING the append (job not committed): Spark's commit
           protocol leaves only uncommitted temporaries, so the retry
@@ -345,11 +339,6 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
         to the identical bytes-equivalent state (base survives
         retirement — the newest version BELOW the batch id is always
         kept)."""
-        from graphql_api_etl_spark.pipelines.weekly_alignments import (
-            keyed_multiset_summary,
-        )
-        from graphql_api_etl_spark.sinks.tables import append_bucketed_delta
-
         versions = [
             v
             for v in _versions(spark, self.state_dir, self._version_prefix)
@@ -364,71 +353,35 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
         if not spark.catalog.tableExists(name):
             return False  # post-restart parquet fallback: no append target
         if set(batch.columns) != set(state.columns):
-            return False
+            return False  # schema drift: decline before the count below runs
         compact_due = (
             len(self._applied_markers(spark, base)) >= self.compact_after_appends
         )
-        cols = state.columns
-
-        bkeys = batch.select(*self.key).distinct()
-        # only the state rows sharing a batch key matter — a semi-filter
-        # keeps the classifier summary batch-sized; broadcast the key
-        # set when it is small (the micro-batch norm), fall back to the
-        # bucketed-scan join above the cap instead of forcing tens of
-        # millions of keys through the driver. The gate reads the raw
-        # batch row count (a narrow count, no distinct shuffle) —
-        # _dedup_batch already guarantees one row per key, so it EQUALS
-        # the distinct key count.
-        n_bkeys = batch.count()
-        sem = F.broadcast(bkeys) if n_bkeys <= self.BROADCAST_KEY_CAP else bkeys
-        overlap = state.join(sem, self.key, "left_semi")
-        j = (
-            keyed_multiset_summary(batch, self.key, cols, "__cnt_b", "__h_b")
-            .join(
-                keyed_multiset_summary(overlap, self.key, cols, "__cnt", "__h"),
-                self.key,
-                "left_outer",
-            )
-            .persist()
+        # only the state rows sharing a batch key matter — the semi-join
+        # keeps the classifier batch-sized, and no key can then be
+        # present only in the state. The broadcast gate reads the raw
+        # batch row count (a narrow count, no distinct shuffle):
+        # _dedup_batch guarantees one row per key, so it EQUALS the
+        # distinct key count.
+        overlap = semi_join_keys(
+            state, batch.select(*self.key).distinct(), self.key, batch.count()
         )
-        try:
-            nullkey = F.lit(False)
-            for k in self.key:
-                nullkey = nullkey | F.col(k).isNull()
-            flags = j.agg(
-                F.sum(F.when(F.col("__cnt").isNull(), 1).otherwise(0)).alias("n_new"),
-                F.sum(
-                    F.when(
-                        F.col("__cnt").isNotNull()
-                        & (
-                            (F.col("__cnt") != F.col("__cnt_b"))
-                            | (F.col("__h") != F.col("__h_b"))
-                        ),
-                        1,
-                    ).otherwise(0)
-                ).alias("n_diff"),
-                F.sum(F.when(nullkey, 1).otherwise(0)).alias("n_nullkey"),
-            ).collect()[0]
-            if flags["n_nullkey"] or flags["n_diff"]:
-                return False  # updates (or unclassifiable keys): full land
-            delta = None
-            if flags["n_new"]:
-                new_keys = j.filter(F.col("__cnt").isNull()).select(*self.key)
-                if flags["n_new"] <= self.BROADCAST_KEY_CAP:
-                    new_keys = F.broadcast(new_keys)
-                delta = batch.join(new_keys, self.key, "left_semi").select(*cols)
+        with adds_only_delta(batch, overlap, self.key) as delta:
+            if delta is None:
+                return False  # updates, null keys or schema drift: full land
+            n_new, rows = delta
             if compact_due:
-                self._compact_to_version(spark, name, batch_id, delta)
+                self._compact_to_version(
+                    spark, name, batch_id, rows if n_new else None
+                )
                 self._retire(spark, batch_id)
                 return True
-            if delta is not None:
+            if n_new:
                 append_bucketed_delta(
-                    spark, name, delta, self.key, num_buckets=self.num_buckets
+                    spark, name, rows, self.key, num_buckets=self.num_buckets
                 )
             # n_new == 0 → every key already present and identical: a
             # replayed (or redundant) batch — zero rows written.
-        finally:
-            j.unpersist()
         fs_touch(
             spark,
             self._marker(batch_id, base),
@@ -514,11 +467,6 @@ class BucketedIncrementalReconciler(IncrementalReconciler):
         )
 
     def _write_version(self, merged: DataFrame, batch_id: int) -> None:
-        from graphql_api_etl_spark.sinks.tables import (
-            ensure_bucket_database,
-            stage_bucketed,
-        )
-
         spark = merged.sparkSession
         ensure_bucket_database(spark, self.database, self.state_dir)
         stage_bucketed(

@@ -245,7 +245,7 @@ def test_staged_reconcile_join_has_zero_exchange(spark, sf_dir, tmp_path):
     on either side — the layout the flagship floors row certifies at
     1.80–2.16× vs the plain shuffled shape's 3.7–4.7×."""
     from graphql_api_etl_spark.operators.join import outer_merge
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging
 
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("string").alias("location"),
@@ -286,7 +286,7 @@ def test_staged_reconcile_join_after_delta_append(spark, sf_dir, tmp_path):
     partitions), but the shuffle stays eliminated, which is the term
     that matters at 100 TB."""
     from graphql_api_etl_spark.operators.join import outer_merge
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging
 
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("string").alias("location"),

@@ -576,7 +576,7 @@ def test_staging_delta_merge_always_lands_exactly_the_new_state(
     identical rows, adds/updates/deletes in one batch."""
     import uuid
 
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging
 
     tag = uuid.uuid4().hex[:10]
     base = tmp_path_factory.mktemp(f"deltaprop_{tag}")

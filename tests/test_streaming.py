@@ -950,26 +950,44 @@ def test_fresh_checkpoint_restart_purges_stale_markers(spark, tmp_path):
     spark.sql("DROP DATABASE IF EXISTS graft_stream_stalemark CASCADE")
 
 
-def test_adds_only_classifier_above_broadcast_cap_still_appends(spark, tmp_path):
-    """With BROADCAST_KEY_CAP forced to 0 (every key set 'too big'),
-    the classifier must take the un-hinted join branch — the driver
-    never materializes the key sets — and the adds-only append still
-    lands the right rows (the state side is bucketed on the key, so
-    its scan stays exchange-free either way)."""
+@pytest.mark.parametrize("path", ["stream", "batch"])
+def test_adds_only_classifier_above_broadcast_cap_still_appends(
+    spark, tmp_path, monkeypatch, path
+):
+    """With DELTA_BROADCAST_KEY_CAP forced to 0 (every key set 'too
+    big'), the classifier must take the un-hinted join branch — the
+    driver never materializes the key sets — and the adds-only append
+    still lands the right rows, for both callers of the one classifier:
+    the streaming reconciler's fast path and the batch staging's second
+    landing (the state side is bucketed on the key, so its scan stays
+    exchange-free either way)."""
     import os
 
+    from graphql_api_etl_spark.sinks import tables
     from graphql_api_etl_spark.streaming.reconcile import (
         BucketedIncrementalReconciler,
     )
 
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_nobcast", str(tmp_path / "state"), key="id", num_buckets=2
-    )
-    rec.BROADCAST_KEY_CAP = 0  # instance override: force the big-batch branch
-    rec.upsert_batch(spark.createDataFrame([("a", "A0")], "id string, v string"), 0)
-    rec.upsert_batch(spark.createDataFrame([("b", "B0")], "id string, v string"), 1)
-    # rode the delta path despite no broadcast hints
-    assert os.path.exists(os.path.join(str(tmp_path / "state"), "applied_b1_to_v0"))
-    got = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
+    monkeypatch.setattr(tables, "DELTA_BROADCAST_KEY_CAP", 0)
+    a = spark.createDataFrame([("a", "A0")], "id string, v string")
+    ab = spark.createDataFrame([("a", "A0"), ("b", "B0")], "id string, v string")
+    loc = str(tmp_path / "state")
+    if path == "stream":
+        db = "graft_stream_nobcast"
+        rec = BucketedIncrementalReconciler(db, loc, key="id", num_buckets=2)
+        rec.upsert_batch(a, 0)
+        rec.upsert_batch(ab.filter(F.col("id") == "b"), 1)
+        # rode the delta path despite no broadcast hints
+        assert os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
+        got = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
+    else:
+        db = "graft_stage_nobcast"
+        staging = tables.ReconcileStaging(db, loc, num_buckets=2)
+        staging.land(a, "api", "id")
+        out = staging.land(ab, "api", "id")
+        # appended into the pass-1 table, not re-landed under a serial
+        names = {t.name for t in spark.catalog.listTables(db)}
+        assert "api_id" in names and "api_id_v1" not in names, names
+        got = {r["id"]: r["v"] for r in out.collect()}
     assert got == {"a": "A0", "b": "B0"}
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_nobcast CASCADE")
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

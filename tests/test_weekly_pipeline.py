@@ -528,7 +528,7 @@ def test_reconcile_staging_caches_file_side_and_merges_api_delta(spark, tmp_path
     falls back to a full re-land under a serial name."""
     import os
 
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging
 
     staging = ReconcileStaging(
         "graft_stage_unittest", str(tmp_path / "staged"), num_buckets=4
@@ -612,7 +612,7 @@ def test_reconcile_staging_delta_classifier_multiset_edges(spark, tmp_path):
     multiset or null join keys trigger the full re-land fallback."""
     import os
 
-    from graphql_api_etl_spark.pipelines.weekly_alignments import ReconcileStaging
+    from graphql_api_etl_spark.sinks.tables import ReconcileStaging
 
     loc = str(tmp_path / "staged")
     staging = ReconcileStaging("graft_stage_msets", loc, num_buckets=2)
@@ -687,6 +687,30 @@ def test_reconcile_staging_delta_classifier_multiset_edges(spark, tmp_path):
     assert out4.count() == 2
     tables2 = {t.name for t in spark.catalog.listTables("graft_stage_msets2")}
     assert "api_node_name_v1" in tables2  # null keys → conservative re-land
+
+    # column-set drift between the landings is no adds-only delta: the
+    # re-fetch gained a column (same rows, or plus a new key) or lost
+    # one. Each re-lands under a serial name and reads back exactly the
+    # new state, with its own columns.
+    two = spark.createDataFrame(
+        [("k1", "a"), ("k2", "b")], "node_name string, v string"
+    )
+    with_w = spark.createDataFrame(
+        [("k1", "a", "x"), ("k2", "b", "y")], "node_name string, v string, w string"
+    )
+    with_w_plus = with_w.unionByName(
+        spark.createDataFrame([("k3", "c", "z")], "node_name string, v string, w string")
+    )
+    drifts = [(two, with_w), (two, with_w_plus), (with_w, two)]
+    for i, (pass1, pass2) in enumerate(drifts):
+        db = f"graft_stage_drift{i}"
+        st = ReconcileStaging(db, str(tmp_path / f"drift{i}"), num_buckets=2)
+        st.land(pass1, "api", "node_name")
+        out_d = st.land(pass2, "api", "node_name")
+        assert sorted(out_d.columns) == sorted(pass2.columns), (i, out_d.columns)
+        assert sorted(out_d.select(*pass2.columns).collect()) == sorted(pass2.collect())
+        assert "api_node_name_v1" in {t.name for t in spark.catalog.listTables(db)}
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     spark.sql("DROP DATABASE IF EXISTS graft_stage_msets CASCADE")
     spark.sql("DROP DATABASE IF EXISTS graft_stage_msets2 CASCADE")
     spark.sql("DROP DATABASE IF EXISTS graft_stage_msets3 CASCADE")
