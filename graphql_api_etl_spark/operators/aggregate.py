@@ -60,14 +60,3 @@ def count_gate(df: DataFrame, expected: int | None = None, name: str = "gate") -
     if expected is not None and n != expected:
         raise AssertionError(f"{name}: expected {expected} rows, got {n}")
     return n
-
-
-def success_accounting(status_df: DataFrame, success_col: str = "success") -> dict[str, int]:
-    """A8 (ETL:706–731): success/failure tally of a mutation-status
-    frame, one aggregate pass."""
-    row = status_df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col(success_col), 1).otherwise(0)).alias("ok"),
-    ).first()
-    total, ok = int(row["total"]), int(row["ok"] or 0)
-    return {"total": total, "ok": ok, "failed": total - ok}

@@ -346,59 +346,40 @@ def flagship_reconcile_mutated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q("flagship_reconcile_streamed", _FLAGSHIP_SQL)
 def flagship_reconcile_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of flagship_reconcile (r14, the gated consumer of
-    VERDICT r13 ask #3's adds-only streaming delta path): the API side
-    arrives as a Structured Streaming file source — three disjoint
-    micro-batch files (orders split by ``o_orderkey % 3``, mtime-ordered,
-    ``maxFilesPerTrigger=1``) upserted by
-    streaming.BucketedIncrementalReconciler under an availableNow
-    trigger. Batch 0 lands the full bucketed state version; batches 1–2
-    classify ADDS-ONLY against it (every key absent — the
-    null-distinguishing hash agrees) and take the delta fast path:
-    append_bucketed_delta into the SAME version, write O(|batch|), no
-    re-land, with the ``applied_b{B}_to_v0`` commit markers as the retry
-    short-circuit. The final state is exactly the filtered orders table,
-    so the oracle is the plain flagship SQL — proving the streamed,
-    delta-appended state is row-identical to a from-scratch batch read.
-    tests/test_streaming.py::test_flagship_streamed_twin_rides_the_delta_fast_path
-    pins that the fast path actually fired (markers present, only
-    ``state_v0`` ever landed).
+    """Streaming twin of flagship_reconcile: the API side arrives as a
+    Structured Streaming file source — three disjoint micro-batch files
+    (orders split by ``o_orderkey % 3``, mtime-ordered,
+    ``maxFilesPerTrigger=1``) upserted by streaming.IncrementalReconciler
+    under an availableNow trigger. Each batch outer-merges into the
+    previous committed state version and lands the next one; a replayed
+    batch re-reads the version before it, so the upsert is replay-safe.
+    The final state is exactly the filtered orders table, so the oracle
+    is the plain flagship SQL — the streamed, versioned upsert is
+    row-identical to the batch flagship.
 
-    State is keyed (and bucketed) on ``o_orderkey``, the orders primary
-    key — the natural upsert identity a streaming CDC feed carries; the
-    report's join on o_custkey therefore shuffles the state once, the
-    trade documented in streaming/reconcile.py (a deployment whose
-    recurring join key differs from the upsert key lands the DOWNSTREAM
-    side through ReconcileStaging, the batch twins' layout; the weekly
-    sync's own reconcile joins in memory and stages nothing). At 100 TB
-    the per-batch cost is O(|batch|) classify + append against an
-    exchange-free bucketed state scan; the state never re-shuffles and
-    never rewrites (docs/PLANS.md).
+    State is keyed on ``o_orderkey``, the orders primary key — the
+    natural upsert identity a streaming CDC feed carries; the report
+    joins it on ``o_custkey`` like the batch flagship does.
     Cites ETL:474–506 (the reference's serial re-fetch pass — here the
     re-fetch is a stream and the state absorbs it incrementally).
 
     The twin fabricates its stream SOURCE with local os/glob/shutil by
     design — it is a gate fixture manufacturing mtime-ordered files on
-    the driver host. The RECONCILER it exercises does all state and
-    marker IO through the Hadoop FileSystem API (streaming/reconcile),
-    so the state side honors a remote SPARK_GRAFT_BUCKET_WAREHOUSE;
-    a deployment's source would be a real stream, not these files."""
+    the driver host. The RECONCILER it exercises does all state IO
+    through the Hadoop FileSystem API (streaming/reconcile), so the
+    state side honors a remote SPARK_GRAFT_BUCKET_WAREHOUSE; a
+    deployment's source would be a real stream, not these files."""
     import glob as _glob
     import os
     import shutil
 
     from graphql_api_etl_spark.sinks.tables import bucket_warehouse_path
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
+    from graphql_api_etl_spark.streaming.reconcile import IncrementalReconciler
 
     tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.strip("/").split("/")[-1])
     root = bucket_warehouse_path(".bucket_warehouse_stream", tag)
-    db = f"graft_stream_{tag}"
     # Deterministic wipe-and-rebuild per call (the twins' contract: each
-    # evaluation proves the full path from scratch). Catalog entries
-    # drop BEFORE their files so no table ever points at removed data.
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    # evaluation proves the full path from scratch).
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     os.makedirs(src)
@@ -412,9 +393,7 @@ def flagship_reconcile_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # distinct mtimes pin the FileStreamSource batch order 0,1,2
         os.utime(dst, (1_700_000_000 + 100 * i,) * 2)
         shutil.rmtree(stage, ignore_errors=True)
-    rec = BucketedIncrementalReconciler(
-        db, os.path.join(root, "state"), key="o_orderkey", num_buckets=8
-    )
+    rec = IncrementalReconciler(os.path.join(root, "state"), key="o_orderkey")
     stream = (
         spark.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", "1")

@@ -81,9 +81,8 @@ def get_spark(
         # this on a join over that layout plans SMJ straight over the
         # scans: zero exchange AND zero sort (plan-asserted in
         # tests/test_plans.py).  The weekly sync joins in memory; the
-        # layout serves the bucketed catalog twins and the streaming
-        # reconciler.  Multi-file buckets keep their Sort node exactly
-        # as before.
+        # layout serves the bucketed catalog twins.  Multi-file buckets
+        # keep their Sort node exactly as before.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         # Managed (bucketed) tables land outside the repo; in-memory
         # catalog (no Hive) carries bucket specs within the session.

@@ -1,12 +1,11 @@
 """Table maintenance utilities: small-file compaction and statistics
-collection — the operational half of running a lake at 100 TB (the
-reference never needs them at one-workbook scale; engine-native,
-SURVEY §2.10).
+collection (engine-native, SURVEY §2.10; the reference never needs
+them at one-workbook scale).
 
-- Streaming sinks and per-batch upserts (streaming/reconcile.py) leave
-  many small files; scans then pay one task + one footer read per
-  file. :func:`compact_parquet` rewrites a directory into
-  ≈``target_bytes`` files with a single narrow job.
+- Streaming sinks and wide writes leave many small files; scans then
+  pay one task + one footer read per file. :func:`compact_parquet`
+  rewrites a directory into ≈``target_bytes`` files (the
+  ``layout_compacted_scan`` catalog entry runs it).
 - :func:`collect_table_stats` is the ANALYZE TABLE shape: row count +
   per-column null count and HLL++ distinct estimate in ONE pass
   (no per-column jobs), the inputs a cost-based optimizer or layout
@@ -17,7 +16,6 @@ from __future__ import annotations
 
 import math
 import os
-import re
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -38,15 +36,17 @@ def compact_parquet(
 ) -> str:
     """Rewrite a parquet directory into ≈target-sized files.
 
-    File count = ⌈current bytes / target⌉. Merging DOWN uses
+    File count = ⌈current bytes / target⌉, capped at the row count: a
+    file below one row only adds an empty task and an empty file (the
+    parquet ``count()`` reads footers only). Merging DOWN uses
     ``coalesce`` (narrow, no shuffle); splitting UP (rare — resharding
     an over-merged table) needs a ``repartition`` round-robin shuffle.
     In-place compaction writes to a temp sibling then renames —
     readers of the old listing never see a half-written directory.
     """
     sizes = parquet_file_sizes(path)
-    n_files = max(1, math.ceil(sum(sizes) / target_bytes))
     df = spark.read.parquet(path)
+    n_files = max(1, min(math.ceil(sum(sizes) / target_bytes), df.count()))
     reshaped = (
         df.coalesce(n_files) if n_files <= df.rdd.getNumPartitions() else df.repartition(n_files)
     )
@@ -62,149 +62,6 @@ def compact_parquet(
 
     shutil.rmtree(old, ignore_errors=True)
     return path
-
-
-# bucket id embedded in a bucketed data file's name (part-00000-<uuid>_00003.c000...)
-_BUCKET_SUFFIX = re.compile(r"_(\d{5})\.")
-
-
-def _bucket_table_location(spark: SparkSession, name: str) -> str:
-    """Managed-table directory: the database's location + table name
-    (the same derivation sinks.tables.stage_bucketed's orphan cleanup
-    uses)."""
-    db, table = name.split(".", 1)
-    loc = (
-        spark.sql(f"DESCRIBE DATABASE {db}")
-        .filter("info_name = 'Location'")
-        .collect()
-    )
-    return f"{loc[0]['info_value']}/{table}"
-
-
-def compact_bucketed_table(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-    extra_rows: DataFrame | None = None,
-) -> DataFrame:
-    """BUCKET-LOCAL compaction of a bucketed staging table: build
-    ``dst`` (same bucket spec) where each SINGLE-file bucket of ``src``
-    is byte-copied (no decode, no shuffle, no rewrite) and only the
-    multi-file buckets — the ones delta appends
-    (sinks.tables.append_bucketed_delta) actually touched — are read
-    and rewritten into one file each.
-
-    This is the write-cost answer to the streaming reconciler's
-    ``compact_after_appends`` full re-land (ROUND_NOTES r15 candidate
-    #3): a full re-land decodes, shuffles, and rewrites O(|state|); this
-    helper's rewrite is O(|hot-bucket rows|) plus raw byte copies for
-    the cold buckets — at 100 TB with appends concentrated in few
-    buckets, that is the difference between rewriting the state and
-    rewriting a slice of it. The copy step relies on two contracts
-    pinned by tests/test_skew_and_tables.py::
-    test_bucket_file_names_carry_the_bucket_id_of_their_rows: a
-    bucketed data file embeds its bucket id as the ``_NNNNN`` filename
-    suffix, and its rows hash to exactly that bucket — so a copied
-    file keeps both its name and its routing validity in ``dst``.
-
-    Commit semantics: the placeholder files of the empty create
-    (including its ``_SUCCESS``) are deleted first and ``_SUCCESS`` is
-    re-touched only AFTER all copies and the hot-bucket rewrite land,
-    so a versioned consumer that gates on ``_SUCCESS`` (the streaming
-    reconciler's ``_versions``) never sees a half-built directory.
-    All file IO is scheme-agnostic (Hadoop FileSystem, fs_glob /
-    FileUtil.copy) — an hdfs:// or s3a:// warehouse works.
-
-    ``extra_rows`` (r14-opt, the streaming reconciler's compaction
-    path): additional rows landed INTO ``dst`` in the SAME append job
-    as the hot-bucket rewrite, so ``_SUCCESS`` still appears only once
-    everything — copies, rewrite, and the extra delta — is in place
-    (two separate appends would expose a committed-but-incomplete
-    directory between them, because saveAsTable's job commit drops its
-    own ``_SUCCESS``).
-
-    ``dst`` must not already exist as a table; the result is returned
-    as the catalog-backed read (bucket spec attached)."""
-    from graphql_api_etl_spark.sinks.tables import (
-        append_bucketed_delta,
-        fs_delete,
-        fs_glob,
-        fs_touch,
-        hadoop_fs,
-        stage_bucketed,
-    )
-
-    if "." not in src or "." not in dst:
-        raise ValueError("compact_bucketed_table needs database-qualified names")
-    if spark.catalog.tableExists(dst):
-        raise ValueError(f"compact_bucketed_table target {dst!r} already exists")
-    src_df = spark.table(src)
-    # empty create pins the bucket spec in the catalog; its placeholder
-    # files (and premature _SUCCESS) are cleared before assembly.
-    stage_bucketed(spark, src_df.limit(0), dst, bucket_cols, num_buckets, sort_cols)
-    src_loc = _bucket_table_location(spark, src)
-    dst_loc = _bucket_table_location(spark, dst)
-    for p in fs_glob(spark, f"{dst_loc}/*"):
-        fs_delete(spark, p, recursive=True)
-
-    by_bucket: dict[int, list[str]] = {}
-    for p in fs_glob(spark, f"{src_loc}/*.parquet"):
-        fname = p.rstrip("/").rsplit("/", 1)[-1]
-        if fname.startswith((".", "_")):
-            continue
-        m = _BUCKET_SUFFIX.search(fname)
-        if not m:
-            raise ValueError(f"non-bucketed data file in {src!r}: {fname}")
-        by_bucket.setdefault(int(m.group(1)), []).append(p)
-
-    extra = None
-    extra_buckets: set[int] = set()
-    if extra_rows is not None:
-        extra = extra_rows.select(*src_df.columns)
-        # the buckets the extra delta routes to must be REWRITTEN, not
-        # byte-copied, or they end up with two files (copy + append) —
-        # routing per the pinned contract: pmod(hash(cols), buckets)
-        bid = F.pmod(
-            F.hash(*[F.col(c) for c in bucket_cols]), F.lit(num_buckets)
-        )
-        extra_buckets = {
-            r["b"] for r in extra.select(bid.alias("b")).distinct().collect()
-        }
-    cold = [
-        files[0]
-        for b, files in by_bucket.items()
-        if len(files) == 1 and b not in extra_buckets
-    ]
-    hot = [
-        p
-        for b, files in by_bucket.items()
-        if len(files) > 1 or b in extra_buckets
-        for p in files
-    ]
-    if cold:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for p in cold:
-            sfs, spath = hadoop_fs(spark, p)
-            dfs, dpath = hadoop_fs(
-                spark, f"{dst_loc}/{p.rstrip('/').rsplit('/', 1)[-1]}"
-            )
-            jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, spath, dfs, dpath, False, conf)
-    rows = None
-    if hot:
-        rows = spark.read.parquet(*hot).select(*src_df.columns)
-    if extra is not None:
-        rows = extra if rows is None else rows.unionByName(extra)
-    if rows is not None:
-        append_bucketed_delta(spark, dst, rows, bucket_cols, num_buckets, sort_cols)
-    fs_touch(spark, f"{dst_loc}/_SUCCESS", "")
-    # the byte copies happened behind the catalog's back — drop the
-    # cached (empty-create) file listing or an all-cold build reads 0 rows
-    spark.catalog.refreshTable(dst)
-    return spark.table(dst)
 
 
 def collect_table_stats(df: DataFrame, columns: list[str] | None = None, rsd: float = 0.05) -> Row:

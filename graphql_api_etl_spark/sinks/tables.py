@@ -137,25 +137,14 @@ def append_bucketed_delta(
 
 # -- the delta classifier feeding append_bucketed_delta ----------------
 #
-# Both incremental re-fetch paths decide here whether a new state is
-# the old one plus whole new keys: ReconcileStaging's second API
-# landing (below) and the streaming reconciler's adds-only fast path
-# (streaming/reconcile.BucketedIncrementalReconciler).
+# ReconcileStaging's second API landing (below) decides here whether a
+# re-fetched state is the landed one plus whole new keys, and appends
+# only those keys' rows when it is.
 
 # Key sets at or below this size are broadcast into their semi-join (a
 # map-side filter over one scan); larger ones join un-hinted instead
 # of passing through the driver.
 DELTA_BROADCAST_KEY_CAP = 1_000_000
-
-
-def semi_join_keys(
-    frame: DataFrame, key_set: DataFrame, keys: Sequence[str], n_keys: int
-) -> DataFrame:
-    """Rows of ``frame`` whose ``keys`` appear in ``key_set`` (``n_keys``
-    rows), broadcasting the key set up to DELTA_BROADCAST_KEY_CAP."""
-    if n_keys <= DELTA_BROADCAST_KEY_CAP:
-        key_set = F.broadcast(key_set)
-    return frame.join(key_set, list(keys), "left_semi")
 
 
 def _row_hash(cols: Sequence[str]) -> F.Column:
@@ -227,7 +216,9 @@ def adds_only_delta(
         if not flags["n_other"]:
             n_new = int(flags["n_new"] or 0)
             new_keys = j.filter(F.col("__cnt_o").isNull()).select(*keys)
-            delta = (n_new, semi_join_keys(new.select(*cols), new_keys, keys, n_new))
+            if n_new <= DELTA_BROADCAST_KEY_CAP:
+                new_keys = F.broadcast(new_keys)
+            delta = (n_new, new.select(*cols).join(new_keys, keys, "left_semi"))
         yield delta
     finally:
         j.unpersist()
@@ -252,18 +243,13 @@ def ensure_bucket_database(spark: SparkSession, database: str, location: str) ->
 # the filesystem is resolved FROM each URI, so whatever scheme a
 # warehouse/state path carries — file, hdfs, s3a — gets the right
 # client. Consumers: the bucketed staging cleanup here and the
-# streaming reconciler's version/marker IO (streaming/reconcile.py).
+# streaming reconciler's version IO (streaming/reconcile.py).
 
 
 def hadoop_fs(spark: SparkSession, uri: str):
     """(FileSystem, Path) for the scheme ``uri`` carries."""
     path = spark._jvm.org.apache.hadoop.fs.Path(uri)
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
-
-
-def fs_exists(spark: SparkSession, uri: str) -> bool:
-    fs, path = hadoop_fs(spark, uri)
-    return bool(fs.exists(path))
 
 
 def fs_glob(spark: SparkSession, pattern: str) -> list[str]:
@@ -275,16 +261,6 @@ def fs_glob(spark: SparkSession, pattern: str) -> list[str]:
     if statuses is None:
         return []
     return [st.getPath().toString() for st in statuses]
-
-
-def fs_touch(spark: SparkSession, uri: str, content: str) -> None:
-    """Create (overwrite) a small file — commit-marker writes."""
-    fs, path = hadoop_fs(spark, uri)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
 
 
 def fs_delete(spark: SparkSession, uri: str, recursive: bool = False) -> None:

@@ -2,15 +2,11 @@
 incremental variant, windowed/sessionized event aggregation, and
 stateful helpers."""
 
-from graphql_api_etl_spark.streaming.reconcile import (
-    BucketedIncrementalReconciler,
-    IncrementalReconciler,
-)
+from graphql_api_etl_spark.streaming.reconcile import IncrementalReconciler
 from graphql_api_etl_spark.streaming.stateful import threshold_alerts
 from graphql_api_etl_spark.streaming.windows import windowed_counts, sessionized
 
 __all__ = [
-    "BucketedIncrementalReconciler",
     "IncrementalReconciler",
     "threshold_alerts",
     "windowed_counts",

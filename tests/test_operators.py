@@ -12,7 +12,6 @@ from graphql_api_etl_spark.operators.aggregate import (
     collect_group_sets,
     count_gate,
     hierarchy_levels,
-    success_accounting,
 )
 from graphql_api_etl_spark.operators.transform import (
     all_equal,
@@ -119,11 +118,6 @@ def test_count_gate(spark):
     assert count_gate(df, expected=2) == 2
     with pytest.raises(AssertionError):
         count_gate(df, expected=3, name="g")
-
-
-def test_success_accounting(spark):
-    df = spark.createDataFrame([(True,), (True,), (False,)], "success boolean")
-    assert success_accounting(df) == {"total": 3, "ok": 2, "failed": 1}
 
 
 # ---------------------------------------------------------------------------

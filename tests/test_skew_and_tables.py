@@ -495,15 +495,15 @@ def test_stage_bucketed_requires_qualified_name_and_idempotent_db(spark, tmp_pat
 
 
 def test_bucket_file_names_carry_the_bucket_id_of_their_rows(spark, tmp_path):
-    """Pins the bucket-file naming contract every exchange-free read —
-    and any future bucket-local compaction (ROUND_NOTES r15 candidate
-    #3) — depends on: each data file of a bucketed table (original land
-    AND delta appends) embeds its bucket id as the ``_NNNNN`` filename
+    """Pins the bucket-file naming contract every exchange-free read
+    depends on: each data file of a bucketed table (original land AND
+    delta appends) embeds its bucket id as the ``_NNNNN`` filename
     suffix, and every row inside the file hashes to exactly that
     bucket (``pmod(hash(cols), num_buckets)`` — Spark's Murmur3 bucket
-    routing IS the SQL hash function). A Spark upgrade changing either
-    the naming or the routing would break bucket-file surgery silently;
-    this test makes it loud."""
+    routing IS the SQL hash function), so ``append_bucketed_delta``
+    routes each delta row into its key's bucket. A Spark upgrade
+    changing either the naming or the routing would break that
+    silently; this test makes it loud."""
     import os
     import re
 
@@ -543,114 +543,3 @@ def test_bucket_file_names_carry_the_bucket_id_of_their_rows(spark, tmp_path):
         assert got == {bucket_id}, (f, got)
     assert seen_buckets == {0, 1, 2, 3}  # 60 keys cover all 4 buckets
     spark.sql("DROP DATABASE IF EXISTS graft_bucket_contract CASCADE")
-
-
-def _land_with_appends(spark, db, loc, n_buckets=4):
-    """Bucketed table + two delta appends concentrated in a key range
-    (hot buckets) — the post-streaming shape compaction targets."""
-    from graphql_api_etl_spark.sinks.tables import (
-        append_bucketed_delta,
-        ensure_bucket_database,
-        stage_bucketed,
-    )
-
-    ensure_bucket_database(spark, db, loc)
-    base = spark.range(40).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
-    stage_bucketed(spark, base, f"{db}.src", ["k"], num_buckets=n_buckets)
-    for lo, hi in ((40, 50), (50, 57)):
-        delta = spark.range(lo, hi).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-        )
-        append_bucketed_delta(spark, f"{db}.src", delta, ["k"], num_buckets=n_buckets)
-    return spark.table(f"{db}.src")
-
-
-def test_compact_bucketed_table_rewrites_only_hot_buckets(spark, tmp_path):
-    """Bucket-local compaction (the r15 candidate, built standalone):
-    row multiset identical to the appended source, every bucket back to
-    ONE file, cold buckets byte-identical copies (never decoded), and
-    the compacted table still joins exchange-free against a co-bucketed
-    twin."""
-    import os
-
-    from graphql_api_etl_spark.sinks.maintenance import compact_bucketed_table
-
-    loc = str(tmp_path / "wh")
-    src = _land_with_appends(spark, "graft_compact", loc)
-    src_rows = sorted(tuple(r) for r in src.collect())
-
-    src_dir = os.path.join(loc, "src")
-    pre = {
-        f: os.path.getsize(os.path.join(src_dir, f))
-        for f in os.listdir(src_dir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    }
-    import re as _re
-
-    pre_by_bucket: dict[int, list[str]] = {}
-    for f in pre:
-        pre_by_bucket.setdefault(int(_re.search(r"_(\d{5})\.", f).group(1)), []).append(f)
-    cold_names = {fs[0] for fs in pre_by_bucket.values() if len(fs) == 1}
-    assert any(len(fs) > 1 for fs in pre_by_bucket.values())  # appends made hot buckets
-
-    out = compact_bucketed_table(spark, "graft_compact.src", "graft_compact.dst", ["k"], 4)
-    assert sorted(tuple(r) for r in out.collect()) == src_rows
-
-    dst_dir = os.path.join(loc, "dst")
-    post = [
-        f for f in os.listdir(dst_dir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    ]
-    post_buckets = [int(_re.search(r"_(\d{5})\.", f).group(1)) for f in post]
-    assert sorted(post_buckets) == sorted(set(post_buckets))  # ≤1 file per bucket
-    assert os.path.exists(os.path.join(dst_dir, "_SUCCESS"))
-    # cold buckets were byte-copied, not rewritten: same name, same size
-    for f in cold_names:
-        assert os.path.exists(os.path.join(dst_dir, f)), f
-        assert os.path.getsize(os.path.join(dst_dir, f)) == pre[f]
-
-    # layout contract intact: exchange-free join against the source
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = out.join(src, "k").groupBy().count()
-        assert "hashpartitioning(k" not in executed_plan(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    spark.sql("DROP DATABASE IF EXISTS graft_compact CASCADE")
-
-
-def test_compact_bucketed_table_all_cold_is_pure_copy(spark, tmp_path):
-    """No hot buckets → the build is copies only (no INSERT job ever
-    runs: every dst data file keeps its src name and size) and _SUCCESS
-    still lands."""
-    import os
-
-    from graphql_api_etl_spark.sinks.maintenance import compact_bucketed_table
-    from graphql_api_etl_spark.sinks.tables import (
-        ensure_bucket_database,
-        stage_bucketed,
-    )
-
-    loc = str(tmp_path / "wh")
-    ensure_bucket_database(spark, "graft_compact_cold", loc)
-    base = spark.range(30).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    stage_bucketed(spark, base, "graft_compact_cold.src", ["k"], num_buckets=4)
-    src_dir = os.path.join(loc, "src")
-    pre = {
-        f: os.path.getsize(os.path.join(src_dir, f))
-        for f in os.listdir(src_dir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    }
-    out = compact_bucketed_table(
-        spark, "graft_compact_cold.src", "graft_compact_cold.dst", ["k"], 4
-    )
-    assert out.count() == 30
-    dst_dir = os.path.join(loc, "dst")
-    post = {
-        f: os.path.getsize(os.path.join(dst_dir, f))
-        for f in os.listdir(dst_dir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    }
-    assert post == pre  # identical names and sizes: byte copies
-    assert os.path.exists(os.path.join(dst_dir, "_SUCCESS"))
-    spark.sql("DROP DATABASE IF EXISTS graft_compact_cold CASCADE")

@@ -150,317 +150,53 @@ def test_incremental_reconcile_retry_is_idempotent(spark, tmp_path):
     assert first == second == [("a", 2), ("b", 1)]
 
 
-def test_bucketed_incremental_reconcile_equals_batch_and_retry(spark, tmp_path):
-    """BucketedIncrementalReconciler (VERDICT r12 ask #7): the
-    streaming upsert mirrored over a ReconcileStaging-layout bucketed
-    state — same last-write-wins/insert semantics as the parent
-    (the test_incremental_reconcile cases), same retry idempotency,
-    PLUS the layout contract: the committed state is a catalog table
-    whose scan carries the bucket spec, so the per-batch merge and any
-    downstream key join read the state side exchange-free."""
-    from graphql_api_etl_spark.plans import executed_plan
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
+def test_incremental_reconcile_kill_and_replay_is_exactly_once(spark, tmp_path):
+    """Whatever point the writer dies at, a foreachBatch replay of the
+    same batch_id converges to the same state with no duplicate rows.
 
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_state",
-        str(tmp_path / "bstate"),
-        key="id",
-        num_buckets=4,
-    )
-    b0 = spark.createDataFrame(
-        [("a", "A0"), ("b", "B0"), ("b", "B1")], "id string, name string"
-    )
-    b1 = spark.createDataFrame(
-        [("a", "A1"), ("d", "D0")], "id string, name string"
-    )
-    rec.upsert_batch(b0, 0)
-    s0 = {r["id"]: r["name"] for r in rec.current_state(spark).collect()}
-    assert s0 == {"a": "A0", "b": "B1"}  # within-batch: last occurrence wins
-
-    rec.upsert_batch(b1, 1)
-    s1 = {r["id"]: r["name"] for r in rec.current_state(spark).collect()}
-    assert s1 == {"a": "A1", "b": "B1", "d": "D0"}
-
-    # retry of the SAME batch re-reads the version before it and
-    # rewrites its own version — idempotent.
-    rec.upsert_batch(b1, 1)
-    s1b = {r["id"]: r["name"] for r in rec.current_state(spark).collect()}
-    assert s1b == s1
-
-    # the live state is a bucketed catalog table: a key join against
-    # another bucketed frame runs with zero exchange on the state side.
-    state = rec.current_state(spark)
-    assert spark.catalog.tableExists("graft_stream_state.state_v1")
-    from graphql_api_etl_spark.sinks.tables import stage_bucketed
-
-    other = spark.createDataFrame(
-        [("a", 1), ("x", 2)], "id string, v int"
-    )
-    staged_other = stage_bucketed(
-        spark, other, "graft_stream_state.probe", ["id"], num_buckets=4
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = executed_plan(state.join(staged_other, "id"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "Exchange" not in plan, plan
-
-    # retention: after batch 2, version 0 is dropped (table + dir).
-    rec.upsert_batch(
-        spark.createDataFrame([("e", "E0")], "id string, name string"), 2
-    )
-    assert not spark.catalog.tableExists("graft_stream_state.state_v0")
-    import os as _os
-
-    assert not _os.path.isdir(str(tmp_path / "bstate" / "state_v0"))
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_state CASCADE")
-
-
-def test_bucketed_adds_only_batches_append_instead_of_relanding(spark, tmp_path):
-    """VERDICT r13 ask #3: an adds-only micro-batch must take the
-    delta fast path — append O(|batch|) rows into the CURRENT bucketed
-    version (commit marker written, no new version directory, pass-1
-    files untouched) — while updates still take the full versioned
-    land, and the compaction cap forces a re-land after N appends."""
+    Before each batch, an earlier attempt's crashed write is left in
+    ``v{B}`` (rows but no ``_SUCCESS``): ``current_state`` must not see
+    it, and the batch's write replaces it. Each step of the schedule is
+    then replayed twice, and after every write retention leaves exactly
+    ``v{B}`` and the newest version below it (the retry input). Every
+    state is checked against a driver-side last-write-wins reference."""
     import os
 
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
+    from graphql_api_etl_spark.streaming.reconcile import IncrementalReconciler
 
-    loc = str(tmp_path / "bstate")
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_delta", loc, key="id", num_buckets=4,
-        compact_after_appends=2,
-    )
-    rec.upsert_batch(
-        spark.createDataFrame([("a", "A0"), ("b", "B0")], "id string, v string"), 0
-    )
-    tdir = os.path.join(loc, "state_v0")
-    files0 = {f for f in os.listdir(tdir) if not f.startswith("_")}
-
-    # adds-only batch 1: append — same version, marker, superset files
-    rec.upsert_batch(spark.createDataFrame([("c", "C0")], "id string, v string"), 1)
-    assert os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
-    assert not os.path.isdir(os.path.join(loc, "state_v1"))
-    files1 = {f for f in os.listdir(tdir) if not f.startswith("_")}
-    assert files0 <= files1 and len(files1) > len(files0)
-    state = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert state == {"a": "A0", "b": "B0", "c": "C0"}
-
-    # adds-only batch 2: second append onto v0 (cap is 2, one applied)
-    rec.upsert_batch(spark.createDataFrame([("d", "D0")], "id string, v string"), 2)
-    assert os.path.exists(os.path.join(loc, "applied_b2_to_v0"))
-    assert not os.path.isdir(os.path.join(loc, "state_v2"))
-
-    # adds-only batch 3: compaction cap reached → bucket-local
-    # compaction lands the new version (r14-opt; was a full re-land);
-    # the markers retire with nothing left pointing at stale versions
-    rec.upsert_batch(spark.createDataFrame([("e", "E0")], "id string, v string"), 3)
-    assert os.path.isdir(os.path.join(loc, "state_v3"))
-    assert spark.catalog.tableExists("graft_stream_delta.state_v3")
-    state = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert state == {"a": "A0", "b": "B0", "c": "C0", "d": "D0", "e": "E0"}
-
-    # an UPDATE batch never appends: full land (b mutates)
-    rec.upsert_batch(
-        spark.createDataFrame([("b", "B1"), ("f", "F0")], "id string, v string"), 4
-    )
-    assert os.path.isdir(os.path.join(loc, "state_v4"))
-    state = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert state["b"] == "B1" and state["f"] == "F0"
-
-    # null batch keys decline the fast path (key join can't classify)
-    rec.upsert_batch(
-        spark.createDataFrame([(None, "N0")], "id string, v string"), 5
-    )
-    assert os.path.isdir(os.path.join(loc, "state_v5"))
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_delta CASCADE")
-
-
-def test_bucketed_compaction_is_bucket_local_and_carries_the_batch(spark, tmp_path):
-    """r14-opt: when the append cap is hit, the new version must be
-    built BUCKET-LOCALLY — cold buckets of the base version arrive as
-    byte-identical copies (same file name, same size: never decoded),
-    every bucket is back to one file, the triggering batch's rows ride
-    the same landing (no marker: the version directory is the commit),
-    and the compacted state still classifies future deltas correctly."""
-    import os
-    import re as _re
-
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
-
-    def data_files(d):
-        return {
-            f: os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        }
-
-    loc = str(tmp_path / "bstate")
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_compact", loc, key="id", num_buckets=4,
-        compact_after_appends=1,
-    )
-    # batch 0: keys spread over all 4 buckets, one file per bucket
-    rec.upsert_batch(
-        spark.createDataFrame(
-            [(f"k{i}", f"V{i}") for i in range(12)], "id string, v string"
-        ),
-        0,
-    )
-    v0 = data_files(os.path.join(loc, "state_v0"))
-    # batch 1: ONE new key → delta append touches exactly one bucket
-    rec.upsert_batch(spark.createDataFrame([("zz", "Z0")], "id string, v string"), 1)
-    assert os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
-    hot_bucket = None
-    for f in set(data_files(os.path.join(loc, "state_v0"))) - set(v0):
-        hot_bucket = int(_re.search(r"_(\d{5})\.", f).group(1))
-    assert hot_bucket is not None
-
-    # batch 2: cap (1) reached → bucket-local compaction into state_v2
-    rec.upsert_batch(spark.createDataFrame([("yy", "Y0")], "id string, v string"), 2)
-    v2_dir = os.path.join(loc, "state_v2")
-    assert os.path.isdir(v2_dir)
-    assert os.path.exists(os.path.join(v2_dir, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(loc, "applied_b2_to_v0"))
-    v2 = data_files(v2_dir)
-    # one file per bucket again
-    buckets = [int(_re.search(r"_(\d{5})\.", f).group(1)) for f in v2]
-    assert sorted(buckets) == sorted(set(buckets))
-    # cold buckets (neither batch 1's nor batch 2's) are byte copies
-    cold = {
-        f for f in v0
-        if int(_re.search(r"_(\d{5})\.", f).group(1)) != hot_bucket
-    }
-    copied = {f for f in cold if f in v2 and v2[f] == v0[f]}
-    # every cold bucket file that batch 2's key didn't land in is a copy
-    assert len(copied) >= len(cold) - 1, (cold, set(v2))
-    # state content: everything, exactly once
-    state = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert state == {**{f"k{i}": f"V{i}" for i in range(12)}, "zz": "Z0", "yy": "Y0"}
-
-    # the compacted version keeps classifying: an update now full-lands
-    rec.upsert_batch(spark.createDataFrame([("k0", "V0x")], "id string, v string"), 3)
-    assert os.path.isdir(os.path.join(loc, "state_v3"))
-    state = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert state["k0"] == "V0x" and len(state) == 14
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_compact CASCADE")
-
-
-def test_bucketed_compaction_retry_rebuilds_the_half_built_version(spark, tmp_path):
-    """A compaction attempt that died mid-build (table registered,
-    directory half-written, no _SUCCESS) must be rebuilt from the
-    still-committed base on replay — the versioned contract's
-    'directory is the commit' rule."""
-    import os
-
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
-
-    loc = str(tmp_path / "bstate")
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_cretry", loc, key="id", num_buckets=4,
-        compact_after_appends=1,
-    )
-    rec.upsert_batch(
-        spark.createDataFrame([("a", "A0"), ("b", "B0")], "id string, v string"), 0
-    )
-    rec.upsert_batch(spark.createDataFrame([("c", "C0")], "id string, v string"), 1)
-
-    # simulate the crash: a half-built v2 (catalog entry + partial dir,
-    # no _SUCCESS) left by a previous attempt of batch 2
-    from graphql_api_etl_spark.sinks.tables import stage_bucketed
-
-    stage_bucketed(
-        spark,
-        spark.createDataFrame([("junk", "J")], "id string, v string"),
-        "graft_stream_cretry.state_v2",
-        ["id"],
-        num_buckets=4,
-    )
-    os.remove(os.path.join(loc, "state_v2", "_SUCCESS"))
-
-    rec.upsert_batch(spark.createDataFrame([("d", "D0")], "id string, v string"), 2)
-    assert os.path.exists(os.path.join(loc, "state_v2", "_SUCCESS"))
-    state = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert state == {"a": "A0", "b": "B0", "c": "C0", "d": "D0"}
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_cretry CASCADE")
-
-
-def test_bucketed_adds_only_kill_and_retry_is_exactly_once(spark, tmp_path):
-    """Kill-and-retry property over the delta fast path: whatever
-    point the writer dies at, a foreachBatch replay of the same
-    batch_id converges to the same state with no duplicate rows.
-
-    Crash points simulated: (a) clean commit then replay (marker
-    short-circuit); (b) append committed but the marker write lost
-    (the classification must read the keys as already-present-
-    identical and no-op); (c) nothing committed (plain first apply).
-    Each step is checked against a driver-side last-write-wins
-    reference."""
-    import os
-
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
-
-    loc = str(tmp_path / "bstate")
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_killretry", loc, key="id", num_buckets=2
-    )
+    state = tmp_path / "state"
+    rec = IncrementalReconciler(str(state), key="id")
     reference: dict[str, str] = {}
 
-    def apply_ref(rows):
-        for k, v in rows:
-            reference[k] = v
-
-    def check():
-        got = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
+    def check(batch_id):
+        df = rec.current_state(spark)
+        got = {r["id"]: r["v"] for r in df.collect()}
         assert got == reference, (got, reference)
-        # no duplicate keys anywhere in the committed state
-        n = rec.current_state(spark).count()
-        assert n == len(reference)
+        assert df.count() == len(reference)  # no duplicate keys
+        keep = {f"v{batch_id}"} | ({f"v{batch_id - 1}"} if batch_id else set())
+        assert set(os.listdir(state)) == keep
 
     schedule = [
-        (0, [("a", "A0"), ("b", "B0")], None),      # seed land
-        (1, [("c", "C0")], "marker"),                # (a) replay w/ marker
-        (2, [("d", "D0")], "lost_marker"),           # (b) marker lost
-        (3, [("b", "B1")], "marker"),                # update: full land, replay
-        (4, [("e", "E0"), ("a", "A0")], "lost_marker"),  # adds + identical overlap
+        (0, [("a", "A0"), ("b", "B0")]),  # seed
+        (1, [("c", "C0")]),  # insert
+        (2, [("b", "B1")]),  # update
+        (3, [("d", "D0"), ("a", "A0")]),  # adds + identical overlap
     ]
-    for batch_id, rows, crash in schedule:
+    for batch_id, rows in schedule:
+        crashed = str(state / f"v{batch_id}")
+        spark.createDataFrame([("junk", "J")], "id string, v string").write.parquet(crashed)
+        os.remove(os.path.join(crashed, "_SUCCESS"))
+        if batch_id:
+            assert {r["id"]: r["v"] for r in rec.current_state(spark).collect()} == reference
+        else:
+            assert rec.current_state(spark) is None
         batch = spark.createDataFrame(rows, "id string, v string")
         rec.upsert_batch(batch, batch_id)
-        apply_ref(rows)
-        check()
-        if crash is None:
-            continue
-        if crash == "lost_marker":
-            # crash AFTER the append's job commit, BEFORE the marker:
-            # the marker never hit disk but the rows did.
-            for m in (
-                p for p in os.listdir(loc) if p.startswith(f"applied_b{batch_id}_")
-            ):
-                os.remove(os.path.join(loc, m))
-        # the replay foreachBatch delivers: same batch, same id
-        rec.upsert_batch(batch, batch_id)
-        check()
-        # and a second replay (retries can repeat)
-        rec.upsert_batch(batch, batch_id)
-        check()
-
-    # batch 4 was adds+identical-overlap: it must have ridden the
-    # delta path (no state_v4 version), and ONLY the new key appended.
-    assert not os.path.isdir(os.path.join(loc, "state_v4"))
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_killretry CASCADE")
+        reference.update(rows)
+        check(batch_id)
+        for _ in range(2):  # retries can repeat
+            rec.upsert_batch(batch, batch_id)
+            check(batch_id)
 
 
 def test_threshold_alerts_stateful_across_batches(spark, tmp_path):
@@ -803,32 +539,18 @@ def test_threshold_crossing_events_state_carries_across_batches(spark, tmp_path)
     assert rows == [(103, 55_000, 1)]
 
 
-def test_flagship_streamed_twin_rides_the_delta_fast_path(spark, sf_dir):
-    """The gated streaming twin (flagship_reconcile_streamed) must
-    actually exercise the adds-only delta path, not just produce the
-    right report: after one evaluation, batch 0's full land is the ONLY
-    state version ever written (``state_v0``) and batches 1–2 left their
-    ``applied_b{B}_to_v0`` commit markers — i.e. they were classified
-    adds-only and appended via append_bucketed_delta instead of
-    re-landing. Rows are pinned identical to the plain batch flagship
-    (the driver's oracle is the same SQL; this is the local replica)."""
-    import os
-
+def test_flagship_streamed_twin_equals_batch_flagship(spark, sf_dir):
+    """The gated streaming twin (flagship_reconcile_streamed) upserts
+    three micro-batches through IncrementalReconciler; its report is
+    pinned row-identical to the plain batch flagship (the driver's
+    oracle is the same SQL; this is the local replica)."""
     from graphql_api_etl_spark.queries import QUERIES
-    from graphql_api_etl_spark.sinks.tables import bucket_warehouse_path
 
     streamed, _ = QUERIES["flagship_reconcile_streamed"]
     plain, _ = QUERIES["flagship_reconcile"]
     got = {tuple(r) for r in streamed(spark, sf_dir).collect()}
     want = {tuple(r) for r in plain(spark, sf_dir).collect()}
     assert got == want and len(got) > 0
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.strip("/").split("/")[-1])
-    state = os.path.join(bucket_warehouse_path(".bucket_warehouse_stream", tag), "state")
-    versions = sorted(d for d in os.listdir(state) if d.startswith("state_v"))
-    markers = sorted(m for m in os.listdir(state) if m.startswith("applied_b"))
-    assert versions == ["state_v0"]  # batches 1-2 never re-landed
-    assert markers == ["applied_b1_to_v0", "applied_b2_to_v0"]
 
 
 def test_flagship_streamed_two_sf_dirs_share_no_state(spark):
@@ -851,143 +573,26 @@ def test_flagship_streamed_two_sf_dirs_share_no_state(spark):
     assert r1b == w1  # stale-frame re-read unaffected by the other sf
 
 
-def test_bucketed_reconciler_update_batch_through_real_stream_takes_full_land(
-    spark, tmp_path
-):
-    """Completes the attach() coverage matrix: the streamed twin pins
-    adds-only batches through a real availableNow run; here a real run
-    delivers an UPDATE batch — the classifier must refuse the append
-    and land a NEW full state version, and the final state is
-    last-write-wins. Files are mtime-ordered, maxFilesPerTrigger=1, so
-    the engine delivers batches 0,1,2 deterministically."""
-    import glob as g
-    import os
-    import shutil
-
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-
-    def write(name, rows, mtime):
-        stage = str(tmp_path / ("_" + name))
-        spark.createDataFrame(rows, "id string, v string").coalesce(1).write.parquet(stage)
-        part = g.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(src, name + ".parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (mtime, mtime))
-        shutil.rmtree(stage, ignore_errors=True)
-
-    write("b0", [("a", "A0"), ("b", "B0")], 1_700_000_000)  # seed full land
-    write("b1", [("c", "C0")], 1_700_000_100)               # adds-only append
-    write("b2", [("a", "A1"), ("d", "D0")], 1_700_000_200)  # UPDATE a -> full land
-
-    loc = str(tmp_path / "state")
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_updtest", loc, key="id", num_buckets=2
-    )
-    stream = (
-        spark.readStream.schema("id string, v string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = rec.attach(stream, checkpoint=str(tmp_path / "ckpt"))
-    try:
-        assert q.awaitTermination(300)
-    finally:
-        q.stop()
-
-    got = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    assert got == {"a": "A1", "b": "B0", "c": "C0", "d": "D0"}
-    # batch 1 rode the delta path (marker on v0), batch 2 did NOT (it
-    # landed its own version; retention keeps v0 as the retry input)
-    assert os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
-    versions = sorted(d for d in os.listdir(loc) if d.startswith("state_v"))
-    assert versions == ["state_v0", "state_v2"]
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_updtest CASCADE")
-
-
-def test_fresh_checkpoint_restart_purges_stale_markers(spark, tmp_path):
-    """The review-found silent-drop case: restart the stream with a
-    FRESH checkpoint over a KEPT state_dir — batch ids restart at 0, so
-    batch 0 re-lands v0 in place while the previous incarnation's
-    applied_b1_to_v0 marker survives on disk. Batch 1 then arrives with
-    NEW data; before the purge-on-land fix the stale marker
-    short-circuited _try_adds_only_append and the rows were silently
-    swallowed (checkpoint committed, no retry). Pins: the re-land
-    purges the stale markers, and the restarted batch 1 lands its
-    rows."""
-    import os
-
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
-
-    loc = str(tmp_path / "state")
-    rec = BucketedIncrementalReconciler(
-        "graft_stream_stalemark", loc, key="id", num_buckets=2
-    )
-    # incarnation 1: seed + adds-only delta (leaves applied_b1_to_v0)
-    rec.upsert_batch(spark.createDataFrame([("a", "A0")], "id string, v string"), 0)
-    rec.upsert_batch(spark.createDataFrame([("b", "B0")], "id string, v string"), 1)
-    assert os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
-
-    # incarnation 2: fresh checkpoint, batch ids restart at 0
-    rec2 = BucketedIncrementalReconciler(
-        "graft_stream_stalemark", loc, key="id", num_buckets=2
-    )
-    rec2.upsert_batch(
-        spark.createDataFrame([("a", "A0"), ("b", "B0")], "id string, v string"), 0
-    )
-    # the in-place re-land of v0 must have purged the stale marker
-    assert not os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
-    # new data under the REUSED batch id must land, not be swallowed
-    rec2.upsert_batch(spark.createDataFrame([("c", "C0")], "id string, v string"), 1)
-    got = {r["id"]: r["v"] for r in rec2.current_state(spark).collect()}
-    assert got == {"a": "A0", "b": "B0", "c": "C0"}
-    spark.sql("DROP DATABASE IF EXISTS graft_stream_stalemark CASCADE")
-
-
-@pytest.mark.parametrize("path", ["stream", "batch"])
 def test_adds_only_classifier_above_broadcast_cap_still_appends(
-    spark, tmp_path, monkeypatch, path
+    spark, tmp_path, monkeypatch
 ):
     """With DELTA_BROADCAST_KEY_CAP forced to 0 (every key set 'too
     big'), the classifier must take the un-hinted join branch — the
-    driver never materializes the key sets — and the adds-only append
-    still lands the right rows, for both callers of the one classifier:
-    the streaming reconciler's fast path and the batch staging's second
-    landing (the state side is bucketed on the key, so its scan stays
-    exchange-free either way)."""
-    import os
-
+    driver never materializes the key sets — and the batch staging's
+    second landing still appends the right rows (the state side is
+    bucketed on the key, so its scan stays exchange-free either way)."""
     from graphql_api_etl_spark.sinks import tables
-    from graphql_api_etl_spark.streaming.reconcile import (
-        BucketedIncrementalReconciler,
-    )
 
     monkeypatch.setattr(tables, "DELTA_BROADCAST_KEY_CAP", 0)
     a = spark.createDataFrame([("a", "A0")], "id string, v string")
     ab = spark.createDataFrame([("a", "A0"), ("b", "B0")], "id string, v string")
-    loc = str(tmp_path / "state")
-    if path == "stream":
-        db = "graft_stream_nobcast"
-        rec = BucketedIncrementalReconciler(db, loc, key="id", num_buckets=2)
-        rec.upsert_batch(a, 0)
-        rec.upsert_batch(ab.filter(F.col("id") == "b"), 1)
-        # rode the delta path despite no broadcast hints
-        assert os.path.exists(os.path.join(loc, "applied_b1_to_v0"))
-        got = {r["id"]: r["v"] for r in rec.current_state(spark).collect()}
-    else:
-        db = "graft_stage_nobcast"
-        staging = tables.ReconcileStaging(db, loc, num_buckets=2)
-        staging.land(a, "api", "id")
-        out = staging.land(ab, "api", "id")
-        # appended into the pass-1 table, not re-landed under a serial
-        names = {t.name for t in spark.catalog.listTables(db)}
-        assert "api_id" in names and "api_id_v1" not in names, names
-        got = {r["id"]: r["v"] for r in out.collect()}
+    db = "graft_stage_nobcast"
+    staging = tables.ReconcileStaging(db, str(tmp_path / "state"), num_buckets=2)
+    staging.land(a, "api", "id")
+    out = staging.land(ab, "api", "id")
+    # appended into the pass-1 table, not re-landed under a serial
+    names = {t.name for t in spark.catalog.listTables(db)}
+    assert "api_id" in names and "api_id_v1" not in names, names
+    got = {r["id"]: r["v"] for r in out.collect()}
     assert got == {"a": "A0", "b": "B0"}
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
