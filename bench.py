@@ -2,22 +2,24 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": <sf>,
-     "duckdb_queries": {"q": sec, ...}, "ratio_vs_duckdb": <x>}
+    {"metric": "headline_queries_total_sec", "value": <total sec>,
+     "unit": "sec", "queries": {"q": sec, ...}, "sf": <sf>,
+     "samples": {"q": [sec, ...], ...},
+     "duckdb_queries": {"q": sec, ...}, "duckdb_samples": {...},
+     "ratio_vs_duckdb": <x>}
+(``duckdb_error`` replaces the three DuckDB keys when DuckDB fails.)
 
-Methodology (round-over-round comparability on a noisy VM):
-- best-of-3 per query with INTERLEAVED order (q1..qN, q1..qN, ...) so
-  a noisy-neighbor window hits different queries in different rounds
-  instead of all samples of one query;
+Methodology (comparable before/after numbers on a noisy VM):
+- best-of-ROUNDS per query with INTERLEAVED order (q1..qN, q1..qN,
+  ...) so a noisy-neighbor window hits different queries in different
+  rounds instead of all samples of one query; ``samples`` keeps every
+  sample so a reader can tell a real move from noise;
 - each Spark query is forced end-to-end with a noop write (full plan
   executes on executors, nothing collected) after one unmeasured
-  warm-up pass over EVERY headline query (JMH style, r7) so JVM/janino
-  /JIT startup isn't billed to any query's first measured sample;
+  warm-up pass over EVERY headline query, so JVM/janino/JIT startup
+  isn't billed to any query's first measured sample;
 - the DuckDB oracle for every headline query runs in the SAME process
-  and window, also best-of-3 interleaved, so the reported ratio
-  compares like against like rather than against a different-noise
-  BASELINE.md measurement.
+  and window, with the same warm-up and interleaved best-of-ROUNDS.
 """
 
 from __future__ import annotations
@@ -31,13 +33,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Headline set: the engine's flagship + scan/join/agg benchmarks +
-# window/session + the LLM-pipeline operators. Keep this list in sync
-# with the catalog (every name must exist in queries()).
+# window/session + the LLM-pipeline operators. Every name must exist
+# in queries(); main() raises otherwise, so a renamed entry cannot
+# silently shrink the measured set.
 HEADLINE = [
     "flagship_reconcile",
-    # The deployment-layout twin (r12): same rows via stage_bucketed
-    # tables. Its first sample pays the one-time landing write; the
-    # best-of shows the recurring-job cost the pipeline default runs.
+    # The co-bucketed twin: same rows as the flagship, with both sides
+    # landed once per session as bucketed tables (stage_bucketed); the
+    # best-of shows the exchange-free join over that layout.
     "flagship_reconcile_bucketed",
     "j_outer_provenance_counts",
     "j_broadcast_dims",
@@ -54,10 +57,9 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "dedup_embedding_cosine",
     "text_quality_stats",
-    # sim_topk_bruteforce retired from the headline (VERDICT r4 ask #2):
-    # it is the deliberate all-pairs |Q|·|C| baseline, kept in the
-    # catalog + floor probes; the scale path (Arrow/BLAS matmul with
-    # per-batch partial top-k) is what a cluster job would run.
+    # sim_topk_matmul (Arrow/BLAS matmul with per-batch partial top-k)
+    # stands for similarity search; the all-pairs sim_topk_bruteforce
+    # baseline stays in the catalog only.
     "sim_topk_matmul",
     "dedup_span_exact",
     "curate_bloom_decontaminate",
@@ -70,62 +72,13 @@ TABLES = [
 
 ROUNDS = 3
 
-# Marginal-throughput probes (BASELINE.md "structural read", emitted as
-# data): the same portable SQL runs on BOTH engines at 1x and REP x the
-# fact table (replication via cross-join against a tiny range, so both
-# engines multiply rows out of a single scan).  marginal_rows_per_sec =
-# extra rows / extra seconds isolates per-row cost from the fixed
-# job/codegen floor that dominates sub-second timings at sf0.1.
-PROBE_REP = 8
-PROBE_ROUNDS = 2
-PROBES = [
-    {
-        "name": "scan_agg",  # TPC-H Q1 shape
-        "fact": "lineitem",
-        "sql": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_discount), 2) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-    },
-    {
-        "name": "filter_agg",  # TPC-H Q6 shape
-        "fact": "lineitem",
-        "sql": """
-            SELECT coalesce(round(sum(l_extendedprice * l_discount), 2), 0.0) AS revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-              AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-              AND l_discount >= 0.05 AND l_discount <= 0.07
-              AND l_quantity < 24
-        """,
-    },
-    {
-        "name": "window_agg",  # events hourly rollup shape
-        "fact": "events",
-        "sql": """
-            SELECT date_trunc('hour', ts) AS window_start, event_type,
-                   count(*) AS n_events, round(sum(value), 2) AS total_value
-            FROM events
-            GROUP BY 1, 2
-        """,
-    },
-    {
-        "name": "join_agg",  # fact-dim hash join shape
-        "fact": "orders",
-        "sql": """
-            SELECT c_mktsegment AS seg, count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS total_price
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            GROUP BY c_mktsegment
-        """,
-    },
-]
+
+def headline_names(catalog) -> list[str]:
+    """HEADLINE, checked against the catalog: a missing name raises."""
+    missing = [n for n in HEADLINE if n not in catalog]
+    if missing:
+        raise KeyError(f"bench HEADLINE names missing from queries(): {missing}")
+    return list(HEADLINE)
 
 
 def main() -> None:
@@ -136,34 +89,14 @@ def main() -> None:
     from graphql_api_etl_spark.session import get_spark
     import __spark_entry__ as entrymod
 
+    qs = entrymod.queries()
+    names = headline_names(qs)
     spark = get_spark(app_name="bench")
 
-    # `python bench.py --floors` runs ONLY the marginal-floor probes
-    # (skipping the headline suite) so the envelope straddlers can be
-    # re-measured cheaply across runs — the RANGE across invocations,
-    # not any single best run, is what BASELINE.md records (VERDICT
-    # r10 ask #1).
-    if "--floors" in sys.argv:
-        floors = _probe_floors(spark, sf_dir)
-        floors.update(_probe_relational_floors(spark, sf_dir))
-        floors.update(_probe_skew_floors(spark, sf_dir))
-        floors.update(_probe_delta_floors(spark, sf_dir))
-        print(json.dumps({"metric": "floors_probe", "unit": "us_per_row",
-                          "sf": sf, "floors": floors}))
-        return
-
-    qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
-
-    # Warm-up: one unmeasured pass over EVERY headline query (JMH
-    # style), so janino compilation and first-tier JIT of each query's
-    # generated stages aren't billed to its first measured sample.
-    # A single-query warm-up (the pre-r7 scheme) only covered the
-    # stages that query shares with the others; queries with unique
-    # stage shapes (the LSH band joins) were still paying multi-second
-    # compile in sample 1 and partially-interpreted code in samples
-    # 2-3, which best-of-3 then reported. DuckDB gets the same
-    # treatment below for symmetry.
+    # Warm-up: one unmeasured pass over EVERY headline query, so janino
+    # compilation and first-tier JIT of each query's generated stages
+    # aren't billed to its first measured sample (a query with unique
+    # stage shapes would otherwise pay seconds of compile in sample 1).
     for name in names:
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
@@ -175,9 +108,16 @@ def main() -> None:
             samples[name].append(round(time.time() - t0, 3))
     timings = {n: min(samples[n]) for n in names}
 
+    out = {
+        "metric": "headline_queries_total_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "samples": samples,
+    }
+
     # DuckDB oracles, same process/window, same interleaved best-of-N.
-    duck: dict[str, float] = {}
-    duck_samples: dict[str, list[float]] = {}
     try:
         import duckdb
 
@@ -186,7 +126,7 @@ def main() -> None:
         for t in TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         with_oracle = [n for n in names if oracles.get(n)]
-        duck_samples = {n: [] for n in with_oracle}
+        duck_samples: dict[str, list[float]] = {n: [] for n in with_oracle}
         for name in with_oracle:  # warm-up pass, symmetric with Spark's
             con.execute(oracles[name]).fetchall()
         for _ in range(ROUNDS):
@@ -194,1222 +134,18 @@ def main() -> None:
                 t0 = time.time()
                 con.execute(oracles[name]).fetchall()
                 duck_samples[name].append(round(time.time() - t0, 3))
-        duck = {n: min(v) for n, v in duck_samples.items()}
-    except Exception as exc:  # noqa: BLE001 — a silent {} would read
+    except Exception as exc:  # noqa: BLE001 — a missing key would read
         # as "no DuckDB available"; record what actually broke
-        duck = {}
-        duck_samples = {}
-        duck_error = repr(exc)
+        out["duckdb_error"] = repr(exc)
     else:
-        duck_error = None
-
-    # Fixed-cost control (VERDICT r13 ask #5): a 1-row scan measured
-    # with the same interleaved best-of-N, on BOTH engines. Its data
-    # work is nil, so its number is pure harness floor — JVM job
-    # scheduling + task dispatch on the Spark side, statement overhead
-    # on DuckDB's. When a round's headline numbers inflate uniformly
-    # while the control inflates with them, the window was noisy (the
-    # r13 adjudication, done then by cross-referencing solo anchors);
-    # a plan regression moves its query WITHOUT moving the control.
-    control: dict[str, float] = {}
-    try:
-        from graphql_api_etl_spark.sources.registry import load_table
-
-        ctrl_df = load_table(spark, sf_dir, "region").limit(1)
-        ctrl_df.write.format("noop").mode("overwrite").save()  # warm-up
-        ctrl_samples = []
-        for _ in range(ROUNDS):
-            t0 = time.time()
-            ctrl_df.write.format("noop").mode("overwrite").save()
-            ctrl_samples.append(round(time.time() - t0, 4))
-        control["spark_fixed_sec"] = min(ctrl_samples)
-        control["spark_fixed_med"] = round(
-            sorted(ctrl_samples)[len(ctrl_samples) // 2], 4
-        )
-        if duck:
-            dctrl = []
-            con.execute("SELECT * FROM region LIMIT 1").fetchall()  # warm-up
-            for _ in range(ROUNDS):
-                t0 = time.time()
-                con.execute("SELECT * FROM region LIMIT 1").fetchall()
-                dctrl.append(round(time.time() - t0, 4))
-            control["duckdb_fixed_sec"] = min(dctrl)
-    except Exception:  # noqa: BLE001 — the control is diagnostic only
-        pass
-
-    marginal = _probe_marginal(spark, sf_dir)
-    floors = _probe_floors(spark, sf_dir)
-    floors.update(_probe_relational_floors(spark, sf_dir))
-    floors.update(_probe_skew_floors(spark, sf_dir))
-    floors.update(_probe_delta_floors(spark, sf_dir))
-    floors.update(_probe_codec_floors())
-
-    total = round(sum(timings.values()), 3)
-    out = {
-        "metric": "headline_queries_total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-    }
-    if duck:
-        common = [n for n in duck if n in timings]
-        s_total = sum(timings[n] for n in common)
-        d_total = sum(duck[n] for n in common)
+        duck = {n: min(v) for n, v in duck_samples.items()}
+        d_total = sum(duck.values())
         out["duckdb_queries"] = duck
-        out["ratio_vs_duckdb"] = round(s_total / d_total, 2) if d_total else None
-    if duck_error:
-        out["duckdb_error"] = duck_error
-    # All interleaved samples (not just best-of-N): lets a reader
-    # separate real round-over-round movement from noisy-neighbor
-    # windows — r3's minhash "regression" was sample noise that a
-    # spread field would have settled immediately (VERDICT r3 ask #6).
-    out["samples"] = samples
-    if duck_samples:
         out["duckdb_samples"] = duck_samples
-    if marginal:
-        out["marginal_rows_per_sec"] = marginal
-    if floors:
-        out["floors"] = floors
-    if control:
-        out["control"] = control
+        out["ratio_vs_duckdb"] = (
+            round(sum(timings[n] for n in duck) / d_total, 2) if d_total else None
+        )
     print(json.dumps(out))
-    # FINAL line: compact summary (VERDICT r5 ask #3). The driver's
-    # BENCH_r*.json keeps only the LAST 2000 chars of stdout, which
-    # used to preserve the detailed line's tail (floors, duckdb
-    # samples) but drop the Spark headline map. This line carries the
-    # full contract keys (metric/value/unit/queries/sf + ratio) in
-    # under 2000 chars so the recorded artifact always has the Spark
-    # numbers; the detailed line above keeps samples/floors/probes.
-    def med(vals: list[float]) -> float:
-        s = sorted(vals)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-    compact = {
-        "metric": "headline_queries_total_sec",
-        "compact": True,  # tag so a stdout scanner can tell the two
-        # same-metric lines apart (ADVICE r6) — the detailed line above
-        # has no "compact" key.
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-    }
-    # Per-query spread (VERDICT r7 ask #7): best-of-N alone can't tell
-    # a real regression from a noisy-neighbor window (r7: q5 "+32%"
-    # builder-side, reversed in the judge's run). Each entry is
-    # [spark_med, spark_max, duck_best, duck_med] — spark best is in
-    # "queries"; a number is adjudicable when med ≈ best and unstable
-    # when max >> med. duck_best/duck_med cover VERDICT r6 ask #3's
-    # per-query DuckDB times AND make a median-based envelope readable
-    # straight off the artifact.
-    compact["spread"] = {
-        n: [round(med(samples[n]), 3), round(max(samples[n]), 3)]
-        + ([duck[n], round(med(duck_samples[n]), 3)] if n in duck else [])
-        for n in names
-    }
-    if control:
-        compact["control"] = control
-    if "ratio_vs_duckdb" in out:
-        compact["ratio_vs_duckdb"] = out["ratio_vs_duckdb"]
-        common = [n for n in duck if n in timings]
-        compact["duckdb_total_sec"] = round(sum(duck[n] for n in common), 3)
-        d_med_total = sum(med(duck_samples[n]) for n in common)
-        compact["ratio_med_vs_duckdb"] = (
-            round(sum(med(samples[n]) for n in common) / d_med_total, 2)
-            if d_med_total else None
-        )
-    blob = json.dumps(compact)
-    # The driver keeps only the LAST 2000 chars of stdout; an
-    # over-budget line would truncate the recorded artifact from the
-    # front. Degrade deterministically instead (ADVICE r8): drop
-    # spread entries for the FASTEST queries first (least adjudicable
-    # loss) and record which were dropped; if the line still doesn't
-    # fit with zero spread entries, the contract keys themselves are
-    # over budget — fail loud.
-    if len(blob) >= 2000 and "spread" in compact:
-        by_speed = sorted(compact["spread"], key=lambda n: timings.get(n, 0.0))
-        dropped: list[str] = []
-        while len(blob) >= 2000 and by_speed:
-            dropped.append(by_speed.pop(0))
-            compact["spread"] = {
-                n: v for n, v in compact["spread"].items() if n not in dropped
-            }
-            compact["spread_dropped"] = dropped
-            blob = json.dumps(compact)
-    if len(blob) >= 2000:
-        sys.stderr.write(
-            f"bench: compact summary line is {len(blob)} chars (>= 2000) "
-            "even with every spread entry dropped; trim HEADLINE\n"
-        )
-        print(blob)
-        sys.exit(1)
-    print(blob)
-
-
-def _noop_best(df, n: int = 3) -> float:
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
-
-
-def _probe_floors(spark, sf_dir: str) -> dict:
-    """Floor decomposition for the two perf-weak queries (VERDICT r3
-    asks #3/#4): where does the sub-second sf0.1 gap vs DuckDB live,
-    and does it amortize at scale?
-
-    - ``empty_plan_sec``: the identical plan over a 0-row (but not
-      known-empty-at-plan-time) scan — generic plan+schedule floor.
-      NOTE this UNDERSTATES total fixed cost: stages whose scan prunes
-      to zero partitions never JIT their generated code.
-    - ``sim_topk_bruteforce``: corpus replicated 8× with remapped ids
-      (pair count scales linearly for a |Q|·|C| scorer), giving
-      per-corpus-row marginal cost and the fixed intercept
-      ``sec_1x − n·marginal``.
-    - ``dedup_embedding_cosine``: replication is invalid (candidate
-      pairs grow quadratically), so the linear map-only bucket stage
-      (r5+: the 48-plane Arrow kernel) is timed alone; it carries a
-      fixed plan+schedule intercept plus a per-row cost that
-      parallelizes, so neither survives a 1000× scale-up as a
-      bottleneck. (r7: the historical ~0.5 s intercept was mostly the
-      100-entry codegen-class cache thrashing under the multi-query
-      bench — see session.py's cache.maxEntries note.)
-    """
-    out: dict[str, dict] = {}
-    try:
-        from pyspark.sql import functions as F
-
-        from graphql_api_etl_spark.operators import similarity as S
-        from graphql_api_etl_spark.queries_llm import _emb_cosine_dedup
-        from graphql_api_etl_spark.sources.registry import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        n = emb.count()
-        empty = emb.filter(F.col("vec_id") < 0)
-        rep = 8
-        emb8 = emb.crossJoin(spark.range(rep).select(F.col("id").alias("__r"))).select(
-            (F.col("vec_id") + F.col("__r") * (n + 1)).alias("vec_id"), "embedding"
-        )
-
-        def construct_best(mk, n_tries: int = 3) -> tuple[float, object]:
-            # plan CONSTRUCTION (py4j + parse + eager analysis) is a
-            # real, fixed, scale-free part of each headline sample —
-            # reported separately so the spark-vs-duckdb gap at sf0.1
-            # attributes to the right place
-            best, df = float("inf"), None
-            for _ in range(n_tries):
-                t0 = time.time()
-                df = mk()
-                best = min(best, time.time() - t0)
-            return best, df
-
-        q = emb.filter(F.col("vec_id") < 10)
-        c1, df1 = construct_best(lambda: S.topk_bruteforce(q, emb, k=5, dim=64))
-        s1 = _noop_best(df1)
-        s8 = _noop_best(S.topk_bruteforce(q, emb8, k=5, dim=64))
-        se = _noop_best(S.topk_bruteforce(q, empty, k=5, dim=64))
-        marginal_us = (s8 - s1) / (n * (rep - 1)) * 1e6 if s8 > s1 else None
-        out["sim_topk_bruteforce"] = {
-            "construct_sec": round(c1, 3),
-            "sec_1x": round(s1, 3),
-            "sec_8x_corpus": round(s8, 3),
-            "empty_plan_sec": round(se, 3),
-            "marginal_us_per_corpus_row": round(marginal_us, 2) if marginal_us is not None else None,
-            "fixed_overhead_sec": round(s1 - (marginal_us or 0) * 1e-6 * n, 3),
-        }
-
-        # matmul variant of the same top-k: marginal per-pair cost of
-        # the Arrow/BLAS path vs the scalar-codegen brute force — the
-        # number that decides which one a 1000-executor job should run.
-        # r11 (VERDICT ask #1): TWO-POINT slope between 8x and 48x
-        # corpora, both MATERIALIZED as 64-file parquet that BOTH
-        # engines scan — the r10 view-replication was the one
-        # methodological asymmetry left vs the relational probes, and
-        # the base corpus is only ~2k rows at sf0.1 with a ~0.5 s
-        # fixed cost (query collect + Arrow batch startup), so the
-        # endpoints are 64x/512x (~1M rows hi) to put ≥1 s of kernel
-        # slope above the intercept.
-        import shutil as _sh
-        import tempfile as _tf
-
-        import duckdb as _ddb
-
-        from graphql_api_etl_spark.queries_llm import _MATMUL_ORACLE
-
-        rep_mm_lo, rep_mm_hi = 64, 512
-        mm_tmp = _tf.mkdtemp(prefix="bench_mm_floors_")
-        try:
-
-            def _mat_emb(rep_n: int, name: str) -> str:
-                path = f"{mm_tmp}/{name}"
-                (
-                    emb.crossJoin(spark.range(rep_n).select(F.col("id").alias("__r")))
-                    .select(
-                        (F.col("vec_id") + F.col("__r") * (n + 1)).alias("vec_id"),
-                        "embedding",
-                    )
-                    .repartition(64)
-                    .write.mode("overwrite")
-                    .parquet(path)
-                )
-                return path
-
-            emb_lo_path = _mat_emb(rep_mm_lo, "emb_lo")
-            emb_hi_path = _mat_emb(rep_mm_hi, "emb_hi")
-            emb_lo = spark.read.parquet(emb_lo_path)
-            emb_hi = spark.read.parquet(emb_hi_path)
-            os.sync()  # flush the writes before timing reads (see
-            # _probe_relational_floors.family on write-back pollution)
-
-            qm = emb.filter(F.col("vec_id") < 50)
-            for _ in range(2):  # warm both endpoints (codegen + cache)
-                S.topk_matmul(qm, emb_lo, k=5).write.format("noop").mode("overwrite").save()
-                S.topk_matmul(qm, emb_hi, k=5).write.format("noop").mode("overwrite").save()
-            m_lo = _noop_best(S.topk_matmul(qm, emb_lo, k=5), n=4)
-            m_hi = _noop_best(S.topk_matmul(qm, emb_hi, k=5), n=4)
-            b_lo = _noop_best(S.topk_bruteforce(qm, emb_lo, k=5, dim=64), n=2)
-            b_hi = _noop_best(S.topk_bruteforce(qm, emb_hi, k=5, dim=64), n=2)
-
-            def _mm_duck(view_sql: str, n_tries: int = 3) -> float:
-                con = _ddb.connect()
-                con.execute(f"CREATE VIEW embeddings AS {view_sql}")
-                best = float("inf")
-                for _ in range(n_tries):
-                    t0 = time.time()
-                    con.execute(_MATMUL_ORACLE).fetchall()
-                    best = min(best, time.time() - t0)
-                con.close()
-                return best
-
-            md_lo = _mm_duck(f"SELECT * FROM read_parquet('{emb_lo_path}/*.parquet')")
-            md_hi = _mm_duck(f"SELECT * FROM read_parquet('{emb_hi_path}/*.parquet')")
-        finally:
-            _sh.rmtree(mm_tmp, ignore_errors=True)
-        extra_mm = n * (rep_mm_hi - rep_mm_lo)
-        mm_m = (m_hi - m_lo) / extra_mm * 1e6 if m_hi > m_lo else None
-        mm_d = (md_hi - md_lo) / extra_mm * 1e6 if md_hi > md_lo else None
-        out["sim_topk_matmul_vs_brute"] = {
-            "rows_base": n,
-            "rep_lo": rep_mm_lo,
-            "rep_hi": rep_mm_hi,
-            "materialized": True,
-            "matmul_sec_lox": round(m_lo, 3),
-            "matmul_sec_hix": round(m_hi, 3),
-            "brute_sec_lox": round(b_lo, 3),
-            "brute_sec_hix": round(b_hi, 3),
-            "duck_sec_lox": round(md_lo, 3),
-            "duck_sec_hix": round(md_hi, 3),
-            "matmul_marginal_us_per_row": round(mm_m, 2) if mm_m is not None else None,
-            "brute_marginal_us_per_row": round((b_hi - b_lo) / extra_mm * 1e6, 2)
-            if b_hi > b_lo else None,
-            "duck_marginal_us_per_row": round(mm_d, 2) if mm_d is not None else None,
-            "marginal_ratio_vs_duckdb": round(mm_m / mm_d, 3) if mm_m is not None and mm_d else None,
-        }
-
-        from graphql_api_etl_spark.queries_llm import _EC_PLANES
-
-        cd, dfd = construct_best(lambda: _emb_cosine_dedup(emb))
-        # warm the plan shape once before timing (r11: in `--floors`
-        # mode there is no headline suite to pre-compile the band-join
-        # codegen, and a cold first sample inflated the 1x point that
-        # the 8x marginal subtracts — the source of the run-to-run
-        # wobble in this family's interim-r11 rows)
-        dfd.write.format("noop").mode("overwrite").save()
-        d1 = _noop_best(dfd)
-        de = _noop_best(_emb_cosine_dedup(empty))
-        # bucket stage alone (the linear, map-only part of the plan —
-        # r5: the 48-plane Arrow-vectorized code, same as the query)
-        b1 = _noop_best(S.with_hyperplane_bucket(emb, n_planes=_EC_PLANES, dim=64))
-        # 8x-corpus marginal vs DuckDB (VERDICT r8 ask #3): run the
-        # SAME query in BOTH engines on the same 8x-replicated corpus
-        # (remapped ids; replicas collide in every band, so candidates
-        # grow quadratically — identical extra work for both engines)
-        # and compare per-extra-row marginals. Settles whether the
-        # sub-second sf0.1 gap is fixed cost: measured r9, Spark
-        # 0.68 s -> 1.99 s while DuckDB went 0.49 s -> 14.5 s —
-        # marginal ratio ~0.09x, i.e. Spark is ~10x FASTER per row
-        # once the corpus is big enough to dominate the ~0.6 s
-        # plan+schedule intercept. Best-of-2 (the 8x DuckDB run alone
-        # is ~14 s; the 7x signal dwarfs sample noise).
-        _emb_cosine_dedup(emb8).write.format("noop").mode("overwrite").save()  # warm
-        s8 = _noop_best(_emb_cosine_dedup(emb8), n=2)
-        import duckdb
-
-        from graphql_api_etl_spark.queries_llm import _emb_cosine_dedup_sql
-
-        ec_sql = _emb_cosine_dedup_sql(0.4)
-
-        def _duck_best(view_sql: str, n_tries: int = 2) -> float:
-            con = duckdb.connect()
-            con.execute(f"CREATE VIEW embeddings AS {view_sql}")
-            best = float("inf")
-            for _ in range(n_tries):
-                t0 = time.time()
-                con.execute(ec_sql).fetchall()
-                best = min(best, time.time() - t0)
-            con.close()
-            return best
-
-        src = f"SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
-        dk1 = _duck_best(src)
-        dk8 = _duck_best(
-            f"SELECT e.vec_id + r.range * ({n} + 1) AS vec_id, e.embedding "
-            f"FROM read_parquet('{sf_dir}/embeddings.parquet') e CROSS JOIN range({rep}) r"
-        )
-        extra = n * (rep - 1)
-        sm = (s8 - d1) / extra * 1e6 if s8 > d1 else None
-        dm = (dk8 - dk1) / extra * 1e6 if dk8 > dk1 else None
-        out["dedup_embedding_cosine"] = {
-            "construct_sec": round(cd, 3),
-            "sec": round(d1, 3),
-            "empty_plan_sec": round(de, 3),
-            "bucket_stage_sec": round(b1, 3),
-            "sec_8x_corpus": round(s8, 3),
-            "duck_sec": round(dk1, 3),
-            "duck_sec_8x_corpus": round(dk8, 3),
-            "marginal_us_per_row": round(sm, 2) if sm is not None else None,
-            "duck_marginal_us_per_row": round(dm, 2) if dm is not None else None,
-            "marginal_ratio_vs_duckdb": round(sm / dm, 3) if sm is not None and dm else None,
-        }
-    except Exception as exc:  # noqa: BLE001
-        out["_error"] = repr(exc)
-    return out
-
-
-def _probe_relational_floors(spark, sf_dir: str) -> dict:
-    """Two-engine replicated-input marginal probes for the RELATIONAL
-    core (VERDICT r9 ask #2, method hardened per VERDICT r10 ask #1):
-    per plan family, a TWO-POINT slope between a LO-rep and a HI-rep
-    replica of the fact input(s), both MATERIALIZED as 64-file parquet
-    that BOTH engines scan, through the entry's OWN plan builder on
-    Spark and its committed oracle SQL on DuckDB.
-
-    ``marginal_ratio_vs_duckdb`` = (spark_hi − spark_lo) /
-    (duck_hi − duck_lo): per-extra-row cost once the data dominates
-    the fixed plan/schedule intercept — the number that decides
-    whether a nominal sub-second sf0.1 gap survives a 100x scale-up.
-
-    r11 method notes (all three were real ~2-10x distortions):
-
-    - **64-file layout.** The r10 probe wrote each replica as ~3 files
-      (the crossJoin's partitioning), capping Spark at |files·128 MB
-      splits| scan tasks and DuckDB at the few huge row groups Spark's
-      128 MB block size produced: q1's 48x ran 3.0 s vs 0.34 s on the
-      same rows in 64 files, and DuckDB's flagship dropped 1.34 s →
-      0.13 s. Few-file probe rows quantified task-granularity
-      underuse, not per-row cost; at 100 TB both engines have
-      files >> cores.
-    - **Materialized LO endpoint.** The old 1x endpoint was the
-      original single-file sf table — a different layout from the
-      repx endpoint, so the subtraction mixed layout effects into the
-      slope.  Both endpoints now share the 64-file layout.
-    - **Warm-up.** Each Spark plan shape runs once unmeasured at both
-      endpoints before timing (codegen + page cache; the headline
-      suite used to provide this implicitly, but `--floors` runs
-      standalone).  DuckDB points are best-of-3 minima, which absorb
-      its (JIT-free) cache warmth.
-    - **Per-family reps.** With both engines on the honest layout the
-      per-row costs dropped up to 10x, so LO/HI are sized per family
-      to put ≥0.2 s of slope signal on the FASTER engine (a fixed
-      48x would leave sub-noise deltas on the cheap shapes —
-      the source of r11-interim junk ratios like tumbling's 5.18).
-      Deltas under 0.15 s report null rather than a ratio.
-
-    Unlike these scan-bound families, the cosine probe's work is the
-    candidate join, so its crossJoin replication stays valid
-    (_probe_floors).
-    """
-    out: dict[str, dict] = {}
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="bench_rel_floors_")
-    try:
-        import duckdb
-
-        from pyspark.sql import functions as F
-
-        from graphql_api_etl_spark.queries import (
-            _FLAGSHIP_SQL,
-            _asof_clicks_report,
-            _broadcast_dims_report,
-            _flagship_report,
-            _q1_summary,
-            _sessionize_report,
-            _tumbling_report,
-            QUERIES,
-        )
-        from graphql_api_etl_spark.sources.registry import load_table
-
-        K = 100_000_000  # key offset per replica; >> any key at any test SF
-        MIN_DELTA = 0.15  # scheduling-noise floor: smaller deltas -> null
-
-        cust = load_table(spark, sf_dir, "customer")
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        ev = load_table(spark, sf_dir, "events")
-        nation = load_table(spark, sf_dir, "nation")
-        region = load_table(spark, sf_dir, "region")
-        n_c, n_o, n_l, n_e = cust.count(), orders.count(), li.count(), ev.count()
-
-        def materialize(df, name: str, rep_n: int, key_cols: tuple[str, ...] = ()) -> str:
-            path = f"{tmp}/{name}"
-            (
-                df.crossJoin(spark.range(rep_n).select(F.col("id").alias("__r")))
-                .select(
-                    *[
-                        (F.col(c) + F.col("__r") * K).alias(c)
-                        if c in key_cols
-                        else F.col(c)
-                        for c in df.columns
-                    ]
-                )
-                .repartition(64)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            return path
-
-        con = duckdb.connect()
-
-        def duck_view(table: str, path: str) -> None:
-            con.execute(
-                f"CREATE OR REPLACE VIEW {table} AS "
-                f"SELECT * FROM read_parquet('{path}/*.parquet')"
-            )
-
-        def duck_best(sql: str, n_tries: int = 4) -> float:
-            best = float("inf")
-            for _ in range(n_tries):
-                t0 = time.time()
-                con.execute(sql).fetchall()
-                best = min(best, time.time() - t0)
-            return best
-
-        def slope(hi: float, lo: float, extra_rows: int):
-            return (hi - lo) / extra_rows * 1e6 if hi - lo > MIN_DELTA else None
-
-        def family(label, mk_spark, duck_sql, views_lo, views_hi,
-                   rows_base, rep_lo, rep_hi):
-            """Measure one plan family at both endpoints on both
-            engines.  mk_spark(endpoint) -> DataFrame; views_{lo,hi}
-            are {table: path} for the DuckDB side."""
-            # flush the materializations' dirty pages FIRST: for ~60 s
-            # after a GB-scale parquet write, write-back flushing
-            # throttles reads of the same files — measured 2.5 s vs
-            # 36.5 s for the SAME flagship run depending on distance
-            # from the write.  One bounded sync beats hoping warm-up
-            # iterations outlast the flusher.
-            os.sync()
-            # warm-up: TWO unmeasured runs per endpoint (codegen, JIT,
-            # page cache — one run is not always enough to converge)
-            for _ in range(2):
-                mk_spark("lo").write.format("noop").mode("overwrite").save()
-                mk_spark("hi").write.format("noop").mode("overwrite").save()
-            s_lo = _noop_best(mk_spark("lo"), n=4)
-            s_hi = _noop_best(mk_spark("hi"), n=4)
-            for t, p in views_lo.items():
-                duck_view(t, p)
-            d_lo = duck_best(duck_sql)
-            for t, p in views_hi.items():
-                duck_view(t, p)
-            d_hi = duck_best(duck_sql)
-            extra = rows_base * (rep_hi - rep_lo)
-            sm = slope(s_hi, s_lo, extra)
-            dm = slope(d_hi, d_lo, extra)
-            # When Spark's delta sits UNDER the noise gate but
-            # DuckDB's is measurable, the honest summary is an upper
-            # bound: spark_marginal ≤ gate/extra (r11: tumbling's
-            # Spark side got too fast for the gate on the 288x table).
-            sm_ub = (
-                MIN_DELTA / extra * 1e6
-                if sm is None and dm is not None
-                else None
-            )
-            row = {
-                "rows_base": rows_base,
-                "rep_lo": rep_lo,
-                "rep_hi": rep_hi,
-                **(
-                    {
-                        "note": "both engine deltas under the 0.15 s "
-                        "noise gate — fixed-cost-dominated at any "
-                        "materializable SF; read as parity"
-                    }
-                    if sm is None and dm is None
-                    else {}
-                ),
-                "sec_lox": round(s_lo, 3),
-                "sec_hix": round(s_hi, 3),
-                "duck_sec_lox": round(d_lo, 3),
-                "duck_sec_hix": round(d_hi, 3),
-                "marginal_us_per_row": round(sm, 4) if sm is not None else None,
-                "duck_marginal_us_per_row": round(dm, 4) if dm is not None else None,
-                "marginal_ratio_vs_duckdb": round(sm / dm, 3)
-                if sm is not None and dm else None,
-                **(
-                    {
-                        "marginal_us_per_row_upper_bound": round(sm_ub, 4),
-                        "ratio_upper_bound_vs_duckdb": round(sm_ub / dm, 3),
-                    }
-                    if sm_ub is not None and dm
-                    else {}
-                ),
-            }
-            out[label] = row
-
-        # --- tpch_q1: scan-agg shape --------------------------------
-        # DuckDB runs q1 at ~150M rows/s warm, so the HI point is 96x
-        # (~58M rows) to put ~0.3 s of slope on its side.
-        li_lo = materialize(li, "lineitem_lo", 8)
-        li_hi = materialize(li, "lineitem_hi", 96)
-        q1_sql = QUERIES["tpch_q1_pricing_summary"][1]
-        family(
-            "tpch_q1_pricing_summary",
-            lambda e: _q1_summary(spark.read.parquet(li_lo if e == "lo" else li_hi)),
-            q1_sql,
-            {"lineitem": li_lo},
-            {"lineitem": li_hi},
-            n_l, 8, 96,
-        )
-
-        # --- flagship: full-outer join + agg shape ------------------
-        c_lo = materialize(cust, "customer_lo", 8, ("c_custkey",))
-        c_hi = materialize(cust, "customer_hi", 192, ("c_custkey",))
-        o_lo = materialize(orders, "orders_lo", 8, ("o_custkey", "o_orderkey"))
-        o_hi = materialize(orders, "orders_hi", 192, ("o_custkey", "o_orderkey"))
-
-        def flagship_inputs(e):
-            c, o = (c_lo, o_lo) if e == "lo" else (c_hi, o_hi)
-            return (
-                spark.read.parquet(c).filter(F.col("c_acctbal") > 0),
-                spark.read.parquet(o).filter(F.col("o_totalprice") > 50000),
-            )
-
-        family(
-            "flagship_reconcile",
-            lambda e: _flagship_report(*flagship_inputs(e)),
-            _FLAGSHIP_SQL,
-            {"customer": c_lo, "orders": o_lo},
-            {"customer": c_hi, "orders": o_hi},
-            n_c + n_o, 8, 192,
-        )
-        # The named alternative (kept OUT of the entry: full-outer
-        # shuffled-hash builds a per-partition map — faster single-node,
-        # but SMJ is the spill-safe 100 TB default): quantified so the
-        # artifact carries the fix's measured value, not a guess.
-        cl, ol = flagship_inputs("lo")
-        ch, oh = flagship_inputs("hi")
-        h_lo = _noop_best(_flagship_report(cl.hint("SHUFFLE_HASH"), ol))
-        h_hi = _noop_best(_flagship_report(ch.hint("SHUFFLE_HASH"), oh))
-        hm = slope(h_hi, h_lo, (n_c + n_o) * (192 - 8))
-        dm_f = out["flagship_reconcile"]["duck_marginal_us_per_row"]
-        out["flagship_reconcile"]["shj_hint_marginal_us_per_row"] = (
-            round(hm, 4) if hm is not None else None
-        )
-        out["flagship_reconcile"]["shj_hint_ratio_vs_duckdb"] = (
-            round(hm / dm_f, 3) if hm is not None and dm_f else None
-        )
-        # BUCKETED variant (r11): both sides pre-bucketed 32-way on
-        # the custkey and bucket-sorted (sinks.tables layout), so the
-        # full-outer SMJ runs with ZERO exchange — this isolates how
-        # much of the marginal is the shuffle serialization a
-        # single-process engine never pays, and measures the engine's
-        # own 100 TB mitigation (bucket the recurring join sides once,
-        # join many times).  The DuckDB denominator is the plain
-        # flagship marginal: same rows, same logical query.
-        try:
-            from graphql_api_etl_spark.sinks.tables import (
-                ensure_bucket_database,
-                stage_bucketed,
-            )
-
-            ensure_bucket_database(
-                spark, "graft_bench_floors", f"{tmp}/bucketed"
-            )
-
-            def bucketed(path: str, base: str, key: str):
-                # The DEPLOYED landing path (r12): stage_bucketed is
-                # what the pipeline's ReconcileStaging runs, so this
-                # floors row certifies the recurring-job layout as
-                # shipped — one file per bucket (r11: the ~2k-file
-                # layout re-sorted the scan and ran ~2x slower) and,
-                # with the session's bucketed-scan ordering conf, SMJ
-                # straight over the scans with zero exchange AND zero
-                # sort.
-                return stage_bucketed(
-                    spark, spark.read.parquet(path),
-                    f"graft_bench_floors.{base}", [key], num_buckets=32,
-                )
-
-            cb_lo = bucketed(c_lo, "cust_lo", "c_custkey").filter(F.col("c_acctbal") > 0)
-            ob_lo = bucketed(o_lo, "ord_lo", "o_custkey").filter(F.col("o_totalprice") > 50000)
-            cb_hi = bucketed(c_hi, "cust_hi", "c_custkey").filter(F.col("c_acctbal") > 0)
-            ob_hi = bucketed(o_hi, "ord_hi", "o_custkey").filter(F.col("o_totalprice") > 50000)
-            os.sync()
-            for _ in range(2):
-                _flagship_report(cb_lo, ob_lo).write.format("noop").mode("overwrite").save()
-                _flagship_report(cb_hi, ob_hi).write.format("noop").mode("overwrite").save()
-            bk_lo = _noop_best(_flagship_report(cb_lo, ob_lo), n=4)
-            bk_hi = _noop_best(_flagship_report(cb_hi, ob_hi), n=4)
-            bm = slope(bk_hi, bk_lo, (n_c + n_o) * (192 - 8))
-            out["flagship_reconcile"]["bucketed_sec_lox"] = round(bk_lo, 3)
-            out["flagship_reconcile"]["bucketed_sec_hix"] = round(bk_hi, 3)
-            out["flagship_reconcile"]["bucketed_marginal_us_per_row"] = (
-                round(bm, 4) if bm is not None else None
-            )
-            out["flagship_reconcile"]["bucketed_ratio_vs_duckdb"] = (
-                round(bm / dm_f, 3) if bm is not None and dm_f else None
-            )
-        except Exception as exc:  # noqa: BLE001
-            out["flagship_reconcile"]["bucketed_error"] = repr(exc)
-
-        # --- j_broadcast_dims: broadcast-hash-join shape -------------
-        # Both engines run this at >100M rows/s (it is a parity family
-        # since the r10 eager-agg rewrite); customer is tiny (15k), so
-        # LO/HI are 100x/2400x to get ~35M rows of slope signal.
-        bd_lo = materialize(cust, "customer_bd_lo", 100)
-        bd_hi = materialize(cust, "customer_bd_hi", 2400)
-        bd_sql = QUERIES["j_broadcast_dims"][1]
-        con.execute(
-            f"CREATE OR REPLACE VIEW nation AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/nation.parquet')"
-        )
-        con.execute(
-            f"CREATE OR REPLACE VIEW region AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/region.parquet')"
-        )
-        family(
-            "j_broadcast_dims",
-            lambda e: _broadcast_dims_report(
-                spark.read.parquet(bd_lo if e == "lo" else bd_hi), nation, region
-            ),
-            bd_sql,
-            {"customer": bd_lo},
-            {"customer": bd_hi},
-            n_c, 100, 2400,
-        )
-
-        # --- events families ------------------------------------------
-        # asof + sessionize share one 8x/48x pair (their DuckDB costs
-        # are 0.3-1.1 µs/row, so 4M extra rows is ≥1 s of signal);
-        # tumbling is ~100x cheaper on DuckDB (pure date_trunc
-        # hash-agg) and gets its own 288x HI table.
-        ev_lo = materialize(ev, "events_lo", 8, ("user_id", "event_id"))
-        ev_hi = materialize(ev, "events_hi", 48, ("user_id", "event_id"))
-        ev_hi_t = materialize(ev, "events_hi_288", 288, ("user_id", "event_id"))
-        for label, builder, hi_path, rep_hi in (
-            # asof's Spark side runs at ~0.03 us/row on the honest
-            # layout, so it shares tumbling's 288x table for signal;
-            # sessionize (~10x costlier per row on DuckDB) stays at 48x
-            ("events_asof_join", _asof_clicks_report, ev_hi_t, 288),
-            ("events_sessionize", _sessionize_report, ev_hi, 48),
-            ("events_tumbling_window", _tumbling_report, ev_hi_t, 288),
-        ):
-            family(
-                label,
-                lambda e, b=builder, h=hi_path: b(
-                    spark.read.parquet(ev_lo if e == "lo" else h)
-                ),
-                QUERIES[label][1],
-                {"events": ev_lo},
-                {"events": hi_path},
-                n_e, 8, rep_hi,
-            )
-
-        # --- dedup_span_exact: explode → span-window → reassembly ----
-        # (r12, VERDICT r11 ask #2: the last ≥2x-nominal headline
-        # without a floors range.)  Replicas offset doc_id so the
-        # reassembly key stays unique; span texts repeat across
-        # replicas, which only deepens the (balanced, high-cardinality)
-        # span-window partitions — both engines run the identical
-        # rows.  docs is 5k rows × ~50 words at sf0.1, so HI=96x puts
-        # ~0.44M docs (~1.4M exploded spans) of slope signal on the
-        # probe.
-        from graphql_api_etl_spark.queries_llm import _span_exact_report
-
-        docs = load_table(spark, sf_dir, "documents")
-        n_d = docs.count()
-        dx_lo = materialize(docs, "docs_lo", 8, ("doc_id",))
-        dx_hi = materialize(docs, "docs_hi", 96, ("doc_id",))
-        family(
-            "dedup_span_exact",
-            lambda e: _span_exact_report(
-                spark.read.parquet(dx_lo if e == "lo" else dx_hi).select(
-                    "doc_id", "text"
-                )
-            ),
-            QUERIES["dedup_span_exact"][1],
-            {"documents": dx_lo},
-            {"documents": dx_hi},
-            n_d, 8, 96,
-        )
-
-        con.close()
-    except Exception as exc:  # noqa: BLE001
-        out["_relational_floors_error"] = repr(exc)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _probe_skew_floors(spark, sf_dir: str) -> dict:
-    """Join-strategy shoot-out on a SKEWED key (VERDICT r10 ask #5):
-    the j_salted_skew_join entry's docstring calls strategy choice
-    "the per-join judgment a 100 TB job makes" — this measures it.
-
-    Fixture: lineitem replicated 16x (~9.6M rows at sf0.1) with ~30%
-    of fact rows remapped to ONE hot key; the dim side keeps one row
-    per distinct key (~150k + the hot key), i.e. the entry's own
-    shape.  Five physical strategies run the identical logical join +
-    agg, best-of-3 after one warm-up:
-
-    - ``smj_default``: sort-merge at session defaults.  NOTE: AQE's
-      skew split needs the hot partition over
-      skewedPartitionThresholdInBytes (256 MB default), which this
-      ~46 MB fixture never reaches — so this row ≈ plain SMJ.
-    - ``smj_no_skew_split``: split explicitly OFF (confirms the above
-      by matching smj_default at fixture size).
-    - ``smj_aqe_split``: threshold lowered so the split actually
-      FIRES — the proxy for the at-scale regime where a 100 TB hot
-      key is far past 256 MB.  Measured ~2x better than plain SMJ
-      and the best non-broadcast strategy.
-    - ``shuffle_hash``: SHJ hint — no sort, but the hot partition
-      still lands on one task unless AQE splits it.
-    - ``salted_16``: operators/skew.salted_join — the explicit lever;
-      costs dim×16 replication up front.
-    - ``broadcast``: dim broadcast — no fact shuffle at all; the
-      winner whenever the dim FITS (the salted lever exists for when
-      it doesn't AND AQE's split is unavailable).
-    """
-    out: dict[str, dict] = {}
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="bench_skew_floors_")
-    try:
-        from pyspark.sql import functions as F
-
-        from graphql_api_etl_spark.operators.skew import salted_join
-        from graphql_api_etl_spark.sources.registry import load_table
-
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice"
-        )
-        rep = 16
-        fact_path = f"{tmp}/fact_skew"
-        (
-            li.crossJoin(spark.range(rep).select(F.col("id").alias("__r")))
-            .select(
-                F.when(F.col("l_orderkey") % 10 < 3, F.lit(1))
-                .otherwise(F.col("l_orderkey"))
-                .alias("k"),
-                "l_extendedprice",
-            )
-            .repartition(64)
-            .write.mode("overwrite")
-            .parquet(fact_path)
-        )
-        fact = spark.read.parquet(fact_path)
-        dim_path = f"{tmp}/dim"
-        (
-            fact.select("k")
-            .distinct()
-            .withColumn("payload", (F.col("k") % 5).cast("string"))
-            .repartition(8)
-            .write.mode("overwrite")
-            .parquet(dim_path)
-        )
-        dim = spark.read.parquet(dim_path)
-        n_fact = fact.count()
-        n_dim = dim.count()
-        hot_rows = fact.filter(F.col("k") == 1).count()
-
-        def agg(joined):
-            return joined.groupBy("payload").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("l_extendedprice"), 2).alias("rev"),
-            )
-
-        no_bcast = dim.hint("SHUFFLE_MERGE")
-        # smj_aqe_split: AQE's skew split only fires when the hot
-        # partition exceeds skewedPartitionThresholdInBytes (default
-        # 256 MB); this fixture's hot partition is ~46 MB, so at
-        # defaults the split NEVER triggers and "SMJ+AQE" would
-        # measure plain SMJ (the r11-interim rows did exactly that).
-        # Lowering the threshold for that one row proxies the
-        # at-scale regime, where a 100 TB hot key is far past 256 MB.
-        thr_key = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-        adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        skew_key = "spark.sql.adaptive.skewJoin.enabled"
-        plans = {
-            "smj_default": lambda: agg(fact.join(no_bcast, "k")),
-            "smj_no_skew_split": lambda: agg(fact.join(no_bcast, "k")),
-            "smj_aqe_split": lambda: agg(fact.join(no_bcast, "k")),
-            "shuffle_hash": lambda: agg(fact.join(dim.hint("SHUFFLE_HASH"), "k")),
-            "salted_16": lambda: agg(salted_join(fact, dim, on="k", n_buckets=16)),
-            "broadcast": lambda: agg(fact.join(F.broadcast(dim), "k")),
-        }
-        secs: dict[str, float] = {}
-        for name, mk in plans.items():
-            if name == "smj_no_skew_split":
-                spark.conf.set(skew_key, "false")
-            elif name == "smj_aqe_split":
-                spark.conf.set(thr_key, str(8 * 1024 * 1024))
-                spark.conf.set(adv_key, str(8 * 1024 * 1024))
-            try:
-                mk().write.format("noop").mode("overwrite").save()  # warm
-                secs[name] = round(_noop_best(mk()), 3)
-            finally:
-                if name == "smj_no_skew_split":
-                    spark.conf.set(skew_key, "true")
-                elif name == "smj_aqe_split":
-                    spark.conf.unset(thr_key)
-                    spark.conf.unset(adv_key)
-        out["skew_join_strategies"] = {
-            "n_fact": n_fact,
-            "n_dim": n_dim,
-            "hot_key_fraction": round(hot_rows / n_fact, 3),
-            **{f"{k}_sec": v for k, v in secs.items()},
-        }
-    except Exception as exc:  # noqa: BLE001
-        out["_skew_floors_error"] = repr(exc)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _probe_delta_floors(spark, sf_dir: str) -> dict:
-    """Self-healing pass-2 landing shoot-out (r13, VERDICT r12 ask #2):
-    the ReconcileStaging delta-merge vs the r12 full re-land, on the
-    healed-twin shape at 16x replication (~2.2 M rows, ~1% whole-key
-    delta).  Reported per strategy: wall seconds AND bytes written —
-    the delta path trades extra classify jobs (it scans the new side
-    twice) for an O(|delta|) write; locally writes are nearly free so
-    wall time favors the re-land, while on a replicated DFS the
-    re-land's full-row shuffle + 3x-replicated full-row write is the
-    term that kills a 100 TB recurring job (docs/PLANS.md).  The
-    zero-change classify row is the recurring-job norm: nothing
-    written at all."""
-    out: dict[str, dict] = {}
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    tmp = tempfile.mkdtemp(prefix="bench_delta_floors_")
-    try:
-        from pyspark.sql import functions as F
-
-        from graphql_api_etl_spark.sinks.tables import ReconcileStaging, stage_bucketed
-        from graphql_api_etl_spark.sources.registry import load_table
-
-        rep = 16
-        base = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_totalprice") > 50000
-        )
-        src = f"{tmp}/src"
-        (
-            base.crossJoin(spark.range(rep).select(F.col("id").alias("__r")))
-            .select(
-                (F.col("o_orderkey") * rep + F.col("__r")).alias("o_orderkey"),
-                (F.col("o_custkey") * rep + F.col("__r")).alias("o_custkey"),
-                "o_orderpriority",
-            )
-            .repartition(64)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        full = spark.read.parquet(src)
-        pass1 = full.filter(F.col("o_custkey") % 97 != 0)
-        n_full = full.count()
-        n_delta = n_full - pass1.count()
-
-        def du(path: str) -> int:
-            total = 0
-            for dp, _dirs, fns in os.walk(path):
-                for f in fns:
-                    total += os.path.getsize(os.path.join(dp, f))
-            return total
-
-        def timed(fn):
-            t0 = time.time()
-            fn()
-            return round(time.time() - t0, 3)
-
-        # r12 behavior: land pass 1, then a FULL re-land of the new state
-        st_a = ReconcileStaging("graft_bench_dfa", f"{tmp}/a", num_buckets=32)
-        st_a.land(pass1, "api", "o_custkey")
-        full_sec = timed(
-            lambda: stage_bucketed(
-                spark, full, "graft_bench_dfa.api_full2", ["o_custkey"], num_buckets=32
-            )
-        )
-        full_bytes = du(f"{tmp}/a/api_full2")
-
-        # r13 behavior: the delta-merge landing (adds-only append path)
-        st_b = ReconcileStaging("graft_bench_dfb", f"{tmp}/b", num_buckets=32)
-        st_b.land(pass1, "api", "o_custkey")
-        before = du(f"{tmp}/b/api_o_custkey")
-        delta_sec = timed(lambda: st_b.land(full, "api", "o_custkey"))
-        delta_bytes = du(f"{tmp}/b/api_o_custkey") - before
-
-        # zero-change pass 2: classification only, nothing written
-        same_sec = timed(lambda: st_b.land(full, "api", "o_custkey"))
-
-        out["reconcile_delta_landing"] = {
-            "n_rows": n_full,
-            "n_delta_rows": n_delta,
-            "full_reland_sec": full_sec,
-            "full_reland_bytes": full_bytes,
-            "delta_append_sec": delta_sec,
-            "delta_append_bytes": delta_bytes,
-            "identical_classify_sec": same_sec,
-            "identical_classify_bytes": 0,
-        }
-        spark.sql("DROP DATABASE IF EXISTS graft_bench_dfa CASCADE")
-        spark.sql("DROP DATABASE IF EXISTS graft_bench_dfb CASCADE")
-    except Exception as exc:  # noqa: BLE001
-        out["_delta_floors_error"] = repr(exc)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _probe_codec_floors() -> dict:
-    """Throughput quantification for the pure-Python multimodal codec
-    interiors (VERDICT r9 ask #4): single-core decode MB/s over an
-    8x replica of the mm entries' own corpus shape, plus one larger
-    image where per-image overhead amortizes. No Spark involved — the
-    Arrow boundary is already plan-audited; the open question was the
-    bytes/sec of the interpreted interiors, i.e. WHERE the documented
-    libjpeg-turbo/libpng integration boundary (operators/jpeg.py:11)
-    starts to matter. Both payload MB/s (what a scan reads) and output
-    pixel MB/s (what the decode produces) are reported."""
-    out: dict[str, dict] = {}
-    try:
-        from graphql_api_etl_spark.operators.jpeg import (
-            decode_jpeg,
-            synthesize_jpeg_gray,
-        )
-        from graphql_api_etl_spark.operators.multimodal import (
-            decode_png_stream,
-            synthesize_png,
-        )
-
-        rep, n_ids = 8, 250
-
-        def jpeg_corpus(i: int) -> tuple[bytes, int]:
-            # mm_jpeg_decode's builder shape: 16-wide, 8*(1..3)-tall
-            # gray, constant closed-form tiles, odd ids with restarts
-            bw, bh = 2, 1 + i % 3
-            w, h = bw * 8, bh * 8
-            px = bytearray(w * h)
-            for blk in range(bw * bh):
-                lvl = (((i * 13 + blk * 29) * 2654435761) % 4294967296) >> 24
-                bx, by = blk % bw, blk // bw
-                for y in range(8):
-                    base = (by * 8 + y) * w + bx * 8
-                    px[base : base + 8] = bytes([lvl]) * 8
-            return (
-                synthesize_jpeg_gray(w, h, bytes(px), restart_interval=2 if i % 2 else 0),
-                w * h,
-            )
-
-        def png_corpus(i: int) -> tuple[bytes, int]:
-            # mm_png_interlaced's builder shape: Adam7 truecolor
-            bw, bh = 2, 1 + i % 3
-            w, h = bw * 8, bh * 8
-            px = bytearray(w * h * 3)
-            for blk in range(bw * bh):
-                lvl = (((i * 23 + blk * 41) * 2654435761) % 4294967296) >> 24
-                bx, by = blk % bw, blk // bw
-                for y in range(8):
-                    base = ((by * 8 + y) * w + bx * 8) * 3
-                    px[base : base + 24] = bytes([lvl]) * 24
-            return synthesize_png(w, h, bytes(px), interlace=True), w * h * 3
-
-        def measure(build, decode, label: str, large) -> None:
-            corpus = [build(i) for i in range(n_ids)] * rep
-            payload_b = sum(len(p) for p, _ in corpus)
-            pixel_b = sum(n for _, n in corpus)
-            t0 = time.time()
-            for p, _ in corpus:
-                decode(p)
-            sec = time.time() - t0
-            row = {
-                "corpus_images": len(corpus),
-                "corpus_payload_mb": round(payload_b / 1e6, 3),
-                "decode_sec_one_core": round(sec, 3),
-                "payload_mb_per_sec_core": round(payload_b / 1e6 / sec, 3),
-                "pixel_mb_per_sec_core": round(pixel_b / 1e6 / sec, 3),
-            }
-            lp, lpix = large
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                decode(lp)
-                best = min(best, time.time() - t0)
-            row["large_image_pixel_mb_per_sec_core"] = round(lpix / 1e6 / best, 3)
-            out[label] = row
-
-        side = 192
-        grad = bytes(((x * 31 + y * 57) % 256) for y in range(side) for x in range(side))
-        large_jpeg = synthesize_jpeg_gray(side, side, grad, restart_interval=4)
-        rgb = bytes(
-            ((x * c1 + y * c2) % 256)
-            for y in range(side)
-            for x in range(side)
-            for c1, c2 in ((31, 57), (17, 43), (7, 29))
-        )
-        large_png = synthesize_png(side, side, rgb, interlace=True)
-        measure(jpeg_corpus, decode_jpeg, "mm_jpeg_decode", (large_jpeg, side * side))
-        measure(
-            png_corpus,
-            decode_png_stream,
-            "mm_png_interlaced",
-            (large_png, side * side * 3),
-        )
-
-        # GIF LZW + G.711 mu-law (VERDICT r10 ask #7): the last two
-        # codec interiors without a floors row. Single large payloads
-        # (per-file overhead is negligible at these sizes), best-of-3.
-        import math
-
-        from graphql_api_etl_spark.operators.gif import (
-            decode_gif_pixels,
-            synthesize_gif,
-        )
-        from graphql_api_etl_spark.operators.multimodal import (
-            synthesize_ulaw_wav,
-            wav_ulaw_samples,
-        )
-
-        side_g = 160
-        rows = [
-            [((x % 16) * 16, (y % 16) * 16, 0) for x in range(side_g)]
-            for y in range(side_g)
-        ]
-        gif = synthesize_gif(side_g, side_g, rows, interlace=True)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            decode_gif_pixels(gif)
-            best = min(best, time.time() - t0)
-        out["mm_gif_decode"] = {
-            "payload_mb": round(len(gif) / 1e6, 3),
-            "decode_sec_one_core": round(best, 3),
-            "payload_mb_per_sec_core": round(len(gif) / 1e6 / best, 3),
-            "pixel_mb_per_sec_core": round(side_g * side_g * 3 / 1e6 / best, 3),
-        }
-
-        n_samp = 400_000  # 50 s of 8 kHz telephony audio
-        samples = [int(8000 * math.sin(i / 37.0)) for i in range(n_samp)]
-        wav = synthesize_ulaw_wav(samples)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            wav_ulaw_samples(wav)
-            best = min(best, time.time() - t0)
-        out["mm_g711_decode"] = {
-            "payload_mb": round(len(wav) / 1e6, 3),
-            "decode_sec_one_core": round(best, 3),
-            "payload_mb_per_sec_core": round(len(wav) / 1e6 / best, 3),
-            # output is PCM16, 2 bytes per input byte
-            "pcm_mb_per_sec_core": round(2 * n_samp / 1e6 / best, 3),
-        }
-    except Exception as exc:  # noqa: BLE001
-        out["_codec_floors_error"] = repr(exc)
-    return out
-
-
-def _probe_marginal(spark, sf_dir: str) -> dict:
-    """Per-row throughput for both engines: best-of-N at 1x and at
-    PROBE_REP x the fact table; extra rows / extra seconds."""
-    out: dict[str, dict] = {}
-    probe_views: set[str] = set()
-    try:
-        import duckdb
-
-        from pyspark.sql import functions as F
-
-        from graphql_api_etl_spark.sources.registry import load_table
-
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-        for p in PROBES:
-            fact, sql = p["fact"], p["sql"]
-            base = load_table(spark, sf_dir, fact)
-            n = base.count()
-            rep = base.crossJoin(spark.range(PROBE_REP).select(F.lit(1).alias("__r"))).drop("__r")
-
-            def spark_time(view_df) -> float:
-                view_df.createOrReplaceTempView(fact)
-                best = float("inf")
-                for _ in range(PROBE_ROUNDS):
-                    t0 = time.time()
-                    spark.sql(sql).write.format("noop").mode("overwrite").save()
-                    best = min(best, time.time() - t0)
-                return best
-
-            def duck_time(rep_view: bool) -> float:
-                if rep_view:
-                    con.execute(
-                        f"CREATE OR REPLACE VIEW {fact} AS "
-                        f"SELECT f.* FROM '{sf_dir}/{fact}.parquet' f CROSS JOIN range({PROBE_REP})"
-                    )
-                else:
-                    con.execute(
-                        f"CREATE OR REPLACE VIEW {fact} AS SELECT * FROM '{sf_dir}/{fact}.parquet'"
-                    )
-                best = float("inf")
-                for _ in range(PROBE_ROUNDS):
-                    t0 = time.time()
-                    con.execute(sql).fetchall()
-                    best = min(best, time.time() - t0)
-                return best
-
-            # Spark also reads the probe SQL against temp views so both
-            # engines execute the IDENTICAL statement on identical data
-            # (via load_table so the NTZ-timestamp pin applies).
-            for t in TABLES:
-                if t != fact:
-                    load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-                    probe_views.add(t)
-            probe_views.add(fact)
-            extra_rows = n * (PROBE_REP - 1)
-            s1, sk = spark_time(base), spark_time(rep)
-            d1, dk = duck_time(False), duck_time(True)
-            out[p["name"]] = {
-                "rows_base": n,
-                "rep": PROBE_REP,
-                # null when the repx-1x delta is under 20 ms: that's
-                # scheduling noise, not per-row cost (sf too small).
-                "spark": round(extra_rows / (sk - s1)) if sk - s1 > 0.02 else None,
-                "duckdb": round(extra_rows / (dk - d1)) if dk - d1 > 0.02 else None,
-                "spark_sec_1x": round(s1, 3),
-                "spark_sec_repx": round(sk, 3),
-                "duckdb_sec_1x": round(d1, 3),
-                "duckdb_sec_repx": round(dk, 3),
-            }
-    except Exception as exc:  # noqa: BLE001 — partial output is still
-        # useful, but the failure must be visible, not swallowed
-        out["_error"] = repr(exc)
-    finally:
-        # drop every view the probe registered: leaving them shadows
-        # table names for the rest of the session
-        for v in probe_views:
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:  # noqa: BLE001
-                pass
-    return out
 
 
 if __name__ == "__main__":

@@ -401,7 +401,7 @@ def stack_f64(values) -> "object":
     arrive as np.ndarray or list) into an (n, dim) float64 matrix via
     C-loop ``np.stack`` instead of a per-row ``list()`` detour —
     measured ~7 µs/row → ~0.8 at dim 64, the dominant Python-side cost
-    of the Arrow kernels (r10 floors probe).  float32 cells are
+    of the Arrow kernels (r10, measured at sf0.1).  float32 cells are
     upcast so fixed-point scores stay bit-identical to the float64
     oracle arithmetic."""
     import numpy as np

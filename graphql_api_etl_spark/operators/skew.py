@@ -211,7 +211,7 @@ def skew_aware_join(
     aqe_split_threshold_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Equi-join with the strategy picked by the MEASURED r11 skew
-    decision table (docs/PLANS.md, bench.py ``_probe_skew_floors``:
+    decision table (docs/PLANS.md, 30%-hot key over replicated orders:
     broadcast ~6× > AQE skew-split (fired) ~2× > SHJ > plain SMJ ≈
     salted), instead of hand-chosen hints per call site:
 

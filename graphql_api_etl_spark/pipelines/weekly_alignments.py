@@ -117,10 +117,6 @@ class PipelineContext:
     permission_sink: MutationSink
     report_dir: str
     backfill_supervisors: tuple[str, ...] = ()  # P5 allowlist (ETL:759–763)
-    # Optional parent-pointer edge list (child, parent): when present,
-    # phase 1 builds the hierarchy via build_hierarchy_tree (arbitrary
-    # depth) instead of the reference's fixed region→district columns.
-    hierarchy_edges: DataFrame | None = None
     # Unused: the sync reconciles locations in memory and lands no
     # bucketed table. Kept because perfbench/run.py still passes it; it
     # goes with the next change to the benchmark.
@@ -184,31 +180,15 @@ class SyncReport:
 # ---------------------------------------------------------------------------
 
 
-def build_hierarchy(alignments: DataFrame, level_cols: list[str] | None = None) -> DataFrame:
+def build_hierarchy(alignments: DataFrame) -> DataFrame:
     """Region→District tree with parent-before-child levels (A4,
     ETL:283–308): one row per region (level 1), one per (region,
     district) (level 2). Ordering is by level-phased writes, not row
-    order. ``level_cols`` extends the reference's fixed two levels to
-    any wide-format depth; for variable-depth parent-pointer input use
-    :func:`build_hierarchy_tree`."""
-    if level_cols is None:
-        alignments = alignments.select(
-            F.col("region_supervisor").alias("region"), F.col("district").alias("district")
-        )
-        level_cols = ["region", "district"]
-    return hierarchy_levels(alignments, level_cols)
-
-
-def build_hierarchy_tree(edges: DataFrame, child_col: str = "child", parent_col: str = "parent") -> DataFrame:
-    """Arbitrary-depth hierarchy from a parent-pointer edge list —
-    the >2-level generalization the reference never needed (it hard-
-    codes Region→District, ETL:145–166). Levels are derived with
-    operators.graph.closure_roots (⌈log₂ d⌉ pointer-doubling joins),
-    so the same write_level_phased sink keeps parent-before-child for
-    org trees of any depth."""
-    from graphql_api_etl_spark.operators.graph import hierarchy_from_edges
-
-    return hierarchy_from_edges(edges, child_col, parent_col)
+    order."""
+    alignments = alignments.select(
+        F.col("region_supervisor").alias("region"), F.col("district").alias("district")
+    )
+    return hierarchy_levels(alignments, ["region", "district"])
 
 
 # ---------------------------------------------------------------------------
@@ -482,15 +462,9 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     report = SyncReport()
     with Materializer() as materialize:
         # Phase 1: hierarchy levels + groups, written one level at a
-        # time, parent level before child (write_level_phased). Levels
-        # are DERIVED from the built hierarchy, not hardcoded, so an
-        # edge-list hierarchy of any depth phases correctly (r3 VERDICT
-        # ask #8 — the reference's fixed (1, 2) only covers
-        # region→district).
-        if ctx.hierarchy_edges is not None:
-            hierarchy = build_hierarchy_tree(ctx.hierarchy_edges)
-        else:
-            hierarchy = build_hierarchy(ctx.alignments)
+        # time, parent level before child (write_level_phased derives
+        # the levels from the frame).
+        hierarchy = build_hierarchy(ctx.alignments)
         levels = write_level_phased(
             ctx.assignment_sink,
             materialize(hierarchy.select("group_name", "parent_name", "level", "is_top")),

@@ -23,10 +23,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
 from graphql_api_etl_spark.sources.registry import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]

@@ -8,18 +8,10 @@ the original order via the package __init__ import sequence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # C. Aggregates / set ops / hierarchy
@@ -385,21 +377,3 @@ def v_count_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(c, o, li, o == o_distinct)],
         "n_customer bigint, n_orders bigint, n_lineitem bigint, orders_key_unique boolean",
     )
-
-
-
-
-__catalog_exports__ = [
-    'a_collect_set_per_group',
-    'x_hierarchy_closure',
-    'a_distinct_values',
-    'a_hierarchy_levels',
-    'so_union_distinct',
-    'so_except',
-    'so_intersect',
-    'text_wordcount',
-    'j_salted_skew_join',
-    'j_skew_aware',
-    'a_two_phase_agg',
-    'v_count_gates',
-]

@@ -12,16 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
-from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout  # noqa: F401
+from graphql_api_etl_spark.queries._registry import _q, _t
+from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
 
 # ---------------------------------------------------------------------------
 # Null-aware anti join + ordered string_agg + codec roundtrip (r8)
@@ -554,12 +546,11 @@ def j_shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds a per-partition hash map instead of sorting BOTH fact
     sides — skipping the two sort passes that dominate
     sort-merge-join time when the build side's partitions fit in
-    memory. bench.py's flagship floors row quantifies the lever on the
-    full-outer shape (SHJ 0.244 vs SMJ 0.306 marginal µs/row at 24×
-    sf0.1); SMJ stays the repo-wide default because it spills
-    gracefully — the hint is for joins where a selective filter
-    (here: one order month) bounds the build side, the same judgment
-    a 100 TB job makes per join. Plan-asserted as ShuffledHashJoin in
+    memory. On the full-outer flagship shape the lever measured SHJ
+    0.244 vs SMJ 0.306 marginal µs/row at 24× sf0.1 (r11); SMJ stays
+    the repo-wide default because it spills gracefully — the hint is
+    for joins where a selective filter (here: one order month) bounds
+    the build side, the same judgment a 100 TB job makes per join. Plan-asserted as ShuffledHashJoin in
     tests/test_plans.py (the hint must not silently degrade to SMJ or
     broadcast)."""
     o = (
@@ -626,21 +617,3 @@ def x_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("try_cast(substr(o_orderpriority, 1, 1) AS BIGINT)").alias("prio_num"),
         F.expr("try_mod(o_orderkey, o_custkey % 7)").cast("bigint").alias("key_mod_bucket"),
     )
-
-
-__catalog_exports__ = [
-    '_NAAJ_SQL',
-    'j_null_aware_anti',
-    '_STRING_AGG_SQL',
-    'a_string_agg_ordered',
-    '_CODEC_SQL',
-    'layout_compression_codecs',
-    'events_asof_tolerance',
-    'events_kaplan_meier',
-    '_ORC_ROUNDTRIP_SQL',
-    'sink_orc_roundtrip',
-    'events_asof_forward',
-    'events_asof_nearest',
-    'j_shuffle_hash_join',
-    'x_try_arithmetic',
-]

@@ -11,15 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # E. Event streams: windows, sessions, JSON props
@@ -41,12 +33,7 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time window aggregate (engine-native extension;
     the reference has no temporal operators — SURVEY §2.10). Batch shape
     of the Structured Streaming windowed agg in streaming/windows.py."""
-    return _tumbling_report(_t(spark, sf_dir, "events"))
-
-
-def _tumbling_report(ev: DataFrame) -> DataFrame:
-    """The tumbling-window plan on a caller-provided events frame —
-    shared by the catalog entry and bench.py's marginal-floor probe."""
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
@@ -87,12 +74,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (engine-native; streaming variant uses session_window). One
     shuffle on user_id serves both window functions and the final agg
     (same partitioning — Catalyst reuses the exchange)."""
-    return _sessionize_report(_t(spark, sf_dir, "events"))
-
-
-def _sessionize_report(ev: DataFrame) -> DataFrame:
-    """The sessionization plan on a caller-provided events frame —
-    shared by the catalog entry and bench.py's marginal-floor probe."""
+    ev = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     ms = F.unix_millis(F.col("ts"))
     flagged = ev.withColumn(
@@ -618,15 +600,9 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/asof.py's union+ordered-window technique — one shuffle of
     |L|+|R| on user_id, no range-join pair explosion. The oracle is
     DuckDB's native ASOF LEFT JOIN."""
-    return _asof_clicks_report(_t(spark, sf_dir, "events"))
-
-
-def _asof_clicks_report(ev: DataFrame) -> DataFrame:
-    """The as-of plan on a caller-provided events frame — shared by the
-    catalog entry and bench.py's replicated marginal-floor probe (one
-    code path, no hand-copied twin)."""
     from graphql_api_etl_spark.operators.asof import asof_join
 
+    ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", "value"
@@ -820,32 +796,3 @@ def events_json_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg(F.col("p.k")), 2).alias("avg_k"),
         F.countDistinct(F.col("p.tag")).alias("n_tags"),
     )
-
-
-
-__catalog_exports__ = [
-    'events_tumbling_window',
-    '_tumbling_report',
-    'events_sessionize',
-    '_sessionize_report',
-    'events_interval_join',
-    'events_range_join_left',
-    'x_hierarchy_deep_levels',
-    'w_window_suite',
-    'a_cube_counts',
-    'a_unpivot_measures',
-    'x_posexplode_tokens',
-    'events_gapfill',
-    'events_funnel',
-    'events_cohort_retention',
-    'events_markov_transitions',
-    'events_json_props',
-    'events_json_variant',
-    'events_asof_join',
-    '_asof_clicks_report',
-    'a_percentiles',
-    'a_approx_count_distinct',
-    'a_approx_percentiles',
-    'a_pivot_status_priority',
-    'events_json_typed',
-]

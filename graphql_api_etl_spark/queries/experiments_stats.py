@@ -12,15 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 @_q(
     "dq_functional_deps",
@@ -2677,38 +2669,3 @@ def events_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_days"),
         F.floor(1000000.0 * r).cast("bigint").alias("xcorr_micro"),
     )
-
-
-
-
-__catalog_exports__ = [
-    'dq_functional_deps',
-    'a_poisson_bootstrap_ci',
-    'dq_psi_drift',
-    'a_ks_two_sample',
-    'events_theilsen_trend',
-    'events_attribution_credit',
-    'a_ab_cuped_adjust',
-    'a_ab_power_analysis',
-    'a_order_to_ship_latency',
-    'sink_snapshot_diff',
-    'x_largest_remainder_alloc',
-    'a_spearman_corr',
-    'a_runs_test',
-    'events_haar_energy',
-    'a_laspeyres_price_index',
-    'a_skyline_pareto_2d',
-    'dq_referential_integrity',
-    'a_wasserstein_1d',
-    'a_did_estimate',
-    'events_circular_hour_stats',
-    'a_simpsons_detector',
-    'events_entropy_rate',
-    'events_user_streaks',
-    'a_hhi_concentration',
-    '_parquet_meta_oracle',
-    'source_parquet_metadata',
-    'x_fiscal_445_calendar',
-    'a_abc_xyz_matrix',
-    'events_lead_lag_xcorr',
-]

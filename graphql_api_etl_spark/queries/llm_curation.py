@@ -16,11 +16,7 @@ from graphql_api_etl_spark.operators import dedup as D
 from graphql_api_etl_spark.operators import multimodal as MM
 from graphql_api_etl_spark.operators import similarity as S
 from graphql_api_etl_spark.operators import text as TX
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    _q,
-    _t,
-)
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # Corpus-level curation passes (operators/corpus.py)
@@ -80,14 +76,6 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 — the span window is already the first shuffle, so an extra
     exchange only adds latency.)"""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return _span_exact_report(docs)
-
-
-def _span_exact_report(docs: DataFrame) -> DataFrame:
-    """The dedup_span_exact plan on a prepared (doc_id, text) frame —
-    shared by the catalog entry and bench.py's replicated
-    marginal-floor probe so the probe times the identical code path,
-    not a hand-copied twin."""
     out = C.dedup_spans(docs)
     return out.select(
         "doc_id", "n_spans", "n_kept", F.md5("new_text").alias("new_text_md5")
@@ -1782,60 +1770,3 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("keep_lm"),
         )
     )
-
-
-
-
-__catalog_exports__ = [
-    'C',
-    '_bloom_pos_sql',
-    'dedup_span_exact',
-    '_span_exact_report',
-    'curate_global_shuffle',
-    'curate_bloom_decontaminate',
-    'text_unigram_logprob',
-    '_LOGIT_B',
-    '_LOGIT_W_LNTOK',
-    '_LOGIT_W_STOP',
-    '_LOGIT_W_DIGIT',
-    '_LOGIT_W_DUP',
-    'curate_quality_logit',
-    '_EMB_DIM',
-    '_outlier_oracle_sql',
-    'curate_embedding_outliers',
-    '_MATMUL_ORACLE',
-    'sim_topk_matmul',
-    '_MANIFEST_SQL',
-    'curate_training_manifest',
-    '_HASH_EMB_DIM',
-    '_hash_emb_sql',
-    'text_hash_embedding',
-    '_TCL_K',
-    '_TCL_ITERS',
-    '_TCL_SAMPLE',
-    '_hash_emb_py',
-    '_text_cluster_centroids',
-    '_tcl_e_cols_sql',
-    '_text_cluster_oracle',
-    'curate_text_clusters',
-    'curate_mixture_temperature',
-    'dedup_url_canonicalize',
-    'curate_code_filter',
-    'text_tfidf_topterms',
-    'curate_train_split',
-    'text_chunk_windows',
-    '_PCA_K',
-    '_PCA_SAMPLE',
-    '_pca_model',
-    '_pca_oracle',
-    'emb_pca_project',
-    '_KNN_K',
-    'sim_knn_classify',
-    'text_zipf_fit',
-    'curate_weighted_sample',
-    'mm_audio_rms',
-    'mm_image_histogram',
-    '_BM25_TERMS',
-    'text_bm25_topk',
-    'text_lm_score',
-]

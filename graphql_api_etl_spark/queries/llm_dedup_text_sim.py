@@ -11,18 +11,14 @@ the original order via the package __init__ import sequence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphql_api_etl_spark.operators import dedup as D
 from graphql_api_etl_spark.operators import multimodal as MM
 from graphql_api_etl_spark.operators import similarity as S
 from graphql_api_etl_spark.operators import text as TX
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    _q,
-    _t,
-)
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # Shared oracle-SQL fragments (DuckDB), mirroring operators.text/dedup.
@@ -993,10 +989,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_cosine_dedup(emb: DataFrame) -> DataFrame:
-    """Plan body of dedup_embedding_cosine over an arbitrary embeddings
-    frame — parameterized so bench.py can run the IDENTICAL plan on an
-    empty input to measure the fixed job/plan floor (VERDICT r3 ask #4),
-    and so tests can count candidates via ``_emb_cosine_candidates``.
+    """Plan body of dedup_embedding_cosine over an embeddings frame;
+    tests count its candidates via ``_emb_cosine_candidates``.
 
     The verify dot runs over FLATTENED scalar columns (a0..a63 riding
     the home side, b0..b63 from the right-vector re-join), not over
@@ -1644,72 +1638,3 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-
-
-
-
-__catalog_exports__ = [
-    '_NORM_TEXT',
-    '_TOKS_CTE',
-    '_NTOKS_CTE',
-    '_SHS_CTE',
-    '_HV',
-    '_minhash_sig_sql',
-    '_lsh_pairs_sql',
-    'dedup_exact_groups',
-    'dedup_minhash_lsh',
-    'dedup_ngram_jaccard',
-    '_jaccard_pairs_cte',
-    'dedup_cluster_components',
-    'dedup_cluster_keepers',
-    '_simhash_sql',
-    'dedup_simhash_pairs',
-    'text_quality_stats',
-    '_lang_id_sql',
-    'text_token_counts',
-    'text_lang_id',
-    'text_fingerprint',
-    '_COSINE_CORE',
-    'sim_topk_bruteforce',
-    '_bucketed_sql',
-    'sim_topk_lsh_bucketed',
-    '_ivf_oracle_sql',
-    'sim_topk_ivf',
-    '_pq_oracle_sql',
-    'sim_topk_pq',
-    '_ivfpq_oracle_sql',
-    'sim_topk_ivfpq',
-    'mm_binary_metadata',
-    '_MM_FEATURES_ORACLE',
-    'mm_extract_features',
-    'mm_thumbnails',
-    'mm_frame_sample',
-    '_EC_PLANES',
-    '_EC_BAND_BITS',
-    '_EC_N_BANDS',
-    '_EC_MIN_AGREE',
-    '_EC_FLIPS',
-    '_emb_cosine_dedup_sql',
-    'dedup_embedding_cosine',
-    '_emb_cosine_dedup',
-    '_emb_cosine_flat',
-    '_emb_cosine_projection',
-    '_emb_cosine_candidates',
-    'p_hash_sample',
-    '_CURATE_SQL',
-    'curate_documents',
-    'text_repetition_stats',
-    'text_pii_scrub',
-    'curate_stratified_best',
-    'curate_decontaminate',
-    'emb_quantize_int8',
-    'text_winnowing',
-    'curate_winsorize',
-    '_MIX_RATES',
-    '_mixture_sql',
-    'curate_domain_mixture',
-    'curate_token_packing',
-    'x_lookup_replace',
-    'x_name_parsing',
-    'events_sliding_window',
-]

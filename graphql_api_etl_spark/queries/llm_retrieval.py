@@ -16,14 +16,14 @@ from graphql_api_etl_spark.operators import dedup as D
 from graphql_api_etl_spark.operators import multimodal as MM
 from graphql_api_etl_spark.operators import similarity as S
 from graphql_api_etl_spark.operators import text as TX
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
+from graphql_api_etl_spark.queries._registry import (
     QUERIES,
     _q,
     _t,
 )
-from graphql_api_etl_spark.operators import corpus as C  # noqa: F401
-from graphql_api_etl_spark.queries.llm_curation import _BM25_TERMS, _EMB_DIM, _HASH_EMB_DIM, _LOGIT_B, _LOGIT_W_DIGIT, _LOGIT_W_DUP, _LOGIT_W_LNTOK, _LOGIT_W_STOP, text_bm25_topk  # noqa: F401
-from graphql_api_etl_spark.queries.llm_dedup_text_sim import _NTOKS_CTE, _SHS_CTE, dedup_minhash_lsh, dedup_ngram_jaccard, dedup_simhash_pairs, sim_topk_lsh_bucketed  # noqa: F401
+from graphql_api_etl_spark.operators import corpus as C
+from graphql_api_etl_spark.queries.llm_curation import _BM25_TERMS, _EMB_DIM, _HASH_EMB_DIM, _LOGIT_B, _LOGIT_W_DIGIT, _LOGIT_W_DUP, _LOGIT_W_LNTOK, _LOGIT_W_STOP, text_bm25_topk
+from graphql_api_etl_spark.queries.llm_dedup_text_sim import _NTOKS_CTE, _SHS_CTE, dedup_minhash_lsh, dedup_ngram_jaccard, dedup_simhash_pairs, sim_topk_lsh_bucketed
 
 # ---------------------------------------------------------------------------
 # Semantic dedup (SemDeDup, Abbas et al. 2023): cluster embeddings,
@@ -2853,62 +2853,3 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_sent", "n_words", "n_syll",
         F.floor(1000.0 * ease).cast("bigint").alias("flesch_milli"),
     )
-
-
-
-
-__catalog_exports__ = [
-    '_SEMDEDUP_K',
-    '_SEMDEDUP_ITERS',
-    '_SEMDEDUP_TAU',
-    '_semdedup_centroids',
-    '_semdedup_oracle',
-    'dedup_semdedup',
-    '_rrf_query_vec',
-    '_rrf_sql',
-    'sim_rrf_hybrid',
-    'curate_stratified_sample',
-    '_hamming_sql',
-    'sim_topk_hamming',
-    'dedup_containment_pairs',
-    '_lsh_eval_sql',
-    'dedup_lsh_recall_eval',
-    'mm_video_scene_cut',
-    '_ann_eval_sql',
-    'sim_ann_recall_eval',
-    '_matryoshka_sql',
-    'sim_matryoshka_recall',
-    '_triplet_sql',
-    'emb_triplet_mining',
-    'curate_vocab_coverage',
-    '_dedup_panel_sql',
-    'dedup_panel_report',
-    '_split_leakage_sql',
-    'curate_split_leakage',
-    'text_jsd_by_lang',
-    '_RAKE_STOPS',
-    '_RAKE_SQL',
-    'text_rake_keyphrases',
-    '_PMI_SQL',
-    'text_pmi_collocations',
-    'text_word_burstiness',
-    '_langid_eval_sql',
-    'text_langid_eval',
-    'curate_gate_ablation',
-    'curate_ccnet_buckets',
-    '_class_sep_oracle_sql',
-    'emb_class_separation',
-    '_mmr_oracle_sql',
-    'sim_mmr_rerank',
-    'curate_dsir_weights',
-    'mm_image_ahash_dedup',
-    'mm_audio_silence_segments',
-    'mm_audio_zero_crossings',
-    'mm_image_edge_density',
-    'curate_quality_auc',
-    'curate_f1_threshold',
-    'dedup_yield_curve',
-    '_langid_kappa_sql',
-    'text_langid_kappa',
-    'text_readability_flesch',
-]

@@ -9,18 +9,13 @@ the original order via the package __init__ import sequence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphql_api_etl_spark.operators import dedup as D
 from graphql_api_etl_spark.operators import multimodal as MM
-from graphql_api_etl_spark.operators import similarity as S
 from graphql_api_etl_spark.operators import text as TX
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    _q,
-    _t,
-)
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # BPE merge training — the tokenizer-building step of a training-data
@@ -1099,27 +1094,3 @@ def mm_png_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(make, "media_id bigint, payload binary")
     return MM.image_block_levels(media, block=8)
-
-
-__catalog_exports__ = [
-    'BPE_MERGES',
-    '_bpe_oracle_sql',
-    'text_bpe_merges',
-    '_bpe_tokenize_oracle_sql',
-    'text_bpe_tokenize',
-    'mm_jpeg_decode',
-    '_jpeg_gray_tiles_media',
-    'mm_jpeg_color_420',
-    'mm_jpeg_progressive',
-    'text_ngram_novelty',
-    'mm_jpeg_thumbnail',
-    'mm_gif_decode',
-    'mm_audio_ulaw',
-    'mm_gif_frame_sample',
-    'mm_audio_alaw',
-    '_MOJI_CLEAN',
-    '_MOJI_BAD',
-    '_MOJI_N',
-    'text_mojibake_repair',
-    'mm_png_interlaced',
-]

@@ -8,18 +8,11 @@ the original order via the package __init__ import sequence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # A. Reference-parity relational core
@@ -48,8 +41,9 @@ GROUP BY c_mktsegment, _merge
 
 def _flagship_report(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """The flagship plan on ALREADY-FILTERED inputs — shared by the
-    catalog entry and bench.py's replicated marginal-floor probe so
-    the probe times the identical code path, not a hand-copied twin.
+    flagship and its bucketed, healed, mutated and streamed twins,
+    which reconcile the same customers against differently produced
+    orders.
 
     Plan note (r11): eager aggregation below the join — pre-grouping
     orders per custkey so the SMJ sorts |custkeys| instead of |orders|
@@ -183,17 +177,9 @@ def j_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured at 800× customer (12 M rows) this is 25% faster than the
     probe-then-aggregate plan and turns the per-row cost into pure
     narrow-scan + partial-agg."""
-    return _broadcast_dims_report(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "region"),
-    )
-
-
-def _broadcast_dims_report(customer: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
-    """The broadcast-dims plan on caller-provided frames — shared by
-    the catalog entry and bench.py's replicated marginal-floor probe
-    (one code path, no hand-copied twin)."""
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
     per_nation = customer.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum("c_acctbal").alias("__bal"),
@@ -413,20 +399,3 @@ def flagship_reconcile_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     customer = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0)
     return _flagship_report(customer, rec.current_state(spark))
-
-
-__catalog_exports__ = [
-    '_FLAGSHIP_SQL',
-    '_flagship_report',
-    'flagship_reconcile',
-    'flagship_reconcile_bucketed',
-    'flagship_reconcile_healed',
-    'flagship_reconcile_mutated',
-    'flagship_reconcile_streamed',
-    'j_outer_provenance_counts',
-    'j_left_anti_unmatched',
-    'j_left_semi_matched',
-    'j_cross_product',
-    'j_broadcast_dims',
-    '_broadcast_dims_report',
-]

@@ -11,16 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
-from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout  # noqa: F401
+from graphql_api_etl_spark.queries._registry import _q, _t
+from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
 
 
 
@@ -888,28 +880,3 @@ def a_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_distinct_priorities",
         F.round(F.col("n").cast("double") / F.col("n_total"), 4).alias("mode_share"),
     )
-
-
-
-
-__catalog_exports__ = [
-    'events_latest_per_user',
-    'source_text_lines',
-    'sink_merge_upsert',
-    'sink_scd2_history',
-    'x_datetime_functions',
-    'curate_dataset_card',
-    'x_math_functions',
-    'x_null_semantics',
-    'events_anomaly_zscore',
-    'so_union_schema_evolution',
-    'source_schema_merge_read',
-    'x_array_functions',
-    'a_corr_covar',
-    'x_regex_functions',
-    'a_filtered_agg',
-    'x_map_functions',
-    'x_edit_distance',
-    'a_histogram_bins',
-    'a_mode_per_group',
-]

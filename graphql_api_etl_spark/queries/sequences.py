@@ -11,16 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
-from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout  # noqa: F401
+from graphql_api_etl_spark.queries._registry import _q, _t
+from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
 
 # ---------------------------------------------------------------------------
 # R4c3: sequence / interval / warehouse-history analytics
@@ -1512,34 +1504,3 @@ def a_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.round(F.corr("a_n", "b_n"), 6).alias("autocorr"),
     )
-
-
-
-__catalog_exports__ = [
-    'events_max_concurrency',
-    'x_scd2_history',
-    'events_transition_matrix',
-    'a_rfm_scores',
-    'a_profile_columns',
-    'dq_expectations',
-    'text_sentence_split',
-    '_ewma_lag_sql',
-    'events_ewma_trailing',
-    'a_benford_first_digit',
-    'a_quantile_buckets',
-    'a_entropy_per_group',
-    'events_interarrival_stats',
-    'a_monthly_growth',
-    'events_range_frame_sum',
-    'events_path_analysis',
-    'events_ohlc_bars',
-    'events_active_users',
-    'a_key_skew_report',
-    'source_fixed_width',
-    'a_audience_overlap',
-    'a_market_basket',
-    'x_try_cast_tolerant',
-    'a_group_ols',
-    'layout_dpp_prune',
-    'a_autocorr_lag',
-]

@@ -12,16 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
-from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout  # noqa: F401
+from graphql_api_etl_spark.queries._registry import _q, _t
+from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
 
 
 @_q(
@@ -2267,38 +2259,3 @@ def a_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         gini.alias("gini_micro"),
         F.expr("(1000000 * top10) div total").cast("bigint").alias("top10_share_micro"),
     )
-
-
-
-
-__catalog_exports__ = [
-    'a_heavy_hitters_cms',
-    'j_fuzzy_blocked',
-    'events_hypertable_rollup',
-    'a_ab_test_ztest',
-    'a_mad_outliers',
-    'a_abc_pareto',
-    'events_resample_interpolate',
-    'ts_sax_symbols',
-    'ts_similarity_topk',
-    'a_forecast_seasonal_naive',
-    'dq_table_checksums',
-    'source_xml_records',
-    'a_dow_seasonality',
-    'a_growth_accounting',
-    'a_decile_lift',
-    'events_slo_error_budget',
-    'a_contingency_chisq',
-    'dq_pseudonymize',
-    'x_decimal_money_exact',
-    'a_survival_km',
-    'a_weighted_median',
-    'events_cusum_changepoint',
-    'events_sma_crossover',
-    'a_adoption_curve',
-    'a_repeat_purchase_rate',
-    'a_kmv_distinct_sketch',
-    'a_hll_registers',
-    'a_mannwhitney_u',
-    'a_gini_concentration',
-]

@@ -8,18 +8,11 @@ the original order via the package __init__ import sequence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
+from graphql_api_etl_spark.operators.join import anti
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # D. Analytical benchmarks (TPC-H-shaped; the engine's headline queries)
@@ -47,13 +40,7 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary: the canonical scan→filter→agg plan.
     Eight aggregates in one pass, partial-aggregated map-side; at 100 TB
     this is scan-bound with a tiny shuffle (|groups| ≈ 6)."""
-    return _q1_summary(_t(spark, sf_dir, "lineitem"))
-
-
-def _q1_summary(li: DataFrame) -> DataFrame:
-    """The Q1 plan on a caller-provided lineitem frame — shared by the
-    catalog entry and bench.py's 8x-replicated marginal-floor probe so
-    the probe times the identical code path."""
+    li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -1214,41 +1201,3 @@ def a_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_bal",
         )
     )
-
-
-
-
-__catalog_exports__ = [
-    'tpch_q1_pricing_summary',
-    '_q1_summary',
-    'tpch_q3_shipping_priority',
-    'tpch_q3_bucketed',
-    '_layout_cache_path',
-    '_publish_layout',
-    'layout_zorder_prune',
-    'layout_compacted_scan',
-    'source_jsonl_roundtrip',
-    'source_orc_roundtrip',
-    'tpch_q5_local_volume',
-    'tpch_q6_forecast_revenue',
-    'tpch_q4_order_priority',
-    'tpch_q18_large_orders',
-    'tpch_q10_returned_items',
-    'tpch_q16_supplier_variety',
-    'tpch_q7_nation_volume',
-    'tpch_q13_order_distribution',
-    'tpch_q14_promo_share',
-    'tpch_q15_top_supplier',
-    'tpch_q17_small_quantity',
-    'tpch_q19_or_of_ands',
-    'tpch_q22_idle_rich',
-    'tpch_q2_min_cost_supplier',
-    'tpch_q8_market_share',
-    'tpch_q9_profit_by_nation',
-    'tpch_q11_important_stock',
-    'tpch_q12_late_shipments',
-    'tpch_q20_excess_suppliers',
-    'tpch_q21_waiting_suppliers',
-    'a_rollup_counts',
-    'a_grouping_sets',
-]

@@ -11,15 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
+from graphql_api_etl_spark.queries._registry import _q, _t
 
 # ---------------------------------------------------------------------------
 # B. Projections / transforms / filters / scalar functions
@@ -151,14 +143,3 @@ def a_bool_all_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bool_and(F.col("o_orderpriority") == "1-URGENT").alias("all_urgent"),
         F.count(F.lit(1)).alias("n"),
     )
-
-
-
-
-__catalog_exports__ = [
-    'p_transform_chain',
-    'f_filter_chain',
-    'x_string_functions',
-    'p_rownum_synth',
-    'a_bool_all_guard',
-]

@@ -13,16 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from graphql_api_etl_spark.operators.join import anti, cross, outer_merge, semi
-from graphql_api_etl_spark.queries._registry import (  # noqa: F401
-    QUERIES,
-    Oracle,
-    QueryFn,
-    _q,
-    _t,
-)
-from graphql_api_etl_spark.sources.registry import load_table
-from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout  # noqa: F401
+from graphql_api_etl_spark.queries._registry import _q, _t
+from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
 
 # ---------------------------------------------------------------------------
 # Interval coalescing — merge overlapping supplier shipping windows
@@ -800,29 +792,3 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(path)
     )
     return back
-
-
-
-
-__catalog_exports__ = [
-    '_INTERVAL_COALESCE_SQL',
-    'x_interval_coalesce',
-    '_MANN_KENDALL_SQL',
-    'a_mann_kendall',
-    '_CSV_CORRUPT_SQL',
-    'source_csv_corrupt_recovery',
-    '_KRUSKAL_SQL',
-    'a_kruskal_wallis',
-    '_KENDALL_TAU_SQL',
-    'a_kendall_tau',
-    '_JSON_MULTILINE_SQL',
-    'source_json_multiline',
-    '_DPO_SQL',
-    'sink_dynamic_partition_overwrite',
-    '_MAX_DRAWDOWN_SQL',
-    'events_max_drawdown',
-    '_BITMAP_DISTINCT_SQL',
-    'a_bitmap_distinct',
-    '_CSV_ROUNDTRIP_SQL',
-    'sink_csv_roundtrip',
-]

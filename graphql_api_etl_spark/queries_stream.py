@@ -1,6 +1,6 @@
 """Structured-Streaming catalog entries under the SAME oracle gate as
-the batch catalog (registered via the bottom-import pattern like
-queries_llm / queries_graph).
+the batch catalog (registered on import by ``queries/__init__.py``, like
+queries_graph).
 
 The reference's weekly job is a batch full-reload (ETL:20–22); this
 engine's streaming evolution (streaming/*) was previously evidenced
@@ -393,7 +393,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from graphql_api_etl_spark.queries import _layout_cache_path, _publish_layout
+    from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
     from graphql_api_etl_spark.sources.registry import load_table
 
     land, cached = _layout_cache_path(sf_dir, "stream_late_land", ["events"])

@@ -11,8 +11,9 @@ lands as a durable status DataFrame for A8 success accounting
 accumulators, so "how many failed" comes back with the write instead
 of from a second scan of the status.
 
-The wire client is pluggable; :class:`MockMutationClient` records
-payloads in-memory for tests (the real GraphQL client is a thin
+The wire client is pluggable; :class:`MockMutationClient` accepts (or
+fails) records for tests and :class:`SpoolMutationClient` lands each
+batch as a file (the real GraphQL client is a thin
 adapter with the same ``post_batch`` contract — observable behavior of
 ``GQLAPI.post`` at ETL:169–175). Timeout tolerance (K4's
 ``httpx.ReadTimeout`` pass at ETL:224–246) maps to ``max_retries``.
@@ -37,15 +38,16 @@ STATUS_SCHEMA = T.StructType(
 
 
 class MockMutationClient:
-    """In-memory client: records every batch; optionally fails records
-    matching a predicate (for A8/V5 failure-path tests)."""
+    """Stateless client that accepts every record, or fails the records
+    matching ``fail_when`` (for A8/V5 failure-path tests). It keeps
+    nothing: it is pickled into the Python workers, so a record of the
+    posted batches would never reach the driver; tests that need the
+    payloads use :class:`SpoolMutationClient`."""
 
     def __init__(self, fail_when=None):
-        self.batches: list[list[dict]] = []
         self.fail_when = fail_when
 
     def post_batch(self, operation: str, records: list[dict]) -> list[tuple[dict, bool, str | None]]:
-        self.batches.append(records)
         out = []
         for r in records:
             if self.fail_when is not None and self.fail_when(r):

@@ -74,8 +74,8 @@ def write_bucketed_table(
 
     ``one_file_per_bucket`` pre-shuffles the input into ``num_buckets``
     partitions BY THE BUCKET KEY so each writer task emits exactly one
-    file per bucket.  This matters (r11, measured on the flagship
-    floors probe): each write task otherwise emits its own file for
+    file per bucket.  This matters (r11, measured on the replicated
+    flagship join): each write task otherwise emits its own file for
     every bucket it touches (64 input partitions × 32 buckets ≈ 2k
     files), and with >1 file per bucket Spark cannot trust the
     per-file sort order, so the SMJ's sort over the bucketed scan does
@@ -297,8 +297,8 @@ def stage_bucketed(
     weekly reconcile, SURVEY §3.3): pay one shuffle per side at LAND
     time, then every join of the landed state — including re-joins
     after self-healing loads — is exchange-free.  Measured on the
-    flagship floors probe (BASELINE.md): plain full-outer SMJ marginal
-    3.7–4.7× DuckDB, this layout 1.80–2.16×.
+    replicated flagship join (r11, BASELINE.md): plain full-outer SMJ
+    marginal 3.7–4.7× DuckDB, this layout 1.80–2.16×.
 
     ``name`` must be database-qualified (see
     :func:`ensure_bucket_database`).  Overwrites any previous landing

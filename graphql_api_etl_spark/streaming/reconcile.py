@@ -16,7 +16,9 @@ batch). ``foreachBatch`` is at-least-once; a retried batch_id reads
 the version BEFORE it and deterministically rewrites its own version
 directory, so the upsert is idempotent — effectively exactly-once.
 Only `_SUCCESS`-marked versions are ever read, so a crashed partial
-write is invisible.
+write is invisible. A batch id below the newest committed version (a
+fresh checkpoint over a kept state directory) raises instead of
+replacing the state.
 
 Scale shape: the per-batch merge is a key-partitioned join of
 |state|+|batch| rows with no driver-side state. For in-place upserts
@@ -162,6 +164,19 @@ class IncrementalReconciler:
 
     def upsert_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
+        # Within one checkpoint a replay re-runs only the last batch, so
+        # a committed version NEWER than batch_id means a fresh
+        # checkpoint over a kept state_dir: its ids restart at 0, and
+        # writing v{batch_id} from "no earlier state" would let
+        # retention delete the real state.
+        newer = [v for v in _versions(spark, self.state_dir) if v > batch_id]
+        if newer:
+            raise RuntimeError(
+                f"state_dir {self.state_dir} already holds committed version "
+                f"v{newer[-1]}, newer than batch {batch_id}: the stream was "
+                "restarted under a different checkpoint; resume from the "
+                "original checkpoint or start from an empty state_dir"
+            )
         if self.transform is not None:
             batch = self.transform(batch)
         batch = self._dedup_batch(batch)

@@ -1,8 +1,7 @@
 """Full-catalog timing sweep: every entry in queries(), forced with
-the noop sink, best-of-2 interleaved after a warm-up pass — the
-"measure every operator" survey for the optimization rounds (not a
-bench anchor; the bench's interleaved best-of-3 with floors stays the
-round-over-round artifact).
+the noop sink, best-of-2 interleaved after a warm-up pass. It measures
+every operator; ``bench.py`` times only the headline set, best-of-3,
+next to the DuckDB oracles.
 
 Usage: python scripts/catalog_sweep.py [out.json]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.

@@ -301,7 +301,7 @@ def test_emb_cosine_candidates_subquadratic_and_deduped(spark, sf_oracle_dir):
     pair exactly once. Ceiling = 3% of all pairs — the r2–r4 16-plane
     design sat at 2.4–2.5% and a regression toward any-band agreement
     (22.6%) or all-pairs behavior blows straight through it."""
-    from graphql_api_etl_spark.queries_llm import (
+    from graphql_api_etl_spark.queries.llm_dedup_text_sim import (
         _emb_cosine_candidates,
         _emb_cosine_projection,
     )

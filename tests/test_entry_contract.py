@@ -15,6 +15,20 @@ def test_ordered_covers_catalog_exactly_once():
     assert all(exposed[n] is fn for n, (fn, _) in QUERIES.items())
 
 
+def test_bench_headline_is_in_the_catalog():
+    """bench.py times exactly HEADLINE: a renamed or dropped catalog
+    entry must fail here, not silently shrink the measured set."""
+    import pytest
+
+    import bench
+
+    assert set(bench.HEADLINE) <= set(entry.queries())
+    assert bench.headline_names(entry.queries()) == bench.HEADLINE
+    without_first = {n: None for n in bench.HEADLINE[1:]}
+    with pytest.raises(KeyError, match=bench.HEADLINE[0]):
+        bench.headline_names(without_first)
+
+
 def test_every_entry_has_an_oracle_string():
     oracles = entry.oracle_sql()
     assert set(oracles) == set(QUERIES)

@@ -565,7 +565,7 @@ def test_pca_model_invariants_and_projection_matches_numpy(spark):
     projection of the same vectors with the same literals."""
     import numpy as np
 
-    from graphql_api_etl_spark.queries_llm import _pca_model, emb_pca_project
+    from graphql_api_etl_spark.queries.llm_curation import _pca_model, emb_pca_project
 
     sf = "/root/testdata/sf0.001"
     W, offsets = _pca_model(sf)

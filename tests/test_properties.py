@@ -284,7 +284,7 @@ def test_chunk_windows_cover_and_overlap(spark, texts):
     exactly one stride (64) apart, and the windows jointly cover all
     tokens: last start + its length == n for every doc (clamped final
     window reaches the document end)."""
-    from graphql_api_etl_spark.queries_llm import text_chunk_windows
+    from graphql_api_etl_spark.queries.llm_curation import text_chunk_windows
     import os, tempfile
 
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -320,7 +320,7 @@ def test_train_split_partitions_corpus(spark, ids):
     """The hash split is a partition: every doc lands in exactly one
     of train/val/test, and re-running with extra docs never moves an
     existing doc's split (growth stability)."""
-    from graphql_api_etl_spark.queries_llm import curate_train_split
+    from graphql_api_etl_spark.queries.llm_curation import curate_train_split
     import os, tempfile
 
     def run(id_list):

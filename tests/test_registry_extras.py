@@ -39,7 +39,7 @@ def test_publish_layout_race_loser_discards(tmp_path):
     discarded and the winner's copy is untouched."""
     import os
 
-    from graphql_api_etl_spark.queries import _publish_layout
+    from graphql_api_etl_spark.queries.tpch import _publish_layout
 
     final = str(tmp_path / "copy")
     os.makedirs(final)

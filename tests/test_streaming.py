@@ -199,6 +199,36 @@ def test_incremental_reconcile_kill_and_replay_is_exactly_once(spark, tmp_path):
             check(batch_id)
 
 
+def test_incremental_reconcile_fresh_checkpoint_over_kept_state_raises(spark, tmp_path):
+    """A stream restarted under a fresh checkpoint restarts its batch
+    ids at 0. Over a kept state_dir that batch must raise and name the
+    directory, not write ``v0`` from nothing and let retention delete
+    the newer versions that hold the real state."""
+    import os
+
+    import pytest
+
+    from graphql_api_etl_spark.streaming.reconcile import IncrementalReconciler
+
+    state = tmp_path / "state"
+    schema = "id string, v string"
+    old = IncrementalReconciler(str(state), key="id")
+    old.upsert_batch(spark.createDataFrame([("a", "A"), ("b", "B")], schema), 0)
+    old.upsert_batch(spark.createDataFrame([("c", "C")], schema), 1)
+
+    def version_rows(v):
+        return sorted(tuple(r) for r in spark.read.parquet(str(state / f"v{v}")).collect())
+
+    before = {v: version_rows(v) for v in (0, 1)}
+    assert before[1] == [("a", "A"), ("b", "B"), ("c", "C")]
+
+    restarted = IncrementalReconciler(str(state), key="id")
+    with pytest.raises(RuntimeError, match="state_dir .*state already holds"):
+        restarted.upsert_batch(spark.createDataFrame([("d", "D")], schema), 0)
+    assert sorted(os.listdir(state)) == ["v0", "v1"]
+    assert {v: version_rows(v) for v in (0, 1)} == before
+
+
 def test_threshold_alerts_stateful_across_batches(spark, tmp_path):
     """applyInPandasWithState: lifetime per-key running totals emit one
     alert per crossed threshold multiple, with state carried across

@@ -420,63 +420,16 @@ def test_alignments_from_real_xlsx_drop(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, canonical.collect()))
 
 
-def test_run_weekly_sync_with_4_level_edge_hierarchy(spark, tmp_path):
-    """r3 VERDICT ask #8: run_weekly_sync must derive phase-1 levels
-    from the built hierarchy (previously hardcoded (1, 2)) — a 4-level
-    edge-list org tree flows through the FULL pipeline with every
-    parent posted strictly before its children."""
-    import os
-
-    edges = spark.createDataFrame(
-        [
-            ("r-east", "acme"), ("r-west", "acme"),
-            ("d-1", "r-east"), ("d-2", "r-west"),
-            ("s-10", "d-1"), ("s-11", "d-2"),
-        ],
-        "child string, parent string",
-    )
-    assign_spool = str(tmp_path / "spool_assign")
-    ctx = PipelineContext(
-        alignments=alignments_df(spark),
-        corporate_managers=corporate_managers_df(spark),
-        fetch_hierarchy_groups=lambda: api_hierarchy_groups_df(spark),
-        fetch_locations=lambda: api_locations_df(spark, remote_ids=True),
-        fetch_users=lambda: api_users_df(spark),
-        location_sink=MutationSink(lambda: MockMutationClient(), "locationAdd", batch_size=10),
-        assignment_sink=MutationSink(lambda: SpoolClient(assign_spool), "hierarchyAssign", batch_size=10),
-        user_sink=MutationSink(lambda: MockMutationClient(), "userAdd", batch_size=10),
-        permission_sink=MutationSink(lambda: MockMutationClient(), "permissionAdd", batch_size=10),
-        report_dir=str(tmp_path / "outs"),
-        hierarchy_edges=edges,
-    )
-    report = run_weekly_sync(ctx)
-    # all four levels were phased (1 root + 6 edge children = 7 rows)
-    assert report.counts["hierarchy_rows"] == 7
-    for level in (1, 2, 3, 4):
-        assert report.counts[f"hierarchy_level{level}_failed"] == 0
-
-    # parent strictly before child across the spooled batches
-    written_at = {}
-    for f in sorted(os.listdir(assign_spool)):
-        p = os.path.join(assign_spool, f)
-        with open(p) as fh:
-            for line in fh:
-                rec = json.loads(line)
-                if "group_name" in rec:
-                    written_at[rec["group_name"]] = os.stat(p).st_mtime_ns
-    for child, parent in edges.collect():
-        assert written_at[parent] < written_at[child], f"{parent} not before {child}"
-
-
 def test_deep_hierarchy_tree_phased_writes(spark, tmp_path):
-    """>2-level generalization (r2 VERDICT #8): a 4-level org tree
-    arrives as parent-pointer EDGES (depth unknown to the plan);
-    build_hierarchy_tree derives levels via closure_roots pointer
-    doubling, and write_level_phased posts every parent strictly
-    before any of its children."""
+    """>2-level generalization: a 4-level org tree arrives as
+    parent-pointer EDGES (depth unknown to the plan);
+    operators.graph.hierarchy_from_edges derives levels via
+    closure_roots pointer doubling, and write_level_phased derives its
+    phases from those levels and posts every parent strictly before
+    any of its children."""
     import os
 
-    from graphql_api_etl_spark.pipelines.weekly_alignments import build_hierarchy_tree
+    from graphql_api_etl_spark.operators.graph import hierarchy_from_edges
     from graphql_api_etl_spark.sinks.mutations import write_level_phased
 
     edges = spark.createDataFrame(
@@ -487,7 +440,7 @@ def test_deep_hierarchy_tree_phased_writes(spark, tmp_path):
         ],
         "child string, parent string",
     )
-    tree = build_hierarchy_tree(edges)
+    tree = hierarchy_from_edges(edges)
     rows = {r["group_name"]: r for r in tree.collect()}
     assert len(rows) == 10  # 1 root + 9 edge children
     assert rows["acme"]["level"] == 1 and rows["acme"]["is_top"] and rows["acme"]["parent_name"] is None
