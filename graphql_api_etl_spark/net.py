@@ -34,6 +34,7 @@ from __future__ import annotations
 import http.client
 import json
 import socket
+import threading
 from typing import Any
 from urllib.parse import urlsplit
 
@@ -67,6 +68,11 @@ class HttpGQLApi:
     timeout the connection is discarded, not reused: the response to
     the timed-out request could otherwise be read as the answer to the
     next one.
+
+    One client may be shared by threads (the sync fetches connections
+    on two driver threads through one client): a keep-alive connection
+    carries one request at a time, so ``post`` holds a lock from
+    sending the request until its response is read.
     """
 
     def __init__(self, url: str, timeout: float = 30.0, headers: dict[str, str] | None = None):
@@ -74,13 +80,15 @@ class HttpGQLApi:
         self.timeout = timeout
         self.headers = dict(headers or {})
         self._conn: http.client.HTTPConnection | None = None
+        self._lock = threading.RLock()
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            finally:
-                self._conn = None
+        with self._lock:
+            if self._conn is not None:
+                try:
+                    self._conn.close()
+                finally:
+                    self._conn = None
 
     def _request_once(self, path: str, data: bytes, headers: dict[str, str]):
         if self._conn is None:
@@ -115,20 +123,21 @@ class HttpGQLApi:
         data = json.dumps(body, default=str).encode()
         status = None
         raw = b""
-        for attempt in (0, 1):
-            try:
-                status, raw = self._request_once(path, data, headers)
-                break
-            except (TimeoutError, socket.timeout) as exc:
-                self.close()
-                raise GraphQLReadTimeout(f"read timed out after {self.timeout}s: {exc}") from exc
-            except (http.client.HTTPException, ConnectionError, OSError) as exc:
-                # a stale keep-alive socket surfaces as BadStatusLine /
-                # ConnectionReset on the NEXT request — reconnect once;
-                # failing again means the endpoint is actually down
-                self.close()
-                if attempt == 1:
-                    raise GraphQLTransportError(str(exc)) from exc
+        with self._lock:
+            for attempt in (0, 1):
+                try:
+                    status, raw = self._request_once(path, data, headers)
+                    break
+                except (TimeoutError, socket.timeout) as exc:
+                    self.close()
+                    raise GraphQLReadTimeout(f"read timed out after {self.timeout}s: {exc}") from exc
+                except (http.client.HTTPException, ConnectionError, OSError) as exc:
+                    # a stale keep-alive socket surfaces as BadStatusLine /
+                    # ConnectionReset on the NEXT request — reconnect once;
+                    # failing again means the endpoint is actually down
+                    self.close()
+                    if attempt == 1:
+                        raise GraphQLTransportError(str(exc)) from exc
         try:
             payload = json.loads(raw.decode())
         except ValueError as exc:

@@ -83,8 +83,13 @@ def fill_empty(df: DataFrame, subset: Sequence[str]) -> DataFrame:
 
 def all_equal(df: DataFrame, col: Column) -> bool:
     """F8/A6: whole-column ALL() driving a runtime plan switch
-    (``(node_remoteId == "").all()`` ETL:390). One tiny boolean action;
-    deliberately driver-side — the result chooses which join plan to
-    BUILD (SURVEY §7 hard part 3), it is not row data."""
-    row = df.agg(F.bool_and(col).alias("v")).first()
-    return bool(row["v"]) if row["v"] is not None else True
+    (``(node_remoteId == "").all()`` ETL:390). Deliberately driver-side
+    — the result chooses which join plan to BUILD (SURVEY §7 hard part
+    3), it is not row data.
+
+    True unless some row has ``col`` false: NULLs are skipped and an
+    empty (or all-NULL) column is true, as ``bool_and`` has it. Asked as
+    "no counterexample" rather than aggregated, so it stops at the first
+    false row, and over a driver-built frame (a local relation) the
+    optimizer answers it without a Spark job."""
+    return df.filter(~col).isEmpty()

@@ -37,29 +37,44 @@ AQE skew splitting, the dim sides broadcast, and the mutation sink
 batches per partition. Nothing in this module collects a fact table to
 the driver; the only driver-side values are
 
-- the F8 plan switch (one boolean aggregate, ETL:390);
-- the three provenance-slice counts of each outer merge (one
-  ``groupBy("_merge").count()`` per merge), which drive the reports
-  and gates;
-- the equity user and group counts (one aggregate);
+- the F8 plan switch (ETL:390), a "no counterexample" check over the
+  driver-built API snapshot that the optimizer answers without a job;
+- the three provenance-slice counts of each outer merge, observed on
+  its checkpoint (:class:`Materializer`), which drive the reports and
+  gates;
+- the equity user and group counts, observed on the ``pairs``
+  checkpoint;
 - the distinct hierarchy levels (one value per tree level);
 - each mutation write's record and failure counts, tallied by the
   posting tasks.
 
 Spark's cost per job, not data volume, dominates a sync. So each frame
 that more than one action reads, and whose plan shuffles, is
-materialized once (:class:`Materializer`); every count comes from an
-aggregate that runs anyway or from the write that posts the frame.
-Re-reading a plan with no exchange (the driver-built API snapshots)
-costs no more jobs than materializing it.
+materialized once (:class:`Materializer`); every count rides a
+checkpoint that runs anyway or comes from the write that posts the
+frame. Re-reading a plan with no exchange (the driver-built API
+snapshots) costs no more jobs than materializing it.
+
+For the same reason the sync keeps two driver threads busy instead of
+one (:func:`run_weekly_sync`). The reference runs its steps one after
+another, but phase 3's merges never read phase 2's output: a background
+thread fetches the users and the pass-1 locations while phase 1 writes
+the hierarchy, then computes phase 3's pure half
+(:func:`user_permission_pairs`) while the main thread runs phase 2.
+Every effect — a post, a report CSV, a gate, a report entry — stays on
+the main thread, in the reference's order.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from graphql_api_etl_spark.operators.aggregate import (
@@ -99,11 +114,21 @@ class PipelineContext:
     ``fetch_*`` are callables so the pipeline controls when each
     connection is read; in production they wrap
     sources.graphql.fetch_connection, in tests they read mock state.
-    A sync calls ``fetch_users`` and ``fetch_hierarchy_groups`` once,
-    after phase 1's hierarchy writes (nothing in the sync adds users,
-    and only phase 1 writes groups). Only ``fetch_locations`` is called
-    again, after the self-healing load (the reference's second merge
-    pass, ETL:474–506).
+    A sync calls each of them once, and ``fetch_locations`` a second
+    time only after the self-healing load:
+
+    - ``fetch_users`` and pass 1's ``fetch_locations`` are called at
+      sync start, on the sync's background thread, while phase 1 writes
+      the hierarchy: nothing in the sync adds users, and phase 1 writes
+      only hierarchy groups.
+    - ``fetch_hierarchy_groups`` is called on the main thread after
+      phase 1's writes.
+    - Pass 2's ``fetch_locations`` (the reference's second merge pass,
+      ETL:474–506) is called on the main thread after the load.
+
+    So a ``fetch_*`` may run off the thread that built the context, and
+    at the same time as another ``fetch_*``: a client they share must
+    be safe to share across threads (``net.HttpGQLApi`` is).
     """
 
     alignments: DataFrame  # normalized Excel sheet (S1; columns per FIXTURES.md A1)
@@ -136,15 +161,34 @@ class Materializer:
     in two part-filled batches from one, and in one batch from the
     checkpoint. ``DataFrame.unpersist`` does not release a checkpoint,
     so the exit unpersists the checkpointed RDD itself; a released
-    frame can no longer be read."""
+    frame can no longer be read.
+
+    Counts ride the checkpoint. A call returns the checkpointed frame
+    and the aggregates observed while the checkpoint computed it
+    (``DataFrame.observe``): for an ``outer_merge`` result (a ``_merge``
+    column) the row counts of its three provenance slices, keyed
+    ``both``, ``left_only`` and ``right_only``, plus one value per
+    keyword aggregate. The observed values arrive with the eager
+    checkpoint, so a count costs no job. ``observe`` refuses DISTINCT
+    aggregates: count distinct values as ``size(collect_set(...))``.
+
+    Both threads of a sync share one Materializer. The sync drains its
+    background thread before the block ends, so no frame is
+    checkpointed after the release."""
 
     def __init__(self) -> None:
         self._rdds: list = []
 
-    def __call__(self, df: DataFrame) -> DataFrame:
+    def __call__(self, df: DataFrame, **observe: Column) -> tuple[DataFrame, dict[str, int]]:
+        if "_merge" in df.columns:
+            slices = (MERGE_BOTH, MERGE_LEFT, MERGE_RIGHT)
+            observe = {s: F.count_if(F.col("_merge") == s) for s in slices} | observe
+        observation = Observation() if observe else None
+        if observation is not None:
+            df = df.observe(observation, *(c.alias(name) for name, c in observe.items()))
         out = df.localCheckpoint(eager=True)
         self._rdds.append(out._jdf.logicalPlan().rdd())
-        return out
+        return out, observation.get if observation is not None else {}
 
     def __enter__(self) -> Materializer:
         return self
@@ -155,12 +199,24 @@ class Materializer:
         self._rdds.clear()
 
 
-def provenance_counts(merged: DataFrame) -> tuple[int, int, int]:
-    """(both, left_only, right_only) row counts of an outer_merge
-    result from one aggregate — the counts of split_by_provenance's
-    slices without one job per slice."""
-    n = dict(merged.groupBy("_merge").count().collect())
-    return n.get(MERGE_BOTH, 0), n.get(MERGE_LEFT, 0), n.get(MERGE_RIGHT, 0)
+@contextmanager
+def background_thread(spark: SparkSession) -> Iterator[Callable[..., Future]]:
+    """One worker thread beside the driver's main thread, for the
+    ``with`` block. ``submit(fn, *args)`` returns a Future; calls run
+    one at a time, in the order submitted. Each runs with the Spark
+    local properties and job tags the submitting thread had at submit
+    time, so its jobs land in the caller's job group. On exit, calls
+    not yet started are cancelled and the running one is waited for,
+    whether the block returns or raises."""
+    pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="weekly-sync")
+
+    def submit(fn: Callable, *args) -> Future:
+        return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+    try:
+        yield submit
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 @dataclass
@@ -199,8 +255,9 @@ def build_hierarchy(alignments: DataFrame) -> DataFrame:
 def choose_location_key(api_locations: DataFrame) -> str:
     """F8 plan switch (ETL:390, 481): if every API remoteId is empty
     (or the API holds no locations), join on location name; else on
-    Unit↔remoteId. One tiny boolean aggregate drives which plan gets
-    BUILT — deliberately driver-side."""
+    Unit↔remoteId. The answer drives which plan gets BUILT —
+    deliberately driver-side; over the driver-built snapshot it costs
+    no Spark job (:func:`~graphql_api_etl_spark.operators.transform.all_equal`)."""
     empty_remote = all_equal(
         api_locations, F.coalesce(F.col("node_remoteId"), F.lit("")) == ""
     )
@@ -212,8 +269,9 @@ def reconcile_locations(alignments: DataFrame, api_locations: DataFrame, key: st
     with the API's locations on the F8-chosen ``key``, in memory.
     ``split_by_provenance`` of the result gives (matched,
     missing_in_api, deprecated_in_api). Both sides are dimension-sized,
-    so the sync materializes the merge once per pass and reads its
-    counts, CSVs and ``locationAdd`` payload from that checkpoint."""
+    so the sync materializes the merge once per pass, observes its
+    counts on the checkpoint and reads its CSVs and ``locationAdd``
+    payload from it."""
     lhs = alignments.withColumn("unit_str", F.col("unit").cast("bigint").cast("string"))
     lkey, rkey = ("location", "node_name") if key == "name" else ("unit_str", "node_remoteId")
     return outer_merge(lhs, api_locations, left_on=lkey, right_on=rkey)
@@ -233,23 +291,26 @@ def missing_location_payload(missing: DataFrame) -> DataFrame:
 
 
 def map_locations_to_hierarchies(
-    ctx: PipelineContext, report: SyncReport, groups: DataFrame, materialize: Materializer
+    ctx: PipelineContext,
+    report: SyncReport,
+    groups: DataFrame,
+    api_locations: DataFrame,
+    materialize: Materializer,
 ) -> DataFrame:
-    """The relational core (§3.3): reconcile, load the anti-join
-    remainder, re-fetch, reconcile again, then map matched locations to
-    the districts among ``groups`` (the sync's hierarchy-group
-    snapshot) and collect location sets per district (A1). When pass 1
-    finds nothing missing, nothing is loaded, so pass 1's merge and
-    counts serve as pass 2's."""
-    api_locations = ctx.fetch_locations()
+    """The relational core (§3.3): reconcile the file drop with
+    ``api_locations`` (the API's locations, fetched before the call),
+    load the anti-join remainder, re-fetch, reconcile again, then map
+    matched locations to the districts among ``groups`` (the sync's
+    hierarchy-group snapshot) and collect location sets per district
+    (A1). When pass 1 finds nothing missing, nothing is loaded, so pass
+    1's merge and counts serve as pass 2's."""
     key = choose_location_key(api_locations)
-    merged = materialize(reconcile_locations(ctx.alignments, api_locations, key))
-    n_both, n_missing, n_deprecated = provenance_counts(merged)
-    report.note("locations_matched_pass1", n_both)
-    report.note("locations_missing_pass1", n_missing)
+    merged, n = materialize(reconcile_locations(ctx.alignments, api_locations, key))
+    report.note("locations_matched_pass1", n[MERGE_BOTH])
+    report.note("locations_missing_pass1", n[MERGE_LEFT])
 
     # Load missing locations (ETL:430–470), then self-heal: re-fetch and re-merge.
-    if n_missing:
+    if n[MERGE_LEFT]:
         _, missing, _ = split_by_provenance(merged)
         path = f"{ctx.report_dir}/new_locations_not_in_api"
         payload = missing_location_payload(missing)
@@ -261,8 +322,7 @@ def map_locations_to_hierarchies(
         # ETL:~481): if the load populated remoteIds, pass 2 joins on
         # remoteId even though pass 1 joined on name.
         key = choose_location_key(api_locations)
-        merged = materialize(reconcile_locations(ctx.alignments, api_locations, key))
-        n_both, n_missing, n_deprecated = provenance_counts(merged)
+        merged, n = materialize(reconcile_locations(ctx.alignments, api_locations, key))
 
     both, still_missing, deprecated = split_by_provenance(merged)
     # V3 residual warning + V5 deprecated-locations CSV (ETL:508–524)
@@ -270,17 +330,17 @@ def map_locations_to_hierarchies(
         still_missing.select("location", "unit"),
         "locations_still_unloaded",
         f"{ctx.report_dir}/locations_still_unloaded",
-        n_missing,
+        n[MERGE_LEFT],
     ):
         report.reports["still_unloaded"] = f"{ctx.report_dir}/locations_still_unloaded"
     if warn_if_nonempty(
         deprecated.select("node_id", "node_name"),
         "api_locations_not_in_file",
         f"{ctx.report_dir}/api_locations_not_in_file",
-        n_deprecated,
+        n[MERGE_RIGHT],
     ):
         report.reports["deprecated_locations"] = f"{ctx.report_dir}/api_locations_not_in_file"
-    report.note("locations_matched_pass2", n_both)
+    report.note("locations_matched_pass2", n[MERGE_BOTH])
 
     # Districts = non-top hierarchy groups (F3+P1/P2, ETL:526–530);
     # J3 outer merge + split (ETL:531–550); A1 collect (ETL:563–573).
@@ -288,7 +348,7 @@ def map_locations_to_hierarchies(
         F.col("node_id").alias("district_group_id"),
         F.col("node_name").alias("district_name"),
     )
-    with_district = materialize(
+    with_district, n = materialize(
         outer_merge(
             both.select(
                 F.col("district").alias("current_district"),
@@ -300,12 +360,11 @@ def map_locations_to_hierarchies(
         )
     )
     matched, _, outdated = split_by_provenance(with_district)
-    _, _, n_outdated = provenance_counts(with_district)
     if warn_if_nonempty(
         outdated.select("district_group_id", "district_name"),
         "outdated_districts",
         f"{ctx.report_dir}/outdated_districts",
-        n_outdated,
+        n[MERGE_RIGHT],
     ):
         report.reports["outdated_districts"] = f"{ctx.report_dir}/outdated_districts"
 
@@ -317,17 +376,35 @@ def map_locations_to_hierarchies(
 # ---------------------------------------------------------------------------
 
 
-def build_user_permission_frame(
-    ctx: PipelineContext,
-    report: SyncReport,
-    users: DataFrame,
-    groups: DataFrame,
-    materialize: Materializer,
-) -> DataFrame:
-    """(hierarchy_name, email, role) long table → API ids (``users``,
-    e-mails normalized) and group ids (``groups``) → equity cross-join
-    expansion (J6) minus equity rows from the normal path (J9) →
-    materialized (user_id, group_id) pairs."""
+@dataclass
+class PermissionFrames:
+    """Phase 3's pure half (:func:`user_permission_pairs`): checkpointed
+    frames and the counts observed on them. Nothing here has been
+    posted, written or reported yet."""
+
+    unmatched_file: DataFrame  # (hierarchy_name, email): V4 evidence
+    n_unmatched_file: int
+    unmatched_api: DataFrame  # (node_id, node_email)
+    n_unmatched_api: int
+    userless: DataFrame  # (group_id, group_name): groups nobody is granted
+    n_userless: int
+    equity_pairs: int  # |equity users × equity region groups|
+    pairs: DataFrame  # materialized (user_id, group_id) permissions
+
+
+def user_permission_pairs(
+    ctx: PipelineContext, users: DataFrame, groups: DataFrame, materialize: Materializer
+) -> PermissionFrames:
+    """Phase 3's pure half: (hierarchy_name, email, role) long table →
+    API ids (``users``, e-mails normalized) and group ids (``groups``)
+    → equity cross-join expansion (J6) minus equity rows from the
+    normal path (J9) → materialized (user_id, group_id) pairs.
+
+    It reads only the file drop and the sync's users/groups snapshot,
+    never phase 2's output, and has no effect: it posts nothing, writes
+    no CSV, sets no report entry and raises no gate. So the sync runs it
+    on its background thread beside phase 2, and
+    :func:`build_user_permission_frame` applies the effects."""
     al = ctx.alignments
 
     # X1/X2 normalization (ETL:754–756) + P5 backfill for allowlisted
@@ -361,26 +438,11 @@ def build_user_permission_frame(
     users_long = region_rows.unionByName(district_rows).na.drop(subset=["email"]).distinct()
 
     # J4: file users × API users on normalized email (ETL:805–811).
-    m = materialize(outer_merge(users_long, users, left_on="email", right_on="node_email"))
+    m, n_users = materialize(outer_merge(users_long, users, left_on="email", right_on="node_email"))
     matched, unmatched_file, unmatched_api = split_by_provenance(m)
-    _, n_unmatched, n_unmatched_api = provenance_counts(m)
-
-    # V4 hard gate: every file user must exist in the API (ETL:817–827).
-    if n_unmatched:
-        path = f"{ctx.report_dir}/unmatched_file_users"
-        write_csv_report(unmatched_file.select("hierarchy_name", "email"), path)
-        report.reports["unmatched_file_users"] = path
-        raise ValidationError(f"unmatched_file_users: {n_unmatched} (evidence: {path})")
-    if warn_if_nonempty(
-        unmatched_api.select("node_id", "node_email"),
-        "unmatched_api_users",
-        f"{ctx.report_dir}/unmatched_api_users",
-        n_unmatched_api,
-    ):
-        report.reports["unmatched_api_users"] = f"{ctx.report_dir}/unmatched_api_users"
 
     # J5: attach hierarchy-group ids by name (ETL:845–855).
-    hm = materialize(
+    hm, n_groups = materialize(
         outer_merge(
             matched.select("hierarchy_name", "type_hierarchy", "franchise_or_equity", "node_id"),
             groups.select(
@@ -393,41 +455,71 @@ def build_user_permission_frame(
         )
     )
     assigned, _, userless = split_by_provenance(hm)
-    _, _, n_userless = provenance_counts(hm)
-    if warn_if_nonempty(
-        userless.select("group_id", "group_name"),
-        "hierarchies_without_users",
-        f"{ctx.report_dir}/hierarchies_without_users",
-        n_userless,
-    ):
-        report.reports["hierarchies_without_users"] = f"{ctx.report_dir}/hierarchies_without_users"
 
-    pairs = materialize(
+    # Equity expansion (ETL:877–903): equity users get EVERY equity
+    # region group (J6 cross join); the normal path excludes rows the
+    # equity predicate already covers (J9 — anti by defining predicate).
+    # The equity user and group counts ride the pairs checkpoint.
+    is_equity_region = (F.col("type_hierarchy") == "Region") & (
+        F.col("franchise_or_equity") == "Equity"
+    )
+    pairs, n_equity = materialize(
         assigned.select(
             F.col("node_id").alias("user_id"),
             F.col("group_id"),
             "type_hierarchy",
             "franchise_or_equity",
-        ).distinct()
-    )
-
-    # Equity expansion (ETL:877–903): equity users get EVERY equity
-    # region group (J6 cross join); the normal path excludes rows the
-    # equity predicate already covers (J9 — anti by defining predicate).
-    is_equity_region = (F.col("type_hierarchy") == "Region") & (
-        F.col("franchise_or_equity") == "Equity"
+        ).distinct(),
+        equity_users=F.size(F.collect_set(F.when(is_equity_region, F.col("user_id")))),
+        equity_groups=F.size(F.collect_set(F.when(is_equity_region, F.col("group_id")))),
     )
     equity_rows = pairs.filter(is_equity_region)
-    equity_users = equity_rows.select("user_id").distinct()
-    equity_groups = equity_rows.select("group_id").distinct()
-    equity_pairs = cross(equity_users, equity_groups)
+    equity_pairs = cross(
+        equity_rows.select("user_id").distinct(), equity_rows.select("group_id").distinct()
+    )
     normal_pairs = pairs.filter(~is_equity_region).select("user_id", "group_id")
-    # |equity_users × equity_groups|, from one aggregate over pairs
-    n_users, n_groups = equity_rows.agg(
-        F.countDistinct("user_id"), F.countDistinct("group_id")
-    ).first()
-    report.note("equity_pairs", n_users * n_groups)
-    return materialize(equity_pairs.unionByName(normal_pairs).distinct())
+    final, _ = materialize(equity_pairs.unionByName(normal_pairs).distinct())
+    return PermissionFrames(
+        unmatched_file=unmatched_file.select("hierarchy_name", "email"),
+        n_unmatched_file=n_users[MERGE_LEFT],
+        unmatched_api=unmatched_api.select("node_id", "node_email"),
+        n_unmatched_api=n_users[MERGE_RIGHT],
+        userless=userless.select("group_id", "group_name"),
+        n_userless=n_groups[MERGE_RIGHT],
+        equity_pairs=n_equity["equity_users"] * n_equity["equity_groups"],
+        pairs=final,
+    )
+
+
+def build_user_permission_frame(
+    ctx: PipelineContext, report: SyncReport, frames: PermissionFrames
+) -> DataFrame:
+    """Phase 3's effects, in the reference's order: the V4 hard gate
+    (evidence CSV, then raise), the unmatched-API-users and
+    hierarchies-without-users CSVs, and the equity pair count. Returns
+    the (user_id, group_id) pairs to post."""
+    # V4 hard gate: every file user must exist in the API (ETL:817–827).
+    if frames.n_unmatched_file:
+        path = f"{ctx.report_dir}/unmatched_file_users"
+        write_csv_report(frames.unmatched_file, path)
+        report.reports["unmatched_file_users"] = path
+        raise ValidationError(f"unmatched_file_users: {frames.n_unmatched_file} (evidence: {path})")
+    if warn_if_nonempty(
+        frames.unmatched_api,
+        "unmatched_api_users",
+        f"{ctx.report_dir}/unmatched_api_users",
+        frames.n_unmatched_api,
+    ):
+        report.reports["unmatched_api_users"] = f"{ctx.report_dir}/unmatched_api_users"
+    if warn_if_nonempty(
+        frames.userless,
+        "hierarchies_without_users",
+        f"{ctx.report_dir}/hierarchies_without_users",
+        frames.n_userless,
+    ):
+        report.reports["hierarchies_without_users"] = f"{ctx.report_dir}/hierarchies_without_users"
+    report.note("equity_pairs", frames.equity_pairs)
+    return frames.pairs
 
 
 def corporate_permission_pairs(
@@ -458,28 +550,42 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     """Full pipeline: hierarchy DDL → location mapping → assignments →
     user permissions → corporate permissions. Mutations flow through
     batched sinks; each write returns the record and failure counts the
-    report records (A8, ETL:706–731)."""
+    report records (A8, ETL:706–731).
+
+    Work that reads no earlier phase's output runs on a background
+    thread (:func:`background_thread`) while the main thread waits on
+    Spark: the users and pass-1 locations fetches during phase 1, and
+    phase 3's pure half (:func:`user_permission_pairs`) during phase 2.
+    The main thread applies every effect in the reference's order, so
+    the posts, CSVs, gates and counts are those of a serial run. The
+    background thread is drained before any checkpoint is released."""
     report = SyncReport()
-    with Materializer() as materialize:
+    spark = ctx.alignments.sparkSession
+    with Materializer() as materialize, background_thread(spark) as submit:
+        users_fetched = submit(ctx.fetch_users)
+        locations_fetched = submit(ctx.fetch_locations)
+
         # Phase 1: hierarchy levels + groups, written one level at a
         # time, parent level before child (write_level_phased derives
         # the levels from the frame).
-        hierarchy = build_hierarchy(ctx.alignments)
-        levels = write_level_phased(
-            ctx.assignment_sink,
-            materialize(hierarchy.select("group_name", "parent_name", "level", "is_top")),
+        hierarchy, _ = materialize(
+            build_hierarchy(ctx.alignments).select("group_name", "parent_name", "level", "is_top")
         )
+        levels = write_level_phased(ctx.assignment_sink, hierarchy)
         for level, posted in levels.items():
             report.note(f"hierarchy_level{level}_failed", posted.failed)
         report.note("hierarchy_rows", sum(p.records for p in levels.values()))
 
-        # One snapshot of users and hierarchy groups per sync, taken
-        # after phase 1 wrote the groups.
+        # One snapshot of users and hierarchy groups per sync; the
+        # groups are read after phase 1 wrote them.
         groups = ctx.fetch_hierarchy_groups()
-        users = ctx.fetch_users().withColumn("node_email", normalize_email("node_email"))
+        users = users_fetched.result().withColumn("node_email", normalize_email("node_email"))
+        permissions = submit(user_permission_pairs, ctx, users, groups, materialize)
 
         # Phase 2: locations → district assignments.
-        assignments = map_locations_to_hierarchies(ctx, report, groups, materialize)
+        assignments = map_locations_to_hierarchies(
+            ctx, report, groups, locations_fetched.result(), materialize
+        )
         posted = ctx.assignment_sink.write(
             assignments.select("district_group_id", F.col("location_ids").cast("array<string>"))
         )
@@ -487,7 +593,7 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
         report.note("assignment_failures", posted.failed)
 
         # Phase 3: user + corporate permissions.
-        pairs = build_user_permission_frame(ctx, report, users, groups, materialize)
+        pairs = build_user_permission_frame(ctx, report, permissions.result())
         posted = ctx.permission_sink.write(pairs)
         report.note("permission_pairs", posted.records)
         report.note("permission_failures", posted.failed)

@@ -228,3 +228,48 @@ def test_account_scoping_travels_as_headers():
     with FixtureGQLServer(make_pages(1, 1)) as server:
         client = _conn_client(server, current_account_id="acct-1", account_ids=["acct-1", "acct-2"])
         client.fetch_page(None)  # would raise on transport error
+
+
+def test_one_client_shared_by_threads():
+    """The sync walks two connections at once on two driver threads
+    through one client. A keep-alive connection carries one request at
+    a time, so the client serializes its posts: each walk gets its
+    complete node list, over the client's one connection. More walkers
+    than cores and a short switch interval make an unserialized post
+    collide on the connection."""
+    import os
+    import sys
+    import threading
+
+    n_threads = min((os.cpu_count() or 1) + 1, 9)
+    with FixtureGQLServer(make_pages(6, 2)) as server:
+        server.slow_ops["fetchThings"] = 0.005  # keep each request in flight a while
+        api = HttpGQLApi(server.url, timeout=5)
+        got: dict[int, list[str]] = {}
+        errors: list[Exception] = []
+
+        def walk(k: int) -> None:
+            pager = HttpConnectionClient(
+                api, query="query fetchThings { }", operation_name="fetchThings", conn_type="things"
+            )
+            try:
+                got[k] = [n["id"] for n in walk_pages(pager)]
+            except Exception as exc:  # noqa: BLE001 - reported below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=walk, args=(k,)) for k in range(n_threads)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+            api.close()
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert got == {k: [f"L{i}" for i in range(12)] for k in range(n_threads)}
+        assert server.requests == 6 * n_threads
+        assert server.connections == 1

@@ -83,6 +83,16 @@ def test_all_equal_plan_switch(spark):
     mixed = spark.createDataFrame([("",), ("u1",)], "remote_id string")
     assert all_equal(empties, F.col("remote_id") == "") is True
     assert all_equal(mixed, F.col("remote_id") == "") is False
+    # NULLs are skipped, as bool_and skips them: an empty or all-NULL
+    # column holds no counterexample
+    empty = spark.createDataFrame([], "remote_id string")
+    nulls = spark.createDataFrame([(None,), (None,)], "remote_id string")
+    nulls_and_empties = spark.createDataFrame([(None,), ("",)], "remote_id string")
+    nulls_and_mixed = spark.createDataFrame([(None,), ("",), ("u1",)], "remote_id string")
+    for df, want in ((empty, True), (nulls, True), (nulls_and_empties, True), (nulls_and_mixed, False)):
+        assert all_equal(df, F.col("remote_id") == "") is want
+        v = df.agg(F.bool_and(F.col("remote_id") == "")).first()[0]
+        assert (True if v is None else v) is want
 
 
 # ---------------------------------------------------------------------------

@@ -67,6 +67,27 @@ def test_distinct_idempotent_and_union_commutative(spark, keys):
     assert ab == ba == set(keys)
 
 
+NULLABLE_KEYS = st.lists(st.one_of(st.none(), st.integers(min_value=0, max_value=3)), max_size=8)
+
+
+@given(left_keys=NULLABLE_KEYS, right_keys=NULLABLE_KEYS)
+@_SETTINGS
+def test_observed_provenance_counts_equal_the_aggregate(spark, left_keys, right_keys):
+    """The counts the sync's Materializer observes on an outer merge's
+    checkpoint are the ``groupBy("_merge")`` counts of the merge, with
+    NULL keys (which never match) and duplicate keys on either side."""
+    from graphql_api_etl_spark.operators.join import MERGE_BOTH, MERGE_LEFT, MERGE_RIGHT
+    from graphql_api_etl_spark.pipelines.weekly_alignments import Materializer
+
+    left, right = _df(spark, left_keys, "l"), _df(spark, right_keys, "r")
+    merged = outer_merge(left, right, on="k")
+    with Materializer() as materialize:
+        checkpoint, observed = materialize(merged)
+        n = dict(merged.groupBy("_merge").count().collect())
+        assert observed == {s: n.get(s, 0) for s in (MERGE_BOTH, MERGE_LEFT, MERGE_RIGHT)}
+        assert sum(observed.values()) == checkpoint.count()
+
+
 @given(texts=st.lists(st.text(alphabet="ab ", min_size=1, max_size=20), min_size=1, max_size=6))
 @_SETTINGS
 def test_exact_dedup_counts(spark, texts):

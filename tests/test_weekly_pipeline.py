@@ -110,7 +110,9 @@ def test_location_key_reevaluated_after_selfheal_refetch(spark, tmp_path):
     )
     report = SyncReport()
     with Materializer() as materialize:
-        map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), materialize)
+        map_locations_to_hierarchies(
+            ctx, report, ctx.fetch_hierarchy_groups(), ctx.fetch_locations(), materialize
+        )
     # pass 1 on name: Alpha..Delta match; Echo+Foxtrot loaded
     assert report.counts["locations_matched_pass1"] == 4
     assert report.counts["locations_missing_pass1"] == 2
@@ -274,10 +276,10 @@ def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path, mon
     assert report.counts["locations_matched_pass2"] == report.counts["locations_matched_pass1"] == 6
 
 
-# The fixture sync's Spark jobs (65) plus 10 %. Jobs are mostly fixed
+# The fixture sync's Spark jobs (50) plus 10 %. Jobs are mostly fixed
 # cost, so a frame re-read lazily or a count per slice shows up here
 # before it shows in a timing.
-SYNC_JOB_BUDGET = 72
+SYNC_JOB_BUDGET = 55
 
 
 def test_sync_job_budget_and_release(spark, ctx_and_spools):
@@ -311,6 +313,133 @@ def test_sync_job_budget_and_release(spark, ctx_and_spools):
     assert persistent().size() == held_before
     assert catalog() == catalog_before
     assert not os.path.exists(os.path.join(ctx.report_dir, "_staged_buckets"))
+
+
+def test_sync_jobs_all_run_in_the_callers_job_group(spark, ctx_and_spools):
+    """The sync's background thread runs its Spark jobs in the caller's
+    job group, like the main thread: every job started while the sync
+    ran is in the group. A thread that does not inherit the caller's
+    local properties starts its jobs outside any group."""
+    ctx, _ = ctx_and_spools
+    sc = spark.sparkContext
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, "marker")
+        sc.parallelize([0], 1).count()
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job
+
+    before = marker_job("test-weekly-sync-before")
+    group = "test-weekly-sync-job-group"
+    sc.setJobGroup(group, "weekly sync job group")
+    try:
+        run_weekly_sync(ctx)
+        after = marker_job("test-weekly-sync-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    assert in_group == list(range(before + 1, after))
+
+
+def _sync_threads() -> list:
+    import threading
+
+    return [t for t in threading.enumerate() if t.name.startswith("weekly-sync")]
+
+
+def test_background_thread_cancels_pending_calls_on_error(spark):
+    """A block that raises cancels the calls not yet started and waits
+    for the running one, so nothing runs after the block and no thread
+    is left. The running call here returns only once the pending one
+    is cancelled."""
+    import threading
+    import time
+
+    from graphql_api_etl_spark.pipelines.weekly_alignments import background_thread
+
+    submitted = threading.Event()
+    ran = []
+
+    def running():
+        assert submitted.wait(timeout=60)
+        deadline = time.monotonic() + 60
+        while not futures[1].cancelled() and time.monotonic() < deadline:
+            time.sleep(0.01)
+        ran.append("running")
+
+    with pytest.raises(RuntimeError, match="main thread failed"):
+        with background_thread(spark) as submit:
+            futures = [submit(running), submit(ran.append, "pending")]
+            submitted.set()
+            raise RuntimeError("main thread failed")
+    assert futures[0].done() and not futures[0].cancelled()
+    assert futures[1].cancelled()
+    assert ran == ["running"]
+    assert _sync_threads() == []
+
+
+def test_failed_user_fetch_raises_after_phase_one(spark, ctx_and_spools):
+    """``fetch_users`` runs on the background thread from the start of
+    the sync, but its failure surfaces where a serial sync would meet
+    it: after phase 1's hierarchy writes, before phase 2 loads any
+    location. Nothing stays materialized and no sync thread is left."""
+    ctx, spools = ctx_and_spools
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    held_before = persistent().size()
+
+    def fetch_users():
+        raise ConnectionError("users connection down")
+
+    with pytest.raises(ConnectionError, match="users connection down"):
+        run_weekly_sync(replace(ctx, fetch_users=fetch_users))
+    assert len(read_spool(spools["assign"])) == 7  # every hierarchy row
+    assert read_spool(spools["loc"]) == []
+    assert read_spool(spools["perm"]) == []
+    assert persistent().size() == held_before
+    assert _sync_threads() == []
+
+
+def test_failed_pass2_fetch_drains_background_work(spark, ctx_and_spools, monkeypatch):
+    """A pass-2 ``fetch_locations`` that raises ends the sync with that
+    error. The background thread is drained before the sync's
+    checkpoints are released: here phase 3's pure half only starts
+    materializing after the main thread raised, and its frames are
+    released all the same. No permission is posted and no sync thread
+    is left."""
+    import threading
+
+    from graphql_api_etl_spark.pipelines import weekly_alignments as wa
+
+    ctx, spools = ctx_and_spools
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    held_before = persistent().size()
+    pass2_failed = threading.Event()
+    pure_half_ran = []
+    pure_half = wa.user_permission_pairs
+
+    def user_permission_pairs(*args):
+        assert pass2_failed.wait(timeout=120)
+        pure_half_ran.append(True)
+        return pure_half(*args)
+
+    monkeypatch.setattr(wa, "user_permission_pairs", user_permission_pairs)
+    calls = {"n": 0}
+
+    def fetch_locations():
+        calls["n"] += 1
+        if calls["n"] == 2:
+            pass2_failed.set()
+            raise ConnectionError("locations connection down")
+        return ctx.fetch_locations()
+
+    with pytest.raises(ConnectionError, match="locations connection down"):
+        run_weekly_sync(replace(ctx, fetch_locations=fetch_locations))
+    assert pure_half_ran == [True]
+    assert sorted(r["name"] for r in read_spool(spools["loc"])) == ["Store Echo", "Store Foxtrot"]
+    assert read_spool(spools["perm"]) == []
+    assert persistent().size() == held_before
+    assert _sync_threads() == []
 
 
 def test_f8_key_switch(spark):
@@ -357,7 +486,9 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
     )
     report = SyncReport()
     with Materializer() as materialize:
-        map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), materialize)
+        map_locations_to_hierarchies(
+            ctx, report, ctx.fetch_hierarchy_groups(), ctx.fetch_locations(), materialize
+        )
     assert report.counts["locations_missing_pass1"] == 2
     assert report.counts["location_add_failures"] == 1
     unloaded = spark.read.option("header", True).csv(report.reports["still_unloaded"])
