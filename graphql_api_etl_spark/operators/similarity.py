@@ -90,16 +90,6 @@ def norm_fixed(a: Column | str, dim: int) -> Column:
     return F.sqrt(_left_sum([F.element_at(a, i + 1) * F.element_at(a, i + 1) for i in range(dim)]))
 
 
-def dot_literal(a: Column | str, coeffs: list[float]) -> Column:
-    """Unrolled dot against a literal coefficient vector (hyperplanes)."""
-    na = _sql_name(a)
-    if na:
-        return F.expr(
-            " + ".join(f"element_at({na}, {i + 1}) * CAST({float(c)} AS DOUBLE)" for i, c in enumerate(coeffs))
-        )
-    return _left_sum([F.element_at(a, i + 1) * F.lit(float(c)) for i, c in enumerate(coeffs)])
-
-
 def arrow_cosine():
     """Arrow-vectorized cosine pandas UDF: ~2.3× the throughput of the
     interpreted ``aggregate(zip_with)`` fold (higher-order functions

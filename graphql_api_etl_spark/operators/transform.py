@@ -7,8 +7,6 @@ declarative equivalent that Catalyst can push down / prune / codegen.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -69,16 +67,6 @@ def normalize_email(col: Column | str) -> Column:
     """lower+trim (X1/X2: the email normalization at ETL:642, 756, 801)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.trim(c))
-
-
-def drop_null_rows(df: DataFrame, subset: Sequence[str]) -> DataFrame:
-    """F1: ``dropna(subset=...)`` (ETL:257)."""
-    return df.na.drop(subset=list(subset))
-
-
-def fill_empty(df: DataFrame, subset: Sequence[str]) -> DataFrame:
-    """X5: ``replace(np.nan, "")`` (ETL:349–350)."""
-    return df.na.fill("", subset=list(subset))
 
 
 def all_equal(df: DataFrame, col: Column) -> bool:

@@ -44,7 +44,8 @@ the driver; the only driver-side values are
   gates;
 - the equity user and group counts, observed on the ``pairs``
   checkpoint;
-- the distinct hierarchy levels (one value per tree level);
+- the distinct hierarchy levels (one value per tree level), observed
+  on the hierarchy checkpoint;
 - each mutation write's record and failure counts, tallied by the
   posting tasks.
 
@@ -168,9 +169,10 @@ class Materializer:
     (``DataFrame.observe``): for an ``outer_merge`` result (a ``_merge``
     column) the row counts of its three provenance slices, keyed
     ``both``, ``left_only`` and ``right_only``, plus one value per
-    keyword aggregate. The observed values arrive with the eager
-    checkpoint, so a count costs no job. ``observe`` refuses DISTINCT
-    aggregates: count distinct values as ``size(collect_set(...))``.
+    keyword aggregate (a ``collect_set`` arrives as a list). The
+    observed values arrive with the eager checkpoint, so a count costs
+    no job. ``observe`` refuses DISTINCT aggregates: count distinct
+    values as ``size(collect_set(...))``.
 
     Both threads of a sync share one Materializer. The sync drains its
     background thread before the block ends, so no frame is
@@ -179,7 +181,7 @@ class Materializer:
     def __init__(self) -> None:
         self._rdds: list = []
 
-    def __call__(self, df: DataFrame, **observe: Column) -> tuple[DataFrame, dict[str, int]]:
+    def __call__(self, df: DataFrame, **observe: Column) -> tuple[DataFrame, dict]:
         if "_merge" in df.columns:
             slices = (MERGE_BOTH, MERGE_LEFT, MERGE_RIGHT)
             observe = {s: F.count_if(F.col("_merge") == s) for s in slices} | observe
@@ -566,12 +568,13 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
         locations_fetched = submit(ctx.fetch_locations)
 
         # Phase 1: hierarchy levels + groups, written one level at a
-        # time, parent level before child (write_level_phased derives
-        # the levels from the frame).
-        hierarchy, _ = materialize(
-            build_hierarchy(ctx.alignments).select("group_name", "parent_name", "level", "is_top")
+        # time, parent level before child. The level list is observed
+        # on the checkpoint.
+        hierarchy, seen = materialize(
+            build_hierarchy(ctx.alignments).select("group_name", "parent_name", "level", "is_top"),
+            levels=F.collect_set("level"),
         )
-        levels = write_level_phased(ctx.assignment_sink, hierarchy)
+        levels = write_level_phased(ctx.assignment_sink, hierarchy, sorted(seen["levels"]))
         for level, posted in levels.items():
             report.note(f"hierarchy_level{level}_failed", posted.failed)
         report.note("hierarchy_rows", sum(p.records for p in levels.values()))

@@ -23,10 +23,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries across the plan's parquet scans."""
     out: list[str] = []

@@ -2,17 +2,21 @@
 the batch catalog (registered on import by ``queries/__init__.py``, like
 queries_graph).
 
-The reference's weekly job is a batch full-reload (ETL:20–22); this
-engine's streaming evolution (streaming/*) was previously evidenced
-only by pytest. These entries put the STREAMING execution path itself
-— file-stream source, stateful aggregation / dedup state store,
-micro-batch scheduler — inside the driver's Spark-vs-DuckDB
-differential: each runs a real ``readStream`` → ``writeStream`` query
-with ``trigger(availableNow=True)`` into a memory sink, waits for
+The reference's weekly job is a batch full-reload (ETL:20–22); these
+entries put the engine's STREAMING execution path itself — file-stream
+source, stateful aggregation / dedup state store, micro-batch
+scheduler — inside the catalog's Spark-vs-DuckDB differential: each
+runs a real ``readStream`` → ``writeStream`` query with
+``trigger(availableNow=True)`` into a memory sink, waits for
 termination, and returns the sink table as the result DataFrame. The
 oracle is plain batch SQL over the same parquet — so a green row
 means the streaming pipeline computed exactly what the batch engine
 would have.
+
+The windowed, session, interval-join and custom-state plans are built
+by the operators in ``streaming/`` (the same ones its tests drive); an
+entry here sets up its source, picks the sink mode and projects the
+result.
 
 Determinism notes:
 - ``complete`` output mode for the windowed aggregate: append mode
@@ -37,6 +41,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphql_api_etl_spark.queries import _q
+from graphql_api_etl_spark.streaming import (
+    interval_join,
+    sessionized,
+    threshold_crossing_events,
+    windowed_counts,
+)
 
 _EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -116,19 +126,9 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     query writes append-mode to parquet with the watermark closing
     windows — the memory/complete shape is the gate harness, not the
     deployment shape."""
-    agg = (
-        _events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
+    agg = windowed_counts(_events_stream(spark, sf_dir), ["event_type"])
     out = _run_to_memory(agg, "complete")
-    return out.select(
-        F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value"
-    )
+    return out.select("window_start", "event_type", "n_events", "total_value")
 
 
 @_q(
@@ -172,12 +172,16 @@ def stream_latest_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-batch-wins cursor semantics, which is the right policy for
     the GraphQL reconciler but not for event-time state). Versioned
     state dirs give idempotent retries — a replayed batch re-reads the
-    version written BEFORE it, exactly like
-    streaming/reconcile.IncrementalReconciler."""
-    import os
+    version written BEFORE it, and versions are listed by
+    streaming.reconcile's commit rule (``committed_versions``: only
+    ``_SUCCESS``-marked ``v{N}``), so a crashed partial write is never
+    read, exactly like IncrementalReconciler."""
+    import shutil
     import tempfile
 
     from pyspark.sql import Window as W
+
+    from graphql_api_etl_spark.streaming.reconcile import committed_versions
 
     state_dir = tempfile.mkdtemp(prefix="stream_upsert_state_")
     ckpt = tempfile.mkdtemp(prefix="stream_upsert_ckpt_")
@@ -187,20 +191,14 @@ def stream_latest_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
         return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 
-    def versions() -> list[int]:
-        if not os.path.isdir(state_dir):
-            return []
-        return sorted(int(d[1:]) for d in os.listdir(state_dir) if d.startswith("v"))
-
     def upsert(batch: DataFrame, batch_id: int) -> None:
         red = latest(batch.select(*cols))
-        prior = [v for v in versions() if v < batch_id]
+        session = batch.sparkSession
+        prior = [v for v in committed_versions(session, state_dir) if v < batch_id]
         if prior:
-            state = batch.sparkSession.read.parquet(os.path.join(state_dir, f"v{prior[-1]}"))
+            state = session.read.parquet(f"{state_dir}/v{prior[-1]}")
             red = latest(state.unionByName(red))
-        red.write.mode("overwrite").parquet(os.path.join(state_dir, f"v{batch_id}"))
-
-    import shutil
+        red.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
 
     try:
         q = (
@@ -220,7 +218,7 @@ def stream_latest_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # can be removed here instead of leaking per invocation — the
         # same finally discipline as the late-drop fix (ADVICE r7/r8).
         final = spark.read.parquet(
-            os.path.join(state_dir, f"v{versions()[-1]}")
+            f"{state_dir}/v{committed_versions(spark, state_dir)[-1]}"
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
@@ -269,19 +267,8 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Session identity is (user_id, session start); per-session ordinal
     numbering is emitted by neither side since the two engines count
     sessions in different orders."""
-    agg = (
-        _events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    out = _run_to_memory(agg, "complete")
-    return out.select(
-        "user_id", F.col("w.start").alias("session_start"), "n_events", "total_value"
-    )
+    out = _run_to_memory(sessionized(_events_stream(spark, sf_dir)), "complete")
+    return out.select("user_id", "session_start", "n_events", "total_value")
 
 
 @_q(
@@ -439,17 +426,26 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(land)
     )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
+    out = _run_to_memory(windowed_counts(stream, []), "update")
+    return out.select("window_start", "n_events", "total_value")
+
+
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Views (left) interval-joined to the purchases (right) in the hour
+    after them, through ``streaming.interval_join``, run append-mode to
+    the memory sink and projected to the oracles' columns."""
+    events = _events_stream(spark, sf_dir)
+    joined = interval_join(
+        events.filter(F.col("event_type") == "view"),
+        events.filter(F.col("event_type") == "purchase"),
+        how,
     )
-    out = _run_to_memory(agg, "update")
+    out = _run_to_memory(joined, "append")
     return out.select(
-        F.col("w.start").alias("window_start"), "n_events", "total_value"
+        F.col("l_event").alias("view_id"),
+        F.col("r_event").alias("purchase_id"),
+        F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),
+        (F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")).cast("bigint").alias("gap_sec"),
     )
 
 
@@ -483,41 +479,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode per match and the MATCH SET is deterministic (inner
     join; no per-row race like dropDuplicates), so the differential
     hashes event-id pairs and exact second gaps."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
-    )
-    out = _run_to_memory(joined, "append")
-    return out.select(
-        "view_id",
-        "purchase_id",
-        F.col("v_user").alias("user_id"),
-        (F.unix_timestamp("p_ts") - F.unix_timestamp("v_ts"))
-        .cast("bigint")
-        .alias("gap_sec"),
-    )
+    return _view_purchase_join(spark, sf_dir, "inner")
 
 
 @_q(
@@ -561,8 +523,6 @@ def stream_threshold_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed and shuffle-partitioned — alert volume is bounded by
     value growth, not event count, so the operator holds at any
     corpus size."""
-    from graphql_api_etl_spark.streaming.stateful import threshold_crossing_events
-
     ev = _events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -601,19 +561,8 @@ def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale notes as the other availableNow gates: watermark bounds
     state; the memory sink holds an hourly rollup, report-sized by
     construction."""
-    agg = (
-        _events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    out = _run_to_memory(agg, "append")
-    return out.select(
-        F.col("w.start").alias("window_start"), "n_events", "total_value"
-    )
+    out = _run_to_memory(windowed_counts(_events_stream(spark, sf_dir), []), "append")
+    return out.select("window_start", "n_events", "total_value")
 
 
 @_q(
@@ -712,42 +661,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     micro-batch advances the watermark and flushes the evictable
     unmatched state — the same final-flush machinery
     stream_append_closed_windows pins for windows."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    )
-    out = _run_to_memory(joined, "append")
-    return out.select(
-        "view_id",
-        "purchase_id",
-        F.col("v_user").alias("user_id"),
-        (F.unix_timestamp("p_ts") - F.unix_timestamp("v_ts"))
-        .cast("bigint")
-        .alias("gap_sec"),
-    )
+    return _view_purchase_join(spark, sf_dir, "leftOuter")
 
 
 @_q(
@@ -794,39 +708,4 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     Same end-of-stream mechanics as the left-outer entry: global
     watermark = min(max_v, max_p) − 1 h, strict comparison, flushed by
     availableNow's final no-data micro-batch."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
-        "fullOuter",
-    )
-    out = _run_to_memory(joined, "append")
-    return out.select(
-        "view_id",
-        "purchase_id",
-        F.coalesce(F.col("v_user"), F.col("p_user")).alias("user_id"),
-        (F.unix_timestamp("p_ts") - F.unix_timestamp("v_ts"))
-        .cast("bigint")
-        .alias("gap_sec"),
-    )
+    return _view_purchase_join(spark, sf_dir, "fullOuter")

@@ -229,13 +229,12 @@ class MutationSink:
 
 
 def write_level_phased(
-    sink: MutationSink, hierarchy_df: DataFrame, level_col: str = "level"
+    sink: MutationSink, hierarchy_df: DataFrame, levels: list[int]
 ) -> dict[int, MutationResult]:
     """Parent-before-child ordering as phased writes (SURVEY §7 hard
-    part 2): one sink pass per level, ascending — within a level rows
-    are unordered and fully parallel. Returns each level's write
-    result, keyed by level in write order."""
-    levels = sorted(
-        r[0] for r in hierarchy_df.select(level_col).distinct().collect()
-    )  # bounded collect: one value per tree level, sorted driver-side
-    return {lv: sink.write(hierarchy_df.filter(hierarchy_df[level_col] == lv)) for lv in levels}
+    part 2): one sink pass per value of the ``level`` column, in the
+    order of ``levels`` (ascending: parents first) — within a level
+    rows are unordered and fully parallel. The caller supplies the
+    levels, e.g. observed while it materialized the frame. Returns
+    each level's write result, keyed by level in write order."""
+    return {lv: sink.write(hierarchy_df.filter(hierarchy_df["level"] == lv)) for lv in levels}

@@ -1,30 +1,17 @@
-"""Streaming first-seen deduplication via Spark 4's
-``transformWithStateInPandas`` (the successor to
-``applyInPandasWithState``; SURVEY §2.10 — the reference has no
-streaming).
+"""Streaming first-seen deduplication via ``applyInPandasWithState``
+(SURVEY §2.10 — the reference has no streaming).
 
-``first_seen`` is the streaming form of exact dedup: per key (e.g. a
-content hash), emit the payload the FIRST time the key appears and
-drop every later occurrence — across micro-batches, forever.
-``dropDuplicates`` on a stream needs a watermark and forgets keys when
-it expires; unbounded first-seen semantics need user state, which is
-exactly what the arbitrary-state API provides.
+``first_seen`` is the streaming form of exact dedup: per content hash,
+emit the payload the FIRST time the hash appears and drop every later
+occurrence — across micro-batches, forever. ``dropDuplicates`` on a
+stream needs a watermark and forgets keys when it expires; unbounded
+first-seen semantics need user state, which is exactly what the
+arbitrary-state API provides.
 
 Scale design: state is one boolean per distinct key, hash-partitioned
-with the groupBy shuffle and checkpointed by the engine (RocksDB state
-store in production). Each micro-batch touches only the keys present
-in that batch, Arrow-batched per group. For bounded retention pass
-``ttlDurationMs`` to ``getValueState`` — the semantic contract of this
-operator stays the same.
-
-Environment note: transformWithStateInPandas talks protobuf to
-Spark's state server; ``google.protobuf`` is not installed in this
-container (stock Spark 4 cluster distributions ship it).
-``first_seen_apply`` below is the SAME operator on the older
-``applyInPandasWithState`` API — identical semantics, no protobuf
-dependency — and the e2e test (tests/test_streaming.py) runs
-whichever the environment supports, so the scenario is always
-exercised end-to-end rather than skipped (VERDICT r6 ask #5).
+with the groupBy shuffle and checkpointed by the engine. Each
+micro-batch touches only the keys present in that batch, Arrow-batched
+per group.
 """
 
 from __future__ import annotations
@@ -35,75 +22,15 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-
-def first_seen(
-    stream: DataFrame,
-    key_col: str = "content_hash",
-    payload_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """Emit exactly the first row seen per key; drop all later ones.
-
-    Output schema: (key_col, *payload_cols) with the payload taken
-    from the first row of the first batch containing the key
-    (within-batch order = arrival order in the Arrow batch).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = ", ".join(
-        [f"{key_col} string"] + [f"{c} string" for c in payload_cols]
-    )
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "seen boolean")
-
-        def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timer_values):
-            if self._seen.exists():
-                return
-            first = None
-            for pdf in rows:
-                if len(pdf):
-                    first = pdf.iloc[0]
-                    break
-            if first is None:
-                return
-            self._seen.update((True,))
-            yield pd.DataFrame(
-                {key_col: [str(key[0])]}
-                | {c: [str(first[c])] for c in payload_cols}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=FirstSeen(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )
+OUT_SCHEMA = "content_hash string, doc_id string"
 
 
-def first_seen_apply(
-    stream: DataFrame,
-    key_col: str = "content_hash",
-    payload_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """``first_seen`` on the ``applyInPandasWithState`` API — the same
-    unbounded first-seen-dedup contract (emit each key's first row
-    once EVER, state = one boolean per key carried across
-    micro-batches via the checkpoint) without the protobuf state
-    server ``transformWithStateInPandas`` needs. One operator, two
-    engine APIs; the e2e test asserts the same scenario on whichever
-    the environment supports."""
+def first_seen(stream: DataFrame) -> DataFrame:
+    """Emit exactly the first (``content_hash``, ``doc_id``) row seen
+    per ``content_hash``; drop all later ones. The payload is the
+    first row of the first batch containing the key (within-batch
+    order = arrival order in the Arrow batch)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = ", ".join(
-        [f"{key_col} string"] + [f"{c} string" for c in payload_cols]
-    )
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state):
         if state.exists:
@@ -116,11 +43,8 @@ def first_seen_apply(
         if first is None:
             return
         state.update((True,))
-        yield pd.DataFrame(
-            {key_col: [str(key[0])]}
-            | {c: [str(first[c])] for c in payload_cols}
-        )
+        yield pd.DataFrame({"content_hash": [str(key[0])], "doc_id": [str(first["doc_id"])]})
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, "seen boolean", "append", GroupStateTimeout.NoTimeout
+    return stream.groupBy("content_hash").applyInPandasWithState(
+        fn, OUT_SCHEMA, "seen boolean", "append", GroupStateTimeout.NoTimeout
     )

@@ -53,7 +53,7 @@ from graphql_api_etl_spark.sinks.tables import fs_delete, fs_glob
 # version directory.
 
 
-def _versions(spark: SparkSession, state_dir: str) -> list[int]:
+def committed_versions(spark: SparkSession, state_dir: str) -> list[int]:
     """Committed (_SUCCESS-marked) state versions, ascending — one
     glob RPC over the commit markers themselves."""
     out = []
@@ -92,7 +92,7 @@ class IncrementalReconciler:
         """Latest committed state (optionally: latest BEFORE a given
         batch_id — what a retried batch must re-read)."""
         versions = [
-            v for v in _versions(spark, self.state_dir) if before is None or v < before
+            v for v in committed_versions(spark, self.state_dir) if before is None or v < before
         ]
         if not versions:
             return None
@@ -145,7 +145,7 @@ class IncrementalReconciler:
         While one checkpoint drives the state the versions are dense
         and that is {B, B-1}; naming the newest lower version rather
         than B-1 keeps the retry input even if the ids ever skip."""
-        versions = _versions(spark, self.state_dir)
+        versions = committed_versions(spark, self.state_dir)
         prev = max([v for v in versions if v < batch_id], default=None)
         keep = {batch_id} | ({prev} if prev is not None else set())
         return [v for v in versions if v not in keep]
@@ -169,7 +169,7 @@ class IncrementalReconciler:
         # checkpoint over a kept state_dir: its ids restart at 0, and
         # writing v{batch_id} from "no earlier state" would let
         # retention delete the real state.
-        newer = [v for v in _versions(spark, self.state_dir) if v > batch_id]
+        newer = [v for v in committed_versions(spark, self.state_dir) if v > batch_id]
         if newer:
             raise RuntimeError(
                 f"state_dir {self.state_dir} already holds committed version "
@@ -187,13 +187,13 @@ class IncrementalReconciler:
 
     # -- wiring --------------------------------------------------------
 
-    def attach(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
-        """Start the reconciliation query on a streaming DataFrame."""
-        writer = (
+    def attach(self, stream: DataFrame, checkpoint: str):
+        """Start the reconciliation query on a streaming DataFrame; it
+        drains what is available now and stops."""
+        return (
             stream.writeStream.foreachBatch(self.upsert_batch)
             .option("checkpointLocation", checkpoint)
             .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -1,14 +1,14 @@
 """Custom stateful streaming operator via ``applyInPandasWithState``
 (engine-native; SURVEY §2.10 — the reference has no streaming).
 
-``threshold_alerts`` is the canonical can't-do-with-windows shape: per
-key, keep a LIFETIME running total and emit one alert row each time it
-crosses another multiple of ``threshold``. Built-in windowed aggs
-can't express it (no window bounds the state; the output depends on
-all history), and ``session_window`` has no user-defined emission
-rule — this is exactly what the arbitrary-state API exists for.
+``threshold_crossing_events`` is the canonical can't-do-with-windows
+shape: per key, keep a LIFETIME running total and emit the event that
+crosses each new multiple of a threshold. Built-in windowed aggs can't
+express it (no window bounds the state; the output depends on all
+history), and ``session_window`` has no user-defined emission rule —
+this is exactly what the arbitrary-state API exists for.
 
-Scale design: state is one double per key (GroupState, checkpointed by
+Scale design: state is one bigint per key (GroupState, checkpointed by
 the engine, partitioned with the shuffle); each micro-batch touches
 only keys present in the batch, Arrow-batched per group. Alert volume
 is bounded by value growth, not event count.
@@ -22,61 +22,23 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-OUT_SCHEMA = "user_id string, crossed bigint, total double"
-STATE_SCHEMA = "total double"
-
-
-def threshold_alerts(
-    events: DataFrame,
-    threshold: float = 100.0,
-    key_col: str = "user_id",
-    val_col: str = "value",
-) -> DataFrame:
-    """One output row per (key, crossed multiple of ``threshold``),
-    with the running total at the batch where the crossing happened."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        total = state.get[0] if state.exists else 0.0
-        before = int(total // threshold)
-        for pdf in pdfs:
-            total += float(pdf[val_col].sum())
-        state.update((total,))
-        after = int(total // threshold)
-        if after > before:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * (after - before),
-                    "crossed": list(range(before + 1, after + 1)),  # level index
-                    "total": [total] * (after - before),
-                }
-            )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn, OUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
-    )
-
-
 CROSSING_OUT_SCHEMA = (
     "user_id bigint, event_id bigint, alert_ts timestamp, "
     "cum_cents bigint, level bigint"
 )
 CROSSING_STATE_SCHEMA = "cum bigint"
+THRESHOLD_CENTS = 50_000
 
 
-def threshold_crossing_events(
-    events: DataFrame, threshold_cents: int = 50_000
-) -> DataFrame:
-    """Per-EVENT threshold crossings — the oracle-exact sibling of
-    ``threshold_alerts``: the state is the key's lifetime cumulative
-    value in EXACT integer cents, rows are replayed in (ts, event_id)
-    order inside each group, and the operator emits the precise event
-    that pushes the total across each new multiple of
-    ``threshold_cents`` (with the total and level at that moment).
+def threshold_crossing_events(events: DataFrame) -> DataFrame:
+    """Per-EVENT threshold crossings: the state is the key's lifetime
+    cumulative value in EXACT integer cents, rows are replayed in
+    (ts, event_id) order inside each group, and the operator emits the
+    precise event that pushes the total across each new multiple of
+    ``THRESHOLD_CENTS`` (with the total and level at that moment).
     Integer arithmetic makes the crossing decision bit-exact across
     engines — a float running total could flip a boundary comparison
-    on summation order, which is fine for alerting (threshold_alerts)
-    but not for a differential gate.
+    on summation order.
 
     The group's Arrow chunks are concatenated BEFORE the sort: a large
     group spans multiple chunks within one micro-batch, and sorting
@@ -90,11 +52,11 @@ def threshold_crossing_events(
         out_ev, out_ts, out_cum, out_lvl = [], [], [], []
         for _, row in pdf.iterrows():
             nxt = cum + int(row["cents"])
-            if nxt // threshold_cents > cum // threshold_cents:
+            if nxt // THRESHOLD_CENTS > cum // THRESHOLD_CENTS:
                 out_ev.append(int(row["event_id"]))
                 out_ts.append(row["ts"])
                 out_cum.append(nxt)
-                out_lvl.append(nxt // threshold_cents)
+                out_lvl.append(nxt // THRESHOLD_CENTS)
             cum = nxt
         state.update((cum,))
         if out_ev:

@@ -101,3 +101,29 @@ def test_no_decimal_rounded_interpolated_percentiles_in_catalog_source():
         "decimal-rounded interpolated percentile(s) found — use the "
         "integer-scaled output pattern instead:\n" + "\n".join(offenders)
     )
+
+
+def test_every_streaming_export_has_a_catalog_or_sync_caller():
+    """``streaming`` exports only operators the product runs: each name
+    in its ``__all__`` is called by a catalog module or by the weekly
+    sync, so no streaming operator survives that only its own test
+    exercises."""
+    import os
+    import re
+
+    from graphql_api_etl_spark import streaming
+
+    pkg = os.path.dirname(os.path.dirname(streaming.__file__))
+    qdir = os.path.join(pkg, "queries")
+    callers = [os.path.join(qdir, fn) for fn in sorted(os.listdir(qdir)) if fn.endswith(".py")]
+    callers += [
+        os.path.join(pkg, "queries_stream.py"),
+        os.path.join(pkg, "queries_graph.py"),
+        os.path.join(pkg, "pipelines", "weekly_alignments.py"),
+    ]
+    src = "\n".join(open(p).read() for p in callers)
+    uncalled = [
+        name for name in streaming.__all__
+        if not re.search(rf"(?<!def )\b{re.escape(name)}\(", src)
+    ]
+    assert uncalled == [], f"streaming exports with no catalog or sync caller: {uncalled}"

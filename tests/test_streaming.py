@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphql_api_etl_spark.sources.registry import load_table
-from graphql_api_etl_spark.streaming.windows import sessionized, windowed_counts
+from graphql_api_etl_spark.streaming.windows import interval_join, sessionized, windowed_counts
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +36,7 @@ def _run_available_now(stream_df, name: str):
 
 def test_windowed_counts_matches_batch(spark, events_stream):
     stream, batch = events_stream
-    q = _run_available_now(windowed_counts(stream, window="1 hour"), "win_counts")
+    q = _run_available_now(windowed_counts(stream, ["event_type"]), "win_counts")
     try:
         got = {
             (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
@@ -58,7 +58,7 @@ def test_windowed_counts_matches_batch(spark, events_stream):
 
 def test_session_windows_stream(spark, events_stream):
     stream, batch = events_stream
-    q = _run_available_now(sessionized(stream, gap="30 minutes"), "sess")
+    q = _run_available_now(sessionized(stream), "sess")
     try:
         rows = spark.sql("SELECT * FROM sess").collect()
         assert len(rows) > 0
@@ -229,63 +229,11 @@ def test_incremental_reconcile_fresh_checkpoint_over_kept_state_raises(spark, tm
     assert {v: version_rows(v) for v in (0, 1)} == before
 
 
-def test_threshold_alerts_stateful_across_batches(spark, tmp_path):
-    """applyInPandasWithState: lifetime per-key running totals emit one
-    alert per crossed threshold multiple, with state carried across
-    micro-batches via the checkpoint (no window bounds the state)."""
-    from graphql_api_etl_spark.streaming.stateful import threshold_alerts
-
-    src_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    schema = "user_id string, value double"
-
-    def drain(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src_dir)
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = (
-            threshold_alerts(stream, threshold=100.0)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        return {(r["user_id"], r["crossed"], r["total"]) for r in spark.read.parquet(out_dir).collect()}
-
-    # batch 1: u1 crosses level 1 (120); u2 stays below (50)
-    got1 = drain([("u1", 120.0), ("u2", 50.0)])
-    assert got1 == {("u1", 1, 120.0)}
-
-    # batch 2: u1 +90 -> 210 crosses level 2; u2 +60 -> 110 crosses 1
-    got2 = drain([("u1", 90.0), ("u2", 60.0)])
-    assert got2 == {("u1", 1, 120.0), ("u1", 2, 210.0), ("u2", 1, 110.0)}
-
-    # batch 3: one event crossing TWO levels at once (u2 +250 -> 360)
-    got3 = drain([("u2", 250.0)])
-    assert got3 == got2 | {("u2", 2, 360.0), ("u2", 3, 360.0)}
-
-
 def test_first_seen_streaming_dedup_across_batches(spark, tmp_path):
     """First-seen streaming dedup emits each key once EVER — later
     batches with the same key emit nothing, state carried via the
-    checkpoint. The operator exists on both arbitrary-state APIs
-    (transformWithStateInPandas needs protobuf for its state server;
-    first_seen_apply is the applyInPandasWithState twin with identical
-    semantics) — the SAME scenario runs end-to-end on whichever the
-    environment supports, never skipped (VERDICT r6 ask #5)."""
-    from graphql_api_etl_spark.streaming.dedup_stream import (
-        first_seen as first_seen_tws,
-        first_seen_apply,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401 — TWS state-server dependency
-
-        first_seen = first_seen_tws
-    except ImportError:
-        first_seen = first_seen_apply
+    checkpoint (applyInPandasWithState)."""
+    from graphql_api_etl_spark.streaming.dedup_stream import first_seen
 
     src_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     schema = "content_hash string, doc_id string"
@@ -336,7 +284,7 @@ def test_watermark_drops_late_events_append_mode(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src_dir)
         stream = spark.readStream.schema(schema).parquet(src_dir)
         q = (
-            windowed_counts(stream, window="1 hour", watermark="10 minutes")
+            windowed_counts(stream, ["event_type"])
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
@@ -355,14 +303,14 @@ def test_watermark_drops_late_events_append_mode(spark, tmp_path):
             return {}
 
     # run 1: two events in the 10:00 window, one at 12:00 that will
-    # push the watermark past the 10:00 window's end
+    # push the (one-hour) watermark to the 10:00 window's end
     drain([(t(10, 0), "click", 1.0), (t(10, 30), "click", 1.0), (t(12, 0), "click", 1.0)])
-    # run 2: a LATE event at 09:00 (watermark is now 11:50 — must be
+    # run 2: a LATE event at 09:00 (watermark is now 11:00 — must be
     # dropped) plus a fresh one at 13:00; the closed 10:00 window emits
     got2 = drain([(t(9, 0), "click", 1.0), (t(13, 0), "click", 1.0)])
     assert got2.get((10, "click")) == 2
     assert (9, "click") not in got2
-    # run 3: advance the watermark past 13:00 — the 12:00 window (1
+    # run 3: advance the watermark to 13:00 — the 12:00 window (1
     # event, NOT polluted by the late 09:00 row) emits; 09:00 never does
     got3 = drain([(t(14, 0), "click", 1.0)])
     assert got3.get((12, "click")) == 1
@@ -370,18 +318,16 @@ def test_watermark_drops_late_events_append_mode(spark, tmp_path):
 
 
 def test_stream_stream_join_matches_batch(spark, events_stream):
-    """Event-time stream-stream inner join (click → purchase within 30
-    minutes per user): append-mode availableNow run must produce
-    exactly the batch join's row set — the watermark only bounds
-    STATE here (no late data in a single ordered replay), so no rows
-    may be dropped."""
-    from graphql_api_etl_spark.streaming.windows import stream_stream_join
-
+    """Event-time stream-stream inner interval join (click → purchase
+    in the hour after it, per user): append-mode availableNow run must
+    produce exactly the batch join's row set — the watermark only
+    bounds STATE here (no late data in a single ordered replay), so no
+    rows may be dropped."""
     stream, batch = events_stream
     clicks_s = stream.filter(F.col("event_type") == "click")
     buys_s = stream.filter(F.col("event_type") == "purchase")
     q = (
-        stream_stream_join(clicks_s, buys_s)
+        interval_join(clicks_s, buys_s, "inner")
         .writeStream.format("memory")
         .queryName("ssj")
         .outputMode("append")
@@ -396,9 +342,10 @@ def test_stream_stream_join_matches_batch(spark, events_stream):
         }
         expected = {
             (r["l_event"], r["r_event"])
-            for r in stream_stream_join(
+            for r in interval_join(
                 batch.filter(F.col("event_type") == "click"),
                 batch.filter(F.col("event_type") == "purchase"),
+                "inner",
             ).collect()
         }
         assert got == expected
@@ -553,7 +500,7 @@ def test_threshold_crossing_events_state_carries_across_batches(spark, tmp_path)
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src_dir)
     name = "cross_" + uuid.uuid4().hex[:8]
     q = (
-        threshold_crossing_events(stream, threshold_cents=50_000)
+        threshold_crossing_events(stream)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
