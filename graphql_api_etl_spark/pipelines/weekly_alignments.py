@@ -54,13 +54,18 @@ that more than one action reads, and whose plan shuffles, is
 materialized once (:class:`Materializer`); every count rides a
 checkpoint that runs anyway or comes from the write that posts the
 frame. Re-reading a plan with no exchange (the driver-built API
-snapshots) costs no more jobs than materializing it.
+snapshots) costs no more jobs than materializing it. The file drop is
+read once, into the sync's first checkpoint: re-reading it would
+re-run its parser (for an ``.xlsx`` drop, Python) in every action.
 
 For the same reason the sync keeps two driver threads busy instead of
-one (:func:`run_weekly_sync`). The reference runs its steps one after
-another, but phase 3's merges never read phase 2's output: a background
-thread fetches the users and the pass-1 locations while phase 1 writes
-the hierarchy, then computes phase 3's pure half
+one (:func:`run_weekly_sync`), and schedules its pure work by what it
+reads, not by its phase. The reference runs its steps one after
+another, but pass 1 of the location reconcile reads only the drop and
+the API's locations, and phase 3's merges never read phase 2's output:
+a background thread fetches the users and runs pass 1
+(:func:`reconcile_location_pass`) while phase 1 writes the hierarchy,
+then computes phase 3's pure half with the corporate pairs
 (:func:`user_permission_pairs`) while the main thread runs phase 2.
 Every effect — a post, a report CSV, a gate, a report entry — stays on
 the main thread, in the reference's order.
@@ -71,7 +76,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark import inheritable_thread_target
@@ -118,10 +123,11 @@ class PipelineContext:
     A sync calls each of them once, and ``fetch_locations`` a second
     time only after the self-healing load:
 
-    - ``fetch_users`` and pass 1's ``fetch_locations`` are called at
-      sync start, on the sync's background thread, while phase 1 writes
-      the hierarchy: nothing in the sync adds users, and phase 1 writes
-      only hierarchy groups.
+    - ``fetch_users`` is called at sync start and pass 1's
+      ``fetch_locations`` once the drop is materialized, both on the
+      sync's background thread, while phase 1 writes the hierarchy:
+      nothing in the sync adds users, and phase 1 writes only hierarchy
+      groups.
     - ``fetch_hierarchy_groups`` is called on the main thread after
       phase 1's writes.
     - Pass 2's ``fetch_locations`` (the reference's second merge pass,
@@ -292,22 +298,34 @@ def missing_location_payload(missing: DataFrame) -> DataFrame:
     ).na.fill("")
 
 
+def reconcile_location_pass(
+    ctx: PipelineContext, materialize: Materializer
+) -> tuple[DataFrame, dict]:
+    """One location pass: fetch the API's locations, choose the F8 key
+    over them and materialize :func:`reconcile_locations`. Returns the
+    checkpointed merge and its provenance counts. It has no effect, so
+    the sync runs pass 1 on its background thread; pass 2 runs on the
+    main thread after the self-healing load."""
+    api_locations = ctx.fetch_locations()
+    key = choose_location_key(api_locations)
+    return materialize(reconcile_locations(ctx.alignments, api_locations, key))
+
+
 def map_locations_to_hierarchies(
     ctx: PipelineContext,
     report: SyncReport,
     groups: DataFrame,
-    api_locations: DataFrame,
+    pass1: tuple[DataFrame, dict],
     materialize: Materializer,
 ) -> DataFrame:
-    """The relational core (§3.3): reconcile the file drop with
-    ``api_locations`` (the API's locations, fetched before the call),
-    load the anti-join remainder, re-fetch, reconcile again, then map
-    matched locations to the districts among ``groups`` (the sync's
+    """The relational core (§3.3): take pass 1's reconcile
+    (:func:`reconcile_location_pass`, run before the call), load the
+    anti-join remainder, re-fetch, reconcile again, then map matched
+    locations to the districts among ``groups`` (the sync's
     hierarchy-group snapshot) and collect location sets per district
     (A1). When pass 1 finds nothing missing, nothing is loaded, so pass
     1's merge and counts serve as pass 2's."""
-    key = choose_location_key(api_locations)
-    merged, n = materialize(reconcile_locations(ctx.alignments, api_locations, key))
+    merged, n = pass1
     report.note("locations_matched_pass1", n[MERGE_BOTH])
     report.note("locations_missing_pass1", n[MERGE_LEFT])
 
@@ -318,13 +336,12 @@ def map_locations_to_hierarchies(
         payload = missing_location_payload(missing)
         report.reports["missing_locations"] = write_csv_report(payload, path)
         report.note("location_add_failures", ctx.location_sink.write(payload).failed)
-        api_locations = ctx.fetch_locations()
-        # The reference re-evaluates the remoteId-emptiness switch after
-        # the self-healing load (second ``(node_remoteId == '').all()``,
+        # Pass 2 re-fetches and re-chooses the key, as the reference
+        # re-evaluates the remoteId-emptiness switch after the
+        # self-healing load (second ``(node_remoteId == '').all()``,
         # ETL:~481): if the load populated remoteIds, pass 2 joins on
         # remoteId even though pass 1 joined on name.
-        key = choose_location_key(api_locations)
-        merged, n = materialize(reconcile_locations(ctx.alignments, api_locations, key))
+        merged, n = reconcile_location_pass(ctx, materialize)
 
     both, still_missing, deprecated = split_by_provenance(merged)
     # V3 residual warning + V5 deprecated-locations CSV (ETL:508–524)
@@ -392,6 +409,7 @@ class PermissionFrames:
     n_userless: int
     equity_pairs: int  # |equity users × equity region groups|
     pairs: DataFrame  # materialized (user_id, group_id) permissions
+    corporate: DataFrame  # materialized (user_id, group_id) corporate grants not in pairs
 
 
 def user_permission_pairs(
@@ -400,7 +418,9 @@ def user_permission_pairs(
     """Phase 3's pure half: (hierarchy_name, email, role) long table →
     API ids (``users``, e-mails normalized) and group ids (``groups``)
     → equity cross-join expansion (J6) minus equity rows from the
-    normal path (J9) → materialized (user_id, group_id) pairs.
+    normal path (J9) → materialized (user_id, group_id) pairs, and the
+    corporate grants (:func:`corporate_permission_pairs`) not among
+    them, materialized too.
 
     It reads only the file drop and the sync's users/groups snapshot,
     never phase 2's output, and has no effect: it posts nothing, writes
@@ -481,6 +501,7 @@ def user_permission_pairs(
     )
     normal_pairs = pairs.filter(~is_equity_region).select("user_id", "group_id")
     final, _ = materialize(equity_pairs.unionByName(normal_pairs).distinct())
+    corporate, _ = materialize(corporate_permission_pairs(ctx, final, users, groups))
     return PermissionFrames(
         unmatched_file=unmatched_file.select("hierarchy_name", "email"),
         n_unmatched_file=n_users[MERGE_LEFT],
@@ -490,6 +511,7 @@ def user_permission_pairs(
         n_userless=n_groups[MERGE_RIGHT],
         equity_pairs=n_equity["equity_users"] * n_equity["equity_groups"],
         pairs=final,
+        corporate=corporate,
     )
 
 
@@ -554,18 +576,26 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     batched sinks; each write returns the record and failure counts the
     report records (A8, ETL:706–731).
 
-    Work that reads no earlier phase's output runs on a background
-    thread (:func:`background_thread`) while the main thread waits on
-    Spark: the users and pass-1 locations fetches during phase 1, and
-    phase 3's pure half (:func:`user_permission_pairs`) during phase 2.
-    The main thread applies every effect in the reference's order, so
-    the posts, CSVs, gates and counts are those of a serial run. The
-    background thread is drained before any checkpoint is released."""
+    The drop is read once: its first step materializes
+    ``ctx.alignments``, and every later plan reads that checkpoint.
+    Work is scheduled by what it reads, not by its phase: work that
+    reads no earlier phase's output runs on a background thread
+    (:func:`background_thread`) as soon as its inputs exist, while the
+    main thread waits on Spark — the users fetch and pass 1's location
+    reconcile (:func:`reconcile_location_pass`) during phase 1, phase
+    3's pure half with the corporate pairs
+    (:func:`user_permission_pairs`) during phase 2. The main thread
+    applies every effect in the reference's order, so the posts, CSVs,
+    gates and counts are those of a serial run. The background thread
+    is drained before any checkpoint is released."""
     report = SyncReport()
     spark = ctx.alignments.sparkSession
     with Materializer() as materialize, background_thread(spark) as submit:
         users_fetched = submit(ctx.fetch_users)
-        locations_fetched = submit(ctx.fetch_locations)
+        # The drop is scanned once; every later plan reads the checkpoint.
+        drop, _ = materialize(ctx.alignments)
+        ctx = replace(ctx, alignments=drop)
+        pass1 = submit(reconcile_location_pass, ctx, materialize)
 
         # Phase 1: hierarchy levels + groups, written one level at a
         # time, parent level before child. The level list is observed
@@ -586,9 +616,7 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
         permissions = submit(user_permission_pairs, ctx, users, groups, materialize)
 
         # Phase 2: locations → district assignments.
-        assignments = map_locations_to_hierarchies(
-            ctx, report, groups, locations_fetched.result(), materialize
-        )
+        assignments = map_locations_to_hierarchies(ctx, report, groups, pass1.result(), materialize)
         posted = ctx.assignment_sink.write(
             assignments.select("district_group_id", F.col("location_ids").cast("array<string>"))
         )
@@ -596,7 +624,8 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
         report.note("assignment_failures", posted.failed)
 
         # Phase 3: user + corporate permissions.
-        pairs = build_user_permission_frame(ctx, report, permissions.result())
+        frames = permissions.result()
+        pairs = build_user_permission_frame(ctx, report, frames)
         posted = ctx.permission_sink.write(pairs)
         report.note("permission_pairs", posted.records)
         report.note("permission_failures", posted.failed)
@@ -606,7 +635,7 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
             )
             report.reports["failed_permissions"] = f"{ctx.report_dir}/failed_permissions"
 
-        posted = ctx.permission_sink.write(corporate_permission_pairs(ctx, pairs, users, groups))
+        posted = ctx.permission_sink.write(frames.corporate)
         report.note("corporate_pairs_new", posted.records)
         report.note("corporate_permission_failures", posted.failed)
     return report

@@ -34,7 +34,12 @@ Determinism notes:
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,18 +77,22 @@ def _pin_ntz(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+@contextmanager
+def _events_stream(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
+    """The events file as a stream, for the ``with`` block. Run the
+    stream to completion inside the block: its landing directory is
+    removed when the block ends."""
     _pin_ntz(spark)
     # FileStreamSource requires a DIRECTORY, but the testdata dir holds
     # ALL tables' parquet side by side — stream a temp dir holding a
     # symlink to the events file (zero copy; a real deployment streams
     # a dedicated landing directory to begin with).
-    import os
-    import tempfile
-
     src_dir = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events.parquet")
-    return spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(src_dir)
+    try:
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events.parquet")
+        yield spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(src_dir)
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
 
 
 def _run_to_memory(agg: DataFrame, mode: str) -> DataFrame:
@@ -126,8 +135,8 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     query writes append-mode to parquet with the watermark closing
     windows — the memory/complete shape is the gate harness, not the
     deployment shape."""
-    agg = windowed_counts(_events_stream(spark, sf_dir), ["event_type"])
-    out = _run_to_memory(agg, "complete")
+    with _events_stream(spark, sf_dir) as events:
+        out = _run_to_memory(windowed_counts(events, ["event_type"]), "complete")
     return out.select("window_start", "event_type", "n_events", "total_value")
 
 
@@ -144,12 +153,9 @@ def stream_distinct_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked against batch DISTINCT. On a live stream this wants
     dropDuplicatesWithinWatermark to bound state; availableNow over a
     finite source is the bounded-gate harness."""
-    dedup = (
-        _events_stream(spark, sf_dir)
-        .select("user_id", "event_type")
-        .dropDuplicates(["user_id", "event_type"])
-    )
-    return _run_to_memory(dedup, "append")
+    with _events_stream(spark, sf_dir) as events:
+        dedup = events.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
+        return _run_to_memory(dedup, "append")
 
 
 @_q(
@@ -176,9 +182,6 @@ def stream_latest_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming.reconcile's commit rule (``committed_versions``: only
     ``_SUCCESS``-marked ``v{N}``), so a crashed partial write is never
     read, exactly like IncrementalReconciler."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
     from graphql_api_etl_spark.streaming.reconcile import committed_versions
@@ -201,18 +204,18 @@ def stream_latest_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         red.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
 
     try:
-        q = (
-            _events_stream(spark, sf_dir)
-            .select(*cols)
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(600)
-        finally:
-            q.stop()
+        with _events_stream(spark, sf_dir) as events:
+            q = (
+                events.select(*cols)
+                .writeStream.foreachBatch(upsert)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination(600)
+            finally:
+                q.stop()
         # Pin the final state BEFORE the temp dirs go away (the frame
         # is per-user latest state, |users| rows) so both mkdtemp dirs
         # can be removed here instead of leaking per invocation — the
@@ -267,7 +270,8 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Session identity is (user_id, session start); per-session ordinal
     numbering is emitted by neither side since the two engines count
     sessions in different orders."""
-    out = _run_to_memory(sessionized(_events_stream(spark, sf_dir)), "complete")
+    with _events_stream(spark, sf_dir) as events:
+        out = _run_to_memory(sessionized(events), "complete")
     return out.select("user_id", "session_start", "n_events", "total_value")
 
 
@@ -301,29 +305,26 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graphql_api_etl_spark.sources.registry import load_table
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    enriched = _events_stream(spark, sf_dir).join(
-        F.broadcast(cust), F.col("user_id") == F.col("c_custkey")
-    )
-    agg = enriched.groupBy(
-        F.col("c_mktsegment").alias("segment"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    out = _run_to_memory(agg, "complete")
-    # exact COUNT(DISTINCT) is unsupported as streaming aggregate
-    # state, so n_users comes from a second streaming pass: exact
-    # dedup state over (segment, event_type, user_id) then a grouped
-    # count — the standard streaming decomposition of distinct.
-    dedup = (
-        _events_stream(spark, sf_dir)
-        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-        .select(F.col("c_mktsegment").alias("segment"), "event_type", "user_id")
-        .dropDuplicates(["segment", "event_type", "user_id"])
-        .groupBy("segment", "event_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
-    )
-    users = _run_to_memory(dedup, "complete")
+    with _events_stream(spark, sf_dir) as events:
+        enriched = events.join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
+        agg = enriched.groupBy(
+            F.col("c_mktsegment").alias("segment"), "event_type"
+        ).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        out = _run_to_memory(agg, "complete")
+        # exact COUNT(DISTINCT) is unsupported as streaming aggregate
+        # state, so n_users comes from a second streaming pass: exact
+        # dedup state over (segment, event_type, user_id) then a grouped
+        # count — the standard streaming decomposition of distinct.
+        dedup = (
+            enriched.select(F.col("c_mktsegment").alias("segment"), "event_type", "user_id")
+            .dropDuplicates(["segment", "event_type", "user_id"])
+            .groupBy("segment", "event_type")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
+        )
+        users = _run_to_memory(dedup, "complete")
     return (
         out.select("segment", "event_type", "n_events", "total_value")
         .join(users, ["segment", "event_type"])
@@ -377,8 +378,6 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real deployment already has."""
     import datetime
     import glob as _glob
-    import os
-    import shutil
 
     from graphql_api_etl_spark.queries.tpch import _layout_cache_path, _publish_layout
     from graphql_api_etl_spark.sources.registry import load_table
@@ -434,13 +433,13 @@ def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
     """Views (left) interval-joined to the purchases (right) in the hour
     after them, through ``streaming.interval_join``, run append-mode to
     the memory sink and projected to the oracles' columns."""
-    events = _events_stream(spark, sf_dir)
-    joined = interval_join(
-        events.filter(F.col("event_type") == "view"),
-        events.filter(F.col("event_type") == "purchase"),
-        how,
-    )
-    out = _run_to_memory(joined, "append")
+    with _events_stream(spark, sf_dir) as events:
+        joined = interval_join(
+            events.filter(F.col("event_type") == "view"),
+            events.filter(F.col("event_type") == "purchase"),
+            how,
+        )
+        out = _run_to_memory(joined, "append")
     return out.select(
         F.col("l_event").alias("view_id"),
         F.col("r_event").alias("purchase_id"),
@@ -523,11 +522,12 @@ def stream_threshold_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed and shuffle-partitioned — alert volume is bounded by
     value growth, not event count, so the operator holds at any
     corpus size."""
-    ev = _events_stream(spark, sf_dir).select(
-        "user_id", "event_id", "ts",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    out = _run_to_memory(threshold_crossing_events(ev), "append")
+    with _events_stream(spark, sf_dir) as events:
+        ev = events.select(
+            "user_id", "event_id", "ts",
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        )
+        out = _run_to_memory(threshold_crossing_events(ev), "append")
     return out.select("user_id", "event_id", "alert_ts", "cum_cents", "level")
 
 
@@ -561,7 +561,8 @@ def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale notes as the other availableNow gates: watermark bounds
     state; the memory sink holds an hourly rollup, report-sized by
     construction."""
-    out = _run_to_memory(windowed_counts(_events_stream(spark, sf_dir), []), "append")
+    with _events_stream(spark, sf_dir) as events:
+        out = _run_to_memory(windowed_counts(events, []), "append")
     return out.select("window_start", "n_events", "total_value")
 
 
@@ -590,9 +591,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     horizon in production (the point of the operator); the memory sink
     holds the key projection, and the differential keys are the full
     id/user/type triple so a wrong-row keep is visible."""
-    import os
-    import tempfile
-
     _pin_ntz(spark)
     src_dir = tempfile.mkdtemp(prefix="events_stream_dup_")
     try:
@@ -613,8 +611,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     finally:
         # the availableNow run completes inside _run_to_memory, so the
         # landing dir is removable here (upsert-entry discipline, r9)
-        import shutil
-
         shutil.rmtree(src_dir, ignore_errors=True)
 
 

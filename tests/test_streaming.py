@@ -573,3 +573,21 @@ def test_adds_only_classifier_above_broadcast_cap_still_appends(
     got = {r["id"]: r["v"] for r in out.collect()}
     assert got == {"a": "A0", "b": "B0"}
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_events_stream_entry_leaves_no_landing_directory(spark, sf_oracle_dir):
+    """A catalog stream entry removes the directory it streams the
+    events file from once its run has finished, and its result stays
+    readable: one ``stream_hourly_counts`` call adds no
+    ``events_stream_*`` directory to the temp directory."""
+    import glob
+    import os
+    import tempfile
+
+    from graphql_api_etl_spark.queries_stream import stream_hourly_counts
+
+    pattern = os.path.join(tempfile.gettempdir(), "events_stream_*")
+    before = set(glob.glob(pattern))
+    rows = stream_hourly_counts(spark, sf_oracle_dir).collect()
+    assert rows
+    assert set(glob.glob(pattern)) - before == set()

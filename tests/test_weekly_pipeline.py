@@ -72,6 +72,7 @@ def test_location_key_reevaluated_after_selfheal_refetch(spark, tmp_path):
         Materializer,
         SyncReport,
         map_locations_to_hierarchies,
+        reconcile_location_pass,
     )
 
     loc_spool = str(tmp_path / "spool_loc")
@@ -110,9 +111,8 @@ def test_location_key_reevaluated_after_selfheal_refetch(spark, tmp_path):
     )
     report = SyncReport()
     with Materializer() as materialize:
-        map_locations_to_hierarchies(
-            ctx, report, ctx.fetch_hierarchy_groups(), ctx.fetch_locations(), materialize
-        )
+        pass1 = reconcile_location_pass(ctx, materialize)
+        map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), pass1, materialize)
     # pass 1 on name: Alpha..Delta match; Echo+Foxtrot loaded
     assert report.counts["locations_matched_pass1"] == 4
     assert report.counts["locations_missing_pass1"] == 2
@@ -276,9 +276,28 @@ def test_sync_fetches_users_and_groups_once(spark, ctx_and_spools, tmp_path, mon
     assert report.counts["locations_matched_pass2"] == report.counts["locations_matched_pass1"] == 6
 
 
-# The fixture sync's Spark jobs (48) plus 10 %. Jobs are mostly fixed
-# cost, so a frame re-read lazily or a count per slice shows up here
-# before it shows in a timing.
+def test_sync_reads_the_drop_once(spark, ctx_and_spools):
+    """The sync scans the file drop once, into a checkpoint that every
+    later plan reads: each row of the drop passes a counting
+    ``mapInPandas`` exactly once. A sync whose plans read the drop
+    itself scans it once per action that reaches it (hierarchy levels,
+    each location pass, the permission long table)."""
+    ctx, _ = ctx_and_spools
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for batch in batches:
+            rows_read.add(len(batch))
+            yield batch
+
+    drop = ctx.alignments
+    run_weekly_sync(replace(ctx, alignments=drop.mapInPandas(counted, drop.schema)))
+    assert rows_read.value == drop.count()
+
+
+# The fixture sync's Spark jobs (50) plus a margin of 2. Jobs are
+# mostly fixed cost, so a frame re-read lazily or a count per slice
+# shows up here before it shows in a timing.
 SYNC_JOB_BUDGET = 52
 
 
@@ -400,6 +419,33 @@ def test_failed_user_fetch_raises_after_phase_one(spark, ctx_and_spools):
     assert _sync_threads() == []
 
 
+def test_failed_pass1_fetch_raises_after_phase_one(spark, ctx_and_spools):
+    """Pass 1's ``fetch_locations`` runs on the background thread right
+    after the drop is read, but its failure surfaces where a serial
+    sync would meet it: after phase 1's hierarchy writes, before any
+    location is loaded. Nothing stays materialized and no sync thread
+    is left."""
+    import threading
+
+    ctx, spools = ctx_and_spools
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    held_before = persistent().size()
+    fetched_on = []
+
+    def fetch_locations():
+        fetched_on.append(threading.current_thread().name)
+        raise ConnectionError("locations connection down")
+
+    with pytest.raises(ConnectionError, match="locations connection down"):
+        run_weekly_sync(replace(ctx, fetch_locations=fetch_locations))
+    assert len(fetched_on) == 1 and fetched_on[0].startswith("weekly-sync")
+    assert len(read_spool(spools["assign"])) == 7  # every hierarchy row
+    assert read_spool(spools["loc"]) == []
+    assert read_spool(spools["perm"]) == []
+    assert persistent().size() == held_before
+    assert _sync_threads() == []
+
+
 def test_failed_pass2_fetch_drains_background_work(spark, ctx_and_spools, monkeypatch):
     """A pass-2 ``fetch_locations`` that raises ends the sync with that
     error. The background thread is drained before the sync's
@@ -460,6 +506,7 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
         Materializer,
         SyncReport,
         map_locations_to_hierarchies,
+        reconcile_location_pass,
     )
 
     calls = {"n": 0}
@@ -486,9 +533,8 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
     )
     report = SyncReport()
     with Materializer() as materialize:
-        map_locations_to_hierarchies(
-            ctx, report, ctx.fetch_hierarchy_groups(), ctx.fetch_locations(), materialize
-        )
+        pass1 = reconcile_location_pass(ctx, materialize)
+        map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), pass1, materialize)
     assert report.counts["locations_missing_pass1"] == 2
     assert report.counts["location_add_failures"] == 1
     unloaded = spark.read.option("header", True).csv(report.reports["still_unloaded"])
