@@ -16,17 +16,16 @@ and adapts it to the engine's two pluggable seams:
   endpoint on the driver (the stream reads pages landed on disk).
 - :class:`HttpMutationClient` → ``sinks.mutations`` ``post_batch``
   contract, so :class:`~graphql_api_etl_spark.sinks.mutations.MutationSink`
-  posts over the wire from executors (one client per partition via
-  :class:`HttpClientFactory`, which is pickle-friendly by construction).
+  posts over the wire (one client per write via
+  :class:`HttpClientFactory`).
 
-Scale note: the sink opens one client per *partition* and batches
-``batch_size`` records per POST, so at cluster scale the request count
-is ``rows / batch_size`` spread across executors — the reference's
-one-request-per-row driver loop is the thing this replaces. The client
-keeps ONE persistent HTTP/1.1 connection alive across those POSTs
-(stale connections transparently reopen), matching how real GraphQL
-endpoints throttle: per-connection, not per-request — a
-connection-per-POST client at 1000 executors looks like a SYN flood.
+Scale note: the sink opens one client per *write* and batches
+``batch_size`` records per POST, so the request count is
+``ceil(rows / batch_size)`` — the reference's one-request-per-row loop
+is the thing this replaces. The client keeps ONE persistent HTTP/1.1
+connection alive across those POSTs (stale connections transparently
+reopen), matching how real GraphQL endpoints throttle: per-connection,
+not per-request.
 """
 
 from __future__ import annotations
@@ -57,9 +56,8 @@ class HttpGQLApi:
 
     One persistent HTTP/1.1 connection is reused across ``post`` calls
     (keep-alive): the mutation sink's contract is one client per
-    partition posting ``batch_size`` records per request, so reuse
-    bounds the connection count at one per partition instead of one
-    per batch. A stale keep-alive socket (server closed between
+    write posting ``batch_size`` records per request, so reuse bounds
+    the connection count at one per write instead of one per batch. A stale keep-alive socket (server closed between
     batches) reopens transparently — exactly once per request, so a
     genuinely dead endpoint still raises. The reopen re-sends the
     request, which can double-send if the server died mid-response;
@@ -252,11 +250,15 @@ class HttpMutationClient:
             for r, s in zip(records, per_record)
         ]
 
+    def close(self) -> None:
+        """Close the API's connection (the sink calls it after a write)."""
+        self.api.close()
+
 
 class HttpClientFactory:
-    """Executor-side factory for :class:`MutationSink` — carries only
-    plain strings/numbers, so pickling it into a Spark task never drags
-    a live socket or session across the serialization boundary."""
+    """Client factory for :class:`MutationSink` — carries only plain
+    strings/numbers; each call opens a fresh client, so every write
+    gets its own connection and closes it when it returns."""
 
     def __init__(
         self,

@@ -25,8 +25,9 @@ corporate permissions   semi join + cross join + left-anti vs assigned
                         (ETL:915–967)
 gates                   sinks.gates (V1–V5); every anti-join remainder lands
                         as a CSV report before the gate fires (ETL:817–827)
-mutations               sinks.MutationSink — foreachPartition batching
-                        replaces the reference's per-row HTTP loop
+mutations               sinks.MutationSink — one Arrow collect per write,
+                        posted from the driver in batches, replaces the
+                        reference's per-row HTTP loop
                         (ETL:357–366, 461–470, 707–714)
 =====================  =====================================================
 
@@ -34,8 +35,8 @@ Scale notes: every join here keys on names/emails (dimension-sized in
 the reference's domain) — at data-warehouse scale the same DAG holds
 because the engine's outer_merge degrades gracefully to sort-merge with
 AQE skew splitting, the dim sides broadcast, and the mutation sink
-batches per partition. Nothing in this module collects a fact table to
-the driver; the only driver-side values are
+posts in batches. Nothing in this module collects a fact table to the
+driver; the only driver-side values are
 
 - the F8 plan switch (ETL:390), a "no counterexample" check over the
   driver-built API snapshot that the optimizer answers without a job;
@@ -46,8 +47,9 @@ the driver; the only driver-side values are
   checkpoint;
 - the distinct hierarchy levels (one value per tree level), observed
   on the hierarchy checkpoint;
-- each mutation write's record and failure counts, tallied by the
-  posting tasks.
+- each mutation write's payload (the delta to post, dimension-sized),
+  collected once and posted from the driver, with the record and
+  failure counts counted as it posts.
 
 Spark's cost per job, not data volume, dominates a sync. So each frame
 that more than one action reads, and whose plan shuffles, is
@@ -63,9 +65,10 @@ one (:func:`run_weekly_sync`), and schedules its pure work by what it
 reads, not by its phase. The reference runs its steps one after
 another, but pass 1 of the location reconcile reads only the drop and
 the API's locations, and phase 3's merges never read phase 2's output:
-a background thread fetches the users and runs pass 1
-(:func:`reconcile_location_pass`) while phase 1 writes the hierarchy,
-then computes phase 3's pure half with the corporate pairs
+a background thread fetches the users, runs pass 1
+(:func:`reconcile_location_pass`) and the J4 users merge
+(:func:`match_file_users`) while phase 1 writes the hierarchy, then
+computes the rest of phase 3's pure half with the corporate pairs
 (:func:`user_permission_pairs`) while the main thread runs phase 2.
 Every effect — a post, a report CSV, a gate, a report entry — stays on
 the main thread, in the reference's order.
@@ -127,7 +130,7 @@ class PipelineContext:
       ``fetch_locations`` once the drop is materialized, both on the
       sync's background thread, while phase 1 writes the hierarchy:
       nothing in the sync adds users, and phase 1 writes only hierarchy
-      groups.
+      groups. The J4 users merge follows them there.
     - ``fetch_hierarchy_groups`` is called on the main thread after
       phase 1's writes.
     - Pass 2's ``fetch_locations`` (the reference's second merge pass,
@@ -161,14 +164,11 @@ class Materializer:
     the sync returns or a gate raises.
 
     ``localCheckpoint`` rather than ``persist``: the checkpoint runs
-    the plan once, with AQE, and keeps the partitioning AQE coalesced
-    it to, so a frame that feeds a MutationSink is posted in the same
-    full batches as the lazy frame would be. A persisted frame can keep
-    its shuffle partitions instead: phase 1 posted each hierarchy level
-    in two part-filled batches from one, and in one batch from the
-    checkpoint. ``DataFrame.unpersist`` does not release a checkpoint,
-    so the exit unpersists the checkpointed RDD itself; a released
-    frame can no longer be read.
+    the plan once, eagerly, at the one place the sync chose, and its
+    lineage is cut there, so a later action never re-runs the plan.
+    ``DataFrame.unpersist`` does not release a checkpoint, so the exit
+    unpersists the checkpointed RDD itself; a released frame can no
+    longer be read.
 
     Counts ride the checkpoint. A call returns the checkpointed frame
     and the aggregates observed while the checkpoint computed it
@@ -211,15 +211,20 @@ class Materializer:
 def background_thread(spark: SparkSession) -> Iterator[Callable[..., Future]]:
     """One worker thread beside the driver's main thread, for the
     ``with`` block. ``submit(fn, *args)`` returns a Future; calls run
-    one at a time, in the order submitted. Each runs with the Spark
-    local properties and job tags the submitting thread had at submit
-    time, so its jobs land in the caller's job group. On exit, calls
+    one at a time, in the order submitted, so a Future among ``args``
+    (of an earlier call) is resolved to its result before ``fn`` runs,
+    and its error is raised in place of ``fn``'s. Each runs with the
+    Spark local properties and job tags the submitting thread had at
+    submit time, so its jobs land in the caller's job group. On exit, calls
     not yet started are cancelled and the running one is waited for,
     whether the block returns or raises."""
     pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="weekly-sync")
 
     def submit(fn: Callable, *args) -> Future:
-        return pool.submit(inheritable_thread_target(spark)(fn), *args)
+        def call():
+            return fn(*(a.result() if isinstance(a, Future) else a for a in args))
+
+        return pool.submit(inheritable_thread_target(spark)(call))
 
     try:
         yield submit
@@ -412,21 +417,22 @@ class PermissionFrames:
     corporate: DataFrame  # materialized (user_id, group_id) corporate grants not in pairs
 
 
-def user_permission_pairs(
-    ctx: PipelineContext, users: DataFrame, groups: DataFrame, materialize: Materializer
-) -> PermissionFrames:
-    """Phase 3's pure half: (hierarchy_name, email, role) long table →
-    API ids (``users``, e-mails normalized) and group ids (``groups``)
-    → equity cross-join expansion (J6) minus equity rows from the
-    normal path (J9) → materialized (user_id, group_id) pairs, and the
-    corporate grants (:func:`corporate_permission_pairs`) not among
-    them, materialized too.
+def api_users(ctx: PipelineContext) -> DataFrame:
+    """The sync's users snapshot: ``fetch_users`` with e-mails
+    normalized (X1, ETL:754–756) for the J4 merge and the corporate
+    semi join."""
+    return ctx.fetch_users().withColumn("node_email", normalize_email("node_email"))
 
-    It reads only the file drop and the sync's users/groups snapshot,
-    never phase 2's output, and has no effect: it posts nothing, writes
-    no CSV, sets no report entry and raises no gate. So the sync runs it
-    on its background thread beside phase 2, and
-    :func:`build_user_permission_frame` applies the effects."""
+
+def match_file_users(
+    ctx: PipelineContext, users: DataFrame, materialize: Materializer
+) -> tuple[DataFrame, dict]:
+    """J4 (ETL:805–811): the drop's long (hierarchy_name, email, role)
+    table outer-merged with the API users (``users``, e-mails
+    normalized) on e-mail. Returns the checkpointed merge and its
+    provenance counts. It reads only the drop and the users snapshot,
+    so the sync runs it on its background thread right after pass 1,
+    while phase 1 writes the hierarchy."""
     al = ctx.alignments
 
     # X1/X2 normalization (ETL:754–756) + P5 backfill for allowlisted
@@ -458,9 +464,29 @@ def user_permission_pairs(
         F.col("franchise_or_equity"),
     )
     users_long = region_rows.unionByName(district_rows).na.drop(subset=["email"]).distinct()
+    return materialize(outer_merge(users_long, users, left_on="email", right_on="node_email"))
 
-    # J4: file users × API users on normalized email (ETL:805–811).
-    m, n_users = materialize(outer_merge(users_long, users, left_on="email", right_on="node_email"))
+
+def user_permission_pairs(
+    ctx: PipelineContext,
+    file_users: tuple[DataFrame, dict],
+    users: DataFrame,
+    groups: DataFrame,
+    materialize: Materializer,
+) -> PermissionFrames:
+    """Phase 3's pure half: J4's file × API users merge
+    (``file_users``, from :func:`match_file_users`) → group ids
+    (``groups``) → equity cross-join expansion (J6) minus equity rows
+    from the normal path (J9) → materialized (user_id, group_id) pairs,
+    and the corporate grants (:func:`corporate_permission_pairs`) not
+    among them, materialized too.
+
+    It reads only the file drop and the sync's users/groups snapshot,
+    never phase 2's output, and has no effect: it posts nothing, writes
+    no CSV, sets no report entry and raises no gate. So the sync runs it
+    on its background thread beside phase 2, and
+    :func:`build_user_permission_frame` applies the effects."""
+    m, n_users = file_users
     matched, unmatched_file, unmatched_api = split_by_provenance(m)
 
     # J5: attach hierarchy-group ids by name (ETL:845–855).
@@ -582,20 +608,22 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     reads no earlier phase's output runs on a background thread
     (:func:`background_thread`) as soon as its inputs exist, while the
     main thread waits on Spark — the users fetch and pass 1's location
-    reconcile (:func:`reconcile_location_pass`) during phase 1, phase
-    3's pure half with the corporate pairs
-    (:func:`user_permission_pairs`) during phase 2. The main thread
-    applies every effect in the reference's order, so the posts, CSVs,
-    gates and counts are those of a serial run. The background thread
-    is drained before any checkpoint is released."""
+    reconcile (:func:`reconcile_location_pass`) and the J4 users merge
+    (:func:`match_file_users`) during phase 1, the rest of phase 3's
+    pure half with the corporate pairs (:func:`user_permission_pairs`)
+    during phase 2. The main thread applies every effect in the
+    reference's order, so the posts, CSVs, gates and counts are those
+    of a serial run. The background thread is drained before any
+    checkpoint is released."""
     report = SyncReport()
     spark = ctx.alignments.sparkSession
     with Materializer() as materialize, background_thread(spark) as submit:
-        users_fetched = submit(ctx.fetch_users)
+        users_fetched = submit(api_users, ctx)
         # The drop is scanned once; every later plan reads the checkpoint.
         drop, _ = materialize(ctx.alignments)
         ctx = replace(ctx, alignments=drop)
         pass1 = submit(reconcile_location_pass, ctx, materialize)
+        file_users = submit(match_file_users, ctx, users_fetched, materialize)
 
         # Phase 1: hierarchy levels + groups, written one level at a
         # time, parent level before child. The level list is observed
@@ -612,8 +640,8 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
         # One snapshot of users and hierarchy groups per sync; the
         # groups are read after phase 1 wrote them.
         groups = ctx.fetch_hierarchy_groups()
-        users = users_fetched.result().withColumn("node_email", normalize_email("node_email"))
-        permissions = submit(user_permission_pairs, ctx, users, groups, materialize)
+        users = users_fetched.result()
+        permissions = submit(user_permission_pairs, ctx, file_users, users, groups, materialize)
 
         # Phase 2: locations → district assignments.
         assignments = map_locations_to_hierarchies(ctx, report, groups, pass1.result(), materialize)

@@ -3,13 +3,14 @@
 The reference posts one HTTP request per row (``locationAdd`` per
 record ETL:357–366, ``userAddNewToAccount`` per user ETL:679–686,
 ``hierarchyGroupPermissionAdd`` per pair ETL:707–714) — the dominant
-cost of the whole pipeline. Here the sink is ``foreachPartition`` with
-client-side batching: each executor opens one client, posts
-``batch_size`` records per call, and emits a per-record status that
-lands as a durable status DataFrame for A8 success accounting
-(ETL:706–731). The posting tasks also tally records and failures in
-accumulators, so "how many failed" comes back with the write instead
-of from a second scan of the status.
+cost of the whole pipeline. Here a write collects its payload to the
+driver once, as Arrow (one Spark job; the plan upstream still runs
+distributed), and posts it ``batch_size`` records per call through one
+client — K2's "``df.collect()`` → single connector call" for
+dimension-sized mutation sets. Each record's outcome lands in a status
+frame for A8 success accounting (ETL:706–731), and the write counts
+records and failures as it posts, so "how many failed" needs no second
+scan of the status.
 
 The wire client is pluggable; :class:`MockMutationClient` accepts (or
 fails) records for tests and :class:`SpoolMutationClient` lands each
@@ -22,10 +23,14 @@ adapter with the same ``post_batch`` contract — observable behavior of
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+import os
+import tempfile
+import uuid
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 STATUS_SCHEMA = T.StructType(
@@ -35,14 +40,14 @@ STATUS_SCHEMA = T.StructType(
         T.StructField("error", T.StringType()),
     ]
 )
+_STATUS_ARROW = pa.schema([("record", pa.string()), ("success", pa.bool_()), ("error", pa.string())])
 
 
 class MockMutationClient:
     """Stateless client that accepts every record, or fails the records
     matching ``fail_when`` (for A8/V5 failure-path tests). It keeps
-    nothing: it is pickled into the Python workers, so a record of the
-    posted batches would never reach the driver; tests that need the
-    payloads use :class:`SpoolMutationClient`."""
+    nothing; tests that need the posted payloads use
+    :class:`SpoolMutationClient`."""
 
     def __init__(self, fail_when=None):
         self.fail_when = fail_when
@@ -59,23 +64,17 @@ class MockMutationClient:
 
 class SpoolMutationClient:
     """File-spool client for local-mode testing and demos: each batch
-    lands as a JSON-lines file in ``spool_dir``. In local mode the
-    Python workers are separate processes, so an in-memory mock's
-    state mutations never reach the driver — the shared filesystem
-    does, exactly like a real external API shares state."""
+    lands as a JSON-lines file in ``spool_dir``, which outlives the
+    client and every sink that posted through it, exactly like a real
+    external API's state; :func:`read_spool` reads it back."""
 
     def __init__(self, spool_dir: str, operation_tag: str = "op", fail_when=None):
-        import os
-
         self.spool_dir = spool_dir
         self.operation_tag = operation_tag
         self.fail_when = fail_when
         os.makedirs(spool_dir, exist_ok=True)
 
     def post_batch(self, operation: str, records: list[dict]):
-        import os
-        import uuid
-
         path = os.path.join(self.spool_dir, f"{self.operation_tag}-{uuid.uuid4().hex}.jsonl")
         with open(path, "w") as f:
             for r in records:
@@ -91,8 +90,6 @@ class SpoolMutationClient:
 
 def read_spool(spool_dir: str) -> list[dict]:
     """All records ever posted through :class:`SpoolMutationClient`."""
-    import os
-
     records: list[dict] = []
     if not os.path.isdir(spool_dir):
         return records
@@ -103,9 +100,8 @@ def read_spool(spool_dir: str) -> list[dict]:
 
 
 class MutationResult(NamedTuple):
-    """What one :meth:`MutationSink.write` posted: the durable
-    per-record status frame, plus the record and failure counts the
-    posting tasks tallied."""
+    """What one :meth:`MutationSink.write` posted: the per-record status
+    frame, plus the record and failure counts of the write."""
 
     status: DataFrame
     records: int
@@ -113,13 +109,22 @@ class MutationResult(NamedTuple):
 
 
 class MutationSink:
-    """``foreachPartition``-batched mutation writer returning a status
-    DataFrame and its record/failure counts.
+    """Batched mutation writer returning a status DataFrame and its
+    record/failure counts.
 
-    ``client_factory`` is called once per partition ON THE EXECUTOR
-    (serializable factory, not a shared connection — the driver never
-    holds the socket). Retries are per batch with no backoff state
-    shared across partitions.
+    A write collects the frame once (``toArrow``) and posts it from the
+    driver, in order, in ``batch_size`` slices of the collected table,
+    through one client from ``client_factory()``; a client with a
+    ``close()`` is closed when the write returns. Batches fill across
+    the frame's partitions, and a Spark task retry can never re-post a
+    record. A batch whose ``post_batch`` raises is re-posted up to
+    ``max_retries`` times, then its records are failed with the last
+    error.
+
+    The status frame is built from the driver's outcomes, so reading it
+    any number of times can never re-post. With ``status_dir`` set, the
+    write also lands it as one parquet file in a fresh ``status_*``
+    directory there.
     """
 
     def __init__(
@@ -134,97 +139,49 @@ class MutationSink:
         self.operation = operation
         self.batch_size = batch_size
         self.max_retries = max_retries
-        # Durable landing zone for the status frame; on a cluster point
-        # this at shared storage (HDFS/S3) so executor loss can never
-        # re-run the side-effecting partitions.
         self.status_dir = status_dir
 
+    def _post(self, client, batch: list[dict]) -> list[tuple[dict, bool, str | None]]:
+        last_err: Exception | None = None
+        for _ in range(self.max_retries + 1):
+            try:
+                return client.post_batch(self.operation, list(batch))
+            except Exception as exc:  # noqa: BLE001 — timeout tolerance (K4)
+                last_err = exc
+        return [(rec, False, str(last_err)) for rec in batch]
+
     def write(self, df: DataFrame) -> MutationResult:
-        spark = df.sparkSession
-        factory = self.client_factory
-        operation = self.operation
-        batch_size = self.batch_size
-        max_retries = self.max_retries
-        # Tallied where the statuses are emitted, inside the parquet
-        # write's result stage, where Spark applies each task's
-        # accumulator update exactly once (a retried task's is dropped).
-        n_records = spark.sparkContext.accumulator(0)
-        n_failed = spark.sparkContext.accumulator(0)
-
-        def run_partition(batches):
-            # mapInArrow, not df.rdd.mapPartitions (VERDICT r4): the
-            # input stays Arrow end-to-end — no Row pickling — and
-            # RecordBatch.to_pylist() yields native Python values
-            # (int stays int, None stays None; the pandas route would
-            # coerce nullable ints to float64 and numpy scalars into
-            # the mutation payloads).
-            import pyarrow as pa
-
-            arrow_schema = pa.schema(
-                [("record", pa.string()), ("success", pa.bool_()), ("error", pa.string())]
-            )
-            client = factory()
-            buf: list[dict] = []
-            stat: list[tuple[str, bool, str | None]] = []
-
-            def flush() -> None:
-                if not buf:
-                    return
-                last_err: Exception | None = None
-                for _ in range(max_retries + 1):
-                    try:
-                        results = client.post_batch(operation, list(buf))
-                        for rec, ok, err in results:
-                            stat.append((json.dumps(rec, sort_keys=True, default=str), ok, err))
-                        buf.clear()
-                        return
-                    except Exception as exc:  # noqa: BLE001 — timeout tolerance (K4)
-                        last_err = exc
-                for rec in buf:
-                    stat.append((json.dumps(rec, sort_keys=True, default=str), False, str(last_err)))
-                buf.clear()
-
-            def drain() -> Iterator:
-                if stat:
-                    n_records.add(len(stat))
-                    n_failed.add(sum(1 for s in stat if not s[1]))
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "record": [s[0] for s in stat],
-                            "success": [s[1] for s in stat],
-                            "error": [s[2] for s in stat],
-                        },
-                        schema=arrow_schema,
-                    )
-                    stat.clear()
-
-            for batch in batches:
-                for rec in batch.to_pylist():
-                    buf.append(rec)
-                    if len(buf) >= batch_size:
-                        flush()
-                yield from drain()  # statuses stream out batch-by-batch
-            flush()
-            yield from drain()
-
-        status = df.mapInArrow(run_partition, STATUS_SCHEMA)
-        # Materialize the side-effecting lineage exactly once per
-        # ``write()`` call: land the status frame in durable parquet and
-        # return a frame READ FROM STORAGE, whose lineage is a plain
-        # scan — downstream actions, cache eviction, or executor loss
-        # can only re-read the files, never re-run the HTTP partitions.
-        # (persist()+count alone is weaker: a lost executor recomputes
-        # its cached partition from the mapPartitions lineage and
-        # re-posts those mutations.)
-        import tempfile
-
-        # one directory per write() call — a shared status_dir must not
-        # be clobbered by later calls (write_level_phased writes once
-        # per hierarchy level and keeps every status frame)
-        out_dir = tempfile.mkdtemp(prefix="status_", dir=self.status_dir) if self.status_dir else tempfile.mkdtemp(prefix="mutation_status_")
-        status.write.mode("overwrite").parquet(out_dir)
+        # Arrow to_pylist() yields native Python values (int stays int,
+        # None stays None; the pandas route would coerce nullable ints
+        # to float64 and numpy scalars into the mutation payloads).
+        table = df.toArrow()
+        record: list[str] = []
+        success: list[bool] = []
+        error: list[str | None] = []
+        client = self.client_factory()
+        try:
+            for start in range(0, table.num_rows, self.batch_size):
+                batch = table.slice(start, self.batch_size).to_pylist()
+                for rec, ok, err in self._post(client, batch):
+                    record.append(json.dumps(rec, sort_keys=True, default=str))
+                    success.append(ok)
+                    error.append(err)
+        finally:
+            if hasattr(client, "close"):
+                client.close()
+        status = pa.table(
+            {"record": record, "success": success, "error": error}, schema=_STATUS_ARROW
+        )
+        if self.status_dir:
+            # one directory per write() call — a shared status_dir must
+            # not be clobbered by later calls (write_level_phased writes
+            # once per hierarchy level and keeps every status frame)
+            out_dir = tempfile.mkdtemp(prefix="status_", dir=self.status_dir)
+            pq.write_table(status, os.path.join(out_dir, "part-00000.parquet"))
         return MutationResult(
-            spark.read.schema(STATUS_SCHEMA).parquet(out_dir), n_records.value, n_failed.value
+            df.sparkSession.createDataFrame(status, STATUS_SCHEMA),
+            len(record),
+            success.count(False),
         )
 
 
@@ -234,7 +191,7 @@ def write_level_phased(
     """Parent-before-child ordering as phased writes (SURVEY §7 hard
     part 2): one sink pass per value of the ``level`` column, in the
     order of ``levels`` (ascending: parents first) — within a level
-    rows are unordered and fully parallel. The caller supplies the
+    rows are unordered. The caller supplies the
     levels, e.g. observed while it materialized the frame. Returns
     each level's write result, keyed by level in write order."""
     return {lv: sink.write(hierarchy_df.filter(hierarchy_df["level"] == lv)) for lv in levels}

@@ -89,6 +89,23 @@ def _cell_value(cell: ET.Element, shared: list[str]) -> str | None:
     return v.text
 
 
+def _row_values(row: ET.Element, shared: list[str]) -> list[str | None]:
+    """One ``<row>``'s cell values by column, gaps as None."""
+    vals: dict[int, str | None] = {}
+    next_idx = 0
+    for cell in row.iter(f"{_NS}c"):
+        ref = cell.get("r")
+        idx = _col_index(ref) if ref else next_idx
+        next_idx = idx + 1
+        vals[idx] = _cell_value(cell, shared)
+    width = max(vals) + 1 if vals else 0
+    return [vals.get(i) for i in range(width)]
+
+
+def _header(row: list[str | None]) -> list[str]:
+    return ["" if h is None else str(h) for h in row]
+
+
 def parse_xlsx_sheet(payload: bytes, sheet_name: str) -> tuple[list[str], list[list[str | None]]]:
     """(header, data rows) of one sheet from workbook bytes. The first
     row is the header (``pd.read_excel`` default, which is what the
@@ -96,31 +113,26 @@ def parse_xlsx_sheet(payload: bytes, sheet_name: str) -> tuple[list[str], list[l
     with zipfile.ZipFile(BytesIO(payload)) as zf:
         shared = _shared_strings(zf)
         root = ET.fromstring(zf.read(_sheet_part(zf, sheet_name)))
-        rows: list[list[str | None]] = []
-        for row in root.iter(f"{_NS}row"):
-            vals: dict[int, str | None] = {}
-            next_idx = 0
-            for cell in row.iter(f"{_NS}c"):
-                ref = cell.get("r")
-                idx = _col_index(ref) if ref else next_idx
-                next_idx = idx + 1
-                vals[idx] = _cell_value(cell, shared)
-            width = max(vals) + 1 if vals else 0
-            rows.append([vals.get(i) for i in range(width)])
+        rows = [_row_values(row, shared) for row in root.iter(f"{_NS}row")]
     if not rows:
         return [], []
-    header = ["" if h is None else str(h) for h in rows[0]]
+    header = _header(rows[0])
     width = len(header)
     data = [(r + [None] * width)[:width] for r in rows[1:]]
     return header, data
 
 
 def sheet_header(path: str, sheet_name: str) -> list[str]:
-    """Header row only (driver-side schema discovery: reads the zip
-    central directory + one XML part of ONE local file)."""
-    with open(path, "rb") as f:
-        header, _ = parse_xlsx_sheet(f.read(), sheet_name)
-    return header
+    """Header row only (driver-side schema discovery): reads the shared
+    strings and the sheet's XML part of ONE local file up to the end of
+    its first ``<row>``; no data row is parsed."""
+    with zipfile.ZipFile(path) as zf:
+        shared = _shared_strings(zf)
+        with zf.open(_sheet_part(zf, sheet_name)) as part:
+            for _, el in ET.iterparse(part):
+                if el.tag == f"{_NS}row":
+                    return _header(_row_values(el, shared))
+    return []
 
 
 # ---------------------------------------------------------------------------

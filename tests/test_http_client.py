@@ -1,6 +1,6 @@
 """HTTP transport tests: the real-wire implementation of the
 reference's ``gql_api.post`` contract (ETL:169–175) driven against a
-local fixture server — pagination, executor-side mutation batches,
+local fixture server — pagination, batched mutation POSTs,
 retry-on-failure, and K4 timeout tolerance (ETL:224–246)."""
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ def test_fetch_connection_over_http_flattens(spark):
         assert rows["L1"]["node_address_state"] == "TX"
 
 
-def test_mutation_sink_posts_batches_from_executors(spark):
+def test_mutation_sink_posts_batches(spark):
     with FixtureGQLServer() as server:
         df = spark.createDataFrame(
             [(f"L{i}", f"g{i % 3}") for i in range(17)], "location string, grp string"
@@ -195,9 +195,9 @@ def test_keepalive_reopens_stale_connection():
         assert payload["data"]["things"]["edges"]
 
 
-def test_mutation_sink_one_connection_per_partition(spark):
+def test_mutation_sink_one_connection_per_write(spark):
     """The sink's batching contract end-to-end: 4 partitions x many
-    batches -> at most one connection per partition task."""
+    batches -> one connection for the whole write."""
     with FixtureGQLServer() as server:
         df = spark.createDataFrame(
             [(f"L{i}",) for i in range(40)], "location string"
@@ -210,7 +210,24 @@ def test_mutation_sink_one_connection_per_partition(spark):
         status = sink.write(df).status
         assert status.filter("success").count() == 40
         assert len(server.mutations) >= 10  # many batches...
-        assert server.connections <= 4  # ...but ≤1 connection per partition
+        assert server.connections == 1  # ...but one connection per write
+
+
+def test_mutation_sink_batches_fill_across_partitions(spark):
+    """Batches fill across partition boundaries: 17 records in
+    partitions of 4, 4, 4 and 5 rows, 3 per batch, take ceil(17 / 3) = 6
+    POSTs, not one part-filled batch per partition (8)."""
+    with FixtureGQLServer() as server:
+        sink = MutationSink(
+            HttpClientFactory(server.url, query="mutation locationAdd { }"),
+            operation="locationAdd",
+            batch_size=3,
+        )
+        posted = sink.write(spark.range(17, numPartitions=4))
+        assert (posted.records, posted.failed) == (17, 0)
+        batches = [body["variables"]["input"]["records"] for body in server.mutations]
+        assert [len(b) for b in batches] == [3, 3, 3, 3, 3, 2]
+        assert sorted(r["id"] for b in batches for r in b) == list(range(17))
 
 
 def test_server_initiated_close_falls_back_per_request():

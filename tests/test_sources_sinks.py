@@ -177,6 +177,24 @@ def test_mutation_sink_batches_and_status(spark):
     assert acc["ok"] == 25
 
 
+def test_mutation_sink_posts_through_the_factorys_client(spark):
+    """The sink calls its factory where the write runs and posts through
+    that client: a client that records its batches in a list sees every
+    record, in batches of at most ``batch_size``."""
+    batches: list[list[dict]] = []
+
+    class Recording(MockMutationClient):
+        def post_batch(self, operation, records):
+            batches.append(records)
+            return super().post_batch(operation, records)
+
+    df = spark.createDataFrame([(i,) for i in range(10)], "id int").repartition(3)
+    posted = MutationSink(Recording, "op", batch_size=4).write(df)
+    assert (posted.records, posted.failed) == (10, 0)
+    assert sorted(r["id"] for batch in batches for r in batch) == list(range(10))
+    assert [len(b) for b in batches] == [4, 4, 2]
+
+
 def test_mutation_sink_failure_accounting(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], "id int")
     sink = MutationSink(lambda: MockMutationClient(fail_when=lambda r: r["id"] % 3 == 0), "op")

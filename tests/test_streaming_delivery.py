@@ -2,7 +2,7 @@
 source drained through ``foreachBatch`` into the batched HTTP mutation
 sink against a live fixture server — the streaming twin of the
 reference's serial per-row mutation loop (ETL:357–366), end to end:
-checkpointed page offsets upstream, partition-batched keep-alive POSTs
+checkpointed page offsets upstream, batched keep-alive POSTs
 downstream, and a second drain that delivers ONLY newly-landed pages.
 """
 

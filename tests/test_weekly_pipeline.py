@@ -449,10 +449,11 @@ def test_failed_pass1_fetch_raises_after_phase_one(spark, ctx_and_spools):
 def test_failed_pass2_fetch_drains_background_work(spark, ctx_and_spools, monkeypatch):
     """A pass-2 ``fetch_locations`` that raises ends the sync with that
     error. The background thread is drained before the sync's
-    checkpoints are released: here phase 3's pure half only starts
-    materializing after the main thread raised, and its frames are
-    released all the same. No permission is posted and no sync thread
-    is left."""
+    checkpoints are released: here phase 3's pure half is running when
+    pass 2's fetch raises (it may be queued behind the J4 merge until
+    then), only starts materializing after the main thread raised, and
+    its frames are released all the same. No permission is posted and
+    no sync thread is left."""
     import threading
 
     from graphql_api_etl_spark.pipelines import weekly_alignments as wa
@@ -461,10 +462,12 @@ def test_failed_pass2_fetch_drains_background_work(spark, ctx_and_spools, monkey
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     held_before = persistent().size()
     pass2_failed = threading.Event()
+    pure_half_started = threading.Event()
     pure_half_ran = []
     pure_half = wa.user_permission_pairs
 
     def user_permission_pairs(*args):
+        pure_half_started.set()
         assert pass2_failed.wait(timeout=120)
         pure_half_ran.append(True)
         return pure_half(*args)
@@ -475,6 +478,7 @@ def test_failed_pass2_fetch_drains_background_work(spark, ctx_and_spools, monkey
     def fetch_locations():
         calls["n"] += 1
         if calls["n"] == 2:
+            assert pure_half_started.wait(timeout=120)
             pass2_failed.set()
             raise ConnectionError("locations connection down")
         return ctx.fetch_locations()

@@ -48,10 +48,9 @@ def test_xlsx_bool_cells_roundtrip_symmetrically(tmp_path):
     assert rows == [["true", "1"], ["false", "2.5"]]
 
 
-def test_xlsx_shared_strings_and_cell_refs(tmp_path):
-    """Real-world workbooks (Excel, pandas) use sharedStrings and
-    explicit A1-style cell refs with gaps — hand-build one."""
-    p = tmp_path / "shared.xlsx"
+def _shared_strings_workbook(p, rows_xml: str) -> None:
+    """A one-sheet workbook ("S") with the shared strings "name", "val"
+    and "rich text" and the given ``<row>`` elements."""
     with zipfile.ZipFile(p, "w") as zf:
         # reuse the writer's boilerplate parts
         from graphql_api_etl_spark.sources import xlsx as X
@@ -81,15 +80,38 @@ def test_xlsx_shared_strings_and_cell_refs(tmp_path):
         zf.writestr(
             "xl/worksheets/sheet1.xml",
             '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>'
-            '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>'
-            # C2 present, B2 skipped entirely (gap), bool + shared string
-            '<row r="2"><c r="A2" t="s"><v>2</v></c><c r="C2" t="b"><v>1</v></c></row>'
-            "</sheetData></worksheet>",
+            + rows_xml
+            + "</sheetData></worksheet>",
         )
+
+
+def test_xlsx_shared_strings_and_cell_refs(tmp_path):
+    """Real-world workbooks (Excel, pandas) use sharedStrings and
+    explicit A1-style cell refs with gaps — hand-build one."""
+    p = tmp_path / "shared.xlsx"
+    _shared_strings_workbook(
+        p,
+        '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>'
+        # C2 present, B2 skipped entirely (gap), bool + shared string
+        '<row r="2"><c r="A2" t="s"><v>2</v></c><c r="C2" t="b"><v>1</v></c></row>',
+    )
     with open(p, "rb") as f:
         header, rows = parse_xlsx_sheet(f.read(), "S")
     assert header == ["name", "val"]
     assert rows == [["rich text", None]]  # C2 beyond header width → truncated
+
+
+def test_sheet_header_reads_only_the_first_row(tmp_path):
+    """Schema discovery stops at the end of the header row: a data row
+    that a full parse cannot read (a shared-string index past the
+    table) does not reach it."""
+    p = tmp_path / "bad_row.xlsx"
+    _shared_strings_workbook(
+        p,
+        '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>'
+        '<row r="2"><c r="A2" t="s"><v>99</v></c></row>',
+    )
+    assert sheet_header(str(p), "S") == ["name", "val"]
 
 
 def test_read_excel_sheet_distributed(spark, tmp_path):
