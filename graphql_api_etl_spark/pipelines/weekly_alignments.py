@@ -60,22 +60,25 @@ snapshots) costs no more jobs than materializing it. The file drop is
 read once, into the sync's first checkpoint: re-reading it would
 re-run its parser (for an ``.xlsx`` drop, Python) in every action.
 
-For the same reason the sync keeps two driver threads busy instead of
-one (:func:`run_weekly_sync`), and schedules its pure work by what it
-reads, not by its phase. The reference runs its steps one after
-another, but pass 1 of the location reconcile reads only the drop and
-the API's locations, and phase 3's merges never read phase 2's output:
-a background thread fetches the users, runs pass 1
-(:func:`reconcile_location_pass`) and the J4 users merge
-(:func:`match_file_users`) while phase 1 writes the hierarchy, then
-computes the rest of phase 3's pure half with the corporate pairs
-(:func:`user_permission_pairs`) while the main thread runs phase 2.
-Every effect — a post, a report CSV, a gate, a report entry — stays on
-the main thread, in the reference's order.
+For the same reason the sync runs its pure work on background threads
+beside the main thread (:func:`run_weekly_sync`), and starts each call
+as soon as its inputs exist, not at a fixed point of its phase. The
+reference runs its steps one after another, but pass 1 of the location
+reconcile reads only the drop and the API's locations, and phase 3's
+merges never read phase 2's output. So the users and pass 1's
+locations are fetched from the sync's first moment, while the drop is
+read; pass 1 (:func:`reconcile_location_pass`) and the J4 users merge
+(:func:`match_file_users`) each start once their fetch and the drop
+checkpoint exist, while phase 1 writes the hierarchy; the rest of
+phase 3's pure half with the corporate pairs
+(:func:`user_permission_pairs`) runs while the main thread runs phase
+2. Every effect — a post, a report CSV, a gate, a report entry — stays
+on the main thread, in the reference's order.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
 from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
@@ -126,11 +129,11 @@ class PipelineContext:
     A sync calls each of them once, and ``fetch_locations`` a second
     time only after the self-healing load:
 
-    - ``fetch_users`` is called at sync start and pass 1's
-      ``fetch_locations`` once the drop is materialized, both on the
-      sync's background thread, while phase 1 writes the hierarchy:
+    - ``fetch_users`` and pass 1's ``fetch_locations`` are called at
+      sync start, each on a background thread of its own, while the
+      main thread reads the drop and phase 1 writes the hierarchy:
       nothing in the sync adds users, and phase 1 writes only hierarchy
-      groups. The J4 users merge follows them there.
+      groups. Pass 1 and the J4 users merge follow them there.
     - ``fetch_hierarchy_groups`` is called on the main thread after
       phase 1's writes.
     - Pass 2's ``fetch_locations`` (the reference's second merge pass,
@@ -180,8 +183,8 @@ class Materializer:
     no job. ``observe`` refuses DISTINCT aggregates: count distinct
     values as ``size(collect_set(...))``.
 
-    Both threads of a sync share one Materializer. The sync drains its
-    background thread before the block ends, so no frame is
+    Every thread of a sync shares one Materializer. The sync drains its
+    background threads before the block ends, so no frame is
     checkpointed after the release."""
 
     def __init__(self) -> None:
@@ -209,27 +212,59 @@ class Materializer:
 
 @contextmanager
 def background_thread(spark: SparkSession) -> Iterator[Callable[..., Future]]:
-    """One worker thread beside the driver's main thread, for the
-    ``with`` block. ``submit(fn, *args)`` returns a Future; calls run
-    one at a time, in the order submitted, so a Future among ``args``
-    (of an earlier call) is resolved to its result before ``fn`` runs,
-    and its error is raised in place of ``fn``'s. Each runs with the
-    Spark local properties and job tags the submitting thread had at
-    submit time, so its jobs land in the caller's job group. On exit, calls
-    not yet started are cancelled and the running one is waited for,
-    whether the block returns or raises."""
-    pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="weekly-sync")
+    """Worker threads beside the driver's main thread, for the ``with``
+    block. ``submit(fn, *args)`` returns a Future. The call starts as
+    soon as every Future among ``args`` (of an earlier call) is done,
+    beside any other call whose inputs exist, so no call waits behind
+    one it does not read. Those Futures are resolved to their results
+    before ``fn`` runs, and an error among them is raised in place of
+    ``fn``'s. Each call runs with the Spark local properties and job
+    tags the submitting thread had at submit time, so its jobs land in
+    the caller's job group. On exit, calls not yet started are
+    cancelled and the running ones are waited for, whether the block
+    returns or raises."""
+    pool = ThreadPoolExecutor(thread_name_prefix="weekly-sync")
+    lock = threading.Lock()
+    submitted: list[Future] = []
+    closing = False
 
     def submit(fn: Callable, *args) -> Future:
-        def call():
-            return fn(*(a.result() if isinstance(a, Future) else a for a in args))
+        call = inheritable_thread_target(spark)(
+            lambda: fn(*(a.result() if isinstance(a, Future) else a for a in args))
+        )
+        out: Future = Future()
+        inputs = [a for a in args if isinstance(a, Future)]
 
-        return pool.submit(inheritable_thread_target(spark)(call))
+        def run() -> None:
+            if out.set_running_or_notify_cancel():
+                try:
+                    out.set_result(call())
+                except BaseException as exc:
+                    out.set_exception(exc)
+
+        # One callback chain per call: it waits on one unfinished input
+        # at a time, so ``run`` is queued at most once.
+        def start(_: Future | None = None) -> None:
+            waiting = next((a for a in inputs if not a.done()), None)
+            if waiting is not None:
+                waiting.add_done_callback(start)
+                return
+            with lock:
+                if not closing:
+                    pool.submit(run)
+
+        submitted.append(out)
+        start()
+        return out
 
     try:
         yield submit
     finally:
-        pool.shutdown(wait=True, cancel_futures=True)
+        with lock:
+            closing = True
+        for out in submitted:
+            out.cancel()  # only a call not yet running is cancelled
+        pool.shutdown(wait=True)
 
 
 @dataclass
@@ -304,14 +339,15 @@ def missing_location_payload(missing: DataFrame) -> DataFrame:
 
 
 def reconcile_location_pass(
-    ctx: PipelineContext, materialize: Materializer
+    ctx: PipelineContext, api_locations: DataFrame, materialize: Materializer
 ) -> tuple[DataFrame, dict]:
-    """One location pass: fetch the API's locations, choose the F8 key
-    over them and materialize :func:`reconcile_locations`. Returns the
-    checkpointed merge and its provenance counts. It has no effect, so
-    the sync runs pass 1 on its background thread; pass 2 runs on the
-    main thread after the self-healing load."""
-    api_locations = ctx.fetch_locations()
+    """One location pass over a fetch of the API's locations: choose the
+    F8 key over ``api_locations`` and materialize
+    :func:`reconcile_locations`. Returns the checkpointed merge and its
+    provenance counts. It has no effect, so the sync runs pass 1 on its
+    background thread once the drop checkpoint and pass 1's fetch (made
+    at sync entry) exist; pass 2 fetches again and runs on the main
+    thread after the self-healing load."""
     key = choose_location_key(api_locations)
     return materialize(reconcile_locations(ctx.alignments, api_locations, key))
 
@@ -346,7 +382,7 @@ def map_locations_to_hierarchies(
         # self-healing load (second ``(node_remoteId == '').all()``,
         # ETL:~481): if the load populated remoteIds, pass 2 joins on
         # remoteId even though pass 1 joined on name.
-        merged, n = reconcile_location_pass(ctx, materialize)
+        merged, n = reconcile_location_pass(ctx, ctx.fetch_locations(), materialize)
 
     both, still_missing, deprecated = split_by_provenance(merged)
     # V3 residual warning + V5 deprecated-locations CSV (ETL:508–524)
@@ -431,8 +467,9 @@ def match_file_users(
     table outer-merged with the API users (``users``, e-mails
     normalized) on e-mail. Returns the checkpointed merge and its
     provenance counts. It reads only the drop and the users snapshot,
-    so the sync runs it on its background thread right after pass 1,
-    while phase 1 writes the hierarchy."""
+    so the sync runs it on a background thread as soon as the drop
+    checkpoint and the users fetch exist, beside pass 1, while phase 1
+    writes the hierarchy."""
     al = ctx.alignments
 
     # X1/X2 normalization (ETL:754–756) + P5 backfill for allowlisted
@@ -484,7 +521,7 @@ def user_permission_pairs(
     It reads only the file drop and the sync's users/groups snapshot,
     never phase 2's output, and has no effect: it posts nothing, writes
     no CSV, sets no report entry and raises no gate. So the sync runs it
-    on its background thread beside phase 2, and
+    on a background thread beside phase 2, and
     :func:`build_user_permission_frame` applies the effects."""
     m, n_users = file_users
     matched, unmatched_file, unmatched_api = split_by_provenance(m)
@@ -579,9 +616,10 @@ def corporate_permission_pairs(
     already-assigned (J8, ETL:957–960); unknown corporate emails are
     simply absent from the semi join (F4, ETL:943–945). ``users`` and
     ``groups`` are the sync's snapshot, e-mails normalized."""
+    # A semi join emits each user at most once, so ``corp`` needs no distinct.
     corp = ctx.corporate_managers.select(
         normalize_email(F.col(ctx.corporate_managers.columns[0])).alias("email")
-    ).distinct()
+    )
     corp_users = (
         users.join(corp, users.node_email == corp.email, "left_semi")
         .select(F.col("node_id").alias("user_id"))
@@ -607,22 +645,25 @@ def run_weekly_sync(ctx: PipelineContext) -> SyncReport:
     Work is scheduled by what it reads, not by its phase: work that
     reads no earlier phase's output runs on a background thread
     (:func:`background_thread`) as soon as its inputs exist, while the
-    main thread waits on Spark — the users fetch and pass 1's location
-    reconcile (:func:`reconcile_location_pass`) and the J4 users merge
-    (:func:`match_file_users`) during phase 1, the rest of phase 3's
-    pure half with the corporate pairs (:func:`user_permission_pairs`)
-    during phase 2. The main thread applies every effect in the
+    main thread waits on Spark. The users and pass 1's locations are
+    fetched from sync entry, while the drop is materialized; pass 1's
+    location reconcile (:func:`reconcile_location_pass`) and the J4
+    users merge (:func:`match_file_users`) run during phase 1, each as
+    soon as its fetch and the drop checkpoint exist; the rest of phase
+    3's pure half with the corporate pairs (:func:`user_permission_pairs`)
+    runs during phase 2. The main thread applies every effect in the
     reference's order, so the posts, CSVs, gates and counts are those
-    of a serial run. The background thread is drained before any
+    of a serial run. The background threads are drained before any
     checkpoint is released."""
     report = SyncReport()
     spark = ctx.alignments.sparkSession
     with Materializer() as materialize, background_thread(spark) as submit:
         users_fetched = submit(api_users, ctx)
+        locations_fetched = submit(ctx.fetch_locations)
         # The drop is scanned once; every later plan reads the checkpoint.
         drop, _ = materialize(ctx.alignments)
         ctx = replace(ctx, alignments=drop)
-        pass1 = submit(reconcile_location_pass, ctx, materialize)
+        pass1 = submit(reconcile_location_pass, ctx, locations_fetched, materialize)
         file_users = submit(match_file_users, ctx, users_fetched, materialize)
 
         # Phase 1: hierarchy levels + groups, written one level at a

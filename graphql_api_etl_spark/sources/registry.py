@@ -16,7 +16,9 @@ inference pass over the data.
 
 from __future__ import annotations
 
+import csv
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -212,12 +214,41 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     return df.withColumnsRenamed(mapping)
 
 
+def csv_header(path: str, case_sensitive: bool) -> list[str]:
+    """The column names Spark's CSV source gives the header row of the
+    file at ``path`` (default options), read on the driver. The header
+    is the first line that is not blank, after a UTF-8 BOM; an empty
+    file has no columns. As in Spark, an empty cell becomes
+    ``_c<index>``, and a name that repeats (case-insensitively unless
+    ``case_sensitive``) gets its index appended: ``a,A,b`` →
+    ``a0,A1,b``. Quote escapes inside a quoted cell (``\\"``, ``""``)
+    may leave other punctuation than Spark's, which
+    :func:`normalize_column_name` removes."""
+    with open(path, newline="", encoding="utf-8-sig", errors="replace") as fh:
+        line = next((ln for ln in fh if ln.strip()), None)
+    if line is None:
+        return []
+    row = next(csv.reader([line]))
+    keys = row if case_sensitive else [c.lower() for c in row]
+    repeated = {k for k, n in Counter(keys).items() if n > 1}
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if k in repeated else c
+        for i, (c, k) in enumerate(zip(row, keys))
+    ]
+
+
 def read_csv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """CSV scan (reference S2, ETL:935): header on, declared schema if given."""
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return normalize_columns(reader.csv(path))
+    """CSV scan (reference S2, ETL:935): header on, declared schema if
+    given. Without one, every column is a string named by the file's
+    header row (:func:`csv_header`), which is what Spark infers with
+    ``inferSchema`` off; the header is read on the driver, so the read
+    runs no Spark job. ``path`` then names one file."""
+    if schema is None:
+        case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+        schema = T.StructType(
+            [T.StructField(c, T.StringType()) for c in csv_header(path, case_sensitive)]
+        )
+    return normalize_columns(spark.read.option("header", True).schema(schema).csv(path))
 
 
 def read_excel_sheet(spark: SparkSession, path: str, sheet_name: str, schema: T.StructType | None = None) -> DataFrame:

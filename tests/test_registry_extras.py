@@ -3,6 +3,8 @@ directory file discovery (reference S2/S5)."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_read_csv_normalizes_headers(spark, tmp_path):
     from graphql_api_etl_spark.sources.registry import read_csv
@@ -12,6 +14,48 @@ def test_read_csv_normalizes_headers(spark, tmp_path):
     df = read_csv(spark, str(p))
     assert df.columns == ["corporate_managers"]
     assert df.count() == 2
+
+
+@pytest.mark.parametrize(
+    "content",
+    [
+        pytest.param(b"a,,b\n1,2,3\n", id="empty-cell"),
+        pytest.param(b"a,A,b\n1,2,3\n", id="case-insensitive-repeat"),
+        pytest.param(b"\xef\xbb\xbfName,x\n1,2\n", id="utf8-bom"),
+        pytest.param(b"", id="empty-file"),
+        pytest.param(b'"x, y",z\n1,2\n', id="quoted-comma"),
+    ],
+)
+def test_read_csv_header_matches_spark_inference(spark, tmp_path, content):
+    """Without a schema, the header is read on the driver and follows
+    Spark's own header rules: ``_c<index>`` for an empty cell, the index
+    appended to a case-insensitive repeat, no BOM, no columns for an
+    empty file, quoted commas kept in one name."""
+    from graphql_api_etl_spark.sources.registry import normalize_columns, read_csv
+
+    p = tmp_path / "drop.csv"
+    p.write_bytes(content)
+    inferred = normalize_columns(spark.read.option("header", True).csv(str(p)))
+    assert read_csv(spark, str(p)).columns == inferred.columns
+
+
+def test_read_csv_without_schema_runs_no_job(spark, tmp_path):
+    """Reading a CSV without a schema runs no Spark job: the header row
+    is read on the driver, not by Spark's header inference."""
+    from graphql_api_etl_spark.sources.registry import read_csv
+
+    p = tmp_path / "managers.csv"
+    p.write_text("Corporate Managers\nA@x.com\n")
+    sc = spark.sparkContext
+    group = "test-read-csv-header"
+    sc.setJobGroup(group, "read_csv header")
+    try:
+        df = read_csv(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert df.columns == ["corporate_managers"]
 
 
 def test_discover_input_files(tmp_path):

@@ -111,7 +111,7 @@ def test_location_key_reevaluated_after_selfheal_refetch(spark, tmp_path):
     )
     report = SyncReport()
     with Materializer() as materialize:
-        pass1 = reconcile_location_pass(ctx, materialize)
+        pass1 = reconcile_location_pass(ctx, ctx.fetch_locations(), materialize)
         map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), pass1, materialize)
     # pass 1 on name: Alpha..Delta match; Echo+Foxtrot loaded
     assert report.counts["locations_matched_pass1"] == 4
@@ -370,8 +370,9 @@ def _sync_threads() -> list:
 def test_background_thread_cancels_pending_calls_on_error(spark):
     """A block that raises cancels the calls not yet started and waits
     for the running one, so nothing runs after the block and no thread
-    is left. The running call here returns only once the pending one
-    is cancelled."""
+    is left. The pending call here takes the running call's Future, so
+    it cannot start before that call ends; the running call returns
+    only once the pending one is cancelled."""
     import threading
     import time
 
@@ -387,15 +388,53 @@ def test_background_thread_cancels_pending_calls_on_error(spark):
             time.sleep(0.01)
         ran.append("running")
 
+    def pending(_):
+        ran.append("pending")
+
     with pytest.raises(RuntimeError, match="main thread failed"):
         with background_thread(spark) as submit:
-            futures = [submit(running), submit(ran.append, "pending")]
+            futures = [submit(running)]
+            futures.append(submit(pending, futures[0]))
             submitted.set()
             raise RuntimeError("main thread failed")
     assert futures[0].done() and not futures[0].cancelled()
     assert futures[1].cancelled()
     assert ran == ["running"]
     assert _sync_threads() == []
+
+
+def test_sync_fetches_users_and_locations_at_once(spark, ctx_and_spools):
+    """The users fetch and pass 1's locations fetch run at the same
+    time: each waits at a two-party barrier that breaks (after 30 s)
+    unless the other fetch reaches it too. A sync that ran its
+    background calls one after another would raise
+    ``BrokenBarrierError`` here."""
+    import threading
+
+    ctx, _ = ctx_and_spools
+    both_fetching = threading.Barrier(2, timeout=30)
+    calls = {"locations": 0}
+
+    def fetch_users():
+        both_fetching.wait()
+        return ctx.fetch_users()
+
+    def fetch_locations():
+        calls["locations"] += 1
+        if calls["locations"] == 1:  # pass 1's fetch; pass 2's runs alone
+            both_fetching.wait()
+        return ctx.fetch_locations()
+
+    report = run_weekly_sync(replace(ctx, fetch_users=fetch_users, fetch_locations=fetch_locations))
+    assert calls["locations"] == 2
+    assert report.counts["hierarchy_rows"] == 7
+    assert report.counts["locations_matched_pass1"] == 4
+    assert report.counts["locations_missing_pass1"] == 2
+    assert report.counts["locations_matched_pass2"] == 6
+    assert report.counts["districts_with_locations"] == 3
+    assert report.counts["equity_pairs"] == 6
+    assert report.counts["permission_pairs"] == 10
+    assert report.counts["corporate_pairs_new"] == 6
 
 
 def test_failed_user_fetch_raises_after_phase_one(spark, ctx_and_spools):
@@ -537,7 +576,7 @@ def test_location_add_failure_is_counted_and_left_unloaded(spark, tmp_path):
     )
     report = SyncReport()
     with Materializer() as materialize:
-        pass1 = reconcile_location_pass(ctx, materialize)
+        pass1 = reconcile_location_pass(ctx, ctx.fetch_locations(), materialize)
         map_locations_to_hierarchies(ctx, report, ctx.fetch_hierarchy_groups(), pass1, materialize)
     assert report.counts["locations_missing_pass1"] == 2
     assert report.counts["location_add_failures"] == 1
